@@ -375,8 +375,9 @@ def main(argv: list[str] | None = None) -> int:
         help="baseline manifest JSON for state:modified selection",
     )
     r.add_argument("--full-refresh", action="store_true")
-    r.add_argument("--threads", type=int, default=1,
-                   help="materialize independent models concurrently")
+    r.add_argument("--threads", type=int, default=None,
+                   help="threads that materialize independent models "
+                   "concurrently (default: one per core)")
     r.set_defaults(fn=cmd_run)
 
     b = sub.add_parser("build", help="materialize + test in DAG order (dbt build)")

@@ -27,6 +27,7 @@ Materializations (SURVEY.md §2.11 D1-D5):
 
 from __future__ import annotations
 
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
 from graphlib import TopologicalSorter
 from typing import Callable
@@ -355,7 +356,7 @@ class ModelRunner:
         self,
         selected: list[str] | None = None,
         full_refresh: bool = False,
-        parallelism: int = 1,
+        parallelism: int | None = None,
         state: "dict | str | None" = None,
         defer_to: "Catalog | None" = None,
         observe: bool = False,
@@ -366,14 +367,21 @@ class ModelRunner:
         downstream consumers scan the materialized (partition-pruned,
         clustered) parquet rather than recomputing the plan.
 
-        ``parallelism > 1`` materializes INDEPENDENT models concurrently
-        (dbt's --threads): the Spark driver schedules jobs from multiple
-        threads into one shared cluster, so sibling models overlap their
-        scans/shuffles instead of leaving the cluster idle between
-        driver-side planning phases. Dependency order is preserved — a
-        model is submitted only after everything it refs has
-        materialized (wave-free: each model waits on exactly its own
-        deps, not on its topological generation).
+        Independent models materialize concurrently on ``parallelism``
+        driver threads (dbt's --threads; ``None`` means the session's
+        ``defaultParallelism``): Spark schedules jobs from every thread
+        into one shared cluster, so sibling models overlap their
+        scans/shuffles instead of leaving cores idle between driver-side
+        planning phases. A model starts only after everything it refs
+        has materialized (wave-free: each model waits on exactly its own
+        deps, not on its topological generation); one thread builds in
+        topological order. Worker threads carry the caller's job group,
+        description and tags.
+
+        If a model's builder or write raises, ``run()`` re-raises that
+        exception once every submitted model has settled. None of the
+        failed model's transitive dependents is written; models that do
+        not depend on it still build, as with dbt --threads.
         """
         if isinstance(state, str):
             import json
@@ -388,31 +396,30 @@ class ModelRunner:
         self._observe = observe
         if observe:
             self.last_run_metrics = {}
-        order = self._order(selected)
-        if parallelism <= 1:
-            built: dict[str, DataFrame] = {}
-            for name in order:
-                built[name] = self._build_one(name, built, full_refresh)
-            return built
 
-        from concurrent.futures import Future, ThreadPoolExecutor
+        def build(name: str, done: dict[str, Future]) -> DataFrame:
+            deps = {d: done[d].result() for d in self.models[name].deps if d in done}
+            return self._build_one(name, deps, full_refresh)
 
+        return self._in_pool(self._order(selected), build, parallelism)
+
+    def _in_pool(
+        self, names: list[str], fn: Callable, parallelism: int | None
+    ) -> dict:
+        """``{name: fn(name, futures)}`` on a thread pool. ``names`` are
+        submitted in order, so a task may block on the future of any
+        EARLIER name (every earlier task has already been picked up, so
+        the wait cannot deadlock). Each task is wrapped at submit time in
+        ``inheritable_thread_target``, which copies the caller's Spark
+        local properties (job group, description) and session tags."""
+        from pyspark.util import inheritable_thread_target
+
+        workers = parallelism or self.spark.sparkContext.defaultParallelism
         futures: dict[str, Future] = {}
-        with ThreadPoolExecutor(max_workers=parallelism) as pool:
-
-            def make_task(name: str):
-                def task():
-                    deps_built = {
-                        d: futures[d].result()
-                        for d in self.models[name].deps
-                        if d in futures
-                    }
-                    return self._build_one(name, deps_built, full_refresh)
-
-                return task
-
-            for name in order:  # topo order: deps' futures exist first
-                futures[name] = pool.submit(make_task(name))
+        with ThreadPoolExecutor(max_workers=workers) as pool:
+            for name in names:
+                task = inheritable_thread_target(self.spark)(fn)
+                futures[name] = pool.submit(task, name, futures)
             return {name: f.result() for name, f in futures.items()}
 
     def _build_one(
@@ -557,18 +564,13 @@ class ModelRunner:
             # is_incremental() branch: anti-join against {{ this }} keys,
             # then append. Key set is projected to ONE column before the
             # join so the scan of the existing target prunes to the key
-            # column only (column pruning hits parquet ReadSchema).
+            # column only (column pruning hits parquet ReadSchema). The key
+            # set is fact-sized, so Catalyst/AQE picks the join strategy.
             evolved = m.on_schema_change == "append_new_columns"
             target = self.catalog.read(m.layer, m.name, merge_schema=evolved)
             df = self._reconcile_schema(m, df, target)
             existing_keys = target.select(m.unique_key)
-            new_rows = df.join(
-                F.broadcast(existing_keys.distinct())
-                if self._small_enough(existing_keys)
-                else existing_keys.distinct(),
-                m.unique_key,
-                "left_anti",
-            )
+            new_rows = df.join(existing_keys.distinct(), m.unique_key, "left_anti")
             if self.capture_plans:
                 self.last_incremental_plan = (
                     new_rows._jdf.queryExecution().toString()
@@ -688,13 +690,6 @@ class ModelRunner:
             aligned += [F.col(c) for c in df.columns if c not in t_cols]
         return df.select(aligned)
 
-    @staticmethod
-    def _small_enough(df: DataFrame) -> bool:
-        # Broadcasting the existing-key set is only safe when the target is
-        # dimension-sized; for fact-sized targets let Catalyst/AQE pick the
-        # join strategy (it will shuffle-hash or SMJ on the key).
-        return False
-
     def _test_one(self, name: str, built: dict[str, DataFrame]) -> list:
         from dbt_repo_spark.plans.testing import run_tests
 
@@ -714,12 +709,12 @@ class ModelRunner:
         return run_tests(built[name], spec)
 
     def test(self, built: dict[str, DataFrame]) -> dict[str, list]:
-        """dbt-test analog: run each model's declared test spec."""
-        results = {}
-        for name, m in self.models.items():
-            if m.tests and name in built:
-                results[name] = self._test_one(name, built)
-        return results
+        """dbt-test analog: run each model's declared test spec, one
+        model per task on ``run()``'s kind of thread pool."""
+        tested = [n for n, m in self.models.items() if m.tests and n in built]
+        return self._in_pool(
+            tested, lambda name, _: self._test_one(name, built), None
+        )
 
     def build(
         self,

@@ -2,9 +2,11 @@
 
 The reference's only automated testing is dbt generic tests
 (models/staging/schema.yml:9-110, models_demo/schema.yml:8-41). Each test
-here compiles to ONE aggregate jobs returning the violation count — a
-single pass over the table, no collect of violating rows (at 100 TB you
-count violations, you don't ship them to the driver).
+here is a violation COUNT, never a collect of violating rows (at 100 TB
+you count violations, you don't ship them to the driver). ``run_tests``
+computes every row-local count of a relation (``not_null``,
+``accepted_values``) in ONE aggregate job; ``unique`` and
+``relationships`` need a shuffle and keep a job each.
 """
 
 from __future__ import annotations
@@ -12,7 +14,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -32,8 +34,8 @@ class TestResult:
         return f"<{status} {self.name}: {self.violations} violations>"
 
 
-def _violations_not_null(df: DataFrame, column: str) -> DataFrame:
-    return df.filter(F.col(column).isNull())
+def _not_accepted(column: str, values: Sequence) -> Column:
+    return ~F.col(column).isin(list(values)) | F.col(column).isNull()
 
 
 def _violations_unique(df: DataFrame, column: str) -> DataFrame:
@@ -49,7 +51,7 @@ def _violations_accepted_values(
     df: DataFrame, column: str, values: Sequence
 ) -> DataFrame:
     return (
-        df.filter(~F.col(column).isin(list(values)) | F.col(column).isNull())
+        df.filter(_not_accepted(column, values))
         .groupBy(column)
         .agg(F.count("*").alias("n_rows"))
     )
@@ -65,6 +67,28 @@ def _violations_relationships(
         .groupBy(column)
         .agg(F.count("*").alias("n_orphans"))
     )
+
+
+def _violations(df: DataFrame, column: str, t, kind: str) -> DataFrame:
+    if kind == "not_null":
+        return df.filter(F.col(column).isNull())
+    if kind == "unique":
+        return _violations_unique(df, column)
+    if kind == "accepted_values":
+        return _violations_accepted_values(df, column, t["accepted_values"])
+    return _violations_relationships(df, column, *t["relationships"])
+
+
+def _kind(column: str, t) -> str:
+    """The generic test a spec entry names: a bare string or a dict
+    keyed by the test (plus an optional ``config``)."""
+    for kind in ("not_null", "unique"):
+        if t == kind or (isinstance(t, dict) and kind in t):
+            return kind
+    for kind in ("accepted_values", "relationships"):
+        if isinstance(t, dict) and kind in t:
+            return kind
+    raise ValueError(f"unknown test spec {t!r} for column {column}")
 
 
 def not_null(df: DataFrame, column: str) -> TestResult:
@@ -87,7 +111,7 @@ def unique(df: DataFrame, column: str) -> TestResult:
 
 def accepted_values(df: DataFrame, column: str, values: Sequence) -> TestResult:
     """dbt ``accepted_values`` (models_demo/schema.yml:33-35)."""
-    n = df.filter(~F.col(column).isin(list(values)) | F.col(column).isNull()).count()
+    n = df.filter(_not_accepted(column, values)).count()
     return TestResult(f"accepted_values:{column}", n == 0, n)
 
 
@@ -125,46 +149,48 @@ def run_tests(
     schema. Passing tests write nothing; a re-run overwrites (the audit
     table always reflects the latest run).
     """
+    tests = [(c, t, _kind(c, t)) for c, ts in spec.items() for t in ts]
+    row_local = [
+        F.count_if(
+            F.col(c).isNull() if kind == "not_null"
+            else _not_accepted(c, t["accepted_values"])
+        )
+        for c, t, kind in tests
+        if kind in ("not_null", "accepted_values")
+    ]
+    counts = iter(df.agg(*row_local).first() if row_local else ())
     results: list[TestResult] = []
-    for column, tests in spec.items():
-        for t in tests:
-            if t == "not_null" or (isinstance(t, dict) and "not_null" in t):
-                res = not_null(df, column)
-                viol = _violations_not_null(df, column)
-            elif t == "unique" or (isinstance(t, dict) and "unique" in t):
-                res = unique(df, column)
-                viol = _violations_unique(df, column)
-            elif isinstance(t, dict) and "accepted_values" in t:
-                res = accepted_values(df, column, t["accepted_values"])
-                viol = _violations_accepted_values(df, column, t["accepted_values"])
-            elif isinstance(t, dict) and "relationships" in t:
-                parent, pcol = t["relationships"]
-                res = relationships(df, column, parent, pcol)
-                viol = _violations_relationships(df, column, parent, pcol)
-            else:  # pragma: no cover
-                raise ValueError(f"unknown test spec {t!r} for column {column}")
-            # dbt test config: {"<test>": ..., "config": {"severity":
-            # "warn", "warn_if": N, "error_if": N}} — thresholds are
-            # violation COUNTS ("more than N violations trips it");
-            # warn severity never fails the run, it only flags.
-            cfg = t.get("config", {}) if isinstance(t, dict) else {}
-            res.severity = cfg.get("severity", "error")
-            if res.severity == "warn":
-                res.warned = res.violations > cfg.get("warn_if", 0)
-                res.passed = True
-            else:
-                res.passed = res.violations <= cfg.get("error_if", 0)
-            if catalog is not None and (not res.passed or res.warned):
-                table = (
-                    res.name.replace(":", "__")
-                    .replace("->", "_to_")
-                    .replace(".", "_")
-                )
-                catalog.write(
-                    viol.limit(store_cap), failures_layer, table, mode="overwrite"
-                )
-                res.stored_at = f"{failures_layer}.{table}"
-            results.append(res)
+    for column, t, kind in tests:
+        if kind == "unique":
+            res = unique(df, column)
+        elif kind == "relationships":
+            res = relationships(df, column, *t["relationships"])
+        else:
+            n = next(counts)
+            res = TestResult(f"{kind}:{column}", n == 0, n)
+        # dbt test config: {"<test>": ..., "config": {"severity":
+        # "warn", "warn_if": N, "error_if": N}} — thresholds are
+        # violation COUNTS ("more than N violations trips it");
+        # warn severity never fails the run, it only flags.
+        cfg = t.get("config", {}) if isinstance(t, dict) else {}
+        res.severity = cfg.get("severity", "error")
+        if res.severity == "warn":
+            res.warned = res.violations > cfg.get("warn_if", 0)
+            res.passed = True
+        else:
+            res.passed = res.violations <= cfg.get("error_if", 0)
+        if catalog is not None and (not res.passed or res.warned):
+            table = (
+                res.name.replace(":", "__")
+                .replace("->", "_to_")
+                .replace(".", "_")
+            )
+            catalog.write(
+                _violations(df, column, t, kind).limit(store_cap),
+                failures_layer, table, mode="overwrite",
+            )
+            res.stored_at = f"{failures_layer}.{table}"
+        results.append(res)
     return results
 
 

@@ -983,6 +983,52 @@ _RAKE_MAXLEN = 4
 _RAKE_TOPK = 20
 
 
+def _rake_phrases(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """RAKE's candidate phrases, one row per (doc_id, run): maximal
+    runs of non-delimiter tokens, cut where the per-document run-id
+    prefix sum over token positions steps."""
+    from pyspark.sql.window import Window
+
+    docs = t(spark, sf_dir, "documents")
+    pos = docs.select(
+        "doc_id",
+        F.posexplode(
+            F.filter(F.split("text", " "), lambda x: x != "")
+        ).alias("pos", "w"),
+    )
+    stop = (
+        pos.groupBy("w")
+        .agg(F.count("*").alias("c"))
+        .orderBy(F.col("c").desc(), "w")
+        .limit(_RAKE_STOP_K)
+        .select("w", F.lit(1).alias("st"))
+    )
+    fl = pos.join(F.broadcast(stop), "w", "left").select(
+        "doc_id", "pos", "w", F.coalesce("st", F.lit(0)).alias("st")
+    )
+    run = F.sum("st").over(
+        Window.partitionBy("doc_id")
+        .orderBy("pos")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    return (
+        fl.withColumn("run", run)
+        .filter(F.col("st") == 0)
+        .groupBy("doc_id", "run")
+        .agg(
+            F.array_join(
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("pos", "w"))),
+                    lambda x: x["w"],
+                ),
+                " ",
+            ).alias("phrase"),
+            F.count("*").alias("len"),
+        )
+        .filter(F.col("len").between(1, _RAKE_MAXLEN))
+    )
+
+
 @q(
     "text_keyphrase_rake",
     f"""
@@ -1039,53 +1085,12 @@ def text_keyphrase_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation is vocabulary-sized and broadcastable; top-k is
     TakeOrderedAndProject. No global windows, no quadratic joins.
     """
-    from pyspark.sql.window import Window
-
-    docs = t(spark, sf_dir, "documents")
-    pos = docs.select(
-        "doc_id",
-        F.posexplode(
-            F.filter(F.split("text", " "), lambda x: x != "")
-        ).alias("pos", "w"),
-    )
-    stop = (
-        pos.groupBy("w")
-        .agg(F.count("*").alias("c"))
-        .orderBy(F.col("c").desc(), "w")
-        .limit(_RAKE_STOP_K)
-        .select("w", F.lit(1).alias("st"))
-    )
-    fl = pos.join(F.broadcast(stop), "w", "left").select(
-        "doc_id", "pos", "w", F.coalesce("st", F.lit(0)).alias("st")
-    )
-    run = F.sum("st").over(
-        Window.partitionBy("doc_id")
-        .orderBy("pos")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    ph = (
-        fl.withColumn("run", run)
-        .filter(F.col("st") == 0)
-        .groupBy("doc_id", "run")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "w"))),
-                    lambda x: x["w"],
-                ),
-                " ",
-            ).alias("phrase"),
-            F.count("*").alias("len"),
-        )
-        .filter(F.col("len").between(1, _RAKE_MAXLEN))
-        # r13 (guide §2.4/§5, r12 verdict ask #5): ph feeds THREE
-        # consumers (wstat, dp→ps, the final dp join). ReuseExchange
-        # dedups the window sort exchange, but each consumer still
-        # re-ran the window + phrase-assembly aggregate above it. One
-        # shared lazy materialization instead (CC's prop discipline);
-        # phrase-count sized, never corpus sized.
-        .localCheckpoint(eager=False)
-    )
+    # ph feeds THREE consumers (wstat, dp→ps, the final dp join).
+    # ReuseExchange dedups the window sort exchange, but each consumer
+    # would still re-run the window + phrase-assembly aggregate above
+    # it. One shared lazy materialization instead (CC's prop
+    # discipline); phrase-count sized, never corpus sized.
+    ph = _rake_phrases(spark, sf_dir).localCheckpoint(eager=False)
     wstat = (
         ph.select("len", F.explode(F.split("phrase", " ")).alias("w"))
         .groupBy("w")

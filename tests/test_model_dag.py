@@ -458,9 +458,10 @@ def test_merge_strategy_partition_scoped(spark, tmp_path):
 
 def test_full_dag_runs_parallel_matches_sequential(runner):
     """parallelism>1 materializes independent models concurrently via
-    driver threads; results are identical to the sequential run and
-    dependency order holds (a model sees its deps materialized)."""
-    seq_run = runner.run()
+    driver threads; results are identical to the one-thread run (which
+    builds in topological order) and dependency order holds (a model
+    sees its deps materialized)."""
+    seq_run = runner.run(parallelism=1)
     # materialize the sequential results BEFORE the parallel re-run
     # overwrites the same table files
     seq = {n: df.orderBy(*df.columns).collect() for n, df in seq_run.items()}
@@ -469,6 +470,108 @@ def test_full_dag_runs_parallel_matches_sequential(runner):
     for name, rows in seq.items():
         df = par_run[name]
         assert df.orderBy(*df.columns).collect() == rows, name
+
+
+def test_workers_inherit_the_callers_job_group(runner, spark):
+    """run() and test() do all their Spark work on pool threads; those
+    threads carry the caller's job group, so every model write and every
+    data test is attributed to it. The session is passed along, so its
+    tags are inherited too (no "Tags will not be inherited" warning)."""
+    import warnings
+
+    sc = spark.sparkContext
+    persisted = [m for m in GBFS_MODELS if m.materialized != "ephemeral"]
+    tested = [m for m in GBFS_MODELS if m.tests]
+    try:
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            sc.setJobGroup("dag-run", "model writes")
+            built = runner.run(parallelism=4)
+            sc.setJobGroup("dag-test", "data tests")
+            results = runner.test(built)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert not [w for w in caught if "Tags will not be inherited" in str(w.message)]
+    assert set(results) == {m.name for m in tested}
+    # every persisted model writes in at least one job, every tested
+    # model aggregates in at least one
+    assert len(sc.statusTracker().getJobIdsForGroup("dag-run")) >= len(persisted)
+    assert len(sc.statusTracker().getJobIdsForGroup("dag-test")) >= len(tested)
+
+
+def test_failed_model_skips_its_dependents(spark, tmp_path):
+    """A builder that raises on a worker thread fails run() with that
+    exception; its transitive dependents are never written, while an
+    independent sibling still builds."""
+    from dbt_repo_spark.plans.runner import model
+
+    catalog = Catalog(spark, str(tmp_path / "wh"))
+    src = spark.createDataFrame([Row(k=1), Row(k=2)])
+
+    @model("bad", deps=("src",), materialized="table")
+    def bad(ctx):
+        raise RuntimeError("builder failed")
+
+    @model("child", deps=("bad",), materialized="table")
+    def child(ctx):
+        return ctx["bad"]
+
+    @model("grandchild", deps=("child",), materialized="table")
+    def grandchild(ctx):
+        return ctx["child"]
+
+    @model("sibling", deps=("src",), materialized="table")
+    def sibling(ctx):
+        return ctx["src"]
+
+    r = ModelRunner(spark, catalog, {"src": src}).add(bad, child, grandchild, sibling)
+    with pytest.raises(RuntimeError, match="builder failed"):
+        r.run(parallelism=4)
+    assert not catalog.exists("analytics", "child")
+    assert not catalog.exists("analytics", "grandchild")
+    assert catalog.read("analytics", "sibling").count() == 2
+
+
+def test_fused_row_local_tests_match_per_test_functions(spark):
+    """run_tests counts every not_null and accepted_values test of a
+    relation in one aggregate; names, order and counts equal the
+    per-test functions on a frame with nulls and values outside the
+    accepted set, and unique keeps its own count."""
+    from dbt_repo_spark.plans.testing import (
+        accepted_values,
+        not_null,
+        run_tests,
+        unique,
+    )
+
+    df = spark.createDataFrame(
+        [
+            Row(id=1, st="ok", code=None),
+            Row(id=1, st="bad", code="a"),
+            Row(id=None, st=None, code="z"),
+            Row(id=3, st="worse", code="b"),
+        ],
+        "id int, st string, code string",
+    )
+    spec = {
+        "id": ["not_null", "unique"],
+        "st": ["not_null", {"accepted_values": ["ok"]}],
+        "code": [{"accepted_values": ["a", "b"]}, "not_null"],
+    }
+    expected = [
+        not_null(df, "id"),
+        unique(df, "id"),
+        not_null(df, "st"),
+        accepted_values(df, "st", ["ok"]),
+        accepted_values(df, "code", ["a", "b"]),
+        not_null(df, "code"),
+    ]
+    got = run_tests(df, spec)
+    assert [(r.name, r.violations, r.passed) for r in got] == [
+        (r.name, r.violations, r.passed) for r in expected
+    ]
+    assert [r.violations for r in got] == [1, 1, 1, 3, 2, 1]
 
 
 def test_store_failures_writes_audit_tables(spark, tmp_path):
