@@ -1,4 +1,5 @@
-"""Distributed graph primitives for dedup clustering.
+"""Distributed graph primitives: components, dedup clusters, PageRank,
+triangle census, k-core, BFS, weighted SSSP and label propagation.
 
 Near-duplicate detection (operators/dedup.py) emits PAIRS; an actual
 dedup pass needs CLUSTERS — the transitive closure of the pair relation —
@@ -7,9 +8,30 @@ representative. The reference has no graph operator (its dedup is the
 streaming dropDuplicates at /root/reference/src/realtime_pubsub_to_spark.py:153);
 this is part of the training-data-pipeline extension surface.
 
-Scale notes (100 TB): each round does (a) a neighbor-min propagation —
-one O(|E|) join + aggregate — and (b) a POINTER-JUMP (shortcut): every
-node also adopts its label's label, one O(|V|) self-join. Jumping doubles
+Every iterative operator runs its rounds through one fixpoint loop
+(:func:`_persisted` + :func:`_iterate`), which owns four rules:
+
+1. A relation every round reads (the edges) is repartitioned once by
+   the key rounds probe it on and persisted — not localCheckpointed,
+   which erases partitioning and would re-shuffle |E| rows every round.
+2. Each round's state is localCheckpointed, so round N's plan stays one
+   round deep instead of nesting N joins (planning time, not data,
+   would become the bottleneck).
+3. Each round spends exactly one action: the convergence probe's count
+   when the loop has one (a zero count is the fixpoint), else the
+   checkpoint itself.
+4. The persisted relation and every superseded round state are released
+   on exit, even when a round raises; a loop that must reach its
+   fixpoint raises instead of returning a partial answer.
+
+Round bodies are relational folds: a node's own row and its candidate
+rows are unioned and reduced in ONE aggregate exchange (operator fusion
+of the older join-then-aggregate shapes). All arithmetic is integer, so
+results are order-independent and bit-identical across engines.
+
+Connected components scale notes (100 TB): each round does (a) a
+neighbor-min propagation and (b) a POINTER-JUMP (shortcut): every node
+also adopts its label's label, one O(|V|) self-join. Jumping doubles
 the distance a min label covers per round, so the round count is
 O(log eccentricity) instead of O(eccentricity) — the same asymptotics as
 the large-star/small-star alternation (Kiveris et al., "Connected
@@ -19,19 +41,92 @@ ever decrease; edges are never rewritten). Measured on 252k edges forming
 rounds and exceeded a 40-round cap; with jumping it converges in ~8
 rounds / 14.6 s on local[32] (4000 components, all labels exact).
 Near-dup dedup graphs are clique-ish and converge in 2-3 rounds either
-way. Convergence is
-detected (zero label changes); non-convergence raises rather than
-returning partial labels. Lineage is truncated every round with a
-localCheckpoint; without it the iteration-N plan nests N joins deep and
-planning time, not data, becomes the bottleneck.
+way.
 """
 
 from __future__ import annotations
+
+from contextlib import contextmanager
+from typing import Callable, Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dbt_repo_spark.session import conf_size_bytes as _conf_bytes
+
+
+@contextmanager
+def _persisted(df: DataFrame, key: str | None = None) -> Iterator[DataFrame]:
+    """Persist a relation every round reads, repartitioned by ``key`` (the
+    column rounds join it on; None keeps the input's partitioning), and
+    unpersist it on exit — also when a round raises."""
+    if key is not None:
+        n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+        df = df.repartition(n_part, key)
+    df = df.persist()
+    try:
+        yield df
+    finally:
+        df.unpersist()
+
+
+def _release(df: DataFrame) -> None:
+    """Drop the blocks of a localCheckpointed relation (its LogicalRDD)."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
+def _iterate(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    rounds: int,
+    probe: Callable[[DataFrame], DataFrame] | None = None,
+    must_converge: str | None = None,
+) -> DataFrame:
+    """The fixpoint loop: run ``state = step(state)`` for up to
+    ``rounds`` rounds and return the last state.
+
+    Each round's relation is localCheckpointed and costs exactly one
+    action: ``probe(state).count()`` when a probe is given — a zero count
+    is the fixpoint and ends the loop — else an eager checkpoint. A
+    round's checkpoint is released once the next round has materialized
+    (lineage is cut, so nothing reads it any more), and every checkpoint
+    it made is released if a round raises; the initial
+    ``state`` belongs to the caller. With ``must_converge`` (the
+    operator's name) reaching the cap without a zero probe raises
+    RuntimeError instead of returning a partial answer.
+    """
+    made: list[DataFrame] = []
+    try:
+        for _ in range(rounds):
+            state = step(state).localCheckpoint(eager=probe is None)
+            made.append(state)
+            done = probe is not None and probe(state).count() == 0
+            while len(made) > 1:
+                _release(made.pop(0))
+            if done:
+                return state
+        if must_converge is not None:
+            raise RuntimeError(
+                f"{must_converge} did not converge within {rounds} rounds; "
+                "raise the round cap."
+            )
+        return state
+    except BaseException:
+        for df in made:
+            _release(df)
+        raise
+
+
+def _own_labels(bidir: DataFrame) -> DataFrame:
+    """Every node of a persisted (src, dst) edge relation as its own label.
+    The label init is a full pass over the edges anyway, so its eager
+    checkpoint also fills the edge cache, in a single-consumer job."""
+    return (
+        bidir.select(F.col("src").alias("node"))
+        .distinct()
+        .select("node", F.col("node").alias("label"))
+        .localCheckpoint(eager=True)
+    )
 
 
 def _triangle_bcast_edge_rows(spark) -> int:
@@ -62,54 +157,22 @@ def connected_components(
     Min-label propagation: every round each node takes the min of its own
     label and its neighbors' labels; a round with zero changes is the
     fixpoint (labels only ever decrease, and a stable min over every
-    neighborhood is exactly component-wide minimality).
+    neighborhood is exactly component-wide minimality). Raises if the
+    fixpoint is not reached within ``max_iter`` rounds.
     """
-    spark = edges.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     e = edges.select(
         F.col(src).cast("long").alias("src"), F.col(dst).cast("long").alias("dst")
     ).filter(F.col("src") != F.col("dst"))
-    # symmetrize once; distinct keeps the per-round join input minimal.
-    # r12 (guide §2.4, the weighted_sssp r10 fix applied here): the edge
-    # relation is STATIC across rounds — repartition it by the probe key
-    # (dst) once and persist, NOT localCheckpoint (which erases
-    # partitioning metadata and re-shuffled |E| rows in every round's
-    # neighbor-min join); each round now shuffles only the label side.
-    bidir = (
-        e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .repartition(n_part, "dst")
-        .persist()
-    )
-    # materialize the cache via the LABEL-INIT job (r13, r12 verdict #6):
-    # bidir fans out into several subtrees of round 1's single job, and an
-    # unmaterialized persist lets concurrent stages race-recompute the
-    # (possibly very expensive — levenshtein blocking, LSH verification)
-    # upstream pair relation instead of reading blocks (measured:
-    # entity_resolution_docs 8.7→7.2s median, OPTIMIZATION_r12.md). The
-    # r12 guard was a separate blocking count() — pure overhead for cheap
-    # pair generators and an extra cached-|E| pass at scale. The label
-    # relation needs a full pass over bidir anyway, so an EAGER checkpoint
-    # of it populates the edge cache in the same single-consumer job (no
-    # race) and round 1 stops re-planning the label-init distinct twice.
-    labels = (
-        bidir.select("src")
-        .distinct()
-        .select(F.col("src").alias("node"), F.col("src").alias("label"))
-        .localCheckpoint(eager=True)
-    )
-    try:
-        for _ in range(max_iter):
-            # r13 (guide §2.3 "aggregate before you shuffle" / §2.4): the
-            # r12 shape ran neighbor-min as groupBy(src) (one exchange)
-            # and then LEFT-JOINED it back onto labels (a second
-            # label-keyed exchange) to apply least(own, nmin). MIN over
-            # the UNION of {own label} ∪ {neighbor labels} computes the
-            # identical value in ONE exchange: per node, min(cand) =
-            # least(label, coalesce(nmin, label)), and min(own) recovers
-            # the old label (own is unique per node, NULL on neighbor
-            # rows — min skips NULLs). Integer MIN is order-independent,
-            # so results are bit-identical.
+    bidir = e.unionByName(
+        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).distinct()
+
+    with _persisted(bidir, "dst") as bidir:
+
+        def step(labels: DataFrame) -> DataFrame:
+            # neighbor-min as MIN over {own label} ∪ {neighbor labels}: one
+            # exchange; min(own) keeps the old label (NULL on neighbor rows)
+            labels = labels.select("node", "label")
             cand = bidir.join(labels, bidir["dst"] == labels["node"]).select(
                 F.col("src").alias("node"),
                 F.col("label").alias("cand"),
@@ -125,43 +188,27 @@ def connected_components(
                 )
                 .groupBy("node")
                 .agg(F.min("cand").alias("label"), F.min("own").alias("__old"))
-                .select("node", "__old", "label")
-                # lazy checkpoint: prop feeds BOTH sides of the jump
-                # self-join below — one shared materialization instead of
-                # planning (and partially re-executing) the neighbor-min
-                # subtree twice per round (r12; still one job per round:
-                # the convergence count materializes the whole chain)
+                # prop feeds both sides of the jump self-join: materialize once
                 .localCheckpoint(eager=False)
             )
-            # pointer jump: adopt the label's own (current-round) label —
-            # every label is a node id, so the inner self-join preserves
-            # all rows and m.label <= m.node = l.label keeps labels
-            # monotonically decreasing
+            # pointer jump: adopt the label's own label — every label is a
+            # node id, so the inner self-join keeps every row, and labels
+            # only decrease
             lut = prop.select(
                 F.col("node").alias("__ln"), F.col("label").alias("__ll")
             )
-            stepped = (
-                prop.join(lut, prop["label"] == lut["__ln"])
-                .select(
-                    F.col("node"),
-                    F.col("__old"),
-                    F.col("__ll").alias("label"),
-                )
-                .localCheckpoint(eager=False)
+            return prop.join(lut, prop["label"] == lut["__ln"]).select(
+                "node", "__old", F.col("__ll").alias("label")
             )
-            changed = stepped.filter(F.col("label") != F.col("__old")).count()
-            labels = stepped.select("node", "label")
-            if changed == 0:
-                return labels.withColumnRenamed("label", "cluster_id")
-    finally:
-        # the returned labels are a projection of checkpointed blocks;
-        # the edge cache is round-internal state (same leak note as
-        # weighted_sssp/bfs_hops)
-        bidir.unpersist()
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds; "
-        "the graph diameter exceeds max_iter — raise it."
-    )
+
+        labels = _iterate(
+            _own_labels(bidir),
+            step,
+            max_iter,
+            probe=lambda s: s.filter(F.col("label") != F.col("__old")),
+            must_converge="connected_components",
+        )
+    return labels.select("node", F.col("label").alias("cluster_id"))
 
 
 def dedup_clusters(
@@ -190,113 +237,6 @@ def dedup_clusters(
     return cc.withColumn("is_canonical", F.col(id_col) == F.col("cluster_id"))
 
 
-def pagerank(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    damping: float = 0.85,
-    iters: int = 10,
-    with_residual: bool = False,
-) -> DataFrame:
-    """PageRank by power iteration over a directed edge list.
-
-    Authority scoring for link/citation/reference graphs (which documents
-    are load-bearing in a crawl; which records everything points at) —
-    the iterative-algorithm twin of connected_components. Per round: one
-    O(|E|) join of ranks onto out-edges, one hash-agg of contributions,
-    plus redistribution of dangling-node mass (nodes with no out-edges)
-    so total rank stays 1 and the result matches the textbook definition.
-    The dangling mass is a 1-row aggregate CROSS-JOINED (broadcast) into
-    the rank update — the whole round stays one lazy plan with NO
-    driver-side action except the lineage-cut localCheckpoint, so at
-    scale each round costs one scheduler round-trip, not three.
-    Out-degrees are computed once; lineage is cut every round with a
-    localCheckpoint so round N's plan stays one join deep. Rounds are a
-    fixed ``iters`` (power iteration converges geometrically at rate
-    ``damping``; 10-20 rounds is standard).
-
-    Returns (node, rank) with sum(rank) == 1. With ``with_residual=True``
-    every row also carries ``l1_residual`` = Σ|rank_k − rank_{k−1}|
-    between the final two iterations — an in-plan convergence
-    certificate (power iteration contracts at rate ``damping``, so a
-    non-converged or diverging run is visible in the output values, not
-    just to someone re-running the algorithm). The residual join touches
-    only the two node-count-sized, lineage-truncated rank relations.
-    """
-    spark = edges.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    e = edges.select(
-        F.col(src).cast("long").alias("src"), F.col(dst).cast("long").alias("dst")
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n = nodes.count()
-    out_deg = e.groupBy("src").agg(F.count("*").alias("deg"))
-    # r12 (guide §2.4): links is static across rounds — partition by the
-    # probe key once and persist (a localCheckpoint erases partitioning
-    # and re-shuffled |E| rows every round); and the DANGLING NODE SET is
-    # static too (out-degree never changes), so materialize it once
-    # instead of re-running the scan+groupBy+anti-join subtree per round.
-    links = e.join(out_deg, "src").repartition(n_part, "src").persist()
-    dangling_nodes = (
-        nodes.join(out_deg, nodes["node"] == out_deg["src"], "left_anti")
-        .localCheckpoint(eager=True)
-    )
-
-    ranks = nodes.select("node", (F.lit(1.0) / n).alias("rank"))
-    prev = ranks
-    try:
-        for _ in range(iters):
-            prev = ranks
-            contribs = (
-                links.join(ranks, links["src"] == ranks["node"])
-                .groupBy("dst")
-                .agg(F.sum(F.col("rank") / F.col("deg")).alias("contrib"))
-            )
-            # dangling mass: rank held by nodes with no out-edges — a 1-row
-            # aggregate broadcast into the update (NOT collected: the loop
-            # body stays one lazy plan). Float-op order matches the old
-            # driver-side formula exactly: ((1-d)/n) + ((d*dangling)/n) + d*c
-            # left-associated, so the results are bit-identical.
-            dangling = (
-                ranks.join(dangling_nodes, "node", "left_semi")
-                .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dangling"))
-            )
-            ranks = (
-                nodes.join(contribs, nodes["node"] == contribs["dst"], "left")
-                .crossJoin(F.broadcast(dangling))
-                .select(
-                    "node",
-                    (
-                        F.lit((1.0 - damping) / n)
-                        + F.lit(damping) * F.col("_dangling") / F.lit(float(n))
-                        + F.lit(damping)
-                        * F.coalesce(F.col("contrib"), F.lit(0.0))
-                    ).alias("rank"),
-                )
-                .localCheckpoint(eager=True)
-            )
-    finally:
-        # every round's ranks are checkpointed blocks — release the edge
-        # cache even on a mid-loop failure (r13, ADVICE: an exception here
-        # used to leak the persisted |E| cache for the session's lifetime)
-        links.unpersist()
-    if with_residual:
-        resid = (
-            ranks.select("node", "rank")
-            .join(prev.withColumnRenamed("rank", "__prev"), "node")
-            .agg(
-                F.sum(F.abs(F.col("rank") - F.col("__prev"))).alias("l1_residual")
-            )
-        )
-        return ranks.crossJoin(F.broadcast(resid))
-    return ranks
-
-
 def pagerank_units(
     edges: DataFrame,
     src: str = "src",
@@ -307,28 +247,39 @@ def pagerank_units(
     total_units: int = 10**15,
     with_residual: bool = False,
 ) -> DataFrame:
-    """PageRank in exact integer micro-units (1.0 == ``total_units``).
+    """PageRank by power iteration over a directed edge list, in exact
+    integer micro-units (1.0 == ``total_units``).
 
-    Same power iteration as :func:`pagerank`, but every quantity is a
-    BIGINT: the initial mass is ``total_units // n``, a node's per-edge
-    contribution is ``rank_units div out_deg`` (truncating division —
-    positive operands, so identical to floor), and damping is the exact
-    rational ``damping_num/damping_den`` applied as
-    ``(num * x) div den``. Integer sums are ORDER-INDEPENDENT, so the
-    result is bit-identical across engines and partitionings — the
-    float version's Σ(rank/deg) depends on accumulation order at the
-    last ulp, which is exactly the drift a differential-testing hash
-    sees. Quantization bias per op is ≤1 unit (1e-15 of total mass),
-    ~1e2 units per node after 10 rounds — far below float64 noise at
-    graph sizes where ranks are ~1e-4 (unit tests pin agreement with
-    the float version at 1e-9).
+    Authority scoring for link/citation/reference graphs (which documents
+    are load-bearing in a crawl; which records everything points at).
+    Per round: one O(|E|) join of ranks onto out-edges, one hash-agg of
+    contributions, plus redistribution of dangling-node mass (nodes with
+    no out-edges) so total rank stays 1 and the result matches the
+    textbook definition. Rounds are a fixed ``iters`` (power iteration
+    converges geometrically at the damping rate; 10-20 rounds is
+    standard).
+
+    Every quantity is a BIGINT: the initial mass is ``total_units // n``,
+    a node's per-edge contribution is ``rank_units div out_deg``
+    (truncating division — positive operands, so identical to floor),
+    and damping is the exact rational ``damping_num/damping_den`` applied
+    as ``(num * x) div den``. Integer sums are ORDER-INDEPENDENT, so the
+    result is bit-identical across engines and partitionings — a float
+    Σ(rank/deg) depends on accumulation order at the last ulp, which is
+    exactly the drift a differential-testing hash sees. Quantization
+    bias per op is ≤1 unit (1e-15 of total mass), ~1e2 units per node
+    after 10 rounds — far below float64 noise at graph sizes where ranks
+    are ~1e-4 (unit tests pin agreement with a float NumPy power
+    iteration at 1e-9).
 
     Overflow headroom: all sums are ≤ total_units (mass never grows),
     so the largest intermediate is damping_num * total_units ≈ 1.7e16
     « 2^63. Returns (node, rank_units, rank) where rank is the single
     deterministic double division rank_units / total_units; with
     ``with_residual`` every row also carries the exact integer
-    ``l1_residual_units`` = Σ|Δunits| between the final two iterations.
+    ``l1_residual_units`` = Σ|Δunits| between the final two iterations —
+    an in-plan convergence certificate (power iteration contracts at the
+    damping rate, so a non-converged run is visible in the output).
     """
     e = edges.select(
         F.col(src).cast("long").alias("src"), F.col(dst).cast("long").alias("dst")
@@ -341,52 +292,32 @@ def pagerank_units(
     )
     n = nodes.count()
     out_deg = e.groupBy("src").agg(F.count("*").alias("deg"))
-    # r13 (guide §2.4 — the r12 fix pagerank got, applied to the integer
-    # variant graph_pagerank_parts actually runs): links is static across
-    # rounds — persist it once (the eager localCheckpoint erased
-    # partitioning and re-shuffled |E| every round; the e⋈out_deg output
-    # is ALREADY hash-partitioned by src, so no explicit repartition —
-    # the cache preserves the join's partitioning); the DANGLING NODE SET
-    # is static too (out-degree never changes), so materialize it once
-    # instead of re-running the scan+groupBy+anti-join subtree per
-    # round. Integer sums are order-independent, so results are
-    # bit-identical.
-    links = e.join(out_deg, "src").persist()
-    dangling_nodes = (
-        nodes.join(out_deg, nodes["node"] == out_deg["src"], "left_anti")
-        .localCheckpoint(eager=True)
-    )
+    # out-degree never changes, so neither does the dangling node set
+    dangling_nodes = nodes.join(
+        out_deg, nodes["node"] == out_deg["src"], "left_anti"
+    ).localCheckpoint(eager=True)
+    teleport_units = (damping_den - damping_num) * total_units // (damping_den * n)
+    init = F.lit(total_units // n)
 
-    ranks = nodes.select("node", F.lit(total_units // n).alias("rank_units"))
-    prev = ranks
-    try:
-        for _ in range(iters):
-            prev = ranks
+    # e ⋈ out_deg is already hash-partitioned by src: persist it as it is
+    with _persisted(e.join(out_deg, "src")) as links:
+
+        def step(ranks: DataFrame) -> DataFrame:
+            ranks = ranks.select("node", "rank_units")
             contribs = (
                 links.join(ranks, links["src"] == ranks["node"])
                 .groupBy("dst")
-                .agg(
-                    F.sum(F.expr("rank_units div deg")).alias("contrib_units")
-                )
+                .agg(F.sum(F.expr("rank_units div deg")).alias("contrib_units"))
             )
-            # dangling mass as a broadcast 1-row aggregate (same laziness
-            # fix as pagerank's): num*dangling ≤ damping_num·total_units
-            # ≈ 1.7e16 « 2^63, and div over non-negative operands equals
-            # Python's //, so the integer result is bit-identical to the
-            # old driver-side formula.
-            dangling = (
-                ranks.join(dangling_nodes, "node", "left_semi")
-                .agg(
-                    F.coalesce(F.sum("rank_units"), F.lit(0))
-                    .cast("long")
-                    .alias("_dangling_units")
-                )
+            # dangling mass: a 1-row aggregate broadcast into the update,
+            # not collected, so the round stays one lazy plan
+            dangling = ranks.join(dangling_nodes, "node", "left_semi").agg(
+                F.coalesce(F.sum("rank_units"), F.lit(0))
+                .cast("long")
+                .alias("_dangling_units")
             )
-            teleport_units = (damping_den - damping_num) * total_units // (
-                damping_den * n
-            )
-            ranks = (
-                nodes.join(contribs, nodes["node"] == contribs["dst"], "left")
+            return (
+                ranks.join(contribs, ranks["node"] == contribs["dst"], "left")
                 .crossJoin(F.broadcast(dangling))
                 .select(
                     "node",
@@ -400,28 +331,28 @@ def pagerank_units(
                             f"({damping_num} * coalesce(contrib_units, 0L))"
                             f" div {damping_den}"
                         )
-                    ).cast("long").alias("rank_units"),
+                    )
+                    .cast("long")
+                    .alias("rank_units"),
+                    # the previous round's rank, for the residual
+                    F.col("rank_units").alias("__prev_units"),
                 )
-                .localCheckpoint(eager=True)
             )
-    finally:
-        # every round's ranks are checkpointed blocks — release the edge
-        # cache even on a mid-loop failure (same rule as pagerank)
-        links.unpersist()
+
+        ranks = _iterate(
+            nodes.select("node", init.alias("rank_units"), init.alias("__prev_units")),
+            step,
+            iters,
+        )
     out = ranks.select(
         "node",
         "rank_units",
         (F.col("rank_units") / F.lit(float(total_units))).alias("rank"),
     )
     if with_residual:
-        resid = (
-            ranks.join(
-                prev.withColumnRenamed("rank_units", "__prev_units"), "node"
-            )
-            .agg(
-                F.sum(F.abs(F.col("rank_units") - F.col("__prev_units"))).alias(
-                    "l1_residual_units"
-                )
+        resid = ranks.agg(
+            F.sum(F.abs(F.col("rank_units") - F.col("__prev_units"))).alias(
+                "l1_residual_units"
             )
         )
         return out.crossJoin(F.broadcast(resid))
@@ -588,13 +519,12 @@ def k_core(
     degrees, repeat until stable. Peeling is ORDER-INDEPENDENT (the
     k-core is unique), so each round removes the whole violating set at
     once — round count is bounded by the degeneracy ordering's depth,
-    observed single-digit on co-occurrence graphs. Each round is one
-    degree aggregate + two semi-joins (both hash-partitioned on the
-    node), with lineage truncated per round (connected_components'
-    rule); the convergence check is the one driver-side scalar per
-    round the CC/PageRank loops already sanction. Raises on
-    non-convergence within ``max_rounds`` rather than returning a
-    partial core.
+    observed single-digit on co-occurrence graphs. Each round peels the
+    nodes the last round left under k from the edge set (two anti-joins
+    against the small violating set) and re-aggregates the degrees; the
+    degree relation is the round state, and a round with no node under
+    k is the fixpoint. Raises on non-convergence within ``max_rounds``
+    rather than returning a partial core.
 
     Returns (node, deg) for every surviving node — ``MIN(deg) >= k`` is
     the caller-checkable certificate (the registry query emits it).
@@ -607,31 +537,35 @@ def k_core(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_rounds):
-        deg = (
+
+    def degrees(und: DataFrame) -> DataFrame:
+        return (
             und.select(F.col("u").alias("node"))
             .unionByName(und.select(F.col("v").alias("node")))
             .groupBy("node")
             .agg(F.count("*").alias("deg"))
-            # lazy checkpoint: deg is read by the convergence probe, the
-            # peel anti-joins AND (on the last round) the caller — one
-            # materialization per round instead of two/three (r12)
-            .localCheckpoint(eager=False)
         )
+
+    def step(deg: DataFrame) -> DataFrame:
+        # the edge set shrinks with the degrees: it is state too, and its
+        # checkpoint is materialized by the round's probe
+        nonlocal und
         bad = deg.filter(F.col("deg") < k).select("node")
-        if bad.isEmpty():
-            return deg
         und = (
-            und.join(
-                bad.select(F.col("node").alias("u")), "u", "left_anti"
-            )
+            und.join(bad.select(F.col("node").alias("u")), "u", "left_anti")
             .join(bad.select(F.col("node").alias("v")), "v", "left_anti")
             .select("u", "v")
-            # lazy: the NEXT round's convergence probe materializes the
-            # peeled edges — one job per peel round instead of two (r12)
             .localCheckpoint(eager=False)
         )
-    raise RuntimeError(f"k_core did not converge within {max_rounds} rounds")
+        return degrees(und)
+
+    return _iterate(
+        degrees(und),
+        step,
+        max_rounds,
+        probe=lambda deg: deg.filter(F.col("deg") < k),
+        must_converge="k_core",
+    )
 
 
 def bfs_hops(
@@ -646,104 +580,32 @@ def bfs_hops(
     ego-network primitive the CC / PageRank / k-core family doesn't
     cover: those converge to fixpoints, this measures DISTANCE).
 
-    TRUE frontier relaxation, all integers: in unweighted hop-BFS a
-    node's FIRST discovery is its minimum distance, so each round joins
-    only the nodes discovered last round (the frontier) against the
-    edges and keeps the candidates not already settled (an anti-join
-    against dist) — work per round is O(|frontier_t|·deg), never
-    O(|ball_t|·deg); already-settled nodes are never re-relaxed.
-    Lineage is cut per round (localCheckpoint) so the plan stays
-    round-sized, and an emptied frontier short-circuits the remaining
-    rounds. Nodes not reached within ``iters`` hops are absent from the
-    output (no sentinel distances to overflow at scale). First-discovery
-    = MIN hop is order-independent, so the result is bit-identical
-    across engines and partitionings — full-oracle-safe.
+    :func:`weighted_sssp` with every edge weighing 1: in unweighted
+    hop-BFS a node's FIRST discovery is its minimum distance, so the
+    improved frontier of each round is exactly the newly discovered
+    nodes — each round joins only them against the edges, and
+    already-settled nodes are never re-relaxed. An emptied frontier
+    ends the rounds early. Nodes not reached within ``iters`` hops are
+    absent from the output (no sentinel distances to overflow at
+    scale). First-discovery = MIN hop is order-independent, so the
+    result is bit-identical across engines and partitionings —
+    full-oracle-safe.
 
     Scale (100 TB): per-round cost is one shuffle of |frontier_t| +
-    incident-edge keyed rows plus one anti-join against the settled
-    set; hop-bounded BFS never materializes anything larger
-    than the true ``iters``-radius ball. Seeds arrive as a DataFrame so
-    the caller controls seed fan-in (a predicate, a sample, a fixed
-    list). For diameter-scale sweeps prefer delta-stepping on weighted
-    graphs; for hop-bounded features (the common trust-radius /
+    incident-edge keyed rows plus the merge with the settled set;
+    hop-bounded BFS never materializes anything larger than the true
+    ``iters``-radius ball. Seeds arrive as a DataFrame so the caller
+    controls seed fan-in (a predicate, a sample, a fixed list). For
+    diameter-scale sweeps prefer delta-stepping on weighted graphs; for
+    hop-bounded features (the common trust-radius /
     contamination-blast-radius ask) this is the right operator.
 
     Returns (node BIGINT, hops BIGINT).
     """
-    spark = edges.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    # static across rounds: repartition by the probe key once and persist
-    # (localCheckpoint erases partitioning metadata, so a checkpointed e
-    # would re-shuffle |E| rows in every round's join — the persisted
-    # exchange is planned once and each round shuffles only the frontier)
-    e = (
-        edges.select(
-            F.col(src).cast("long").alias("src"),
-            F.col(dst).cast("long").alias("dst"),
-        )
-        .repartition(n_part, "src")
-        .persist()
+    unit = edges.select(
+        F.col(src).alias("src"), F.col(dst).alias("dst"), F.lit(1).alias("w")
     )
-    # distinct: dist is never re-aggregated after the frontier rewrite
-    # (disjoint unions only), so duplicate seed rows would survive to the
-    # output and double round-1 join work — the old union-min shape
-    # collapsed them implicitly
-    dist = (
-        seeds.select(
-            F.col(seeds.columns[0]).cast("long").alias("node"),
-            F.lit(0).cast("long").alias("hops"),
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    frontier = dist
-    try:
-        for _ in range(iters):
-            relaxed = frontier.join(e, frontier["node"] == e["src"]).select(
-                F.col("dst").alias("node"),
-                (F.col("hops") + F.lit(1)).alias("hops"),
-            )
-            # candidates reduced to one row per node and screened against
-            # the settled set: in hop-BFS every already-settled node has
-            # hops <= t < t+1, so "improved" == "never seen before" and
-            # the frontier/dist node sets stay disjoint (plain union below,
-            # no re-aggregation of the settled ball). r13 (guide §2.3):
-            # the r12 shape was groupBy + LEFT-ANTI join (two exchange
-            # sides); one union + groupBy computes the identical frontier
-            # in ONE exchange — a settled marker row suppresses the node,
-            # min(when(¬settled)) is the candidate minimum.
-            frontier = (
-                relaxed.select("node", "hops", F.lit(False).alias("_s"))
-                .unionByName(
-                    dist.select(
-                        "node",
-                        F.lit(0).cast("long").alias("hops"),
-                        F.lit(True).alias("_s"),
-                    )
-                )
-                .groupBy("node")
-                .agg(
-                    F.min(F.when(~F.col("_s"), F.col("hops"))).alias("hops"),
-                    F.max("_s").alias("_settled"),
-                )
-                .filter(~F.col("_settled"))
-                .select("node", "hops")
-                # lazy: the emptiness count below materializes the round's
-                # checkpoint — one job per round instead of two (r12)
-                .localCheckpoint(eager=False)
-            )
-            if frontier.count() == 0:
-                break
-            # union of per-round checkpointed frontiers: shallow lineage
-            # (one node appears exactly once across all rounds)
-            dist = dist.unionByName(frontier)
-    finally:
-        # every returned row sits in checkpointed blocks — release the
-        # edge cache even on a mid-loop failure (persist() is never
-        # GC-cleaned; without this each call leaks an |E|-sized
-        # CacheManager entry for the session's lifetime)
-        e.unpersist()
-    return dist
+    return weighted_sssp(unit, seeds, iters).withColumnRenamed("dist", "hops")
 
 
 def weighted_sssp(
@@ -753,95 +615,57 @@ def weighted_sssp(
     src: str = "src",
     dst: str = "dst",
     weight: str = "w",
-    stats: dict | None = None,
-    short_circuit: bool = True,
 ) -> DataFrame:
     """Bounded-round single-source-set shortest paths over INTEGER edge
     weights — the weighted sibling of ``bfs_hops`` (hops measures edge
     count; this measures accumulated weight, the delta-stepping /
     Bellman-Ford ask its docstring deferred).
 
-    TRUE-FRONTIER Bellman-Ford (the r9 BFS discipline applied to the
-    weighted case): unlike unweighted BFS a node's first discovery is
-    NOT final (a longer-hop path can be lighter), but only a node whose
-    distance IMPROVED in round k−1 can improve a neighbor in round k —
-    its outgoing relaxations with any older distance already happened.
-    So each round joins only the improved-frontier against the edges,
-    then merges the candidate minima into the settled relation with ONE
-    full-outer join whose checkpointed output carries both next-round
-    relations (dist = every row, frontier = the rows flagged improved)
-    — work per round is O(|frontier_t|·deg + |ball_t|), never
-    O(|ball_t|·deg), and one materialization per round, same as before.
-    After ``iters`` rounds the result is the exact shortest distance
-    among paths of ≤ ``iters`` edges, bit-identical to the synchronous
-    re-relax-everything recurrence: values propagate one edge per
-    round in both (≥ the ≤t-edge minimum), and the last improvement of
-    any predecessor re-enters the frontier (≤ it). All integer
-    arithmetic: MIN of integer sums is order-independent, so the result
-    is bit-identical across engines — full-oracle-safe. An emptied
-    frontier short-circuits the remaining rounds (the ≤iters-edge bound
-    is already exact at the fixpoint).
-
-    ``stats`` (optional dict) receives ``{"rounds": <executed>}`` so
-    callers/tests can observe the short-circuit; ``short_circuit=False``
-    disables the early exit (measurement A/B only — the result is
-    identical either way, rounds past the fixpoint are no-ops).
+    TRUE-FRONTIER Bellman-Ford: unlike unweighted BFS a node's first
+    discovery is NOT final (a longer-hop path can be lighter), but only
+    a node whose distance IMPROVED in round k−1 can improve a neighbor
+    in round k — its outgoing relaxations with any older distance
+    already happened. So each round joins only the improved frontier
+    against the edges, then merges the candidate minima into the settled
+    relation with one union + aggregate whose checkpointed output
+    carries both next-round relations (dist = every row, frontier = the
+    rows flagged improved) — work per round is O(|frontier_t|·deg +
+    |ball_t|), never O(|ball_t|·deg). After ``iters`` rounds the result
+    is the exact shortest distance among paths of ≤ ``iters`` edges,
+    bit-identical to the synchronous re-relax-everything recurrence:
+    values propagate one edge per round in both (≥ the ≤t-edge minimum),
+    and the last improvement of any predecessor re-enters the frontier
+    (≤ it). All integer arithmetic: MIN of integer sums is
+    order-independent, so the result is bit-identical across engines —
+    full-oracle-safe. An emptied frontier ends the rounds early (the
+    ≤iters-edge bound is already exact at the fixpoint).
 
     Scale (100 TB): per-round cost is one shuffle of |frontier_t| +
-    incident-edge keyed rows plus one anti-join against the settled
-    ball — frontier-linear, matching bfs_hops' measured growth rather
-    than ball×edges. For diameter-scale exact SSSP prefer true
-    delta-stepping with bucketed frontiers; for the hop-bounded feature
-    ask (trust radius, weighted blast radius) this is the right
-    operator. Returns (node BIGINT, dist BIGINT).
+    incident-edge keyed rows plus the merge with the settled ball —
+    frontier-linear, rather than ball×edges. For diameter-scale exact
+    SSSP prefer true delta-stepping with bucketed frontiers; for the
+    hop-bounded feature ask (trust radius, weighted blast radius) this
+    is the right operator. Returns (node BIGINT, dist BIGINT).
     """
-    spark = edges.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    # The edge relation is static across rounds: repartition it by the
-    # probe key ONCE and persist (NOT localCheckpoint, which erases
-    # partitioning metadata — a checkpointed e re-shuffles |E| rows in
-    # EVERY round's join; the persisted exchange is planned once and
-    # every round's join shuffles only the frontier side against it).
-    e = (
-        edges.select(
-            F.col(src).cast("long").alias("src"),
-            F.col(dst).cast("long").alias("dst"),
-            F.col(weight).cast("long").alias("w"),
-        )
-        .repartition(n_part, "src")
-        .persist()
+    e = edges.select(
+        F.col(src).cast("long").alias("src"),
+        F.col(dst).cast("long").alias("dst"),
+        F.col(weight).cast("long").alias("w"),
     )
-    # distinct: dist is maintained by the full-outer merge below (never
-    # re-aggregated), so duplicate seed rows would survive to the
-    # output — the old union-min shape collapsed them implicitly
-    dist = (
-        seeds.select(
-            F.col(seeds.columns[0]).cast("long").alias("node"),
-            F.lit(0).cast("long").alias("dist"),
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    frontier = dist
-    rounds_run = 0
-    try:
-        for _ in range(iters):
-            rounds_run += 1
-            relaxed = frontier.join(e, frontier["node"] == e["src"]).select(
-                F.col("dst").alias("node"),
-                (F.col("dist") + F.col("w")).alias("_cand"),
+    with _persisted(e, "src") as e:
+
+        def step(dist: DataFrame) -> DataFrame:
+            relaxed = (
+                dist.filter("_improved")
+                .join(e, dist["node"] == e["src"])
+                .select(
+                    F.col("dst").alias("node"),
+                    (F.col("dist") + F.col("w")).alias("_cand"),
+                )
             )
-            # r13 (guide §2.3, same fold as connected_components): the r12
-            # shape grouped the candidates (one exchange) and FULL-OUTER
-            # joined the settled ball (two more exchange sides). One
-            # union + groupBy computes the identical merge in ONE
-            # exchange: _old is unique per node (NULL on candidate rows,
-            # min skips NULLs), min(_cand) is the candidate minimum, and
-            # a node missing from either side yields the same NULL the
-            # full-outer join produced. The round's single checkpoint
-            # still serves BOTH next-round relations (dist and frontier
-            # are projections of the same materialized blocks).
-            merged = (
+            # _old is unique per node (NULL on candidate rows, min skips
+            # NULLs); a node missing from either side yields NULL there
+            return (
                 relaxed.select(
                     "node", "_cand", F.lit(None).cast("long").alias("_old")
                 )
@@ -859,31 +683,63 @@ def weighted_sssp(
                     F.least("_cand", "_old").alias("dist"),
                     (
                         F.col("_cand").isNotNull()
-                        & (
-                            F.col("_old").isNull()
-                            | (F.col("_cand") < F.col("_old"))
-                        )
+                        & (F.col("_old").isNull() | (F.col("_cand") < F.col("_old")))
                     ).alias("_improved"),
                 )
-                # lazy: the improved-count below materializes the
-                # checkpoint in the same job — one scheduler round-trip
-                # per round, not two (the old shape paid an
-                # eager-checkpoint job AND an isEmpty job; r12, same fold
-                # as connected_components)
-                .localCheckpoint(eager=False)
             )
-            n_improved = merged.filter("_improved").count()
-            dist = merged.select("node", "dist")
-            frontier = merged.filter("_improved").select("node", "dist")
-            if n_improved == 0:
-                if short_circuit:
-                    break
-                # measurement mode: the frontier is empty so every further
-                # round is a no-op join over zero rows — still executed
-    finally:
-        # dist is a projection of checkpointed blocks — release the edge
-        # cache even on a mid-loop failure (same leak note as bfs_hops)
-        e.unpersist()
-    if stats is not None:
-        stats["rounds"] = rounds_run
-    return dist
+
+        # distinct: dist is never re-aggregated per seed row, so duplicate
+        # seed rows would survive to the output
+        seeded = (
+            seeds.select(
+                F.col(seeds.columns[0]).cast("long").alias("node"),
+                F.lit(0).cast("long").alias("dist"),
+                F.lit(True).alias("_improved"),
+            )
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
+        dist = _iterate(seeded, step, iters, probe=lambda d: d.filter("_improved"))
+    return dist.select("node", "dist")
+
+
+def label_propagation(
+    edges: DataFrame,
+    src: str = "src",
+    dst: str = "dst",
+    rounds: int = 4,
+) -> DataFrame:
+    """Community detection by SYNCHRONOUS label propagation over an
+    undirected edge list (a repeated pair counts as a heavier edge).
+
+    Every node starts as its own label; each round every node
+    simultaneously adopts its neighbors' most frequent label, ties broken
+    by the SMALLEST label (MIN over (-count, label) structs). Sync LPA
+    can oscillate, so the fixed ``rounds`` IS the algorithm, not a cap.
+    Each round is one O(|E|) equi-join + two hash-aggs. All integers →
+    order-independent, bit-identical across engines.
+
+    Returns (node, label) for every node that appears in an edge; node
+    and label keep the input columns' type.
+    """
+    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    bidir = e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    with _persisted(bidir, "dst") as bidir:
+
+        def step(labels: DataFrame) -> DataFrame:
+            votes = (
+                bidir.join(labels, bidir["dst"] == labels["node"])
+                .groupBy("src", "label")
+                .agg(F.count("*").alias("c"))
+            )
+            return (
+                votes.groupBy("src")
+                .agg(
+                    F.min(F.struct((-F.col("c")).alias("a"), F.col("label").alias("b")))[
+                        "b"
+                    ].alias("label")
+                )
+                .select(F.col("src").alias("node"), "label")
+            )
+
+        return _iterate(_own_labels(bidir), step, rounds)

@@ -1154,12 +1154,13 @@ def graph_label_prop_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     part co-purchase graph (parts sharing ≥2 orders) — the
     modularity-style grouping the components family can't express (the
     co-purchase graph is one giant connected component; LPA finds its
-    dense regions). Deterministic variant: every node simultaneously
-    adopts its neighbors' most frequent label, ties broken by the
-    SMALLEST label (MIN over (-count, label) structs — the unigram DP's
-    argmax idiom), fixed 4 rounds (sync LPA can oscillate,
-    so a fixed round count IS the algorithm here, stated identically in
-    the unrolled oracle). All integers → full value parity.
+    dense regions). Deterministic variant (graph.label_propagation):
+    every node simultaneously adopts its neighbors' most frequent label,
+    ties broken by the SMALLEST label (MIN over (-count, label) structs —
+    the unigram DP's argmax idiom), fixed 4 rounds (sync LPA can
+    oscillate, so a fixed round count IS the algorithm here, stated
+    identically in the unrolled oracle). All integers → full value
+    parity.
 
     Scale: the co-purchase edge build is the co_purchase_lift shape
     (per-order line fan-out, bounded by max lines per order); each LPA
@@ -1167,6 +1168,8 @@ def graph_label_prop_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same per-round bill as connected_components without the
     convergence loop.
     """
+    from dbt_repo_spark.operators.graph import label_propagation
+
     li = t(spark, sf_dir, "lineitem")
     op = li.select(
         F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
@@ -1179,50 +1182,7 @@ def graph_label_prop_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("co") >= _LPA_MIN_CO)
         .select("src", "dst")
     )
-    # r12 (guide §2.4, the weighted_sssp/CC fix): the edge relation is
-    # static across the 4 rounds — partition by the probe key once and
-    # persist (the old eager localCheckpoint erased partitioning and
-    # re-shuffled |E| rows in every round's join).
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    e = (
-        e0.unionByName(
-            e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .repartition(n_part, "dst")
-        .persist()
-    )
-    # materialize the cache via the LABEL-INIT job (r13, r12 verdict #6,
-    # same fold as connected_components): the label relation needs a full
-    # pass over e anyway, so an EAGER checkpoint of it populates the
-    # persisted edge blocks in a single-consumer job — round 1 reads the
-    # cache with no race, and the r12 separate blocking count() is gone.
-    labels = (
-        e.select(F.col("src").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("label"))
-        .localCheckpoint(eager=True)
-    )
-    try:
-        for _ in range(_LPA_ROUNDS):
-            cnt = (
-                e.join(labels, e["dst"] == labels["node"])
-                .groupBy(F.col("src"), F.col("label"))
-                .agg(F.count("*").alias("c"))
-            )
-            labels = (
-                cnt.groupBy("src")
-                .agg(
-                    F.min(
-                        F.struct((-F.col("c")).alias("a"), F.col("label").alias("b"))
-                    )["b"].alias("label")
-                )
-                .select(F.col("src").alias("node"), "label")
-                .localCheckpoint(eager=True)
-            )
-    finally:
-        # labels are checkpointed blocks; drop the edge cache even on a
-        # mid-loop failure (r13, ADVICE #1)
-        e.unpersist()
+    labels = label_propagation(e0, rounds=_LPA_ROUNDS)
     return labels.groupBy(F.col("label").alias("community")).agg(
         F.count("*").alias("n_nodes"),
         F.min("node").alias("min_node"),

@@ -1,10 +1,14 @@
 """connected_components / dedup_clusters (operators/graph.py).
 
 Covers multi-hop label propagation (a chain needs > 1 round), disjoint
-components, symmetry of the input pair order, and singleton append.
+components, symmetry of the input pair order, and singleton append, and
+the fixpoint loop's rules: cleanup when a round raises, the
+non-convergence error, and one job per round.
 """
 
 from __future__ import annotations
+
+import pytest
 
 from dbt_repo_spark.operators.graph import connected_components, dedup_clusters
 
@@ -80,18 +84,88 @@ def test_cc_matches_union_find(spark, edges):
     assert got == _uf_components(edges)
 
 
+def test_fixpoint_loop_releases_everything_when_a_round_raises(spark):
+    """A round that raises mid-loop leaves no persisted RDD behind: the
+    static relation and every round checkpoint the loop made are
+    released on the way out."""
+    from pyspark.sql import functions as F
+
+    from dbt_repo_spark.operators.graph import _iterate, _persisted
+
+    jsc = spark.sparkContext._jsc
+
+    def persisted_ids():
+        return set(jsc.getPersistentRDDs().keySet())
+
+    before = persisted_ids()
+    calls = []
+    chain = spark.createDataFrame([(i, i + 1) for i in range(20)], "src long, dst long")
+    seed = spark.createDataFrame([(0,)], "node long")
+    with pytest.raises(ValueError, match="round 3"):
+        with _persisted(chain, "src") as e:
+
+            def step(frontier):
+                calls.append(persisted_ids() - before)
+                if len(calls) == 3:
+                    raise ValueError("round 3")
+                return frontier.join(e, frontier["node"] == e["src"]).select(
+                    F.col("dst").alias("node")
+                )
+
+            _iterate(seed, step, 5, probe=lambda f: f)
+    assert calls[-1], "the rounds before the failure cached nothing"
+    assert persisted_ids() - before == set()
+
+
+def test_cc_raises_when_not_converged(spark):
+    """A 40-node path needs ~log2(40) pointer-jumping rounds: a 2-round
+    cap raises instead of returning partial labels, naming the operator."""
+    df = spark.createDataFrame([(i, i + 1) for i in range(39)], "id_a long, id_b long")
+    with pytest.raises(RuntimeError, match="connected_components"):
+        connected_components(df, max_iter=2)
+
+
+def test_bfs_spends_one_job_per_round(spark):
+    """One action per round: on a 6-node chain each extra round of
+    bfs_hops runs exactly one more Spark job until the frontier empties
+    (round 6 finds it empty), and no job after that. Adaptive execution
+    and broadcast joins are switched off for the count, so that an
+    action is exactly one job (they add their own per-stage jobs)."""
+    from dbt_repo_spark.operators.graph import bfs_hops
+
+    sc = spark.sparkContext
+    chain = spark.createDataFrame([(i, i + 1) for i in range(5)], "src long, dst long")
+    seed = spark.createDataFrame([(0,)], "node long")
+    confs = ("spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold")
+    saved = {k: spark.conf.get(k) for k in confs}
+    jobs = []
+    try:
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        for k in range(1, 9):
+            group = f"bfs-one-job-per-round-{k}"
+            sc.setJobGroup(group, group)
+            assert len(bfs_hops(chain, seed, iters=k).collect()) == min(k, 5) + 1
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert [b - a for a, b in zip(jobs, jobs[1:])] == [1] * 5 + [0] * 2, jobs
+
+
 def test_pagerank_matches_power_iteration(spark):
-    """DataFrame PageRank == dense NumPy power iteration on the same
-    graph (incl. a dangling node), and ranks sum to 1."""
+    """Integer micro-unit PageRank == dense NumPy float power iteration
+    on the same graph (incl. a dangling node) to 1e-9 — quantization bias
+    is ≤ a few hundred units of 1e15 — and conserves mass up to
+    truncation: ranks sum to 1, units to within iters·n units of 1e15."""
     import numpy as np
 
-    from dbt_repo_spark.operators.graph import pagerank
+    from dbt_repo_spark.operators.graph import pagerank_units
 
     #   0 -> 1, 0 -> 2, 1 -> 2, 2 -> 0, 3 -> 2 ; 4 is dangling (in-only)
     edge_list = [(0, 1), (0, 2), (1, 2), (2, 0), (3, 2), (2, 4)]
     edges = spark.createDataFrame(edge_list, ["src", "dst"])
-    got = {r.node: r.rank for r in pagerank(edges, damping=0.85, iters=20).collect()}
-
     n = 5
     M = np.zeros((n, n))
     deg = {}
@@ -99,30 +173,38 @@ def test_pagerank_matches_power_iteration(spark):
         deg[s] = deg.get(s, 0) + 1
     for s, d in edge_list:
         M[d, s] = 1.0 / deg[s]
-    r = np.full(n, 1.0 / n)
-    for _ in range(20):
-        dangling = sum(r[i] for i in range(n) if i not in deg)
-        r = (1 - 0.85) / n + 0.85 * (M @ r + dangling / n)
-    assert abs(sum(got.values()) - 1.0) < 1e-9
-    for i in range(n):
-        assert abs(got[i] - r[i]) < 1e-12, (i, got[i], r[i])
+    for iters in (10, 20):
+        rows = pagerank_units(edges, iters=iters).collect()
+        got = {r.node: r.rank for r in rows}
+        r = np.full(n, 1.0 / n)
+        for _ in range(iters):
+            dangling = sum(r[i] for i in range(n) if i not in deg)
+            r = (1 - 0.85) / n + 0.85 * (M @ r + dangling / n)
+        assert set(got) == set(range(n))
+        for i in range(n):
+            assert abs(got[i] - r[i]) < 1e-9, (iters, i, got[i], r[i])
+        assert abs(sum(got.values()) - 1.0) < 1e-9
+        total_units = sum(r.rank_units for r in rows)
+        # floor losses: ≤1 unit per edge/node per round, so the gap is tiny
+        assert 10**15 - 20 * (n + len(edge_list)) * iters <= total_units <= 10**15
 
 
 def test_pagerank_residual_certificate(spark):
-    """with_residual attaches the L1 delta of the final two iterations:
-    bounded by the power-iteration contraction (≤ 2·damping^k), strictly
-    smaller at more iterations, and identical on every output row."""
-    from dbt_repo_spark.operators.graph import pagerank
+    """with_residual attaches the exact integer L1 delta of the final two
+    iterations: bounded by the power-iteration contraction
+    (≤ 2·damping^k of the 1e15-unit mass), strictly smaller at more
+    iterations, and identical on every output row."""
+    from dbt_repo_spark.operators.graph import pagerank_units
 
     edge_list = [(0, 1), (0, 2), (1, 2), (2, 0), (3, 2), (2, 4)]
     edges = spark.createDataFrame(edge_list, ["src", "dst"])
-    r5 = pagerank(edges, damping=0.85, iters=5, with_residual=True).collect()
-    res5 = {row.l1_residual for row in r5}
+    r5 = pagerank_units(edges, iters=5, with_residual=True).collect()
+    res5 = {row.l1_residual_units for row in r5}
     assert len(res5) == 1  # one scalar, broadcast to every row
     (res5,) = res5
-    assert 0.0 <= res5 <= 2 * 0.85**5
-    r10 = pagerank(edges, damping=0.85, iters=10, with_residual=True).collect()
-    (res10,) = {row.l1_residual for row in r10}
+    assert 0 <= res5 <= 2 * 0.85**5 * 10**15
+    r10 = pagerank_units(edges, iters=10, with_residual=True).collect()
+    (res10,) = {row.l1_residual_units for row in r10}
     assert res10 < res5
 
 
@@ -159,27 +241,6 @@ def test_registry_sketch_and_pagerank_quality_floors(spark, sf_dir):
         0 <= r.l1_residual_units <= 2 * 0.85**5 * 10**15 for r in rows
     )
     assert all(abs(r.rank - r.rank_units / 1e15) < 1e-18 for r in rows)
-
-
-def test_pagerank_units_matches_float(spark):
-    """The exact integer micro-unit PageRank (pagerank_units) agrees with
-    the float power iteration to 1e-9 — quantization bias is ≤ a few
-    hundred units of 1e15 after 10 rounds — and conserves mass up to
-    truncation (sum of units ≤ total, within iters·n units of it)."""
-    from dbt_repo_spark.operators.graph import pagerank, pagerank_units
-
-    edge_list = [(0, 1), (0, 2), (1, 2), (2, 0), (3, 2), (2, 4)]
-    edges = spark.createDataFrame(edge_list, ["src", "dst"])
-    flt = {r.node: r.rank for r in pagerank(edges, damping=0.85, iters=10).collect()}
-    rows = pagerank_units(edges, iters=10).collect()
-    got = {r.node: r.rank for r in rows}
-    assert set(got) == set(flt)
-    for node, rank in flt.items():
-        assert abs(got[node] - rank) < 1e-9, (node, got[node], rank)
-    total_units = sum(r.rank_units for r in rows)
-    n, iters = 5, 10
-    # floor losses: ≤1 unit per edge/node per round, so the gap is tiny
-    assert 10**15 - 20 * (n + len(edge_list)) * iters <= total_units <= 10**15
 
 
 def test_canonical_by_quality_keeps_best_per_cluster(spark):

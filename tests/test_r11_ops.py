@@ -1,6 +1,7 @@
 """Round-11 evidence-closure tests: the SSSP frontier short-circuit is
-OBSERVED, not argued — the converged fixture must stop rounds early and
-produce the identical relation either way."""
+OBSERVED, not argued — on the converged fixture, rounds past the fixpoint
+run no Spark job, and the result equals the bounded-round Bellman-Ford
+reference either way."""
 
 from __future__ import annotations
 
@@ -14,6 +15,7 @@ from dbt_repo_spark.queries_r11 import (
     _SSSP_CONV_SEED_MOD,
     _SSSP_HOP_COST,
 )
+from tests.test_r9_ops import bellman_ford
 
 SF = "/root/testdata/sf0.001"
 
@@ -39,26 +41,29 @@ def _conv_fixture(spark):
 
 
 def test_sssp_converged_frontier_short_circuits(spark):
-    """The improved-frontier must EMPTY strictly before iters on the
-    hop-cost-floored fixture, and the early exit must not change the
-    result: the short-circuited run equals the run that executes every
-    round (rounds past the fixpoint are relational no-ops)."""
+    """The improved frontier must EMPTY before iters on the hop-cost-floored
+    fixture: granting 4 more rounds runs no extra Spark job (a loop that
+    kept going past the fixpoint would add jobs), and both runs equal the
+    pure-Python bounded-round Bellman-Ford reference."""
     edges, seeds = _conv_fixture(spark)
-    st_fast, st_full = {}, {}
-    fast = weighted_sssp(edges, seeds, iters=_SSSP_CONV_ITERS, stats=st_fast)
-    rows_fast = {r.node: r.dist for r in fast.collect()}
-    full = weighted_sssp(
-        edges,
-        seeds,
-        iters=_SSSP_CONV_ITERS,
-        stats=st_full,
-        short_circuit=False,
-    )
-    rows_full = {r.node: r.dist for r in full.collect()}
-    assert st_fast["rounds"] < _SSSP_CONV_ITERS, st_fast
-    assert st_full["rounds"] == _SSSP_CONV_ITERS
-    assert rows_fast == rows_full
-    assert len(rows_fast) > len(seeds.collect())  # ball actually expanded
+    edge_list = [(r.src, r.dst, r.w) for r in edges.collect()]
+    seed_list = [r.node for r in seeds.collect()]
+    sc = spark.sparkContext
+    jobs = {}
+    for iters in (_SSSP_CONV_ITERS, _SSSP_CONV_ITERS + 4):
+        group = f"sssp-converged-{iters}"
+        sc.setJobGroup(group, group)
+        try:
+            got = {
+                r.node: r.dist
+                for r in weighted_sssp(edges, seeds, iters=iters).collect()
+            }
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[iters] = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert got == bellman_ford(edge_list, seed_list, iters)
+        assert len(got) > len(seed_list)  # ball actually expanded
+    assert jobs[_SSSP_CONV_ITERS] == jobs[_SSSP_CONV_ITERS + 4], jobs
 
 
 def test_sssp_converged_distances_are_hop_floored(spark):

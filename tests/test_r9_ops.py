@@ -103,6 +103,19 @@ def test_cm_join_estimate_upper_bounds_exact(spark, sf):
     assert r.overcount == r.cm_join_size_est - r.exact_join_size
 
 
+def bellman_ford(edges, seeds, iters):
+    """Pure-Python bounded-round Bellman-Ford over (src, dst, w) triples:
+    the shortest distance from the seed set over paths of ≤ iters edges."""
+    dist = {s: 0 for s in seeds}
+    for _ in range(iters):
+        nxt = dict(dist)
+        for s, d, w in edges:
+            if s in dist and dist[s] + w < nxt.get(d, 1 << 60):
+                nxt[d] = dist[s] + w
+        dist = nxt
+    return dist
+
+
 def test_weighted_sssp_matches_bellman_ford(spark):
     """graph.weighted_sssp == a pure-Python bounded-round Bellman-Ford
     on a small weighted digraph (cycle + chords + an unreachable node),
@@ -115,13 +128,7 @@ def test_weighted_sssp_matches_bellman_ford(spark):
         (0, 2, 4),
     ]
     iters = 3
-    dist = {0: 0}
-    for _ in range(iters):
-        nxt = dict(dist)
-        for s, d, w in edges:
-            if s in dist and dist[s] + w < nxt.get(d, 1 << 60):
-                nxt[d] = dist[s] + w
-        dist = nxt
+    dist = bellman_ford(edges, [0], iters)
     e = spark.createDataFrame(edges, "src long, dst long, w long")
     seeds = spark.createDataFrame([(0,)], "node long")
     got = {
@@ -447,14 +454,7 @@ def test_weighted_sssp_matches_reference_random(spark, edge_list, seed_list):
     got = {
         r.node: r.dist for r in weighted_sssp(e, seeds, iters=iters).collect()
     }
-    dist = {s: 0 for s in seed_list}
-    for _ in range(iters):
-        nxt = dict(dist)
-        for a, b, w in edge_list:
-            if a in dist and dist[a] + w < nxt.get(b, 1 << 60):
-                nxt[b] = dist[a] + w
-        dist = nxt
-    assert got == dist
+    assert got == bellman_ford(edge_list, seed_list, iters)
 
 
 @given(
@@ -466,38 +466,17 @@ def test_weighted_sssp_matches_reference_random(spark, edge_list, seed_list):
 )
 @settings(**_H)
 def test_label_prop_sync_rounds_reference_random(spark, edge_list):
-    """The fixed-round synchronous LPA core (as implemented inside
-    graph_label_prop_communities) == a pure-Python simulation on
-    arbitrary small undirected graphs — argmax vote with (count DESC,
+    """The fixed-round synchronous LPA operator (graph.label_propagation,
+    which graph_label_prop_communities runs) == a pure-Python simulation
+    on arbitrary small undirected graphs — argmax vote with (count DESC,
     label ASC) tie-break, 4 sync rounds."""
+    from dbt_repo_spark.operators.graph import label_propagation
+
     edges = [(a, b) for a, b in edge_list if a != b]
     if not edges:
         return
     e0 = spark.createDataFrame([Row(src=a, dst=b) for a, b in edges])
-    e = e0.unionByName(
-        e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=True)
-    labels = (
-        e.select(F.col("src").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("label"))
-    )
-    for _ in range(4):
-        cnt = (
-            e.join(labels, e["dst"] == labels["node"])
-            .groupBy(F.col("src"), F.col("label"))
-            .agg(F.count("*").alias("c"))
-        )
-        labels = (
-            cnt.groupBy("src")
-            .agg(
-                F.min(
-                    F.struct((-F.col("c")).alias("a"), F.col("label").alias("b"))
-                )["b"].alias("label")
-            )
-            .select(F.col("src").alias("node"), "label")
-            .localCheckpoint(eager=True)
-        )
+    labels = label_propagation(e0, rounds=4)
     got = {r.node: r.label for r in labels.collect()}
 
     adj: dict[int, list] = {}
