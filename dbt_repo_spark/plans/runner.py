@@ -27,6 +27,7 @@ Materializations (SURVEY.md §2.11 D1-D5):
 
 from __future__ import annotations
 
+import os
 from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
 from graphlib import TopologicalSorter
@@ -201,6 +202,67 @@ class Exposure:
     url: str = ""
 
 
+def _check_contract(m: Model, df: DataFrame) -> None:
+    if m.contract is None:
+        return
+    got = dict(df.dtypes)
+    if got != m.contract:
+        missing = sorted(set(m.contract) - set(got))
+        extra = sorted(set(got) - set(m.contract))
+        drifted = sorted(
+            c for c in set(got) & set(m.contract) if got[c] != m.contract[c]
+        )
+        raise ValueError(
+            f"model {m.name}: contract violation — "
+            f"missing {missing}, extra {extra}, type-drifted "
+            f"{[(c, m.contract[c], got[c]) for c in drifted]}"
+        )
+
+
+def _stamp(path: str) -> tuple[str, int, int]:
+    st = os.stat(path)
+    return path, st.st_size, st.st_mtime_ns
+
+
+def _signature(m: Model, df: DataFrame) -> tuple | None:
+    """``(fingerprint, input file stamps, optimized plan)`` of a built
+    model, or None when ``run()``'s skip rule must never skip it."""
+    from urllib.parse import unquote, urlparse
+
+    qe = df._jdf.queryExecution()
+    plan = qe.optimizedPlan()
+    pattern = df.sparkSession._jvm.org.apache.spark.sql.catalyst.trees.TreePattern
+    if (
+        not qe.analyzed().deterministic()
+        or qe.analyzed().containsPattern(pattern.PYTHON_UDF())
+        # a subquery's plan is not among the leaves or the input files
+        or plan.containsPattern(pattern.PLAN_EXPRESSION())
+    ):
+        return None
+    leaves = plan.collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if (
+            leaf.getClass().getSimpleName() != "LogicalRelation"
+            or leaf.relation().getClass().getSimpleName() != "HadoopFsRelation"
+        ):
+            return None
+    stamps = []
+    for uri in df.inputFiles():
+        u = urlparse(uri)
+        if u.scheme != "file":
+            return None
+        try:
+            stamps.append(_stamp(unquote(u.path)))
+        except OSError:
+            return None
+    return m.fingerprint(), tuple(sorted(stamps)), plan
+
+
+def _same(a: tuple, b: tuple) -> bool:
+    return a[:2] == b[:2] and a[2].sameResult(b[2])
+
+
 class ModelRunner:
     """Topo-sorts and materializes a set of models (dbt run/test analog)."""
 
@@ -227,6 +289,9 @@ class ModelRunner:
         # classic-Spark-only — tests that pin the plan enable it.
         self.capture_plans: bool = False
         self.last_incremental_plan: str | None = None
+        # model name -> (signature, target file stamps, returned frame)
+        # of the last write this runner made (run()'s skip rule)
+        self._written: dict[str, tuple] = {}
 
     def add(self, *models: Model) -> "ModelRunner":
         for m in models:
@@ -382,6 +447,30 @@ class ModelRunner:
         exception once every submitted model has settled. None of the
         failed model's transitive dependents is written; models that do
         not depend on it still build, as with dbt --threads.
+
+        A ``table`` or ``incremental`` model is not rewritten when
+        nothing it reads or does has changed since this runner last
+        wrote it (dbt's state-aware ``source_status:fresher+``). After
+        the builder and the contract check, the runner signs the model:
+        its ``fingerprint()``, its optimized plan (compared with
+        ``sameResult``; Catalyst folds ``current_timestamp()`` into a
+        literal, so a clock-reading model never matches and a
+        ``current_date()`` one matches within a day) and
+        ``(path, size, mtime_ns)`` of every file the plan reads. If the
+        signature equals the one recorded at the model's last write and
+        the target's files are still the ones that write left, the
+        model is skipped and ``run()`` returns the frame that write
+        returned. Any append, overwrite or in-place rewrite of a source
+        or an upstream table therefore rebuilds everything downstream
+        of it. A model is always rebuilt under ``full_refresh=True``,
+        and when its analyzed plan is not deterministic, calls a Python
+        UDF, or reads anything but file scans (in-memory data, a range,
+        an RDD, a cached relation, a subquery). The record lives in
+        this runner instance only: a new runner, such as each CLI
+        invocation, rebuilds everything.
+
+        With ``observe=True`` a skipped model gets no entry in
+        ``last_run_metrics``: nothing was built, so nothing was observed.
         """
         if isinstance(state, str):
             import json
@@ -443,6 +532,18 @@ class ModelRunner:
             else:
                 raise KeyError(f"model {name}: unresolved dependency {d!r}")
         df = m.fn(ctx)
+        _check_contract(m, df)
+        sig = (
+            _signature(m, df)
+            if m.materialized in ("table", "incremental") else None
+        )
+        last = self._written.pop(name, None)
+        if (
+            sig is not None and last is not None and not full_refresh
+            and _same(sig, last[0]) and last[1] == self._target_stamps(m)
+        ):
+            self._written[name] = last
+            return last[2]
         if self._observe and m.materialized in ("table", "incremental",
                                                 "versioned_table"):
             # Spark Observation API: per-model run metrics (rows built,
@@ -462,24 +563,20 @@ class ModelRunner:
             df = df.observe(obs, *metrics)
             out = self._materialize(m, df, full_refresh)
             self.last_run_metrics[name] = dict(obs.get)
-            return out
-        return self._materialize(m, df, full_refresh)
+        else:
+            out = self._materialize(m, df, full_refresh)
+        if sig is not None:
+            self._written[name] = (sig, self._target_stamps(m), out)
+        return out
+
+    def _target_stamps(self, m: Model) -> tuple:
+        root = self.catalog.path(m.layer, m.name)
+        return tuple(sorted(
+            _stamp(os.path.join(d, f))
+            for d, _dirs, files in os.walk(root) for f in files
+        ))
 
     def _materialize(self, m: Model, df: DataFrame, full_refresh: bool) -> DataFrame:
-        if m.contract is not None:
-            got = dict(df.dtypes)
-            if got != m.contract:
-                missing = sorted(set(m.contract) - set(got))
-                extra = sorted(set(got) - set(m.contract))
-                drifted = sorted(
-                    c for c in set(got) & set(m.contract)
-                    if got[c] != m.contract[c]
-                )
-                raise ValueError(
-                    f"model {m.name}: contract violation — "
-                    f"missing {missing}, extra {extra}, type-drifted "
-                    f"{[(c, m.contract[c], got[c]) for c in drifted]}"
-                )
         if m.materialized == "ephemeral":
             return df
         if m.materialized == "view":
@@ -726,8 +823,9 @@ class ModelRunner:
         """dbt build: materialize AND test each model in DAG order —
         a model's error-severity test failure SKIPS its transitive
         consumers (they would build on bad data), while siblings keep
-        building. Warn-severity failures never block. Returns
-        (built frames, status per model: ok | fail | skipped).
+        building. Warn-severity failures never block. Unchanged models
+        are not rewritten, by ``run()``'s rule. Returns (built frames,
+        status per model: ok | fail | skipped).
         """
         if isinstance(state, str):
             import json

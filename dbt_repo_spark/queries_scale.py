@@ -1285,7 +1285,9 @@ _VITERBI_BROADCASTS: list = []
 def release_viterbi_broadcasts() -> None:
     """Destroy cost-map broadcasts from FINISHED unigram queries (r13).
 
-    Call only between queries (bench teardown, plan-capture teardown):
+    Call only between queries (bench and plan-capture teardown, the
+    pytest session's teardown, after each query of the bare-session
+    sweep in ``tests/driver_emulation.py``):
     a destroyed broadcast cannot be re-read, so the caller guarantees no
     registered DataFrame will re-execute afterwards.
     """

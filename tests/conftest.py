@@ -22,6 +22,11 @@ def spark():
         shuffle_partitions=8,
     )
     yield s
+    # cost-map broadcasts of finished unigram queries stay pinned until
+    # released (queries_scale.release_viterbi_broadcasts)
+    from dbt_repo_spark.queries_scale import release_viterbi_broadcasts
+
+    release_viterbi_broadcasts()
 
 
 @pytest.fixture(scope="session")

@@ -22,6 +22,7 @@ def main() -> int:
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entry_mod
+    from dbt_repo_spark.queries_scale import release_viterbi_broadcasts
     from tests.oracle_harness import compare
 
     spark = (
@@ -57,6 +58,7 @@ def main() -> int:
         except Exception as exc:  # noqa: BLE001 — sweep must not stop
             fails.append(name)
             print(f"FAIL {name} exception: {exc}", flush=True)
+        release_viterbi_broadcasts()
     print(f"SWEEP DONE: {len(qs) - len(fails)}/{len(qs)} ok; fails={fails}",
           flush=True)
     return 1 if fails else 0

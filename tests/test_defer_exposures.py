@@ -183,3 +183,34 @@ def test_observed_run_collects_metrics_without_extra_scan(spark, tmp_path):
                                   "obs_inc": {"rows_built": 10, "null_keys": 0}}
     r.run(["obs_t"], observe=True)
     assert set(r.last_run_metrics) == {"obs_t"}
+
+
+def test_observed_run_reports_only_models_it_built(spark, tmp_path):
+    """Over file-backed sources a model the runner skips (nothing it
+    reads changed) gets no entry in the observed report; one that
+    rebuilds reports its new batch."""
+
+    @model("obs_t", deps=("src",), materialized="table")
+    def obs_t(ctx):
+        return ctx["src"].filter(F.col("x") < 7)
+
+    @model("obs_inc", deps=("src",), materialized="incremental", unique_key="x")
+    def obs_inc(ctx):
+        return ctx["src"]
+
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    cat.write(spark.range(10).withColumnRenamed("id", "x"), "raw", "src")
+    r = ModelRunner(spark, cat, {"src": cat.read("raw", "src")}).add(obs_t, obs_inc)
+    r.run(observe=True)
+    assert r.last_run_metrics == {"obs_t": {"rows_built": 7},
+                                  "obs_inc": {"rows_built": 10, "null_keys": 0}}
+    built = r.run(observe=True)
+    assert r.last_run_metrics == {}
+    assert built["obs_t"].count() == 7 and built["obs_inc"].count() == 10
+    cat.write(spark.range(10, 12).withColumnRenamed("id", "x"), "raw", "src",
+              mode="append")
+    r.sources["src"] = cat.read("raw", "src")
+    built = r.run(observe=True)
+    assert r.last_run_metrics == {"obs_t": {"rows_built": 7},
+                                  "obs_inc": {"rows_built": 12, "null_keys": 0}}
+    assert built["obs_inc"].count() == 12

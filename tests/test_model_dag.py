@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import os
 
 import pytest
 from pyspark.sql import Row
@@ -531,6 +532,130 @@ def test_failed_model_skips_its_dependents(spark, tmp_path):
     assert not catalog.exists("analytics", "child")
     assert not catalog.exists("analytics", "grandchild")
     assert catalog.read("analytics", "sibling").count() == 2
+
+
+PERSISTED = [m.name for m in GBFS_MODELS if m.materialized in ("table", "incremental")]
+
+
+def _file_ids(catalog, name, layer="analytics"):
+    stats = (
+        os.stat(os.path.join(d, f))
+        for d, _dirs, files in os.walk(catalog.path(layer, name)) for f in files
+    )
+    return {(st.st_ino, st.st_mtime_ns) for st in stats}
+
+
+@pytest.fixture()
+def file_runner(spark, gbfs_sources, tmp_path):
+    """The GBFS DAG over its raw frames written through the catalog and
+    read back: file scans, which run()'s skip rule can sign."""
+    catalog = Catalog(spark, str(tmp_path / "warehouse"))
+    for name, df in gbfs_sources.items():
+        catalog.write(df, "raw", name)
+    r = ModelRunner(spark, catalog, {n: catalog.read("raw", n) for n in gbfs_sources})
+    return r.add(*GBFS_MODELS)
+
+
+def test_unchanged_models_are_not_rewritten(file_runner, spark, tmp_path):
+    """A second run with no new files writes none of the persisted
+    models; one new raw_station_status file rebuilds exactly the models
+    downstream of it, and every output then equals a full refresh's."""
+    cat = file_runner.catalog
+    assert len(PERSISTED) == 10
+    today = spark.range(1).select(F.current_date())
+    day = today.first()[0]
+    file_runner.run()
+    first = {n: _file_ids(cat, n) for n in PERSISTED}
+    file_runner.run()
+    rewritten = {n for n in PERSISTED if _file_ids(cat, n) != first[n]}
+    # dim_date's plan holds current_date() as a literal
+    assert rewritten == ({"dim_date"} if today.first()[0] != day else set())
+
+    before = {n: _file_ids(cat, n) for n in PERSISTED}
+    extra = spark.createDataFrame([_status_snapshot(BASE_EPOCH + 600)], RAW_STATUS_SCHEMA)
+    cat.write(extra, "raw", "raw_station_status", mode="append")
+    file_runner.sources["raw_station_status"] = cat.read("raw", "raw_station_status")
+    built = file_runner.run()
+    rewritten = {n for n in PERSISTED if _file_ids(cat, n) != before[n]}
+    assert rewritten == {
+        "dim_date", "fact_station_status", "fact_station_status_history",
+        "fact_station_uptime", "mart_station_availability", "mart_station_uptime",
+    }
+    assert built["fact_station_status_history"].count() == 25
+
+    fresh = ModelRunner(spark, Catalog(spark, str(tmp_path / "fresh")),
+                        file_runner.sources).add(*GBFS_MODELS)
+    full = fresh.run(full_refresh=True)
+    for name in PERSISTED:
+        cols = built[name].columns
+        assert (built[name].orderBy(*cols).collect()
+                == full[name].orderBy(*cols).collect()), name
+
+
+def test_models_the_skip_rule_cannot_sign_are_always_rebuilt(spark, tmp_path):
+    """Reading the clock, rand() (seeded, so only its nondeterminism can
+    force the rebuild), a Python UDF and an in-memory source rebuild on
+    every run, as does a model whose target changed behind
+    the runner's back or whose config changed; an unchanged file-backed
+    model is skipped."""
+    from dbt_repo_spark.plans.runner import model
+
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    cat.write(spark.range(10).withColumn("p", F.col("id") % 2), "raw", "src")
+    add_one = F.udf(lambda x: x + 1, "long")
+
+    def plain_fn(ctx):
+        return ctx["src"]
+
+    models = [
+        model("clock", deps=("src",), materialized="table")(
+            lambda ctx: ctx["src"].withColumn("t", F.current_timestamp())),
+        model("rnd", deps=("src",), materialized="table")(
+            lambda ctx: ctx["src"].withColumn("r", F.rand(7))),
+        model("pyudf", deps=("src",), materialized="table")(
+            lambda ctx: ctx["src"].withColumn("y", add_one("id"))),
+        model("mem", deps=("mem_src",), materialized="table")(
+            lambda ctx: ctx["mem_src"]),
+        model("plain", deps=("src",), materialized="table")(plain_fn),
+    ]
+    r = ModelRunner(spark, cat, {
+        "src": cat.read("raw", "src"), "mem_src": spark.range(5),
+    }).add(*models)
+
+    def rewritten(**kw) -> set[str]:
+        before = {m: _file_ids(cat, m) for m in r.models}
+        r.run(**kw)
+        return {m for m in r.models if _file_ids(cat, m) != before[m]}
+
+    r.run()
+    assert rewritten() == {"clock", "rnd", "pyudf", "mem"}
+    cat.write(spark.range(3).withColumn("p", F.col("id") % 2), "analytics", "plain")
+    assert "plain" in rewritten()
+    assert cat.read("analytics", "plain").count() == 10
+    r.add(model("plain", deps=("src",), materialized="table",
+                partition_by=["p"])(plain_fn))
+    assert "plain" in rewritten()
+    assert "plain" not in rewritten()
+    assert "plain" in rewritten(full_refresh=True)
+
+
+def test_contract_is_checked_before_the_skip(spark, tmp_path):
+    """Re-adding a model with an unchanged builder and a contract its
+    output violates raises, though nothing it reads has changed."""
+    from dbt_repo_spark.plans.runner import model
+
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    cat.write(spark.range(4), "raw", "src")
+
+    def fn(ctx):
+        return ctx["src"]
+
+    r = ModelRunner(spark, cat, {"src": cat.read("raw", "src")})
+    r.add(model("t", deps=("src",), materialized="table", contract={"id": "bigint"})(fn))
+    r.run()
+    r.add(model("t", deps=("src",), materialized="table", contract={"id": "int"})(fn))
+    with pytest.raises(ValueError, match="contract violation"):
+        r.run()
 
 
 def test_fused_row_local_tests_match_per_test_functions(spark):

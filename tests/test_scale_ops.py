@@ -248,6 +248,20 @@ def test_streaming_bloom_index_equals_batch_build(spark, tmp_path):
 # -------------------------------------------------------------- unigram
 
 
+def test_release_destroys_finished_viterbi_broadcasts(spark):
+    """A finished unigram_lm_tokenize query leaves its cost-map
+    broadcasts registered and live; the release destroys every one."""
+    from dbt_repo_spark import queries_scale
+
+    queries_scale.release_viterbi_broadcasts()
+    QUERIES["unigram_lm_tokenize"](spark, SF).collect()
+    shipped = list(queries_scale._VITERBI_BROADCASTS)
+    assert shipped and all(bc._jbroadcast.isValid() for bc in shipped)
+    queries_scale.release_viterbi_broadcasts()
+    assert not queries_scale._VITERBI_BROADCASTS
+    assert not any(bc._jbroadcast.isValid() for bc in shipped)
+
+
 def test_unigram_viterbi_is_optimal(spark):
     """Brute-force optimality certificate: for every word, the DP's
     total_cost equals the minimum over ALL segmentations into 1..4-char
