@@ -56,21 +56,15 @@ def _runner(spark: SparkSession, warehouse: str):
     }
     runner = ModelRunner(spark, catalog, sources)
     available = set(sources)
-
-    def resolvable(m) -> bool:
-        return all(
-            d in available or any(d == x.name for x in ALL_MODELS) for d in m.deps
-        )
-
     # fixed-point: a model is runnable if every dep is a source or a runnable model
     names: set[str] = set()
     changed = True
     while changed:
         changed = False
         for m in ALL_MODELS:
-            if m.name in names or not resolvable(m):
-                continue
-            if all(d in available or d in names for d in m.deps):
+            if m.name not in names and all(
+                d in available or d in names for d in m.deps
+            ):
                 names.add(m.name)
                 changed = True
     skipped = [m.name for m in ALL_MODELS if m.name not in names]
@@ -80,20 +74,24 @@ def _runner(spark: SparkSession, warehouse: str):
     return runner
 
 
+def _defer_catalog(spark: SparkSession, args):
+    """The ``--defer-to`` production catalog, or None."""
+    if not getattr(args, "defer_to", None):
+        return None
+    from dbt_repo_spark.sources.catalog import Catalog
+
+    return Catalog(spark, args.defer_to)
+
+
 def cmd_run(args) -> int:
     spark = _spark("dbt-repo-spark-run")
     runner = _runner(spark, args.warehouse)
-    defer_cat = None
-    if getattr(args, "defer_to", None):
-        from dbt_repo_spark.sources.catalog import Catalog
-
-        defer_cat = Catalog(spark, args.defer_to)
     built = runner.run(
         selected=args.select or None,
         full_refresh=args.full_refresh,
         parallelism=args.threads,
         state=getattr(args, "state", None),
-        defer_to=defer_cat,
+        defer_to=_defer_catalog(spark, args),
     )
     for name in built:
         m = runner.models[name]
@@ -102,20 +100,15 @@ def cmd_run(args) -> int:
 
 
 def cmd_build(args) -> int:
-    """dbt build: materialize + test in DAG order; a failing model's
+    """dbt build: materialize + test on run's pool; a failing model's
     consumers are skipped, siblings continue. Exit 1 on any failure."""
     spark = _spark("dbt-repo-spark-build")
     runner = _runner(spark, args.warehouse)
-    defer_cat = None
-    if getattr(args, "defer_to", None):
-        from dbt_repo_spark.sources.catalog import Catalog
-
-        defer_cat = Catalog(spark, args.defer_to)
     _, status = runner.build(
         selected=args.select or None,
         full_refresh=args.full_refresh,
         state=getattr(args, "state", None),
-        defer_to=defer_cat,
+        defer_to=_defer_catalog(spark, args),
     )
     rc = 0
     for name, st in status.items():

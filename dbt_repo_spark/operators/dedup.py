@@ -371,17 +371,6 @@ def jaccard_from_sets(sets: DataFrame, pairs: DataFrame) -> DataFrame:
     )
 
 
-def minhash_signatures(sh: DataFrame, num_perm: int = 64) -> DataFrame:
-    """Per-doc MinHash signature: min over shingles of P derived hashes.
-
-    One hash-aggregate over the shingle relation produces all P signature
-    slots (map-side partial min → tiny shuffle).
-    """
-    hs = _perm_hashes(num_perm)
-    aggs = [F.min(h).alias(f"h{i}") for i, h in enumerate(hs)]
-    return sh.groupBy("id").agg(*aggs)
-
-
 def lsh_candidate_pairs(
     sig: DataFrame, bands: int = 16, rows: int = 4, raw_buckets: bool = False
 ) -> DataFrame:

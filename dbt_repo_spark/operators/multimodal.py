@@ -201,75 +201,6 @@ def sample_frames(
     )
 
 
-RESIZED_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("media_type", StringType(), False),
-        StructField("target_width", IntegerType(), False),
-        StructField("target_height", IntegerType(), False),
-        StructField("content", BinaryType(), True),
-        StructField("n_bytes", LongType(), False),
-    ]
-)
-
-
-def fake_resize(content: bytes, media_type: str, w: int, h: int) -> bytes:
-    """STUB resize — deterministic fake standing in for PIL.Image.resize.
-
-    Emits a byte payload whose size scales with the target area (every
-    w*h-th byte of the source, cycled), so tests can assert the
-    shrink/grow plumbing without a codec. Swap in a real resampler with
-    the same signature in production.
-    """
-    if content is None:
-        return b""
-    target_len = max(w * h // 64, 1)
-    if not content:
-        return b""
-    return bytes(content[i % len(content)] for i in range(target_len))
-
-
-def resize_media(
-    media: DataFrame,
-    width: int,
-    height: int,
-    resize_fn: Callable[[bytes, str, int, int], bytes] = fake_resize,
-    id_col: str = "media_id",
-    type_col: str = "media_type",
-    content_col: str = "content",
-) -> DataFrame:
-    """Arrow-batched resize over a binary media column (mapInPandas).
-
-    Same plumbing contract as ``extract_media_features``: blobs stay in
-    Arrow buffers, one output row per input row, resized payload replaces
-    the original so downstream stages shuffle the SMALL representation
-    (at 100 TB the whole point of early resize is shrinking the bytes
-    before the first exchange).
-    """
-
-    def resize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, mtype, blob in zip(pdf[id_col], pdf[type_col], pdf[content_col]):
-                blob_bytes = bytes(blob) if blob is not None else None
-                out = resize_fn(blob_bytes, mtype, width, height)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "media_type": mtype,
-                        "target_width": width,
-                        "target_height": height,
-                        "content": out,
-                        "n_bytes": len(out),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in RESIZED_SCHEMA.fields])
-
-    return fan_out(media.select(id_col, type_col, content_col)).mapInPandas(
-        resize_batches, schema=RESIZED_SCHEMA
-    )
-
-
 def synthetic_media_from_documents(docs: DataFrame) -> DataFrame:
     """Build a media table from the documents fixture (text bytes as blob).
 

@@ -195,21 +195,6 @@ def range_join(
     )
 
 
-def incremental_append(
-    new_df: DataFrame, existing_df: DataFrame | None, unique_key: str
-) -> DataFrame:
-    """D4/J6: rows of ``new_df`` whose key is absent from ``existing_df``.
-
-    The reference's incremental template (fact_station_status.sql:30-32)
-    is ``WHERE key NOT IN (SELECT key FROM {{ this }})``; keys are md5 hex
-    (never NULL) so a left-anti join is exactly equivalent (§7.3 risk 3).
-    """
-    if existing_df is None:
-        return new_df
-    keys = existing_df.select(unique_key).distinct()
-    return new_df.join(keys, unique_key, "left_anti")
-
-
 def pareto_frontier(
     df: DataFrame,
     x_col: str,

@@ -15,14 +15,10 @@ bucket key, which a partitioned layout turns into partition pruning.
 
 from __future__ import annotations
 
-from pathlib import Path
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from dbt_repo_spark.session import fan_out
-
-_FIXTURES_DIR = Path(__file__).resolve().parent.parent / "fixtures"
 
 
 def _dvec(c: Column) -> Column:
@@ -898,51 +894,6 @@ def train_pq_codebooks(
                 if len(pts):
                     cent[c] = pts.mean(axis=0)
         books[j] = cent
-    return books
-
-
-def load_or_train_pq_codebooks(
-    emb: DataFrame,
-    corpus_key: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    m: int = 8,
-    nbits: int = 4,
-):
-    """Load PQ codebooks from the on-disk fixture store, training once if absent.
-
-    Codebooks are training ARTIFACTS (a few KB): in production they live
-    in the catalog next to the code table and every query just reads
-    them. This helper gives the same economics locally — the first call
-    per (corpus, m, nbits) trains and persists an .npy under
-    ``dbt_repo_spark/fixtures/``; every later call (including fresh
-    processes, e.g. the bench) is a pure file read, so the ANN query
-    plan contains no training collect.
-
-    The filename carries a cheap corpus fingerprint (row count + id-hash
-    fold, one column-pruned aggregate) so regenerated data at the same
-    path retrains instead of silently reusing stale codebooks; a
-    read-only package install falls back to in-memory training instead
-    of raising on the save.
-    """
-    import numpy as np
-
-    n_rows, id_fold = emb.agg(
-        F.count("*"), F.sum(F.crc32(F.col(id_col).cast("string")) % F.lit(1000003))
-    ).first()
-    fp = f"n{n_rows}_h{int(id_fold or 0) % 10**9}"
-    safe = "".join(ch if ch.isalnum() else "_" for ch in corpus_key)
-    path = _FIXTURES_DIR / f"pq_codebooks_{safe}_{fp}_m{m}_b{nbits}.npy"
-    if path.exists():
-        return np.load(path)
-    books = train_pq_codebooks(emb, id_col, vec_col, m=m, nbits=nbits)
-    try:
-        _FIXTURES_DIR.mkdir(parents=True, exist_ok=True)
-        tmp = path.with_suffix(".tmp.npy")
-        np.save(tmp, books)
-        tmp.replace(path)
-    except OSError:
-        pass  # read-only install: keep the in-memory codebooks
     return books
 
 

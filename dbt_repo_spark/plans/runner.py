@@ -29,7 +29,7 @@ from __future__ import annotations
 
 import os
 from concurrent.futures import Future, ThreadPoolExecutor
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, fields
 from graphlib import TopologicalSorter
 from typing import Callable
 
@@ -72,7 +72,8 @@ class Model:
 
     def fingerprint(self) -> str:
         """Content hash for Slim-CI state comparison: the builder's
-        bytecode + consts + every behavior-bearing config field. Doc
+        bytecode + consts + every behavior-bearing config field (every
+        field but ``name``, ``fn``, ``tests`` and ``tags``). Doc
         or comment edits don't change it; logic or config edits do.
         Nested code objects (a lambda or inner def in the builder) are
         folded RECURSIVELY by their own co_code/co_consts — their repr
@@ -101,10 +102,8 @@ class Model:
 
         payload = repr((
             fold(self.fn.__code__),
-            self.deps, self.materialized, self.layer, self.unique_key,
-            self.partition_by, self.cluster_by, self.incremental_strategy,
-            self.on_schema_change, self.event_time, self.batch_size,
-            self.lookback, self.contract,
+            *(getattr(self, f.name) for f in fields(self)
+              if f.name not in ("name", "fn", "tests", "tags")),
         ))
         return hashlib.md5(payload.encode()).hexdigest()
 
@@ -139,50 +138,14 @@ class Model:
                     raise ValueError("lookback must be >= 1")
 
 
-def model(
-    name: str,
-    deps: tuple[str, ...] = (),
-    materialized: str = "ephemeral",
-    layer: str = "analytics",
-    unique_key: str | None = None,
-    partition_by: list[str] | None = None,
-    cluster_by: list[str] | None = None,
-    incremental_strategy: str = "append",
-    tests: dict | None = None,
-    tags: tuple[str, ...] = (),
-    on_schema_change: str = "ignore",
-    event_time: str | None = None,
-    batch_size: str = "day",
-    lookback: int = 1,
-    contract: dict | None = None,
-):
-    """Decorator registering a DataFrame-builder as a model.
+def model(name: str, **config) -> Callable[[Callable], Model]:
+    """Decorator registering a DataFrame-builder as a model; ``config``
+    takes any other ``Model`` field by keyword.
 
     The builder receives ``ctx: dict[str, DataFrame]`` holding its deps
     (refs and sources alike) plus the SparkSession under ``"spark"``.
     """
-
-    def wrap(fn: Callable) -> Model:
-        return Model(
-            name=name,
-            fn=fn,
-            deps=deps,
-            materialized=materialized,
-            layer=layer,
-            unique_key=unique_key,
-            partition_by=partition_by,
-            cluster_by=cluster_by,
-            incremental_strategy=incremental_strategy,
-            tests=tests or {},
-            tags=tags,
-            on_schema_change=on_schema_change,
-            event_time=event_time,
-            batch_size=batch_size,
-            lookback=lookback,
-            contract=contract,
-        )
-
-    return wrap
+    return lambda fn: Model(name=name, fn=fn, **config)
 
 
 @dataclass(frozen=True)
@@ -217,6 +180,16 @@ def _check_contract(m: Model, df: DataFrame) -> None:
             f"missing {missing}, extra {extra}, type-drifted "
             f"{[(c, m.contract[c], got[c]) for c in drifted]}"
         )
+
+
+def _rel_parent(test) -> str | None:
+    """The model a ``relationships`` test names by string, else None."""
+    if (
+        isinstance(test, dict) and "relationships" in test
+        and isinstance(test["relationships"][0], str)
+    ):
+        return test["relationships"][0]
+    return None
 
 
 def _stamp(path: str) -> tuple[str, int, int]:
@@ -278,17 +251,6 @@ class ModelRunner:
         # model name -> {"rows_built": n, "null_keys": n} from the last
         # observed run (Observation API: no extra scan)
         self.last_run_metrics: dict[str, dict] = {}
-        # full query-execution text of the most recent incremental
-        # anti-join (captured BEFORE the append executes): lets tests
-        # and operators pin that the {{ this }} read pruned to the key
-        # column — the property that keeps a 100 TB target's tick cost
-        # at O(new batch + key column), not O(full-width target).
-        # Capture is OPT-IN (capture_plans=True): rendering the full
-        # analyzed/optimized/physical plan string is driver-side work
-        # proportional to DAG width, and the _jdf access it needs is
-        # classic-Spark-only — tests that pin the plan enable it.
-        self.capture_plans: bool = False
-        self.last_incremental_plan: str | None = None
         # model name -> (signature, target file stamps, returned frame)
         # of the last write this runner made (run()'s skip rule)
         self._written: dict[str, tuple] = {}
@@ -381,11 +343,29 @@ class ModelRunner:
                             stack.append(c)
         return sel
 
+    def _upstream(self, name: str) -> set[str]:
+        """Every model ``name`` refs, transitively."""
+        seen: set[str] = set()
+        stack = [name]
+        while stack:
+            for d in self.models[stack.pop()].deps:
+                if d in self.models and d not in seen:
+                    seen.add(d)
+                    stack.append(d)
+        return seen
+
+    def _edges(self, name: str) -> set[str]:
+        """The models ``name`` refs or names in a ``relationships`` test,
+        except a named model that refs ``name`` itself (no cycle)."""
+        m = self.models[name]
+        named = {_rel_parent(t) for tests in m.tests.values() for t in tests}
+        named = {p for p in named if p in self.models and name not in self._upstream(p)}
+        return {d for d in m.deps if d in self.models} | named
+
     def _order(self, selected: list[str] | None = None) -> list[str]:
-        graph = {
-            name: {d for d in m.deps if d in self.models}
-            for name, m in self.models.items()
-        }
+        # a relationships test's parent sorts before the tested model, so
+        # build()'s task for it can wait on the parent's future
+        graph = {name: self._edges(name) for name in self.models}
         order = list(TopologicalSorter(graph).static_order())
         if selected is None:
             return order
@@ -471,7 +451,20 @@ class ModelRunner:
 
         With ``observe=True`` a skipped model gets no entry in
         ``last_run_metrics``: nothing was built, so nothing was observed.
+        ``build()`` shares this scheduler and these rules.
         """
+        self._start(state, defer_to, observe)
+
+        def build(name: str, done: dict[str, Future]) -> DataFrame:
+            return self._build_one(name, self._deps(name, done), full_refresh)
+
+        return self._in_pool(self._order(selected), build, parallelism)
+
+    def _start(
+        self, state: "dict | str | None", defer_to: "Catalog | None", observe: bool
+    ) -> None:
+        """The Slim-CI state, --defer catalog and observation that
+        ``run()`` and ``build()`` both set up."""
         if isinstance(state, str):
             import json
 
@@ -486,11 +479,9 @@ class ModelRunner:
         if observe:
             self.last_run_metrics = {}
 
-        def build(name: str, done: dict[str, Future]) -> DataFrame:
-            deps = {d: done[d].result() for d in self.models[name].deps if d in done}
-            return self._build_one(name, deps, full_refresh)
-
-        return self._in_pool(self._order(selected), build, parallelism)
+    def _deps(self, name: str, done: dict[str, Future]) -> dict:
+        """The built frames of ``name``'s refs that this call schedules."""
+        return {d: done[d].result() for d in self.models[name].deps if d in done}
 
     def _in_pool(
         self, names: list[str], fn: Callable, parallelism: int | None
@@ -544,6 +535,7 @@ class ModelRunner:
         ):
             self._written[name] = last
             return last[2]
+        obs = None
         if self._observe and m.materialized in ("table", "incremental",
                                                 "versioned_table"):
             # Spark Observation API: per-model run metrics (rows built,
@@ -561,10 +553,9 @@ class ModelRunner:
                     ).alias("null_keys")
                 )
             df = df.observe(obs, *metrics)
-            out = self._materialize(m, df, full_refresh)
+        out = self._materialize(m, df, full_refresh)
+        if obs is not None:
             self.last_run_metrics[name] = dict(obs.get)
-        else:
-            out = self._materialize(m, df, full_refresh)
         if sig is not None:
             self._written[name] = (sig, self._target_stamps(m), out)
         return out
@@ -592,104 +583,92 @@ class ModelRunner:
             vt = VersionedTable(self.catalog, m.layer, m.name)
             v = vt.commit(df, message=f"run {m.name}")
             return vt.read(version=v)
-        if m.materialized == "table":
+        # table, incremental: one write, then one re-read. Microbatch
+        # partitions by its derived event-time period (overriding
+        # partition_by), so period pruning reaches every downstream scan.
+        microbatch = (m.materialized == "incremental"
+                      and m.incremental_strategy == "microbatch")
+        if microbatch:
+            per = F.date_trunc(m.batch_size, F.col(m.event_time))
+            df = df.withColumn("batch_period", per)
+        parts = ["batch_period"] if microbatch else m.partition_by
+        evolved = False
+        if (
+            m.materialized == "table" or full_refresh
+            or not self.catalog.exists(m.layer, m.name)
+        ):
             self.catalog.write(
                 df, m.layer, m.name,
                 mode="overwrite",
-                partition_by=m.partition_by,
+                partition_by=parts,
                 sort_within_partitions=m.cluster_by,
             )
-            return self.catalog.read(m.layer, m.name)
-        # incremental
-        target_exists = self.catalog.exists(m.layer, m.name) and not full_refresh
-        if m.incremental_strategy == "microbatch":
-            return self._materialize_microbatch(m, df, target_exists)
-        if target_exists and m.incremental_strategy == "insert_overwrite":
-            # Partition-overwrite path (SURVEY.md §4 scale policy): when
-            # the batch's rows fully own their partitions (e.g. a daily
-            # reprocess), replacing just those partitions beats the
-            # NOT-IN/anti-join — no scan of the existing target at all.
-            # Dynamic mode rewrites only partitions present in ``df``.
-            # on_schema_change applies here too: the "no scan of the
-            # target" property survives because reconciliation needs only
-            # the target SCHEMA (a footer read), not its rows; skipping
-            # it would let a drifted batch overwrite its partitions with
-            # a forked schema even under policy 'fail'.
+        else:
+            # {{ this }} is read BEFORE the write, so the model never
+            # reads its own writes. on_schema_change applies to every
+            # strategy, also where the strategy needs only the target's
+            # schema (a footer read): a drifted batch must not fork the
+            # table's schema, even under policy 'fail'.
             evolved = m.on_schema_change == "append_new_columns"
             target = self.catalog.read(m.layer, m.name, merge_schema=evolved)
             df = self._reconcile_schema(m, df, target)
-            self.catalog.write(
-                df, m.layer, m.name,
-                mode="overwrite",
-                partition_by=m.partition_by,
-                sort_within_partitions=m.cluster_by,
-                dynamic_partition_overwrite=True,  # per-writer: thread-safe
-            )
-            # untouched partitions keep the pre-drift schema after an
-            # evolving overwrite — reads reconcile via mergeSchema
-            return self.catalog.read(m.layer, m.name, merge_schema=evolved)
-        if target_exists and m.incremental_strategy == "merge":
-            # Upsert (dbt incremental_strategy='merge'): keep target rows
-            # whose key is NOT in the batch, union the batch, staged-swap.
-            # With partition_by the rewrite is scoped to the partitions the
-            # batch touches (untouched partitions are never read or moved);
-            # unpartitioned targets pay a full rewrite — that is inherent
-            # to upsert-on-immutable-files, and the reason the reference's
-            # own incremental models are append-only (fact_station_status
-            # .sql:30-32). MERGE exists for the correction/backfill case.
-            evolved = m.on_schema_change == "append_new_columns"
-            target = self.catalog.read(m.layer, m.name, merge_schema=evolved)
-            df = self._reconcile_schema(m, df, target)
-            if m.partition_by:
-                parts = df.select(*m.partition_by).distinct()
-                target = target.join(
-                    F.broadcast(parts), m.partition_by, "left_semi"
+            if m.incremental_strategy == "append":
+                # is_incremental() branch: anti-join against {{ this }}
+                # keys, then append. The key set is projected to ONE
+                # column before the join so the scan of the existing
+                # target prunes to the key column only (parquet
+                # ReadSchema). It is fact-sized, so Catalyst/AQE picks
+                # the join strategy.
+                keys = target.select(m.unique_key).distinct()
+                self.catalog.write(
+                    df.join(keys, m.unique_key, "left_anti"),
+                    m.layer, m.name,
+                    mode="append",
+                    partition_by=parts,
+                    sort_within_partitions=m.cluster_by,
                 )
-            keys = df.select(m.unique_key).distinct()
-            kept = target.join(keys, m.unique_key, "left_anti")
-            merged = kept.unionByName(df, allowMissingColumns=evolved)
-            self.catalog.overwrite_staged(
-                merged, m.layer, m.name,
-                partition_by=m.partition_by,
-                sort_within_partitions=m.cluster_by,
-                replace_partitions_only=bool(m.partition_by),
-            )
-            # partition-scoped rewrites leave untouched partitions on the
-            # pre-drift schema, so an evolved table still needs the merge
-            return self.catalog.read(m.layer, m.name, merge_schema=evolved)
-        if target_exists:
-            # is_incremental() branch: anti-join against {{ this }} keys,
-            # then append. Key set is projected to ONE column before the
-            # join so the scan of the existing target prunes to the key
-            # column only (column pruning hits parquet ReadSchema). The key
-            # set is fact-sized, so Catalyst/AQE picks the join strategy.
-            evolved = m.on_schema_change == "append_new_columns"
-            target = self.catalog.read(m.layer, m.name, merge_schema=evolved)
-            df = self._reconcile_schema(m, df, target)
-            existing_keys = target.select(m.unique_key)
-            new_rows = df.join(existing_keys.distinct(), m.unique_key, "left_anti")
-            if self.capture_plans:
-                self.last_incremental_plan = (
-                    new_rows._jdf.queryExecution().toString()
+            elif m.incremental_strategy == "merge":
+                # Upsert (dbt incremental_strategy='merge'): keep target
+                # rows whose key is NOT in the batch, union the batch,
+                # staged-swap. With partition_by the rewrite is scoped to
+                # the partitions the batch touches (untouched partitions
+                # are never read or moved); unpartitioned targets pay a
+                # full rewrite — inherent to upsert-on-immutable-files,
+                # and the reason the reference's own incremental models
+                # are append-only (fact_station_status.sql:30-32).
+                if parts:
+                    touched = df.select(*parts).distinct()
+                    target = target.join(F.broadcast(touched), parts, "left_semi")
+                keys = df.select(m.unique_key).distinct()
+                kept = target.join(keys, m.unique_key, "left_anti")
+                self.catalog.overwrite_staged(
+                    kept.unionByName(df, allowMissingColumns=evolved),
+                    m.layer, m.name,
+                    partition_by=parts,
+                    sort_within_partitions=m.cluster_by,
+                    replace_partitions_only=bool(parts),
                 )
-            self.catalog.write(
-                new_rows, m.layer, m.name,
-                mode="append",
-                partition_by=m.partition_by,
-                sort_within_partitions=m.cluster_by,
-            )
-            return self.catalog.read(m.layer, m.name, merge_schema=evolved)
-        self.catalog.write(
-            df, m.layer, m.name,
-            mode="overwrite",
-            partition_by=m.partition_by,
-            sort_within_partitions=m.cluster_by,
-        )
-        return self.catalog.read(m.layer, m.name)
+            else:
+                # insert_overwrite, microbatch: dynamic partition
+                # overwrite (SURVEY.md §4 scale policy) replaces only the
+                # partitions present in the batch; no target row is read.
+                if microbatch:
+                    df = self._lookback(m, df)
+                    if df is None:
+                        return target  # empty batch: nothing to rewrite
+                self.catalog.write(
+                    df, m.layer, m.name,
+                    mode="overwrite",
+                    partition_by=parts,
+                    sort_within_partitions=m.cluster_by,
+                    dynamic_partition_overwrite=True,  # per-writer: thread-safe
+                )
+        # appends and partition-scoped rewrites leave older files on the
+        # pre-drift schema, so an evolved table reads with mergeSchema
+        return self.catalog.read(m.layer, m.name, merge_schema=evolved)
 
-    def _materialize_microbatch(
-        self, m: Model, df: DataFrame, target_exists: bool
-    ) -> DataFrame:
+    @staticmethod
+    def _lookback(m: Model, df: DataFrame) -> DataFrame | None:
         """dbt 1.9 ``incremental_strategy='microbatch'``: the input is
         split into event-time periods (``batch_size``), and only the
         most recent ``lookback`` periods — anchored on the INPUT's max
@@ -697,7 +676,8 @@ class ModelRunner:
         partition overwrite. Periods older than the lookback window are
         DROPPED from the batch (late data beyond the window is a
         deliberate backfill, run with ``full_refresh``), and untouched
-        target periods are never read or rewritten.
+        target periods are never read or rewritten. Returns the rows of
+        the window, or None for an empty batch.
 
         Why this is the 100 TB late-data shape: the append strategy's
         anti-join must scan the target's keys every run, and plain
@@ -705,29 +685,14 @@ class ModelRunner:
         replayed feed would resurrect old periods. Microbatch bounds
         every run's write surface to ``lookback`` periods regardless of
         how stale the replayed input is, making runs idempotent AND
-        retry-safe per period. The table is partitioned by the derived
-        ``batch_period`` column (overriding partition_by), so period
-        pruning reaches every downstream scan.
+        retry-safe per period.
         """
         import datetime as _dt
 
-        per = F.date_trunc(m.batch_size, F.col(m.event_time))
-        df2 = df.withColumn("batch_period", per)
-        if not target_exists:
-            self.catalog.write(
-                df2, m.layer, m.name,
-                mode="overwrite",
-                partition_by=["batch_period"],
-                sort_within_partitions=m.cluster_by,
-            )
-            return self.catalog.read(m.layer, m.name)
-        evolved = m.on_schema_change == "append_new_columns"
-        target = self.catalog.read(m.layer, m.name, merge_schema=evolved)
-        df2 = self._reconcile_schema(m, df2, target)
         # one scalar job (documented driver action): the window anchor
-        mx = df2.agg(F.max("batch_period").alias("mx")).first()["mx"]
+        mx = df.agg(F.max("batch_period").alias("mx")).first()["mx"]
         if mx is None:
-            return target  # empty batch: nothing to rewrite
+            return None
         if m.batch_size == "hour":
             cutoff = mx - _dt.timedelta(hours=m.lookback - 1)
         elif m.batch_size == "day":
@@ -735,15 +700,7 @@ class ModelRunner:
         else:  # month
             total = mx.year * 12 + (mx.month - 1) - (m.lookback - 1)
             cutoff = mx.replace(year=total // 12, month=total % 12 + 1, day=1)
-        recent = df2.filter(F.col("batch_period") >= F.lit(cutoff))
-        self.catalog.write(
-            recent, m.layer, m.name,
-            mode="overwrite",
-            partition_by=["batch_period"],
-            sort_within_partitions=m.cluster_by,
-            dynamic_partition_overwrite=True,
-        )
-        return self.catalog.read(m.layer, m.name, merge_schema=evolved)
+        return df.filter(F.col("batch_period") >= F.lit(cutoff))
 
     def _reconcile_schema(
         self, m: Model, df: DataFrame, target: DataFrame
@@ -795,10 +752,8 @@ class ModelRunner:
             return []
         spec = {
             col: [
-                {"relationships": (built[t["relationships"][0]], t["relationships"][1])}
-                if isinstance(t, dict) and "relationships" in t
-                and isinstance(t["relationships"][0], str)
-                else t
+                {**t, "relationships": (built[parent], t["relationships"][1])}
+                if (parent := _rel_parent(t)) else t
                 for t in tests
             ]
             for col, tests in m.tests.items()
@@ -820,38 +775,36 @@ class ModelRunner:
         state: "dict | str | None" = None,
         defer_to: "Catalog | None" = None,
     ) -> tuple[dict[str, DataFrame], dict[str, str]]:
-        """dbt build: materialize AND test each model in DAG order —
-        a model's error-severity test failure SKIPS its transitive
-        consumers (they would build on bad data), while siblings keep
-        building. Warn-severity failures never block. Unchanged models
-        are not rewritten, by ``run()``'s rule. Returns (built frames,
-        status per model: ok | fail | skipped).
+        """dbt build: materialize AND test each model, on ``run()``'s
+        scheduler (one worker per core) and under its rules for raising
+        builders and unchanged models. A model's tests run in its own task as soon as it and the
+        models its ``relationships`` tests name are built. A model whose
+        ref failed an error-severity test or was skipped is itself
+        SKIPPED (it would build on bad data) and not returned, while
+        siblings keep building. Warn-severity failures never block.
+        Returns (built frames, status per model: ok | fail | skipped).
         """
-        if isinstance(state, str):
-            import json
-
-            with open(state) as fh:
-                state = json.load(fh)
-        self._state = state
-        self._defer = defer_to
-        order = self._order(selected)
-        built: dict[str, DataFrame] = {}
+        self._start(state, defer_to, observe=False)
         status: dict[str, str] = {}
-        bad: set[str] = set()
-        for name in order:
-            if any(d in bad for d in self.models[name].deps):
+
+        def build_and_test(name: str, done: dict[str, Future]) -> DataFrame | None:
+            deps = self._deps(name, done)
+            # a dep's future has resolved, so its status is already set
+            if any(status[d] != "ok" for d in deps):
                 status[name] = "skipped"
-                bad.add(name)
-                continue
-            built[name] = self._build_one(name, built, full_refresh)
+                return None
+            df = self._build_one(name, deps, full_refresh)
+            built = {d: done[d].result() for d in self._edges(name) if d in done}
+            built = {d: b for d, b in built.items() if b is not None}
+            built[name] = df
             failed = [
                 r
                 for r in self._test_one(name, built)
                 if not r.passed and r.severity == "error"
             ]
-            if failed:
-                status[name] = "fail"
-                bad.add(name)
-            else:
-                status[name] = "ok"
-        return built, status
+            status[name] = "fail" if failed else "ok"
+            return df
+
+        results = self._in_pool(self._order(selected), build_and_test, None)
+        built = {n: df for n, df in results.items() if df is not None}
+        return built, {n: status[n] for n in results}

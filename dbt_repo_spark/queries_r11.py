@@ -161,7 +161,7 @@ def incremental_runner_tick(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan ({{ this }} is projected to unique_key before the anti-join,
     so parquet ReadSchema prunes to one column — pinned by
     `test_r11_ops.py::test_incremental_tick_target_read_prunes_to_key`
-    via `runner.last_incremental_plan`); everything else is
+    on the append write's executed plan); everything else is
     O(new batch). The growth row (SCALE.md r11) measures the composed
     build+tick staying linear in corpus size.
     """

@@ -149,6 +149,93 @@ def test_build_interleaves_tests_and_skips_downstream(spark, tmp_path):
     assert "b_child" not in built and "e_sibling" in built
 
 
+
+def test_build_tests_a_model_added_before_its_relationships_parent(spark, tmp_path):
+    """A relationships test waits for the model it names, even when that
+    model was added after the tested one, and counts its orphans: two
+    keys (3, 4) of the child are missing from the parent."""
+
+    @model("parent", deps=("src",), materialized="table")
+    def parent(ctx):
+        return ctx["src"].filter(F.col("x") < 3)
+
+    def child(name, error_if):
+        rel = {"relationships": ("parent", "x"), "config": {"error_if": error_if}}
+        return model(name, deps=("src",), materialized="table",
+                     tests={"x": [rel]})(lambda ctx: ctx["src"])
+
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    src = spark.range(5).withColumnRenamed("id", "x")
+    r = ModelRunner(spark, cat, {"src": src}).add(
+        child("child_2", 2), child("child_1", 1), parent
+    )
+    built, status = r.build()
+    # scheduled first, so a tested child may wait on it with any number
+    # of workers
+    assert list(status) == ["parent", "child_2", "child_1"]
+    assert status == {"parent": "ok", "child_2": "ok", "child_1": "fail"}
+    assert [t.violations for t in r.test(built)["child_2"]] == [2]
+
+
+
+def test_relationships_test_naming_a_descendant_is_no_cycle(spark, tmp_path):
+    """A model may test its keys against a model built from it: that
+    test orders nothing, so ``run()`` still sorts the DAG."""
+
+    @model("up", deps=("src",), materialized="table",
+           tests={"x": [{"relationships": ("down", "x")}]})
+    def up(ctx):
+        return ctx["src"]
+
+    @model("down", deps=("up",), materialized="table")
+    def down(ctx):
+        return ctx["up"]
+
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    src = spark.range(5).withColumnRenamed("id", "x")
+    built = ModelRunner(spark, cat, {"src": src}).add(up, down).run()
+    assert list(built) == ["up", "down"] and built["down"].count() == 5
+
+
+def test_build_leaves_the_observed_run_report_alone(spark, tmp_path):
+    """``build()`` does not observe, even after ``run(observe=True)``:
+    the run's report survives a build over a changed source."""
+    r, _ = _runner(spark, tmp_path / "wh")
+    r.run(observe=True)
+    report = dict(r.last_run_metrics)
+    assert report["a"] == {"rows_built": 5}
+    r.sources["src"] = spark.range(3).withColumnRenamed("id", "x")
+    _, status = r.build()
+    assert set(status.values()) == {"ok"}
+    assert r.last_run_metrics == report
+
+
+def test_build_reraises_a_failing_builder_after_siblings_settle(spark, tmp_path):
+    """A raising builder fails ``build()`` as it fails ``run()``: the
+    exception surfaces once the other models settle, its dependents are
+    never written, and independent models are."""
+
+    @model("boom", deps=("src",), materialized="table")
+    def boom(ctx):
+        raise RuntimeError("boom")
+
+    @model("boom_child", deps=("boom",), materialized="table")
+    def boom_child(ctx):
+        return ctx["boom"]
+
+    @model("sibling", deps=("src",), materialized="table")
+    def sibling(ctx):
+        return ctx["src"]
+
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    src = spark.range(5).withColumnRenamed("id", "x")
+    r = ModelRunner(spark, cat, {"src": src}).add(boom, boom_child, sibling)
+    with pytest.raises(RuntimeError, match="boom"):
+        r.build()
+    assert cat.exists("analytics", "sibling")
+    assert not cat.exists("analytics", "boom_child")
+
+
 def test_observed_run_collects_metrics_without_extra_scan(spark, tmp_path):
     """Spark Observation API: rows-built (and null-key) metrics arrive
     from the materializing job itself — dbt's rows-affected report."""

@@ -112,8 +112,9 @@ def test_incremental_tick_target_read_prunes_to_key(spark, tmp_path):
     """The is_incremental anti-join's {{ this }} read must prune to the
     unique_key column (parquet ReadSchema carries ONLY the key) — the
     property that keeps a 100 TB target's tick cost at O(new batch +
-    key column) rather than a full-width target scan. Pinned via the
-    runner's captured incremental plan."""
+    key column) rather than a full-width target scan. Pinned on the
+    executed plan of the runner's last write, read from Spark's SQL
+    status store (kept with the UI off)."""
     from dbt_repo_spark.plans.runner import ModelRunner, model
     from dbt_repo_spark.sources.catalog import Catalog
 
@@ -128,17 +129,26 @@ def test_incremental_tick_target_read_prunes_to_key(spark, tmp_path):
         materialized="incremental",
         unique_key="o_orderkey",
     )(lambda ctx: ctx["src"])
+
+    def last_write_plan() -> str:
+        # the re-read after a write runs no SQL execution, so the newest
+        # one (executions list in id order) is the write's
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        store = spark._jsparkSession.sharedState().statusStore()
+        return store.executionsList().last().physicalPlanDescription()
+
     runner = ModelRunner(spark, cat, {"src": b1}).add(m)
-    runner.capture_plans = True  # plan capture is opt-in (r12 advice)
     runner.run(["fx"])
-    assert runner.last_incremental_plan is None  # first run: full write
+    plan = last_write_plan()
+    # first run: full write of the in-memory batch, no {{ this }} read
+    assert ", Overwrite, " in plan and "ReadSchema" not in plan, plan
     runner.sources["src"] = b2
     out = runner.run(["fx"])["fx"]
+    plan = last_write_plan()
     assert out.count() == 100  # 50 kept + 50 novel, overlap deduped
-    plan = runner.last_incremental_plan
-    assert plan is not None
+    assert ", Append, " in plan, plan
     # the batches are in-memory relations, so every file scan in the
-    # captured plan is the {{ this }} target read
+    # executed plan is the {{ this }} target read
     scan_lines = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
     assert scan_lines, plan
     for ln in scan_lines:
