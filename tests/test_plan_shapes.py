@@ -14,6 +14,7 @@ from __future__ import annotations
 import pytest
 
 from dbt_repo_spark.queries import ORACLES, QUERIES
+from tests.oracle_harness import cold_plans
 
 
 def _plan(spark, name: str, mode: str = "formatted") -> str:
@@ -52,10 +53,12 @@ def test_latest_per_key_window_group_limit(spark):
 
 def test_no_python_udfs_in_oracle_queries(spark):
     """Every SQL-expressible query stays JVM-side (BatchEvalPython/
-    ArrowEvalPython would mean a Python boundary in the hot path)."""
+    ArrowEvalPython would mean a Python boundary in the hot path).
+    Checks each query's cold plan as the parity suite built it (built
+    here when that suite has not run in this session)."""
     offenders = []
     for name in sorted(ORACLES):
-        plan = _plan(spark, name, "simple")
+        plan, _ = cold_plans(name, spark, "/root/testdata/sf0.001")
         if "BatchEvalPython" in plan or "ArrowEvalPython" in plan:
             offenders.append(name)
     assert not offenders, f"Python UDFs in: {offenders}"
@@ -467,8 +470,7 @@ def test_no_quadratic_shingle_join_on_headline(spark):
     for name in bench.HEADLINE:
         if name in _SHINGLE_JOIN_EXEMPT or name == "recursive_order_chain":
             continue
-        df = QUERIES[name](spark, "/root/testdata/sf0.001")
-        plan = df._jdf.queryExecution().executedPlan().toString()
+        _, plan = cold_plans(name, spark, "/root/testdata/sf0.001")
         assert "hashpartitioning(shingle" not in plan, (
             f"{name}: raw-shingle shuffle in headline plan"
         )
