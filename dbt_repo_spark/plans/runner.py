@@ -27,7 +27,6 @@ Materializations (SURVEY.md §2.11 D1-D5):
 
 from __future__ import annotations
 
-import os
 from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field, fields
 from graphlib import TopologicalSorter
@@ -37,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dbt_repo_spark.sources.catalog import Catalog
+from dbt_repo_spark.sources.readers import file_stamps
 
 MATERIALIZATIONS = ("ephemeral", "view", "table", "incremental", "versioned_table")
 
@@ -192,11 +192,6 @@ def _rel_parent(test) -> str | None:
     return None
 
 
-def _stamp(path: str) -> tuple[str, int, int]:
-    st = os.stat(path)
-    return path, st.st_size, st.st_mtime_ns
-
-
 def _signature(m: Model, df: DataFrame) -> tuple | None:
     """``(fingerprint, input file stamps, optimized plan)`` of a built
     model, or None when ``run()``'s skip rule must never skip it."""
@@ -226,9 +221,12 @@ def _signature(m: Model, df: DataFrame) -> tuple | None:
         if u.scheme != "file":
             return None
         try:
-            stamps.append(_stamp(unquote(u.path)))
+            found = file_stamps(unquote(u.path))
         except OSError:
             return None
+        if not found:  # gone since Spark listed it
+            return None
+        stamps += found
     return m.fingerprint(), tuple(sorted(stamps)), plan
 
 
@@ -561,11 +559,7 @@ class ModelRunner:
         return out
 
     def _target_stamps(self, m: Model) -> tuple:
-        root = self.catalog.path(m.layer, m.name)
-        return tuple(sorted(
-            _stamp(os.path.join(d, f))
-            for d, _dirs, files in os.walk(root) for f in files
-        ))
+        return file_stamps(self.catalog.path(m.layer, m.name))
 
     def _materialize(self, m: Model, df: DataFrame, full_refresh: bool) -> DataFrame:
         if m.materialized == "ephemeral":
@@ -753,8 +747,9 @@ class ModelRunner:
         spec = {
             col: [
                 {**t, "relationships": (built[parent], t["relationships"][1])}
-                if (parent := _rel_parent(t)) else t
+                if parent else t
                 for t in tests
+                if (parent := _rel_parent(t)) is None or parent in built
             ]
             for col, tests in m.tests.items()
         }
@@ -762,7 +757,9 @@ class ModelRunner:
 
     def test(self, built: dict[str, DataFrame]) -> dict[str, list]:
         """dbt-test analog: run each model's declared test spec, one
-        model per task on ``run()``'s kind of thread pool."""
+        model per task on ``run()``'s kind of thread pool. A
+        ``relationships`` test naming a model absent from ``built`` is
+        skipped."""
         tested = [n for n, m in self.models.items() if m.tests and n in built]
         return self._in_pool(
             tested, lambda name, _: self._test_one(name, built), None
@@ -777,11 +774,14 @@ class ModelRunner:
     ) -> tuple[dict[str, DataFrame], dict[str, str]]:
         """dbt build: materialize AND test each model, on ``run()``'s
         scheduler (one worker per core) and under its rules for raising
-        builders and unchanged models. A model's tests run in its own task as soon as it and the
-        models its ``relationships`` tests name are built. A model whose
-        ref failed an error-severity test or was skipped is itself
-        SKIPPED (it would build on bad data) and not returned, while
-        siblings keep building. Warn-severity failures never block.
+        builders and unchanged models. A model's tests run in its own
+        task as soon as it and the models its ``relationships`` tests
+        name are built. A model whose ref failed an error-severity test
+        or was skipped is itself SKIPPED (it would build on bad data) and
+        not returned, while siblings keep building. Warn-severity
+        failures never block. A ``relationships`` test naming a model
+        that was skipped, or that this call does not build, is skipped,
+        as dbt skips it.
         Returns (built frames, status per model: ok | fail | skipped).
         """
         self._start(state, defer_to, observe=False)

@@ -24,6 +24,7 @@ from pyspark.sql.window import Window
 
 from dbt_repo_spark.operators import dedup, multimodal, similarity, text
 from dbt_repo_spark.operators.ids import SYNTH_ID_TAG
+from dbt_repo_spark.sources.readers import read_parquet
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -40,6 +41,11 @@ def q(name: str, oracle: str | None = None):
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The corpus table ``name`` under ``sf_dir``, read through
+    ``sources.readers.read_parquet``: a repeat read of an unchanged file
+    reuses the schema its first read inferred, so it runs no Spark job
+    before the query's own. A rewritten file or a changed ``spark.sql.*``
+    conf infers again."""
     from dbt_repo_spark.session import ship_package
 
     ship_package(spark)
@@ -56,11 +62,11 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         except Exception:
             pass
-        df = spark.read.parquet(f"{sf_dir}/events.parquet")
+        df = read_parquet(spark, f"{sf_dir}/events.parquet")
         if dict(df.dtypes)["ts"] == "bigint":
             return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def dec(c: str, prec: int = 14, scale: int = 2) -> F.Column:

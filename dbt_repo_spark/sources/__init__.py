@@ -2,7 +2,6 @@ from dbt_repo_spark.sources.readers import (
     read_csv_glob,
     read_json_dir,
     read_json_file,
-    read_tables,
 )
 from dbt_repo_spark.sources.catalog import Catalog
 
@@ -11,5 +10,4 @@ __all__ = [
     "read_csv_glob",
     "read_json_dir",
     "read_json_file",
-    "read_tables",
 ]

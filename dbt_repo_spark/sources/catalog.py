@@ -14,6 +14,8 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
+from dbt_repo_spark.sources.readers import read_parquet
+
 LAYERS = ("raw", "stg", "analytics")
 
 
@@ -51,7 +53,16 @@ class Catalog:
         100 TB that is a real planning cost, so it is opt-in here and the
         steady state should promote the union schema into the writer, not
         pay the merge on every read.
+
+        A parquet read without ``merge_schema`` goes through
+        ``readers.read_parquet``: a table whose files and session conf
+        are unchanged since its last read reuses the schema that read
+        inferred, and runs no schema-inference job. Any write to the
+        table (append, overwrite, a new partition) or ``spark.sql.*``
+        conf change infers again.
         """
+        if fmt == "parquet" and not merge_schema:
+            return read_parquet(self.spark, self.path(layer, name))
         reader = self.spark.read.format(fmt)
         if merge_schema:
             reader = reader.option("mergeSchema", "true")

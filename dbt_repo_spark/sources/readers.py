@@ -8,6 +8,9 @@ handles split planning, predicate pushdown, and column pruning).
 
 from __future__ import annotations
 
+import os
+from urllib.parse import unquote, urlparse
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -70,11 +73,64 @@ def read_csv_glob(
     return reader.csv(path)
 
 
-def read_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TPCH_TABLES
-) -> dict[str, DataFrame]:
-    """Load the driver's synthetic parquet tables from an sf directory."""
-    return {name: spark.read.parquet(f"{sf_dir}/{name}.parquet") for name in names}
+def file_stamps(root: str) -> tuple[tuple[str, int, int], ...]:
+    """Sorted ``(path, size, mtime_ns)`` of the file ``root``, or of every
+    file under the directory ``root``; empty when nothing is there. Any
+    append, overwrite or in-place rewrite below ``root`` changes it.
+    Raises OSError when a file vanishes between listing and stat."""
+    if os.path.isfile(root):
+        paths = [root]
+    else:
+        paths = [os.path.join(d, f) for d, _dirs, files in os.walk(root) for f in files]
+    return tuple(
+        (p, st.st_size, st.st_mtime_ns) for p in sorted(paths) for st in [os.stat(p)]
+    )
+
+
+# path -> (file stamps, session conf, schema) of its last inferring read:
+# one entry per path. The stamps are taken before the inference, so files
+# that change during it never match them again. Model-runner threads may
+# miss on one path at once; each stores a valid entry and the last stays.
+_inferred: dict[str, tuple] = {}
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema once per
+    unchanged file set.
+
+    Spark infers a Parquet schema with a one-task job that reads a
+    footer. The first read of ``path`` infers it and records it with
+    ``file_stamps(path)`` and the session's conf, every ``spark.sql.*``
+    setting among it. A later read whose stamps and conf are equal
+    passes that schema (``spark.read.schema(s).parquet(path)``) and runs
+    no job. The schema is the inferred one, so the frame, its plan and
+    its rows are the plain read's. An append, an overwrite, a rewrite or
+    a new partition directory changes the stamps, and any ``spark.sql.*``
+    conf change (``parquet.binaryAsString``,
+    ``legacy.parquet.nanosAsLong``, ...) changes the conf: either infers
+    again and replaces the path's entry. A URI other than ``file:``, a
+    glob, and a missing or empty path take the plain read (and raise as
+    it does).
+    """
+    u = urlparse(path)
+    if u.scheme not in ("", "file"):
+        return spark.read.parquet(path)
+    try:
+        stamps = file_stamps(unquote(u.path) if u.scheme else path)
+    except OSError:
+        stamps = ()
+    if not stamps:
+        return spark.read.parquet(path)
+    # one py4j call; ``spark.conf.getAll`` makes one per entry (~25 ms).
+    # An immutable Scala map prints equal contents alike, and a false
+    # mismatch only costs an inference.
+    conf = spark._jsparkSession.conf().getAll().toString()
+    last = _inferred.get(path)
+    if last is not None and last[:2] == (stamps, conf):
+        return spark.read.schema(last[2]).parquet(path)
+    df = spark.read.parquet(path)
+    _inferred[path] = (stamps, conf, df.schema)
+    return df
 
 
 def read_with_quarantine(

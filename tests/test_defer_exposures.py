@@ -177,8 +177,33 @@ def test_build_tests_a_model_added_before_its_relationships_parent(spark, tmp_pa
     assert [t.violations for t in r.test(built)["child_2"]] == [2]
 
 
+def test_build_skips_a_relationships_test_whose_model_was_skipped(spark, tmp_path):
+    """``fact`` tests its keys against ``dim``, which is skipped because
+    its ref ``bad`` fails ``unique``: that one test is skipped and
+    ``fact`` still builds and passes, as in dbt."""
 
-def test_relationships_test_naming_a_descendant_is_no_cycle(spark, tmp_path):
+    @model("bad", deps=("src",), materialized="table", tests={"x": ["unique"]})
+    def bad(ctx):
+        return ctx["src"].unionByName(ctx["src"].limit(1))
+
+    @model("dim", deps=("bad",), materialized="table")
+    def dim(ctx):
+        return ctx["bad"]
+
+    @model("fact", deps=("src",), materialized="table",
+           tests={"x": ["not_null", {"relationships": ("dim", "x")}]})
+    def fact(ctx):
+        return ctx["src"]
+
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    src = spark.range(5).withColumnRenamed("id", "x")
+    r = ModelRunner(spark, cat, {"src": src}).add(bad, dim, fact)
+    built, status = r.build()
+    assert status == {"bad": "fail", "dim": "skipped", "fact": "ok"}
+    assert set(built) == {"bad", "fact"}
+    assert [x.name for x in r.test(built)["fact"]] == ["not_null:x"]
+
+
     """A model may test its keys against a model built from it: that
     test orders nothing, so ``run()`` still sorts the DAG."""
 
