@@ -204,6 +204,7 @@ def test_build_skips_a_relationships_test_whose_model_was_skipped(spark, tmp_pat
     assert [x.name for x in r.test(built)["fact"]] == ["not_null:x"]
 
 
+def test_relationships_test_naming_a_descendant_is_no_cycle(spark, tmp_path):
     """A model may test its keys against a model built from it: that
     test orders nothing, so ``run()`` still sorts the DAG."""
 
