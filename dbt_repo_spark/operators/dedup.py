@@ -1306,19 +1306,19 @@ def incremental_paragraph_rewrite(
     )
 
 
-def merge_paragraph_index(
+def paragraph_index_additions(
     corpus_index: DataFrame, batch: DataFrame, id_col: str, text_col: str,
     block_tokens: int = 10,
 ) -> DataFrame:
-    """Extend a block index with a new batch's blocks (the upsert half
-    of the incremental tick). Corpus owners win on collision — the
-    batch only ADDS hashes it introduced, so repeated merges are
-    idempotent and the index equals ``paragraph_block_index`` over the
-    concatenated corpus whenever batch ids sort after corpus ids."""
-    new_owners = paragraph_block_index(batch, id_col, text_col, block_tokens).join(
+    """The block-index rows a new batch adds (the upsert half of the
+    incremental tick): owners of the hashes the batch introduced.
+    Corpus owners win on collision, so re-adding a batch adds nothing,
+    and ``corpus_index.unionByName(additions)`` equals
+    ``paragraph_block_index`` over the concatenated corpus whenever
+    batch ids sort after corpus ids."""
+    return paragraph_block_index(batch, id_col, text_col, block_tokens).join(
         corpus_index.select("h"), "h", "left_anti"
     )
-    return corpus_index.unionByName(new_owners)
 
 
 def substring_gram_index(

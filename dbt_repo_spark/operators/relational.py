@@ -404,66 +404,3 @@ def table_diff(
         cnt(in_a & in_b & ~any_changed).alias("unchanged"),
         *[cnt(col_changed[c]).alias(f"changed_{c}") for c in compare_cols],
     )
-
-
-def asof_join_cogroup(
-    probe: DataFrame,
-    reference: DataFrame,
-    key: str,
-    probe_ts: str,
-    ref_ts: str,
-    ref_value_cols: list[str],
-) -> DataFrame:
-    """AS-OF join on the Arrow cogroup path — pandas ``merge_asof`` per
-    key via ``groupby().cogroup().applyInPandas``.
-
-    Same semantics as ``asof_join`` (latest reference at ``ref_ts <=
-    probe_ts``; bit-equivalence pinned by test). Exists because the two
-    shapes trade differently at scale: the union-window form is ONE
-    shuffle and pure JVM (the default — use it); the cogroup form
-    shuffles BOTH sides but hands each key's pair of partitions to
-    vectorized pandas, which wins when the per-key merge logic outgrows
-    window expressibility (nearest-with-direction flags, multi-column
-    tolerances, interpolation between brackets) — the documented
-    escalation path of SURVEY §2.10: builtin first, Arrow batch second,
-    never row-Python.
-    """
-    import pandas as pd
-
-    # output mirrors asof_join: probe columns + ref_<c> value columns
-    out_schema = ", ".join(
-        f"{c} {probe.schema[c].dataType.simpleString()}" for c in probe.columns
-    )
-    out_schema += "".join(
-        f", ref_{c} {reference.schema[c].dataType.simpleString()}"
-        for c in ref_value_cols
-    )
-    pcols = list(probe.columns)
-    out_names = pcols + [f"ref_{c}" for c in ref_value_cols]
-
-    def merge(p: pd.DataFrame, r: pd.DataFrame) -> pd.DataFrame:
-        if p.empty:
-            return pd.DataFrame(columns=out_names)
-        p = p.sort_values(probe_ts, kind="mergesort")
-        if r.empty:
-            out = p.copy()
-            for c in ref_value_cols:
-                out[f"ref_{c}"] = None
-            return out[out_names]
-        r = r.sort_values(ref_ts, kind="mergesort")
-        merged = pd.merge_asof(
-            p,
-            r[[ref_ts] + ref_value_cols].rename(
-                columns={c: f"ref_{c}" for c in ref_value_cols}
-            ),
-            left_on=probe_ts,
-            right_on=ref_ts,
-            direction="backward",
-        )
-        return merged[out_names]
-
-    return (
-        probe.groupBy(key)
-        .cogroup(reference.select(key, ref_ts, *ref_value_cols).groupBy(key))
-        .applyInPandas(merge, schema=out_schema)
-    )

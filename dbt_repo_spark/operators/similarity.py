@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from dbt_repo_spark.session import fan_out
+from dbt_repo_spark.sources.tick_log import publish, read_published
 
 
 def _dvec(c: Column) -> Column:
@@ -1329,22 +1330,6 @@ def _assign_normed(normed: DataFrame, codebook: list[list[float]]) -> DataFrame:
     )
 
 
-def _read_ivf_index(spark, index_dir: str, exclude_batch: int) -> DataFrame:
-    """Postings published by previous ticks (empty relation before the
-    first publish); ``exclude_batch`` hides the current batch's own
-    partition so a crash-replay never treats its half-write as corpus —
-    same contract as streaming/dedup_stream.py::_read_index."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(index_dir)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        return spark.createDataFrame(
-            [], "vec_id long, cluster int, ascore double, batch long"
-        )
-    return spark.read.parquet(index_dir).filter(
-        F.col("batch") != F.lit(exclude_batch)
-    )
-
-
 def ivf_index_upsert(
     spark,
     new_vecs: DataFrame,
@@ -1357,9 +1342,9 @@ def ivf_index_upsert(
     drift_threshold: float = 0.05,
 ) -> DataFrame:
     """One index-maintenance tick: assign a NEW batch of vectors to the
-    EXISTING centroids, append its postings under a ``batch=<id>``
-    partition (dynamic overwrite -> idempotent crash-replay), and return
-    the per-cell drift statistics that decide when to RETRAIN.
+    EXISTING centroids, publish its postings as batch ``batch_id`` of the
+    tick-log table ``index_dir`` (sources/tick_log.py), and return the
+    per-cell drift statistics that decide when to RETRAIN.
 
     At-least-once collapse mirrors the dedup tick: duplicates within the
     batch drop, and vec_ids already in the index anti-join away (a
@@ -1377,19 +1362,18 @@ def ivf_index_upsert(
     sums, ONE final IEEE division) so even the float columns
     hash-match a SQL oracle.
     """
-    existing = _read_ivf_index(spark, index_dir, exclude_batch=batch_id)
+    existing = read_published(
+        spark, index_dir, "vec_id long, cluster int, ascore double", batch_id
+    )
     batch = new_vecs.dropDuplicates([id_col]).join(
         existing.select(F.col("vec_id").alias(id_col)).distinct(),
         id_col,
         "left_anti",
     )
-    postings = ivf_assign(batch, codebook, id_col, vec_col, exact=exact)
-    (
-        postings.withColumn("batch", F.lit(batch_id).cast("long"))
-        .write.mode("overwrite")
-        .options(partitionOverwriteMode="dynamic")
-        .partitionBy("batch")
-        .parquet(index_dir)
+    publish(
+        ivf_assign(batch, codebook, id_col, vec_col, exact=exact),
+        index_dir,
+        batch_id,
     )
     # drift stats: published corpus (pre-tick) vs this batch's postings —
     # read back from the table so the stats describe what the index

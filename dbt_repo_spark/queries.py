@@ -16,7 +16,10 @@ Cross-engine exactness rules used throughout (SURVEY.md §7.3 risk 2/4):
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import shutil
+import tempfile
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -67,6 +70,18 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return read_parquet(spark, f"{sf_dir}/{name}.parquet")
+
+
+@contextmanager
+def scratch_dir(prefix: str) -> Iterator[str]:
+    """A fresh temporary work directory for a query that stages files,
+    removed on exit, on error too. The query must materialize what it
+    returns before the block ends."""
+    work = tempfile.mkdtemp(prefix=prefix)
+    try:
+        yield work
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
 
 
 def dec(c: str, prec: int = 14, scale: int = 2) -> F.Column:

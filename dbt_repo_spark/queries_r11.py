@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dbt_repo_spark.operators.ids import SYNTH_ID_TAG
-from dbt_repo_spark.queries import q, t
+from dbt_repo_spark.queries import q, scratch_dir, t
 
 # Per-hop fixed cost: any h-hop path costs in [1001h, 1050h], so for
 # h <= 20 a path with more hops is ALWAYS heavier (1001(h+1) > 1050h
@@ -165,17 +165,13 @@ def incremental_runner_tick(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(new batch). The growth row (SCALE.md r11) measures the composed
     build+tick staying linear in corpus size.
     """
-    import shutil
-    import tempfile
-
     from dbt_repo_spark.plans.runner import ModelRunner, model
     from dbt_repo_spark.sources.catalog import Catalog
 
     orders = t(spark, sf_dir, "orders")
     batch1 = orders.filter(F.col("o_orderkey") % 8 != 0)
     batch2 = orders.filter(F.col("o_orderkey") % 3 == 0)
-    root = tempfile.mkdtemp(prefix="inc_tick_")
-    try:
+    with scratch_dir("inc_tick_") as root:
         cat = Catalog(spark, root)
         m = model(
             "fact_orders_inc",
@@ -202,8 +198,6 @@ def incremental_runner_tick(spark: SparkSession, sf_dir: str) -> DataFrame:
         # materialize the (|statuses|-row) rollup before returning
         rows = out.collect()
         return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 # isotonic calibration: bins are deterministic value buckets (no global

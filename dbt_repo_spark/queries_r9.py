@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dbt_repo_spark.operators.ids import SYNTH_ID_TAG
-from dbt_repo_spark.queries import dec, q, t
+from dbt_repo_spark.queries import dec, q, scratch_dir, t
 
 _DSIR_B = 256  # hashed-feature buckets (per DSIR: 10k at production scale)
 
@@ -415,11 +415,7 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly what the oracle states. lag_sec is integer µs-div, exact on
     both engines.
     """
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="stream_ivj_")
-    try:
+    with scratch_dir("stream_ivj_") as work:
         pdir, sdir = f"{work}/purchases", f"{work}/signups"
         out, ckpt = f"{work}/out", f"{work}/ckpt"
         ev = t(spark, sf_dir, "events").select(
@@ -474,8 +470,6 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(out)
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 _PCA_DIM = 64
@@ -1229,11 +1223,8 @@ def streaming_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame
     sweep per the streaming-twin policy.
     """
     import datetime as dt
-    import shutil
-    import tempfile
 
-    work = tempfile.mkdtemp(prefix="stream_ivjo_")
-    try:
+    with scratch_dir("stream_ivjo_") as work:
         pdir, sdir = f"{work}/purchases", f"{work}/signups"
         out, ckpt = f"{work}/out", f"{work}/ckpt"
         ev = t(spark, sf_dir, "events").select(
@@ -1306,8 +1297,6 @@ def streaming_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame
             .filter(F.col("user_id") >= 0)
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @q(

@@ -28,7 +28,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from dbt_repo_spark.operators import dedup, retrieval, similarity, text
-from dbt_repo_spark.queries import q, t
+from dbt_repo_spark.queries import q, scratch_dir, t
+from dbt_repo_spark.sources.tick_log import publish
 
 # Query workload: every 50th doc (offset 7 keeps the sf0.001 query doc
 # non-trivial) — 1 query doc at sf0.001, 10 at sf0.01, ~100 at sf0.1.
@@ -630,42 +631,35 @@ def streaming_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the wire parse, the tick's index read, the at-least-once collapse,
     and the idempotent partition publish end to end.
     """
-    import shutil
-    import tempfile
-
     from dbt_repo_spark.sources import kafka_mirror
     from dbt_repo_spark.streaming.dedup_stream import (
         start_paragraph_dedup_stream,
     )
 
     broker = kafka_mirror.build_documents_fixture(sf_dir)
-    work = tempfile.mkdtemp(prefix="stream_pdedup_")
-    index_dir = f"{work}/index"
-    out_dir = f"{work}/out"
-    # seed the index from the corpus half (batch=-1: published before
-    # any streaming tick)
-    docs = t(spark, sf_dir, "documents")
-    thr = docs.agg(F.floor(F.count("*") * 0.8).cast("long").alias("thr"))
-    corpus = docs.join(F.broadcast(thr)).filter(F.col("doc_id") < F.col("thr"))
-    (
-        dedup.paragraph_block_index(corpus, "doc_id", "text", 10)
-        .withColumn("batch", F.lit(-1).cast("long"))
-        .write.partitionBy("batch")
-        .parquet(index_dir)
-    )
-    q_ = start_paragraph_dedup_stream(
-        spark, broker, index_dir, out_dir, f"{work}/ckpt", block_tokens=10
-    )
-    q_.awaitTermination()
-    out = spark.read.parquet(out_dir).select(
-        "doc_id", "n_blocks", "n_kept", "text_rewritten"
-    )
-    # materialize before the temp dir is cleaned at interpreter exit —
-    # localCheckpoint pins the rows so the returned plan has no disk
-    # dependency on the tempdir (the caller may collect at any time)
-    out = out.localCheckpoint(eager=True)
-    shutil.rmtree(work, ignore_errors=True)
-    return out
+    with scratch_dir("stream_pdedup_") as work:
+        index_dir = f"{work}/index"
+        out_dir = f"{work}/out"
+        # seed the index from the corpus half (batch=-1: published before
+        # any streaming tick)
+        docs = t(spark, sf_dir, "documents")
+        thr = docs.agg(F.floor(F.count("*") * 0.8).cast("long").alias("thr"))
+        corpus = docs.join(F.broadcast(thr)).filter(F.col("doc_id") < F.col("thr"))
+        publish(
+            dedup.paragraph_block_index(corpus, "doc_id", "text", 10),
+            index_dir,
+            -1,
+        )
+        q_ = start_paragraph_dedup_stream(
+            spark, broker, index_dir, out_dir, f"{work}/ckpt", block_tokens=10
+        )
+        q_.awaitTermination()
+        out = spark.read.parquet(out_dir).select(
+            "doc_id", "n_blocks", "n_kept", "text_rewritten"
+        )
+        # localCheckpoint pins the rows so the returned plan has no disk
+        # dependency on the work dir (the caller may collect at any time)
+        return out.localCheckpoint(eager=True)
 
 
 @q(
@@ -1222,9 +1216,6 @@ def ann_ivf_upsert_tick(spark: SparkSession, sf_dir: str) -> DataFrame:
     idempotence are pinned by tests; the streaming twin is
     ``streaming_ann_index``.
     """
-    import shutil
-    import tempfile
-
     docs_emb = t(spark, sf_dir, "embeddings")
     thr = docs_emb.agg(
         F.floor(F.count("*") * 0.8).cast("long").alias("thr")
@@ -1238,19 +1229,12 @@ def ann_ivf_upsert_tick(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(16)
         .collect()
     ]
-    work = tempfile.mkdtemp(prefix="ann_upsert_")
-    index_dir = f"{work}/index"
-    (
-        similarity.ivf_assign(corpus, codebook)
-        .withColumn("batch", F.lit(-1).cast("long"))
-        .write.partitionBy("batch")
-        .parquet(index_dir)
-    )
-    out = similarity.ivf_index_upsert(
-        spark, batch, 0, index_dir, codebook
-    ).localCheckpoint(eager=True)
-    shutil.rmtree(work, ignore_errors=True)
-    return out
+    with scratch_dir("ann_upsert_") as work:
+        index_dir = f"{work}/index"
+        publish(similarity.ivf_assign(corpus, codebook), index_dir, -1)
+        return similarity.ivf_index_upsert(
+            spark, batch, 0, index_dir, codebook
+        ).localCheckpoint(eager=True)
 
 
 @q(
@@ -1298,9 +1282,6 @@ def streaming_ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream-static lookup, the at-least-once collapse, and the
     idempotent partition publish end to end.
     """
-    import shutil
-    import tempfile
-
     from dbt_repo_spark.sources import kafka_mirror
     from dbt_repo_spark.streaming.ann_stream import start_ann_index_stream
 
@@ -1315,38 +1296,31 @@ def streaming_ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(16)
         .collect()
     ]
-    work = tempfile.mkdtemp(prefix="stream_ann_")
-    index_dir = f"{work}/index"
-    (
-        similarity.ivf_assign(corpus, codebook)
-        .withColumn("batch", F.lit(-1).cast("long"))
-        .write.partitionBy("batch")
-        .parquet(index_dir)
-    )
-    q_ = start_ann_index_stream(
-        spark,
-        broker,
-        f"{sf_dir}/embeddings.parquet",
-        index_dir,
-        f"{work}/ckpt",
-        codebook,
-    )
-    q_.awaitTermination()
-    published = spark.read.parquet(index_dir)
-    dec = F.round(F.col("ascore"), 6).cast("decimal(20,6)")
-    st = published.groupBy("cluster").agg(
-        F.count("*").cast("long").alias("n"),
-        (F.sum(dec).cast("double") / F.count("*")).alias("avg_score"),
-    )
-    cells = spark.range(16).select(F.col("id").cast("int").alias("cluster"))
-    out = cells.join(st, "cluster", "left").select(
-        "cluster",
-        F.coalesce("n", F.lit(0)).cast("long").alias("n_vectors"),
-        "avg_score",
-    )
-    out = out.localCheckpoint(eager=True)
-    shutil.rmtree(work, ignore_errors=True)
-    return out
+    with scratch_dir("stream_ann_") as work:
+        index_dir = f"{work}/index"
+        publish(similarity.ivf_assign(corpus, codebook), index_dir, -1)
+        q_ = start_ann_index_stream(
+            spark,
+            broker,
+            f"{sf_dir}/embeddings.parquet",
+            index_dir,
+            f"{work}/ckpt",
+            codebook,
+        )
+        q_.awaitTermination()
+        published = spark.read.parquet(index_dir)
+        dec = F.round(F.col("ascore"), 6).cast("decimal(20,6)")
+        st = published.groupBy("cluster").agg(
+            F.count("*").cast("long").alias("n"),
+            (F.sum(dec).cast("double") / F.count("*")).alias("avg_score"),
+        )
+        cells = spark.range(16).select(F.col("id").cast("int").alias("cluster"))
+        out = cells.join(st, "cluster", "left").select(
+            "cluster",
+            F.coalesce("n", F.lit(0)).cast("long").alias("n_vectors"),
+            "avg_score",
+        )
+        return out.localCheckpoint(eager=True)
 
 
 @q(

@@ -47,7 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dbt_repo_spark.operators.ids import SYNTH_ID_TAG
-from dbt_repo_spark.queries import q, t
+from dbt_repo_spark.queries import q, scratch_dir, t
 
 _ZBITS = 8  # bucket bits per dimension (256 equal-width buckets)
 
@@ -425,13 +425,10 @@ def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole corpus as tick 1 is oracle plumbing, not the deployment shape.
     """
     import datetime as dt
-    import shutil
-    import tempfile
 
     from dbt_repo_spark.streaming.stateful import SESSION_OUT_SCHEMA, sessionize
 
-    work = tempfile.mkdtemp(prefix="stream_sess_")
-    try:
+    with scratch_dir("stream_sess_") as work:
         src, out, ckpt = f"{work}/src", f"{work}/out", f"{work}/ckpt"
         schema = "user_id long, ts timestamp, value double"
         ev = (
@@ -479,10 +476,6 @@ def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        # also on the failure path: a crashed stream run must not leak
-        # the source/checkpoint/output dirs (r8 ADVICE)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 _PHASH_CTES = f"""img AS (
@@ -883,16 +876,12 @@ def streaming_bloom_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     property: redelivery re-sets already-set bits, so no collapse
     stage is needed anywhere.
     """
-    import shutil
-    import tempfile
-
     from dbt_repo_spark.streaming.bloom_stream import (
         read_bloom_index,
         start_bloom_index_stream,
     )
 
-    work = tempfile.mkdtemp(prefix="stream_bloom_")
-    try:
+    with scratch_dir("stream_bloom_") as work:
         src, idx, ckpt = f"{work}/src", f"{work}/index", f"{work}/ckpt"
         keys = (
             t(spark, sf_dir, "supplier")
@@ -911,9 +900,6 @@ def streaming_bloom_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         qh = start_bloom_index_stream(spark, src, idx, ckpt, key_col="key")
         qh.awaitTermination()
         return read_bloom_index(spark, idx).localCheckpoint(eager=True)
-    finally:
-        # failure path included: no leaked source/checkpoint/index dirs
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @q(

@@ -33,7 +33,8 @@ from pyspark.sql import functions as F
 from dbt_repo_spark.operators import text as text_ops
 from dbt_repo_spark.operators import web
 from dbt_repo_spark.operators.dedup import tokens
-from dbt_repo_spark.queries import q, t
+from dbt_repo_spark.queries import q, scratch_dir, t
+from dbt_repo_spark.sources.tick_log import publish, read_published
 
 _LINE_TOKENS = 8
 
@@ -512,84 +513,70 @@ def streaming_crawl_tick(spark: SparkSession, sf_dir: str) -> DataFrame:
     parse, all three index reads, the at-least-once collapse, and the
     idempotent publish end to end.
     """
-    import shutil
-    import tempfile
-
     from dbt_repo_spark.operators.dedup import paragraph_block_index
     from dbt_repo_spark.sources import kafka_mirror
     from dbt_repo_spark.streaming.crawl_stream import start_crawl_stream
 
     broker = kafka_mirror.build_documents_fixture(sf_dir)
-    work = tempfile.mkdtemp(prefix="stream_crawl_")
-    url_index_dir = f"{work}/url_index"
-    block_index_dir = f"{work}/block_index"
-    out_dir = f"{work}/out"
 
     def synthesize(df: DataFrame) -> DataFrame:
         return _synth_urls(df).join(_synth_lines(df), "doc_id")
 
-    # corpus seed (batch=-1): the 80% that went through the same
-    # pipeline historically — its canonical KEYS and the block owners of
-    # its URL-deduped, C4-cleaned survivors
-    docs = t(spark, sf_dir, "documents")
-    thr = docs.agg(F.floor(F.count("*") * 0.8).cast("long").alias("thr"))
-    corpus = docs.join(F.broadcast(thr)).filter(F.col("doc_id") < F.col("thr"))
-    ccanon = web.canonicalize_urls(_synth_urls(corpus), "doc_id", "url")
-    (
-        ccanon.select("url_canon")
-        .distinct()
-        .withColumn("batch", F.lit(-1).cast("long"))
-        .write.partitionBy("batch")
-        .parquet(url_index_dir)
-    )
-    cadmit = ccanon.groupBy("url_canon").agg(F.min("doc_id").alias("doc_id"))
-    csurv = (
-        text_ops.c4_line_cleanup(
-            _synth_lines(
-                corpus.join(cadmit.select("doc_id"), "doc_id", "left_semi")
-            ),
-            "doc_id",
-            "text_nl",
+    with scratch_dir("stream_crawl_") as work:
+        url_index_dir = f"{work}/url_index"
+        block_index_dir = f"{work}/block_index"
+        out_dir = f"{work}/out"
+        # corpus seed (batch=-1): the 80% that went through the same
+        # pipeline historically — its canonical KEYS and the block owners
+        # of its URL-deduped, C4-cleaned survivors
+        docs = t(spark, sf_dir, "documents")
+        thr = docs.agg(F.floor(F.count("*") * 0.8).cast("long").alias("thr"))
+        corpus = docs.join(F.broadcast(thr)).filter(F.col("doc_id") < F.col("thr"))
+        ccanon = web.canonicalize_urls(_synth_urls(corpus), "doc_id", "url")
+        publish(ccanon.select("url_canon").distinct(), url_index_dir, -1)
+        cadmit = ccanon.groupBy("url_canon").agg(F.min("doc_id").alias("doc_id"))
+        csurv = (
+            text_ops.c4_line_cleanup(
+                _synth_lines(
+                    corpus.join(cadmit.select("doc_id"), "doc_id", "left_semi")
+                ),
+                "doc_id",
+                "text_nl",
+            )
+            .filter(F.col("doc_kept"))
+            .select(
+                "doc_id", F.regexp_replace("clean_text", "\n", " ").alias("ct")
+            )
         )
-        .filter(F.col("doc_kept"))
-        .select(
-            "doc_id", F.regexp_replace("clean_text", "\n", " ").alias("ct")
+        publish(
+            paragraph_block_index(csurv, "doc_id", "ct", 10), block_index_dir, -1
         )
-    )
-    (
-        paragraph_block_index(csurv, "doc_id", "ct", 10)
-        .withColumn("batch", F.lit(-1).cast("long"))
-        .write.partitionBy("batch")
-        .parquet(block_index_dir)
-    )
 
-    q_ = start_crawl_stream(
-        spark,
-        broker,
-        url_index_dir,
-        block_index_dir,
-        out_dir,
-        f"{work}/ckpt",
-        synthesize,
-        block_tokens=10,
-    )
-    q_.awaitTermination()
-    # Explicit schema: a tick whose batch is ENTIRELY url-duplicate
-    # (possible at high corpus density — sf0.1's synthetic key space
-    # saturates at ~|sources|x100 canonical keys, so the 20% tail adds
-    # no fresh key) publishes zero rows, and a schema-less empty
-    # partition dir must read as an empty relation, matching the batch
-    # oracle's zero-row result instead of UNABLE_TO_INFER_SCHEMA.
-    out = (
-        spark.read.schema(
-            "doc_id long, n_blocks long, n_kept long, text_rewritten string"
+        q_ = start_crawl_stream(
+            spark,
+            broker,
+            url_index_dir,
+            block_index_dir,
+            out_dir,
+            f"{work}/ckpt",
+            synthesize,
+            block_tokens=10,
         )
-        .parquet(out_dir)
-        .select("doc_id", "n_blocks", "n_kept", "text_rewritten")
-    )
-    out = out.localCheckpoint(eager=True)
-    shutil.rmtree(work, ignore_errors=True)
-    return out
+        q_.awaitTermination()
+        # Explicit schema: a tick whose batch is ENTIRELY url-duplicate
+        # (possible at high corpus density — sf0.1's synthetic key space
+        # saturates at ~|sources|x100 canonical keys, so the 20% tail adds
+        # no fresh key) publishes zero rows, and a schema-less empty
+        # partition dir must read as an empty relation, matching the batch
+        # oracle's zero-row result instead of UNABLE_TO_INFER_SCHEMA.
+        out = (
+            spark.read.schema(
+                "doc_id long, n_blocks long, n_kept long, text_rewritten string"
+            )
+            .parquet(out_dir)
+            .select("doc_id", "n_blocks", "n_kept", "text_rewritten")
+        )
+        return out.localCheckpoint(eager=True)
 
 
 # Unicode decorations for text_unicode_normalize, content-addressed from
@@ -713,46 +700,38 @@ def dedup_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapsing 4 partitions to 1 — the small-files maintenance pass a
     per-tick-partitioned index needs at 100 TB.
     """
-    import shutil
-    import tempfile
-
     from dbt_repo_spark.operators.dedup import (
         incremental_paragraph_rewrite,
-        paragraph_block_index,
+        paragraph_index_additions,
     )
     from dbt_repo_spark.streaming.dedup_stream import (
-        _read_index,
+        BLOCK_INDEX_SCHEMA,
         compact_index_batches,
     )
-
-    work = tempfile.mkdtemp(prefix="index_compact_")
-    index_dir = f"{work}/index"
 
     docs = t(spark, sf_dir, "documents")
     n = docs.count()
     bounds = [0, int(n * 0.25), int(n * 0.5), int(n * 0.75)]
-    for i in range(3):
-        lo, hi = bounds[i], bounds[i + 1]
-        tick_docs = docs.filter(
-            (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)
-        )
-        new = paragraph_block_index(tick_docs, "doc_id", "text", 10)
-        if i > 0:
-            seen = _read_index(spark, index_dir, exclude_batch=i)
-            new = new.join(seen.select("h"), "h", "left_anti")
-        (
-            new.withColumn("batch", F.lit(i).cast("long"))
-            .write.mode("overwrite")
-            .options(partitionOverwriteMode="dynamic")
-            .partitionBy("batch")
-            .parquet(index_dir)
-        )
-    removed = compact_index_batches(spark, index_dir, upto_batch=2)
-    assert removed == 3, f"expected 3 folded tick partitions, got {removed}"
+    with scratch_dir("index_compact_") as work:
+        index_dir = f"{work}/index"
+        for i in range(3):
+            lo, hi = bounds[i], bounds[i + 1]
+            tick_docs = docs.filter(
+                (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)
+            )
+            seen = read_published(spark, index_dir, BLOCK_INDEX_SCHEMA, i)
+            publish(
+                paragraph_index_additions(seen, tick_docs, "doc_id", "text", 10),
+                index_dir,
+                i,
+            )
+        removed = compact_index_batches(spark, index_dir, upto_batch=2)
+        if removed != 3:
+            raise RuntimeError(
+                f"expected 3 folded tick partitions, got {removed}"
+            )
 
-    batch = docs.filter(F.col("doc_id") >= bounds[3])
-    idx = _read_index(spark, index_dir, exclude_batch=10**9)
-    out = incremental_paragraph_rewrite(batch, idx, "doc_id", "text", 10)
-    out = out.localCheckpoint(eager=True)
-    shutil.rmtree(work, ignore_errors=True)
-    return out
+        batch = docs.filter(F.col("doc_id") >= bounds[3])
+        idx = read_published(spark, index_dir, BLOCK_INDEX_SCHEMA, 10**9)
+        out = incremental_paragraph_rewrite(batch, idx, "doc_id", "text", 10)
+        return out.localCheckpoint(eager=True)

@@ -300,6 +300,35 @@ def register(spark) -> None:
     spark.dataSource.register(KafkaMirrorDataSource)
 
 
+def read_payload_stream(
+    spark,
+    broker_root: str,
+    topic: str,
+    payload_schema: str,
+    options: dict | None = None,
+):
+    """Streaming read of ``topic`` under ``broker_root``: each record's
+    value cast to string and parsed as JSON of ``payload_schema``, one
+    column per field — the reference's broker path
+    (``CAST(value AS STRING)`` → ``from_json``). ``options`` pass through
+    to the source (e.g. ``maxOffsetsPerTrigger``)."""
+    from pyspark.sql import functions as F
+
+    register(spark)
+    raw = (
+        spark.readStream.format("kafka_mirror")
+        .option("path", broker_root)
+        .option("subscribe", topic)
+        .options(**(options or {}))
+        .load()
+    )
+    return (
+        raw.selectExpr("CAST(value AS STRING) AS payload")
+        .select(F.from_json("payload", payload_schema).alias("j"))
+        .select("j.*")
+    )
+
+
 def build_events_fixture(
     sf_dir: str, modulus: int = 17, n_partitions: int = 4
 ) -> str:

@@ -8,10 +8,9 @@ looks up its embedding from the (static) embeddings table — the
 stream-static join every enrichment pipeline runs; in production this
 seat is an embedding-service call or a vector column on the wire —
 and a foreachBatch tick assigns the new vectors to the EXISTING
-centroids and appends their postings under a ``batch=<id>`` partition
-with dynamic overwrite. Same exactly-once recipe as the dedup stream:
-idempotent partition publish, the tick's index read excludes its own
-batch, redelivered vec_ids anti-join away inside ``ivf_index_upsert``.
+centroids and publishes their postings to a ``sources/tick_log.py``
+table, as the dedup stream does; redelivered vec_ids anti-join away
+inside ``ivf_index_upsert``.
 
 Because the codebook is FIXED between retrains, assignment is
 order-independent: after any sequence of ticks the published postings
@@ -49,18 +48,9 @@ def start_ann_index_stream(
     index upsert. Returns the started StreamingQuery."""
     from dbt_repo_spark.sources import kafka_mirror
 
-    kafka_mirror.register(spark)
-    raw = (
-        spark.readStream.format("kafka_mirror")
-        .option("path", broker_root)
-        .option("subscribe", topic)
-        .load()
-    )
-    arrivals = (
-        raw.selectExpr("CAST(value AS STRING) AS payload")
-        .select(F.from_json("payload", ARRIVAL_PAYLOAD_SCHEMA).alias("j"))
-        .select(F.col("j.doc_id").alias("doc_id"))
-    )
+    arrivals = kafka_mirror.read_payload_stream(
+        spark, broker_root, topic, ARRIVAL_PAYLOAD_SCHEMA
+    ).select("doc_id")
 
     def tick(batch_df: DataFrame, batch_id: int) -> None:
         sp = batch_df.sparkSession

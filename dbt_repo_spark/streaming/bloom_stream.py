@@ -7,9 +7,9 @@ BIT_OR merge is associative, commutative, AND idempotent — the three
 properties that make the incremental tick trivial to get exactly right:
 
 - each micro-batch builds its OWN lane table (64 rows) from just the
-  keys it carried and publishes it under ``batch=<id>`` with dynamic
-  partition overwrite — crash-replay overwrites its own partition, the
-  same idempotent-publish discipline as the dedup/ANN/crawl ticks;
+  keys it carried and publishes it as a ``sources/tick_log.py`` batch —
+  crash-replay overwrites its own partition, as in the dedup/ANN/crawl
+  ticks;
 - the read path folds every committed partition with one more BIT_OR —
   no tick ever reads the index before writing (no read-modify-write
   race), and a redelivered key (at-least-once bus) re-sets bits that
@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dbt_repo_spark.operators.sketches import bloom_build
+from dbt_repo_spark.sources.tick_log import publish
 
 
 def start_bloom_index_stream(
@@ -45,14 +46,7 @@ def start_bloom_index_stream(
     publish. Returns the started StreamingQuery."""
 
     def tick(batch_df: DataFrame, batch_id: int) -> None:
-        lanes = bloom_build(batch_df, key_col)
-        (
-            lanes.withColumn("batch", F.lit(batch_id).cast("long"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch")
-            .parquet(index_dir)
-        )
+        publish(bloom_build(batch_df, key_col), index_dir, batch_id)
 
     stream = (
         spark.readStream.schema(f"{key_col} long")

@@ -15,14 +15,10 @@ Broker → parse → foreachBatch tick with THREE persisted relations:
    blocks they introduce (the dedup_stream.py tick, here fed by the
    crawl stages instead of raw text).
 
-Exactly-once discipline is inherited verbatim from dedup_stream.py:
-every published relation (output docs, URL keys, block owners) is
-written under a ``batch=<id>`` partition with dynamic partition
-overwrite, and every index read excludes the current batch id, so a
-foreachBatch crash-replay overwrites its own half-write instead of
-duplicating or self-deduplicating. At-least-once collapse runs at both
-granularities (within-tick dropDuplicates, cross-tick anti-join vs
-published doc_ids).
+Every published relation (output docs, URL keys, block owners) is a
+``sources/tick_log.py`` table (see its replay contract). At-least-once
+collapse runs at both granularities (within-tick dropDuplicates,
+cross-tick anti-join vs published doc_ids).
 
 Reference parallel: the realtime path broker → parse → dedupe → sink at
 /root/reference/src/realtime_pubsub_to_spark.py:99-153, with the
@@ -36,25 +32,11 @@ from pyspark.sql import functions as F
 
 from dbt_repo_spark.operators import dedup, web
 from dbt_repo_spark.operators.text import c4_line_cleanup
+from dbt_repo_spark.sources.tick_log import publish, read_published
 from dbt_repo_spark.streaming.dedup_stream import (
+    BLOCK_INDEX_SCHEMA,
     DOC_PAYLOAD_SCHEMA,
-    _read_index,
-    _read_published_doc_ids,
 )
-
-
-def _read_url_index(
-    spark: SparkSession, url_index_dir: str, exclude_batch: int
-) -> DataFrame:
-    """Canonical URL keys admitted by previous ticks (and the corpus
-    seed at batch=-1); empty on the first tick; the current batch's own
-    partition is hidden so a crash-replay re-admits its own keys."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(url_index_dir)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        return spark.createDataFrame([], "url_canon string, batch long")
-    idx = spark.read.parquet(url_index_dir)
-    return idx.filter(F.col("batch") != F.lit(exclude_batch))
 
 
 def crawl_tick(
@@ -70,7 +52,7 @@ def crawl_tick(
     index → C4 cleanup → paragraph rewrite vs the block index → publish
     output + both index extensions under ``batch=<id>``."""
     docs = docs_with_urls.dropDuplicates(["doc_id"]).join(
-        _read_published_doc_ids(spark, out_dir, exclude_batch=batch_id),
+        read_published(spark, out_dir, "doc_id long", batch_id).select("doc_id"),
         "doc_id",
         "left_anti",
     )
@@ -78,7 +60,7 @@ def crawl_tick(
     canon = web.canonicalize_urls(docs, "doc_id", "url").join(
         docs.select("doc_id", "text_nl"), "doc_id"
     )
-    url_idx = _read_url_index(spark, url_index_dir, exclude_batch=batch_id)
+    url_idx = read_published(spark, url_index_dir, "url_canon string", batch_id)
     fresh = canon.join(url_idx.select("url_canon"), "url_canon", "left_anti")
     # within-batch keep-first per canonical key (min doc_id — a total
     # order, so replay-deterministic)
@@ -93,28 +75,19 @@ def crawl_tick(
         )
     )
 
-    blk_idx = _read_index(spark, block_index_dir, exclude_batch=batch_id)
+    blk_idx = read_published(spark, block_index_dir, BLOCK_INDEX_SCHEMA, batch_id)
     rewritten = dedup.incremental_paragraph_rewrite(
         cleaned, blk_idx, "doc_id", "ct", block_tokens
     )
-    new_owners = dedup.paragraph_block_index(
-        cleaned, "doc_id", "ct", block_tokens
-    ).join(blk_idx.select("h"), "h", "left_anti")
-    new_keys = owner.select("url_canon")
-
-    writer_conf = {"partitionOverwriteMode": "dynamic"}
+    new_owners = dedup.paragraph_index_additions(
+        blk_idx, cleaned, "doc_id", "ct", block_tokens
+    )
     for df, path in (
         (rewritten, out_dir),
-        (new_keys, url_index_dir),
+        (owner.select("url_canon"), url_index_dir),
         (new_owners, block_index_dir),
     ):
-        (
-            df.withColumn("batch", F.lit(batch_id).cast("long"))
-            .write.mode("overwrite")
-            .options(**writer_conf)
-            .partitionBy("batch")
-            .parquet(path)
-        )
+        publish(df, path, batch_id)
 
 
 def _require_single_nonempty_tick(
@@ -195,19 +168,8 @@ def start_crawl_stream(
                 "continuous ticks (available_now=False)"
             )
 
-    kafka_mirror.register(spark)
-    reader = (
-        spark.readStream.format("kafka_mirror")
-        .option("path", broker_root)
-        .option("subscribe", topic)
-    )
-    for k, v in (source_options or {}).items():
-        reader = reader.option(k, v)
-    raw = reader.load()
-    docs = (
-        raw.selectExpr("CAST(value AS STRING) AS payload")
-        .select(F.from_json("payload", DOC_PAYLOAD_SCHEMA).alias("j"))
-        .select("j.*")
+    docs = kafka_mirror.read_payload_stream(
+        spark, broker_root, topic, DOC_PAYLOAD_SCHEMA, source_options
     )
 
     nonempty_ticks: list[int] = []

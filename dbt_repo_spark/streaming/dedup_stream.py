@@ -11,23 +11,16 @@ a foreachBatch job, not a watermark — the state (the block index) is
 unbounded and queryable, so it lives in a TABLE the tick reads and
 upserts, not in stream-operator state.
 
-Exactly-once without a transactional sink: both the output docs and the
-index rows are written under a ``batch=<id>`` partition with DYNAMIC
-partition overwrite, so a foreachBatch replay after a crash overwrites
-its own partition instead of appending duplicates — idempotent replay,
-the same page-pinning idea as the paged sink's two-phase commit
-(sources/rest_source.py). The tick reads the index with
-``batch != current`` so a replay never sees its own crashed half-write
-as "corpus".
+Exactly-once replay: both the output docs and the index rows are
+``sources/tick_log.py`` tables (see its replay contract).
 
 At-least-once collapse happens at BOTH granularities: within a tick via
 ``dropDuplicates(doc_id)``, and ACROSS ticks via an anti-join against
-the doc_ids already published to the output table (excluding the
-current batch partition, so a crash-replay still rewrites its own
-rows). Without the cross-tick leg, a producer retry that redelivers a
-document at new offsets in a later tick would cut it to empty against
-its own earlier index rows and publish a second, conflicting row under
-the new ``batch=`` partition.
+the doc_ids earlier ticks published to the output table. Without the
+cross-tick leg, a producer retry that redelivers a document at new
+offsets in a later tick would cut it to empty against its own earlier
+index rows and publish a second, conflicting row under the new
+``batch=`` partition.
 
 Scale notes: the index join is an equi-join on the 8-byte block hash
 (batch-bounded shuffle — the corpus text is never re-read); the index
@@ -42,43 +35,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dbt_repo_spark.operators import dedup
+from dbt_repo_spark.sources.tick_log import publish, read_published
 
 DOC_PAYLOAD_SCHEMA = "struct<doc_id: long, source: string, text: string>"
-
-
-def _read_index(spark: SparkSession, index_dir: str, exclude_batch: int) -> DataFrame:
-    """Owner index published by previous ticks; empty relation on the
-    first tick. ``exclude_batch`` hides the current batch's own
-    partition so a crash-replay does not treat its half-published
-    owners as corpus. Only a MISSING directory means "first tick" — a
-    corrupt or unreadable index must raise, not silently dedup against
-    nothing (that would republish every corpus paragraph)."""
-    # Hadoop FS existence check: works for any scheme the index lives
-    # on (local here, object storage on a real cluster)
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(index_dir)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        return spark.createDataFrame(
-            [], "h long, doc_id long, blk long, batch long"
-        )
-    idx = spark.read.parquet(index_dir)
-    return idx.filter(F.col("batch") != F.lit(exclude_batch))
-
-
-def _read_published_doc_ids(
-    spark: SparkSession, out_dir: str, exclude_batch: int
-) -> DataFrame:
-    """doc_ids already published by PREVIOUS ticks (empty relation before
-    the first publish). ``exclude_batch`` hides the current batch's own
-    partition so a crash-replay of this tick still republishes its rows
-    instead of anti-joining itself away. Partition pruning keeps this a
-    metadata + doc_id-column scan, never the text payload."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(out_dir)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        return spark.createDataFrame([], "doc_id long")
-    out = spark.read.parquet(out_dir)
-    return out.filter(F.col("batch") != F.lit(exclude_batch)).select("doc_id")
+BLOCK_INDEX_SCHEMA = "h long, doc_id long, blk long"
 
 
 def paragraph_dedup_tick(
@@ -97,31 +57,19 @@ def paragraph_dedup_tick(
     # retry redelivering at new offsets in a LATER tick must not publish
     # a second, empty-rewritten copy under the new batch partition)
     docs = docs.dropDuplicates(["doc_id"]).join(
-        _read_published_doc_ids(spark, out_dir, exclude_batch=batch_id),
+        read_published(spark, out_dir, "doc_id long", batch_id).select("doc_id"),
         "doc_id",
         "left_anti",
     )
-    idx = _read_index(spark, index_dir, exclude_batch=batch_id)
+    idx = read_published(spark, index_dir, BLOCK_INDEX_SCHEMA, batch_id)
     rewritten = dedup.incremental_paragraph_rewrite(
         docs, idx, "doc_id", "text", block_tokens
     )
-    new_owners = dedup.paragraph_block_index(
-        docs, "doc_id", "text", block_tokens
-    ).join(idx.select("h"), "h", "left_anti")
-    writer_conf = {"partitionOverwriteMode": "dynamic"}
-    (
-        rewritten.withColumn("batch", F.lit(batch_id).cast("long"))
-        .write.mode("overwrite")
-        .options(**writer_conf)
-        .partitionBy("batch")
-        .parquet(out_dir)
-    )
-    (
-        new_owners.withColumn("batch", F.lit(batch_id).cast("long"))
-        .write.mode("overwrite")
-        .options(**writer_conf)
-        .partitionBy("batch")
-        .parquet(index_dir)
+    publish(rewritten, out_dir, batch_id)
+    publish(
+        dedup.paragraph_index_additions(idx, docs, "doc_id", "text", block_tokens),
+        index_dir,
+        batch_id,
     )
 
 
@@ -143,17 +91,8 @@ def start_paragraph_dedup_stream(
     """
     from dbt_repo_spark.sources import kafka_mirror
 
-    kafka_mirror.register(spark)
-    raw = (
-        spark.readStream.format("kafka_mirror")
-        .option("path", broker_root)
-        .option("subscribe", topic)
-        .load()
-    )
-    docs = (
-        raw.selectExpr("CAST(value AS STRING) AS payload")
-        .select(F.from_json("payload", DOC_PAYLOAD_SCHEMA).alias("j"))
-        .select("j.*")
+    docs = kafka_mirror.read_payload_stream(
+        spark, broker_root, topic, DOC_PAYLOAD_SCHEMA
     )
 
     def tick(batch_df: DataFrame, batch_id: int) -> None:
@@ -197,7 +136,7 @@ def compact_index_batches(
     delete leaves duplicate rows split across base and folded
     partitions; compaction re-run folds them away (distinct) — so the
     recovery protocol after ANY compaction crash is simply "run it
-    again". Readers (_read_index / _read_url_index) only filter
+    again". Readers (``tick_log.read_published``) only filter
     ``batch != current``, so a half-compacted index stays correct for
     existence checks and over-counts nothing after the re-run.
 
@@ -217,13 +156,7 @@ def compact_index_batches(
         .distinct()
         .localCheckpoint(eager=True)  # pin rows BEFORE touching files
     )
-    (
-        merged.withColumn("batch", F.lit(-1).cast("long"))
-        .write.mode("overwrite")
-        .options(partitionOverwriteMode="dynamic")
-        .partitionBy("batch")
-        .parquet(index_dir)
-    )
+    publish(merged, index_dir, -1)
     jpath = spark._jvm.org.apache.hadoop.fs.Path
     fs = jpath(index_dir).getFileSystem(spark._jsc.hadoopConfiguration())
     removed = 0

@@ -98,23 +98,3 @@ def test_asof_tolerance_expires_stale_matches(spark):
         for r in asof_join(probe, ref, "k", "pts", "rts", ["px"]).collect()
     }
     assert no_tol[ts(59)] == 100.0 and no_tol[ts(200)] == 200.0
-
-
-def test_cogroup_asof_bit_equals_window_asof(spark):
-    """The Arrow-cogroup merge_asof path must agree row-for-row with the
-    union-window operator on the same fixture (incl. keys with no
-    reference rows and same-instant ties)."""
-    from dbt_repo_spark.operators.relational import asof_join, asof_join_cogroup
-
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    probe = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", F.col("ts").cast("timestamp").alias("ts"), "event_id"
-    )
-    ref = ev.filter(F.col("event_type") == "signup").select(
-        "user_id", F.col("ts").cast("timestamp").alias("rts"), "value"
-    )
-    a = asof_join(probe, ref, "user_id", "ts", "rts", ["value"])
-    b = asof_join_cogroup(probe, ref, "user_id", "ts", "rts", ["value"])
-    ka = sorted(map(tuple, a.select("user_id", "ts", "event_id", "ref_value").collect()))
-    kb = sorted(map(tuple, b.select("user_id", "ts", "event_id", "ref_value").collect()))
-    assert ka == kb and len(ka) > 0

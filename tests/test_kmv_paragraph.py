@@ -191,9 +191,9 @@ def test_incremental_paragraph_equals_full_rerun(spark):
 
 
 def test_merge_paragraph_index_matches_full_rebuild(spark):
-    """Index upsert: corpus index + batch merge == index built from the
-    concatenated corpus (owners stable under append-only ids), and the
-    merge is idempotent."""
+    """Index upsert: corpus index + the batch's additions == index built
+    from the concatenated corpus (owners stable under append-only ids),
+    and re-adding the batch is idempotent."""
     docs = spark.read.parquet(SF + "/documents.parquet").filter(
         F.col("doc_id") < 120
     )
@@ -205,9 +205,13 @@ def test_merge_paragraph_index_matches_full_rebuild(spark):
 
     full = as_set(dedup.paragraph_block_index(docs, "doc_id", "text", 10))
     idx0 = dedup.paragraph_block_index(corpus, "doc_id", "text", 10)
-    merged = dedup.merge_paragraph_index(idx0, batch, "doc_id", "text", 10)
+    merged = idx0.unionByName(
+        dedup.paragraph_index_additions(idx0, batch, "doc_id", "text", 10)
+    )
     assert as_set(merged) == full
-    again = dedup.merge_paragraph_index(merged, batch, "doc_id", "text", 10)
+    again = merged.unionByName(
+        dedup.paragraph_index_additions(merged, batch, "doc_id", "text", 10)
+    )
     assert as_set(again) == full
 
 
@@ -344,7 +348,9 @@ def test_incremental_paragraph_empty_batch_is_noop(spark):
     empty = docs.filter("doc_id < 0")
     out = dedup.incremental_paragraph_rewrite(empty, idx, "doc_id", "text", 10)
     assert out.count() == 0
-    merged = dedup.merge_paragraph_index(idx, empty, "doc_id", "text", 10)
+    merged = idx.unionByName(
+        dedup.paragraph_index_additions(idx, empty, "doc_id", "text", 10)
+    )
     assert merged.count() == idx.count()
 
 

@@ -406,8 +406,9 @@ def test_compact_index_batches_semantics(spark, tmp_path):
     reader sees identical state before and after."""
     from pyspark.sql import functions as F
 
+    from dbt_repo_spark.sources.tick_log import read_published
     from dbt_repo_spark.streaming.dedup_stream import (
-        _read_index,
+        BLOCK_INDEX_SCHEMA,
         compact_index_batches,
     )
 
@@ -423,7 +424,9 @@ def test_compact_index_batches_semantics(spark, tmp_path):
 
     before = {
         (r.h, r.doc_id, r.blk)
-        for r in _read_index(spark, index_dir, exclude_batch=10**9).collect()
+        for r in read_published(
+            spark, index_dir, BLOCK_INDEX_SCHEMA, exclude_batch=10**9
+        ).collect()
     }
     removed = compact_index_batches(spark, index_dir, upto_batch=1)
     assert removed == 2  # tick partitions 0 and 1 deleted, base rewritten
@@ -434,7 +437,9 @@ def test_compact_index_batches_semantics(spark, tmp_path):
     assert after_parts == [-1, 2]
     after = {
         (r.h, r.doc_id, r.blk)
-        for r in _read_index(spark, index_dir, exclude_batch=10**9).collect()
+        for r in read_published(
+            spark, index_dir, BLOCK_INDEX_SCHEMA, exclude_batch=10**9
+        ).collect()
     }
     assert after == before
 
@@ -450,7 +455,9 @@ def test_compact_index_batches_semantics(spark, tmp_path):
     spark.createDataFrame(
         [(3, 500, 5, 0)], "batch long, h long, doc_id long, blk long"
     ).write.mode("append").partitionBy("batch").parquet(index_dir)
-    visible = _read_index(spark, index_dir, exclude_batch=3)
+    visible = read_published(
+        spark, index_dir, BLOCK_INDEX_SCHEMA, exclude_batch=3
+    )
     assert visible.count() == len(before)  # own batch excluded
 
 

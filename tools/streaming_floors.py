@@ -188,6 +188,7 @@ def floor_streaming_paragraph_dedup(spark):
 
     from dbt_repo_spark.operators import dedup
     from dbt_repo_spark.sources import kafka_mirror
+    from dbt_repo_spark.sources.tick_log import publish
     from dbt_repo_spark.streaming.dedup_stream import (
         start_paragraph_dedup_stream,
     )
@@ -207,11 +208,10 @@ def floor_streaming_paragraph_dedup(spark):
         corpus = docs.join(F.broadcast(thr)).filter(
             F.col("doc_id") < F.col("thr")
         )
-        (
-            dedup.paragraph_block_index(corpus, "doc_id", "text", 10)
-            .withColumn("batch", F.lit(-1).cast("long"))
-            .write.partitionBy("batch")
-            .parquet(index_dir)
+        publish(
+            dedup.paragraph_block_index(corpus, "doc_id", "text", 10),
+            index_dir,
+            -1,
         )
 
         def tick() -> float:
@@ -238,6 +238,7 @@ def floor_streaming_crawl_tick(spark):
     from dbt_repo_spark.operators import web
     from dbt_repo_spark.queries_web import _synth_lines, _synth_urls
     from dbt_repo_spark.sources import kafka_mirror
+    from dbt_repo_spark.sources.tick_log import publish
     from dbt_repo_spark.streaming.crawl_stream import start_crawl_stream
 
     work = tempfile.mkdtemp(prefix="floor_crawl_")
@@ -260,13 +261,7 @@ def floor_streaming_crawl_tick(spark):
             F.col("doc_id") < F.col("thr")
         )
         ccanon = web.canonicalize_urls(_synth_urls(corpus), "doc_id", "url")
-        (
-            ccanon.select("url_canon")
-            .distinct()
-            .withColumn("batch", F.lit(-1).cast("long"))
-            .write.partitionBy("batch")
-            .parquet(url_index_dir)
-        )
+        publish(ccanon.select("url_canon").distinct(), url_index_dir, -1)
         cadmit = ccanon.groupBy("url_canon").agg(
             F.min("doc_id").alias("doc_id")
         )
@@ -286,11 +281,10 @@ def floor_streaming_crawl_tick(spark):
                 F.regexp_replace("clean_text", "\n", " ").alias("ct"),
             )
         )
-        (
-            dedup_ops.paragraph_block_index(csurv, "doc_id", "ct", 10)
-            .withColumn("batch", F.lit(-1).cast("long"))
-            .write.partitionBy("batch")
-            .parquet(block_index_dir)
+        publish(
+            dedup_ops.paragraph_block_index(csurv, "doc_id", "ct", 10),
+            block_index_dir,
+            -1,
         )
 
         def tick() -> float:
@@ -315,6 +309,7 @@ def floor_streaming_ann_index(spark):
 
     from dbt_repo_spark.operators import similarity
     from dbt_repo_spark.sources import kafka_mirror
+    from dbt_repo_spark.sources.tick_log import publish
     from dbt_repo_spark.streaming.ann_stream import start_ann_index_stream
 
     work = tempfile.mkdtemp(prefix="floor_ann_")
@@ -339,12 +334,7 @@ def floor_streaming_ann_index(spark):
             .limit(16)
             .collect()
         ]
-        (
-            similarity.ivf_assign(corpus, codebook)
-            .withColumn("batch", F.lit(-1).cast("long"))
-            .write.partitionBy("batch")
-            .parquet(index_dir)
-        )
+        publish(similarity.ivf_assign(corpus, codebook), index_dir, -1)
 
         def tick() -> float:
             return _await(
