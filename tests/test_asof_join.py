@@ -8,8 +8,6 @@ from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import functions as F
-
 from dbt_repo_spark.operators.relational import asof_join
 
 
