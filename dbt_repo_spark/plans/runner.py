@@ -608,14 +608,15 @@ class ModelRunner:
             df = self._reconcile_schema(m, df, target)
             if m.incremental_strategy == "append":
                 # is_incremental() branch: anti-join against {{ this }}
-                # keys, then append. The key set is projected to ONE
-                # column before the join so the scan of the existing
-                # target prunes to the key column only (parquet
-                # ReadSchema). It is fact-sized, so Catalyst/AQE picks
-                # the join strategy.
-                keys = target.select(m.unique_key).distinct()
+                # keys, then append. The key side is projected to ONE
+                # column so the scan of the existing target prunes to
+                # the key column only (parquet ReadSchema), and is not
+                # deduplicated: a left anti join's result ignores
+                # duplicates on its build side, and a distinct() would
+                # add a shuffle stage. It is fact-sized, so Catalyst/AQE
+                # picks the join strategy.
                 self.catalog.write(
-                    df.join(keys, m.unique_key, "left_anti"),
+                    df.join(target.select(m.unique_key), m.unique_key, "left_anti"),
                     m.layer, m.name,
                     mode="append",
                     partition_by=parts,

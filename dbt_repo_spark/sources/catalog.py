@@ -11,10 +11,11 @@ from __future__ import annotations
 
 import os
 import shutil
+from contextlib import nullcontext
 
 from pyspark.sql import DataFrame, SparkSession
 
-from dbt_repo_spark.sources.readers import read_parquet
+from dbt_repo_spark.sources.readers import read_parquet, recording_write
 
 LAYERS = ("raw", "stg", "analytics")
 
@@ -56,10 +57,11 @@ class Catalog:
 
         A parquet read without ``merge_schema`` goes through
         ``readers.read_parquet``: a table whose files and session conf
-        are unchanged since its last read reuses the schema that read
-        inferred, and runs no schema-inference job. Any write to the
-        table (append, overwrite, a new partition) or ``spark.sql.*``
-        conf change infers again.
+        are unchanged since its last read, or since a ``write`` that
+        recorded the schema it wrote, reuses that schema and runs no
+        schema-inference job. A change outside this catalog (a new
+        partition directory, a rewritten file), a write that may change
+        the schema, or a ``spark.sql.*`` conf change infers again.
         """
         if fmt == "parquet" and not merge_schema:
             return read_parquet(self.spark, self.path(layer, name))
@@ -97,6 +99,11 @@ class Catalog:
         min/max skipping on the clustered key). ``fmt`` may be any Spark
         batch sink (parquet default; orc keeps the columnar/stats story,
         csv/json are interchange-only — no pruning, no types on read).
+
+        A parquet write records the schema it wrote for the next ``read``
+        (``readers.recording_write``) when the written files determine it:
+        an overwrite, or an append or dynamic partition overwrite that
+        keeps the table's data columns. That read then runs no job.
         """
         if sort_within_partitions:
             df = df.sortWithinPartitions(*sort_within_partitions)
@@ -111,13 +118,24 @@ class Catalog:
             writer = writer.option("compression", compression)
         if max_records_per_file:
             writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
-        writer.format(fmt).save(self.path(layer, name))
-        if zone_map_cols:
-            # file-level min/max manifest for planning-time skipping
-            # (sources/zonemap.py) — footer metadata only, no data read
-            from dbt_repo_spark.sources.zonemap import write_zone_map
+        path = self.path(layer, name)
+        dynamic = partition_by and (
+            dynamic_partition_overwrite
+            or self.spark.conf.get("spark.sql.sources.partitionOverwriteMode")
+            .lower() == "dynamic"
+        )
+        with (
+            recording_write(self.spark, path, df.schema, partition_by,
+                            replaces=mode == "overwrite" and not dynamic)
+            if fmt == "parquet" else nullcontext()
+        ):
+            writer.format(fmt).save(path)
+            if zone_map_cols:
+                # file-level min/max manifest for planning-time skipping
+                # (sources/zonemap.py) — footer metadata only, no data read
+                from dbt_repo_spark.sources.zonemap import write_zone_map
 
-            write_zone_map(self.path(layer, name), zone_map_cols)
+                write_zone_map(path, zone_map_cols)
 
     def read_pruned(
         self, layer: str, name: str, col: str, lo=None, hi=None

@@ -9,11 +9,13 @@ handles split planning, predicate pushdown, and column pruning).
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
+from typing import Iterator
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 TPCH_TABLES = (
     "region",
@@ -87,50 +89,118 @@ def file_stamps(root: str) -> tuple[tuple[str, int, int], ...]:
     )
 
 
-# path -> (file stamps, session conf, schema) of its last inferring read:
-# one entry per path. The stamps are taken before the inference, so files
-# that change during it never match them again. Model-runner threads may
-# miss on one path at once; each stores a valid entry and the last stays.
-_inferred: dict[str, tuple] = {}
+# path -> ((file stamps, session conf), schema a read passes): one entry
+# per path, from its last inferring read or its last recorded write. A
+# read stamps the files before its inference, so files that change
+# during it never match them again. Model-runner threads may miss on one
+# path at once; each stores a valid entry and the last stays.
+_schemas: dict[str, tuple] = {}
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)`` that infers the schema once per
-    unchanged file set.
-
-    Spark infers a Parquet schema with a one-task job that reads a
-    footer. The first read of ``path`` infers it and records it with
-    ``file_stamps(path)`` and the session's conf, every ``spark.sql.*``
-    setting among it. A later read whose stamps and conf are equal
-    passes that schema (``spark.read.schema(s).parquet(path)``) and runs
-    no job. The schema is the inferred one, so the frame, its plan and
-    its rows are the plain read's. An append, an overwrite, a rewrite or
-    a new partition directory changes the stamps, and any ``spark.sql.*``
-    conf change (``parquet.binaryAsString``,
-    ``legacy.parquet.nanosAsLong``, ...) changes the conf: either infers
-    again and replaces the path's entry. A URI other than ``file:``, a
-    glob, and a missing or empty path take the plain read (and raise as
-    it does).
-    """
+def _read_key(spark: SparkSession, path: str) -> tuple | None:
+    """``(file_stamps, session conf)`` of a local ``path``; None for a URI
+    other than ``file:`` and for a missing or empty path."""
     u = urlparse(path)
     if u.scheme not in ("", "file"):
-        return spark.read.parquet(path)
+        return None
     try:
         stamps = file_stamps(unquote(u.path) if u.scheme else path)
     except OSError:
-        stamps = ()
+        return None
     if not stamps:
-        return spark.read.parquet(path)
+        return None
     # one py4j call; ``spark.conf.getAll`` makes one per entry (~25 ms).
     # An immutable Scala map prints equal contents alike, and a false
     # mismatch only costs an inference.
-    conf = spark._jsparkSession.conf().getAll().toString()
-    last = _inferred.get(path)
-    if last is not None and last[:2] == (stamps, conf):
-        return spark.read.schema(last[2]).parquet(path)
+    return stamps, spark._jsparkSession.conf().getAll().toString()
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema at most once
+    per unchanged file set.
+
+    Spark infers a Parquet schema with a one-task job that reads a
+    footer. A read of ``path`` whose ``file_stamps`` and session conf
+    (every ``spark.sql.*`` setting among it) equal those of the path's
+    entry passes the entry's schema (``spark.read.schema(s).parquet``)
+    and runs no job. The entry comes from the last read that inferred
+    or from the last ``recording_write`` (every parquet
+    ``Catalog.write``), and it holds the schema the plain read infers,
+    so the frame, its plan and its rows are the plain read's. Any other
+    change under the path (a write outside the catalog, a new partition
+    directory) changes the stamps, and any ``spark.sql.*`` conf change
+    (``parquet.binaryAsString``, ``legacy.parquet.nanosAsLong``, ...)
+    the conf: either read infers again and replaces the path's entry. A
+    URI other than ``file:``, a glob, and a missing or empty path take
+    the plain read (and raise as it does).
+    """
+    key = _read_key(spark, path)
+    if key is None:
+        return spark.read.parquet(path)
+    last = _schemas.get(path)
+    if last is not None and last[0] == key:
+        return spark.read.schema(last[1]).parquet(path)
     df = spark.read.parquet(path)
-    _inferred[path] = (stamps, conf, df.schema)
+    _schemas[path] = (key, df.schema)
     return df
+
+
+def _nullable(dt: DataType) -> DataType:
+    """``dt`` with every field, element and value nullable, as Spark
+    reads a file source's data columns (``StructType.asNullable``)."""
+    if isinstance(dt, StructType):
+        return StructType([
+            StructField(f.name, _nullable(f.dataType), True, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def _data_columns(schema: StructType, partition_by) -> StructType:
+    return StructType([f for f in schema.fields if f.name not in partition_by])
+
+
+@contextmanager
+def recording_write(
+    spark: SparkSession,
+    path: str,
+    schema: StructType,
+    partition_by: list[str] | None,
+    replaces: bool,
+) -> Iterator[None]:
+    """Wrap a parquet write of a frame of ``schema`` into ``path``
+    (hive-partitioned by ``partition_by``) so that the next
+    ``read_parquet`` of the written files runs no inference job.
+
+    After the body, the path's entry holds the written data columns,
+    made nullable all the way down. The partition columns stay out, so
+    the read types them from the directory names as the plain read
+    does. Only when the written files determine the schema: the write
+    ``replaces`` every file under the path, or the path held no file,
+    or its entry was current before the write and held the same data
+    columns (an append or a dynamic partition overwrite that keeps the
+    schema). Otherwise, when the path ends with no data file, and when
+    the body raises, the path has no entry.
+    """
+    parts = set(partition_by or ())
+    data = _nullable(_data_columns(schema, parts))
+    before = _read_key(spark, path)
+    last = _schemas.pop(path, None)
+    determined = replaces or before is None or (
+        last is not None and last[0] == before
+        and _data_columns(last[1], parts) == data
+    )
+    yield
+    after = _read_key(spark, path) if determined else None
+    # Spark skips files named _* and .* (markers, manifests, checksums)
+    if after is not None and any(
+        not os.path.basename(p).startswith(("_", ".")) for p, _, _ in after[0]
+    ):
+        _schemas[path] = (after, data)
 
 
 def read_with_quarantine(

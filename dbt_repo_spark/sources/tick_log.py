@@ -12,9 +12,10 @@ sink (the same page-pinning idea as the paged sink's two-phase commit,
 sources/rest_source.py). History published before any tick (a corpus
 seed, a compacted base) lives at ``batch=-1``.
 
-Only a MISSING directory reads as "nothing published yet". A present
-but unreadable table raises: deduplicating against nothing would
-silently republish the whole corpus.
+A missing directory, or one whose ticks all published zero rows,
+reads as "nothing published yet". A present but unreadable file
+raises: deduplicating against nothing would silently republish the
+whole corpus.
 """
 
 from __future__ import annotations
@@ -38,13 +39,19 @@ def publish(df: DataFrame, path: str, batch: int) -> None:
 def read_published(
     spark: SparkSession, path: str, schema: str, exclude_batch: int
 ) -> DataFrame:
-    """Rows published at ``path`` by every batch but ``exclude_batch``.
-    A missing directory gives an empty relation of ``schema`` plus
-    ``batch long``."""
+    """Rows published at ``path`` by every batch but ``exclude_batch``,
+    read as ``schema`` plus ``batch long``: ``schema`` names the
+    published columns the caller reads, with the types they were
+    written with. The read runs no schema-inference job, a directory
+    that holds no data file yet (every tick so far published zero rows)
+    reads as empty, and a missing directory gives an empty relation."""
     # Hadoop FS existence check: works for any scheme the table lives
     # on (local here, object storage on a real cluster)
     jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    schema = f"{schema}, batch long"
     if not fs.exists(jpath):
-        return spark.createDataFrame([], f"{schema}, batch long")
-    return spark.read.parquet(path).filter(F.col("batch") != F.lit(exclude_batch))
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(path).filter(
+        F.col("batch") != F.lit(exclude_batch)
+    )

@@ -176,6 +176,17 @@ def start_status_ingest(
     (:219); tests pass ``{"availableNow": True}`` to drain the landing dir
     and stop. Checkpointing (ST5, :218) makes restarts exactly-once into
     the parquet sink directory.
+
+    The query runs no no-data micro-batch: ``start()`` clones the session
+    with ``spark.sql.streaming.noDataMicroBatches.enabled=false`` and
+    leaves the caller's session conf as it was. A no-data batch only
+    advances the watermark to evict state and to flush what a stateful
+    operator holds back; the query's one stateful operator, the
+    watermarked ``dropDuplicates``, emits each row the first time it
+    sees it, and the watermark drops late rows either way. So the sink's
+    rows are the same, eviction moves to the next data batch, and an
+    ``availableNow`` run stops after its last data batch instead of
+    running one more batch for the watermark alone.
     """
     from dbt_repo_spark.session import ship_package
 
@@ -190,7 +201,16 @@ def start_status_ingest(
         .outputMode("append")
     )
     writer = writer.trigger(**(trigger or {"processingTime": "1 minute"}))
-    return writer.start()
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "false")
+    try:
+        return writer.start()
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
 
 
 def scd2_snapshot_sink(

@@ -411,6 +411,73 @@ def test_merge_strategy_upserts(spark, tmp_path):
     assert {(x.k, x.v) for x in r.run()["state"].collect()} == got
 
 
+def _plan_nodes(plan):
+    """Every node of a physical plan (a py4j ``SparkPlan``), walking into
+    AQE's current plan, query stages and reused exchanges."""
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        yield node
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+        elif name.endswith("QueryStage"):
+            stack.append(node.plan())
+        elif name == "ReusedExchange":
+            stack.append(node.child())
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+
+
+def test_incremental_append_anti_joins_the_target_keys_as_they_are(spark, tmp_path):
+    """The append strategy anti-joins the batch against {{ this }}'s key
+    column without deduplicating it: the key side of the LeftAnti join
+    holds no aggregate and no shuffle exchange. A target holding
+    duplicate keys appends the rows an anti-join against its distinct
+    keys would."""
+    from dbt_repo_spark.plans.runner import model
+
+    appended = []
+
+    class Recording(Catalog):
+        def write(self, df, layer, name, mode="overwrite", **kwargs):
+            if mode == "append":
+                # run the frame itself, so AQE finalizes its plan
+                appended.append((df, df.collect()))
+            super().write(df, layer, name, mode=mode, **kwargs)
+
+    schema = "k long, v string"
+    catalog = Recording(spark, str(tmp_path / "wh"))
+    r = ModelRunner(
+        spark, catalog,
+        {"src": spark.createDataFrame([(1, "a"), (1, "b"), (2, "c")], schema)},
+    ).add(model("fx", deps=("src",), materialized="incremental",
+                unique_key="k")(lambda ctx: ctx["src"]))
+    r.run()
+    batch = spark.createDataFrame(
+        [(1, "x"), (2, "y"), (3, "z"), (3, "w"), (4, "q")], schema
+    )
+    want = sorted(
+        batch.join(catalog.read("analytics", "fx").select("k").distinct(),
+                   "k", "left_anti").collect()
+    )
+    r.sources["src"] = batch
+    r.run()
+    (df, rows), = appended
+    assert sorted(rows) == want == [(3, "w"), (3, "z"), (4, "q")]
+
+    joins = [
+        n for n in _plan_nodes(df._jdf.queryExecution().executedPlan())
+        if n.nodeName().endswith("Join") and n.joinType().toString() == "LeftAnti"
+    ]
+    assert len(joins) == 1, [n.nodeName() for n in joins]
+    key_side = [n.nodeName() for n in _plan_nodes(joins[0].right())]
+    assert any(name.startswith("Scan parquet") for name in key_side), key_side
+    assert not [
+        name for name in key_side if "Aggregate" in name or name == "Exchange"
+    ], key_side
+
+
 def test_merge_strategy_partition_scoped(spark, tmp_path):
     """Partitioned merge physically rewrites only the partitions the batch
     touches: the untouched partition's files keep their inodes."""

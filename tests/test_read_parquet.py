@@ -1,14 +1,18 @@
-"""``sources.readers.read_parquet``: a repeat read of an unchanged parquet
-path reuses the schema its first read inferred, so it runs no Spark job,
-and anything that can change the inferred schema infers again."""
+"""``sources.readers.read_parquet``: a read of an unchanged parquet path
+reuses the schema its last read inferred or its last ``Catalog.write``
+recorded, so it runs no Spark job, and anything that can change the
+inferred schema infers again."""
 
 from __future__ import annotations
 
+import datetime
+import decimal
 import shutil
 import uuid
 
 import pytest
 from pyspark.errors import AnalysisException
+from pyspark.sql import functions as F
 
 from dbt_repo_spark.queries import QUERIES, t
 from dbt_repo_spark.sources.catalog import Catalog
@@ -46,10 +50,10 @@ def _partitioned(spark, tmp_path) -> Catalog:
 
 
 def test_reused_schema_equals_the_inferred_one(spark, sf_dir, tmp_path):
-    """First (inferring) and repeat (schema-passing) reads both equal a
-    plain ``spark.read.parquet``: a single file, a hive-partitioned
-    catalog table (partition column typed and last) and ``events``
-    under ``nanosAsLong``."""
+    """First and repeat reads both equal a plain ``spark.read.parquet``:
+    a single file (inferring, then schema-passing), a hive-partitioned
+    catalog table (schema recorded by its write; partition column typed
+    and last) and ``events`` under ``nanosAsLong``."""
     d = _corpus(sf_dir, tmp_path, "lineitem", "events")
     single = f"{d}/lineitem.parquet"
     for _ in range(2):
@@ -72,9 +76,11 @@ def test_reused_schema_equals_the_inferred_one(spark, sf_dir, tmp_path):
 
 
 def test_repeat_read_runs_no_job_and_changes_infer_again(spark, tmp_path):
-    """A repeat read runs 0 jobs; one read after an append, an overwrite,
-    a new partition directory or a ``spark.sql.*`` conf flip runs
-    exactly 1 (the inference), and the read after it 0 again."""
+    """A read after a ``Catalog.write`` (an overwrite or a same-schema
+    append) runs 0 jobs, as does a repeat read; one read after a new
+    partition directory written outside the catalog or a ``spark.sql.*``
+    conf flip runs exactly 1 (the inference), and the read after it 0
+    again. Every read's schema is the plain read's."""
     cat = _partitioned(spark, tmp_path)
     root = cat.path("raw", "parted")
     more = spark.createDataFrame([(100, "w", 1)], "k long, v string, p int")
@@ -84,21 +90,21 @@ def test_repeat_read_runs_no_job_and_changes_infer_again(spark, tmp_path):
         assert df.schema == spark.read.parquet(root).schema
         return n
 
-    assert read_jobs() == 1
+    assert read_jobs() == 0
     assert read_jobs() == 0
 
-    changes = {
+    writes = {
         "append": lambda: cat.write(more, "raw", "parted", mode="append",
                                     partition_by=["p"]),
         "overwrite": lambda: cat.write(more.union(more), "raw", "parted",
                                        partition_by=["p"]),
-        "new partition directory": lambda: more.drop("p").write.parquet(
-            f"{root}/p=7"),
     }
-    for what, change in changes.items():
-        change()
-        assert read_jobs() == 1, what
+    for what, write in writes.items():
+        write()
         assert read_jobs() == 0, what
+    more.drop("p").write.parquet(f"{root}/p=7")
+    assert read_jobs() == 1
+    assert read_jobs() == 0
     key = "spark.sql.parquet.binaryAsString"
     old = spark.conf.get(key)
     spark.conf.set(key, "true" if old == "false" else "false")
@@ -108,6 +114,60 @@ def test_repeat_read_runs_no_job_and_changes_infer_again(spark, tmp_path):
     finally:
         spark.conf.set(key, old)
     assert read_jobs() == 1
+
+
+ZOO_SCHEMA = (
+    "d decimal(12,3), ts timestamp, ntz timestamp_ntz, b binary,"
+    " m map<string,int>, a array<struct<x:int,y:string>>,"
+    " s struct<n:struct<z:double>>, pi int, pd date, ps string"
+)
+ZOO_PARTS = ["pi", "pd", "ps"]
+
+
+def _zoo(spark, first, n):
+    rows = [
+        (
+            decimal.Decimal(f"{i}.125"),
+            datetime.datetime(2024, 1, 1, i % 24),
+            datetime.datetime(2024, 2, 1, i % 24),
+            bytes([i % 256]),
+            {"k": i},
+            [(i, f"s{i}"), None],
+            ((i / 4,),),
+            i % 2,
+            datetime.date(2024, 1, 1 + i % 3),
+            f"p{i % 2}",
+        )
+        for i in range(first, first + n)
+    ]
+    return spark.createDataFrame(rows, ZOO_SCHEMA)
+
+
+def test_recorded_schema_equals_the_plain_read_over_a_type_zoo(spark, tmp_path):
+    """After each kind of catalog write of decimal, timestamp,
+    timestamp_ntz, binary, map, array<struct> and nested struct columns,
+    partitioned by int, date and string columns, the read's schema and
+    rows equal ``spark.read.parquet``'s. Writes whose files determine
+    the schema read with 0 jobs; the wider-schema append, whose do not,
+    infers (1 job)."""
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    root = cat.path("raw", "zoo")
+    writes = [
+        ("overwrite", _zoo(spark, 0, 6), {}, 0),
+        ("append", _zoo(spark, 6, 4), {"mode": "append"}, 0),
+        ("dynamic partition overwrite", _zoo(spark, 10, 2),
+         {"dynamic_partition_overwrite": True}, 0),
+        ("wider-schema append",
+         _zoo(spark, 12, 3).withColumn("extra", F.col("pi") * 2),
+         {"mode": "append"}, 1),
+    ]
+    for what, df, options, jobs in writes:
+        cat.write(df, "raw", "zoo", partition_by=ZOO_PARTS, **options)
+        got, n = _jobs(spark, lambda: cat.read("raw", "zoo"))
+        plain = spark.read.parquet(root)
+        assert got.schema == plain.schema, what
+        assert sorted(map(str, got.collect())) == sorted(map(str, plain.collect())), what
+        assert n == jobs, what
 
 
 def test_missing_or_emptied_path_raises_as_the_plain_read(spark, tmp_path):

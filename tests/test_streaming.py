@@ -228,6 +228,63 @@ def test_stream_restart_is_exactly_once(spark, tmp_path):
     assert spark.read.parquet(out).count() == 6
 
 
+NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+
+def test_status_ingest_runs_only_data_batches(spark, tmp_path):
+    """An ``availableNow`` run over new files makes one micro-batch (no
+    trailing no-data batch), and ``start()`` leaves the session's
+    no-data-batch conf as it found it: unset, then set."""
+    landing, out, ckpt = (str(tmp_path / d) for d in ("landing", "out", "ckpt"))
+    (tmp_path / "landing").mkdir()
+    spark.conf.unset(NO_DATA_BATCHES)
+    try:
+        for i, conf in enumerate((None, "true")):
+            if conf is not None:
+                spark.conf.set(NO_DATA_BATCHES, conf)
+            (tmp_path / "landing" / f"{i}.json").write_text(
+                _payload(BASE_EPOCH + 600 * i)
+            )
+            q = start_status_ingest(
+                spark, landing, out, ckpt, trigger={"availableNow": True}
+            )
+            assert spark.conf.get(NO_DATA_BATCHES, None) == conf
+            q.awaitTermination(120)
+            assert len(q.recentProgress) == 1
+            assert q.recentProgress[0]["numInputRows"] == 1  # one file
+    finally:
+        spark.conf.unset(NO_DATA_BATCHES)
+    assert spark.read.parquet(out).count() == 6
+
+
+def test_status_ingest_ticks_with_refetched_snapshots(spark, tmp_path):
+    """Three ``availableNow`` ticks, the later two re-serving the
+    previous tick's last snapshot and the last one also the first tick's
+    first (older than the watermark by then): after each tick the sink
+    holds exactly the batch parse of every payload landed so far (each
+    station's report once)."""
+    landing, out, ckpt = (str(tmp_path / d) for d in ("landing", "out", "ckpt"))
+    (tmp_path / "landing").mkdir()
+    ticks = [[0, 60], [60, 120, 180], [180, 240, 0]]
+    payloads = []
+    for k, offsets in enumerate(ticks):
+        for off in offsets:
+            payloads.append(_payload(BASE_EPOCH + off))
+            (tmp_path / "landing" / f"t{k}-{off}.json").write_text(payloads[-1])
+        q = start_status_ingest(
+            spark, landing, out, ckpt, trigger={"availableNow": True}
+        )
+        q.awaitTermination(120)
+        assert q.exception() is None
+        cols = ["station_id", "report_time", "bikes_available", "docks_available"]
+        want = parse_status_stream(
+            spark.createDataFrame([Row(payload=p) for p in payloads])
+        ).select(cols)
+        got = spark.read.parquet(out).select(cols)
+        assert sorted(got.collect()) == sorted(want.collect()), k
+    assert spark.read.parquet(out).count() == 3 * 5
+
+
 def test_stream_stream_interval_join(spark, tmp_path):
     """Clicks joined to purchases within 60s on a REAL pair of streams:
     in-window purchase matches, out-of-window one doesn't."""

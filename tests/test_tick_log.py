@@ -10,8 +10,10 @@ import tempfile
 import pytest
 
 from dbt_repo_spark.sources.tick_log import publish, read_published
+from tests.test_read_parquet import _jobs
 
 SCHEMA = "k long, v string"
+DTYPES = [("k", "bigint"), ("v", "string"), ("batch", "bigint")]
 
 
 def _rows(df):
@@ -54,8 +56,25 @@ def test_read_published_of_a_missing_path_is_empty(spark, tmp_path):
     got = read_published(
         spark, str(tmp_path / "none"), SCHEMA, exclude_batch=0
     )
-    assert got.dtypes == [("k", "bigint"), ("v", "string"), ("batch", "bigint")]
+    assert got.dtypes == DTYPES
     assert got.count() == 0
+
+
+def test_read_published_after_an_empty_tick_is_empty(spark, tmp_path):
+    """A tick that published zero rows leaves a directory without a data
+    file: it reads as empty, and later ticks read past it. A present
+    table types ``batch`` as a missing one does, and the read runs no
+    schema-inference job."""
+    path = str(tmp_path / "log")
+    publish(spark.createDataFrame([], SCHEMA), path, 0)
+    got, jobs = _jobs(spark, lambda: read_published(spark, path, SCHEMA, 1))
+    assert jobs == 0
+    assert got.dtypes == DTYPES
+    assert got.count() == 0
+    _log(spark, path)
+    got = read_published(spark, path, SCHEMA, exclude_batch=3)
+    assert got.dtypes == DTYPES
+    assert _rows(got) == [(1, "seed", -1), (2, "b2", 2)]
 
 
 def test_read_published_of_a_corrupt_table_raises(spark, tmp_path):
