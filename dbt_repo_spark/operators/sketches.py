@@ -313,27 +313,6 @@ def kmv_sketch(df: DataFrame, group_col: str, key_col: str, k: int = 256) -> Dat
     )
 
 
-def kmv_estimate(kmv: DataFrame, group_col: str, k: int = 256) -> DataFrame:
-    """Distinct-count estimate per group from a ``kmv_sketch`` relation:
-    (k-1) / theta_k with theta_k = h_k / 2^60 when the sketch is full,
-    the exact count when the group has fewer than k distinct keys.
-
-    All-deterministic float math: one int64→double conversion (round-to-
-    nearest, identical in both engines) and one division of exact
-    operands; rounded to 9 dp like every genuinely-float score."""
-    return kmv.groupBy(group_col).agg(
-        F.count("*").alias("n_min"), F.max("h").alias("h_k")
-    ).select(
-        group_col,
-        F.round(
-            F.when(F.col("n_min") < k, F.col("n_min").cast("double")).otherwise(
-                F.lit((k - 1) * KMV_SPACE) / F.col("h_k")
-            ),
-            9,
-        ).alias("est_distinct"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # Portable HLL (r07): a register-fold HyperLogLog built from the same
 # 60-bit md5 hash as KMV, so the sketch STATE — not just the estimate —

@@ -127,52 +127,3 @@ def snapshot_apply(
     unchanged_keys = joined.filter(has_cur & ~_any_differs(check_cols)).select(key)
     inserts = fresh.join(unchanged_keys, key, "left_anti")
     return closed.unionByName(newly_closed).unionByName(keep_open).unionByName(inserts)
-
-
-def snapshot_apply_timestamp(
-    existing: DataFrame | None,
-    current: DataFrame,
-    key: str,
-    updated_at: str,
-) -> DataFrame:
-    """One dbt-snapshot "timestamp"-strategy tick: a row is a new
-    version iff its source ``updated_at`` is NEWER than the open
-    version's ``dbt_valid_from`` — no column diffing at all, which is
-    the cheap strategy when the source carries a reliable change stamp
-    (one equi-join on key + one timestamp comparison vs the check
-    strategy's N null-safe column compares).
-
-    Versions are stamped from the SOURCE's ``updated_at`` (not the run
-    time): dbt_valid_from = updated_at of the version, the superseded
-    version closes at the successor's updated_at. Rows whose
-    updated_at <= the open version's are ignored (stale redelivery —
-    idempotent by construction). New keys open at their updated_at;
-    keys absent from current stay open.
-    """
-    data_cols = [c for c in current.columns if c != key]
-    fresh = current.select(
-        key,
-        *data_cols,
-        F.col(updated_at).alias("dbt_valid_from"),
-        F.lit(None).cast("timestamp").alias("dbt_valid_to"),
-    )
-    if existing is None:
-        return fresh
-    closed = existing.filter(F.col("dbt_valid_to").isNotNull())
-    open_ = existing.filter(F.col("dbt_valid_to").isNull())
-    cur_key = current.select(
-        key, F.col(updated_at).alias("__cur_updated")
-    )
-    joined = open_.join(cur_key, key, "left")
-    newer = F.col("__cur_updated") > F.col("dbt_valid_from")
-    keep_open = joined.filter(
-        F.col("__cur_updated").isNull() | ~newer
-    ).select(open_.columns)
-    newly_closed = joined.filter(newer).select(
-        *[F.col(c) for c in open_.columns if c != "dbt_valid_to"],
-        F.col("__cur_updated").alias("dbt_valid_to"),
-    )
-    superseding_keys = joined.filter(newer).select(key)
-    new_keys = fresh.join(open_.select(key), key, "left_anti")
-    inserts = fresh.join(superseding_keys, key, "left_semi").unionByName(new_keys)
-    return closed.unionByName(newly_closed).unionByName(keep_open).unionByName(inserts)

@@ -239,63 +239,3 @@ def profile_columns(df, cols: list[str]):
         ]
     )
     return wide.select(F.explode(rows).alias("p")).select("p.*")
-
-
-def unit_test(
-    model,
-    given: dict,
-    expect: list[dict],
-    spark=None,
-) -> TestResult:
-    """dbt 1.8 unit test: run a model's BUILDER against mocked inputs
-    and compare the full output relation to an expected row set.
-
-    ``given`` maps dep name -> list-of-dicts (mock rows) or a ready
-    DataFrame; ``expect`` is the full expected output as dicts (column
-    subset allowed — extra output columns are ignored, dbt's partial
-    expectation). Comparison is set-of-tuples on the expected columns
-    after canonicalizing to strings, so row/column order never matters.
-    Runs entirely on mock-sized data — the point of unit tests is logic
-    coverage without warehouse state, exactly dbt's pitch.
-    """
-    ctx: dict = {"spark": spark}
-    for dep, rows in given.items():
-        if isinstance(rows, DataFrame):
-            ctx[dep] = rows
-        else:
-            ctx[dep] = spark.createDataFrame(rows)
-    out = model.fn(ctx)
-    cols = sorted({k for r in expect for k in r})
-    got = {
-        tuple(str(row[c]) for c in cols)
-        for row in out.select(*cols).collect()
-    }
-    want = {tuple(str(r.get(c)) for c in cols) for r in expect}
-    n_diff = len(got ^ want)
-    return TestResult(f"unit:{model.name}", n_diff == 0, n_diff)
-
-
-def check_freshness(
-    df: DataFrame,
-    loaded_at_col: str,
-    as_of,
-    warn_after_hours: float = 24.0,
-    error_after_hours: float = 48.0,
-) -> TestResult:
-    """dbt source freshness: how stale is the newest row relative to
-    ``as_of`` (passed in, never wall-clock — deterministic replays)?
-    One MAX aggregate over a pruned single-column scan; lag beyond the
-    thresholds warns/fails exactly like test severity. An EMPTY source
-    is maximally stale (fails)."""
-    mx = df.agg(F.max(loaded_at_col).alias("mx")).first()["mx"]
-    if mx is None:
-        return TestResult(f"freshness:{loaded_at_col}", False, 1,
-                          severity="error")
-    lag_h = (as_of - mx).total_seconds() / 3600.0
-    res = TestResult(f"freshness:{loaded_at_col}", True, 0)
-    if lag_h > error_after_hours:
-        res.passed = False
-        res.violations = 1
-    elif lag_h > warn_after_hours:
-        res.warned = True
-    return res

@@ -983,10 +983,9 @@ def funnel_paths_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def mv_join_delta_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental JOIN-view maintenance: V = orders ⋈ customer kept
-    current by the delta rule ΔV = ΔA ⋈ B — the join-view sibling of
-    plans/mv.py's aggregate rollups (those re-aggregate; join views
-    append their delta). The first 80% of orders (by key order) is the
-    materialized view; the last 20% arrives as a delta batch DELIVERED
+    current by the delta rule ΔV = ΔA ⋈ B (a join view appends its
+    delta; an aggregate view would re-aggregate). The first 80% of
+    orders (by key order) is the materialized view; the last 20% arrives as a delta batch DELIVERED
     TWICE (at-least-once), is collapsed by the incremental anti-join
     against the view's key set (the J6 primitive), joined to the
     broadcast dim, and unioned in. The maintained view must equal the

@@ -203,49 +203,6 @@ def recording_write(
         _schemas[path] = (after, data)
 
 
-def read_with_quarantine(
-    spark: SparkSession,
-    path: str,
-    schema: StructType,
-    fmt: str = "json",
-    **options: str,
-) -> tuple[DataFrame, DataFrame]:
-    """Permissive scan that splits clean rows from quarantined raw records.
-
-    The reference trusts its feeds (inferSchema CSV at
-    src/historical_bucket_to_bq.py:59-61, schema'd JSON at
-    src/realtime_pubsub_to_spark.py:60-79); at 100 TB a malformed record
-    per million rows is a certainty and a fail-the-job policy is a
-    non-starter. PERMISSIVE mode parses what it can and lands the raw
-    text of anything unparseable in ``_corrupt_record``; one scan feeds
-    both outputs (Catalyst shares it) and the quarantine side keeps the
-    ORIGINAL bytes so the bad records can be replayed after a fix.
-
-    Returns (good, quarantined): good has the user schema, quarantined is
-    (_corrupt_record string).
-
-    Spark disallows plans whose referenced columns are ONLY the corrupt
-    column (the parser would skip real parsing and report nothing), so
-    the helper caches the parsed scan — the documented pattern — which
-    also means the two returned sides share one physical parse instead
-    of re-reading the files. Call ``.unpersist()`` on either side's
-    ``.sparkSession``-cached source when done, or let it age out.
-    """
-    corrupt_col = "_corrupt_record"
-    full = schema.add(corrupt_col, "string") if corrupt_col not in schema.names else schema
-    reader = (
-        spark.read.schema(full)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt_col)
-    )
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    df = reader.format(fmt).load(path).cache()
-    good = df.filter(F.col(corrupt_col).isNull()).drop(corrupt_col)
-    bad = df.filter(F.col(corrupt_col).isNotNull()).select(corrupt_col)
-    return good, bad
-
-
 MEDIA_EXT_TYPES = {
     "jpg": "image", "jpeg": "image", "png": "image", "gif": "image",
     "wav": "audio", "mp3": "audio", "flac": "audio",

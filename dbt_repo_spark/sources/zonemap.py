@@ -12,8 +12,7 @@ handful. The zone-map manifest is one small JSON written at load time
 range predicate into an explicit file list, so the scan plans exactly
 the intersecting files. Pruning is a SUPERSET guarantee: files without
 stats for the column are always kept, and the caller's filter is still
-applied — a wrong manifest can cost time, never correctness (and
-``verify`` recomputes it from footers to detect drift).
+applied — a wrong manifest can cost time, never correctness.
 
 Composes with ``Catalog.write(sort_within_partitions=...)`` /
 ``layout.zorder_layout``: clustering is what makes per-file ranges
@@ -26,17 +25,6 @@ import json
 import os
 
 MANIFEST = "_zonemap.json"
-
-
-def _atomic_write_json(path: str, obj, *, indent=None, default=None) -> None:
-    """tmp-file + os.replace: readers never see a torn manifest, and the
-    replace allocates a NEW inode — refreshing a manifest on one side of
-    a hardlink ``clone_table`` can no longer truncate the other side's
-    copy in place (matches ``versioned.py._write_log``)."""
-    tmp = path + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(obj, fh, indent=indent, sort_keys=True, default=default)
-    os.replace(tmp, path)
 
 
 def _file_stats(path: str, columns: list[str]) -> dict:
@@ -102,9 +90,11 @@ def write_zone_map(table_dir: str, columns: list[str]) -> dict:
             for p in _data_files(table_dir)
         },
     }
-    _atomic_write_json(
-        os.path.join(table_dir, MANIFEST), manifest, indent=1, default=str
-    )
+    # tmp file + os.replace: a reader never sees a torn manifest
+    path = os.path.join(table_dir, MANIFEST)
+    with open(path + ".tmp", "w") as fh:
+        json.dump(manifest, fh, indent=1, sort_keys=True, default=str)
+    os.replace(path + ".tmp", path)
     return manifest
 
 
@@ -144,119 +134,6 @@ def prune_files(
     # manifest was written, e.g. a load without a zone-map refresh) are
     # UNKNOWN -> kept, same rule as missing per-column stats. A stale
     # manifest may cost scan time, never rows.
-    for p in _data_files(table_dir):
-        if os.path.relpath(p, table_dir) not in mf["files"]:
-            keep.append(p)
-            total += 1
-    return keep, total
-
-
-def verify_zone_map(table_dir: str) -> dict:
-    """Recompute footer stats and diff against the stored manifest —
-    detects stale manifests after out-of-band writes. Returns
-    {'ok': bool, 'stale': [...], 'missing': [...], 'extra': [...]}."""
-    mf = load_zone_map(table_dir)
-    if mf is None:
-        return {"ok": False, "stale": [], "missing": ["<manifest>"], "extra": []}
-    fresh = {
-        os.path.relpath(p, table_dir): _file_stats(p, mf["columns"])
-        for p in _data_files(table_dir)
-    }
-    stale = [
-        rel
-        for rel in set(mf["files"]) & set(fresh)
-        if json.loads(json.dumps(fresh[rel], default=str)) != mf["files"][rel]
-    ]
-    missing = sorted(set(fresh) - set(mf["files"]))
-    extra = sorted(set(mf["files"]) - set(fresh))
-    return {
-        "ok": not (stale or missing or extra),
-        "stale": sorted(stale),
-        "missing": missing,
-        "extra": extra,
-    }
-
-
-# ---- bloom file index: equality pruning where min/max is useless -----
-#
-# Zone maps skip on RANGE predicates over the clustered column. An
-# equality probe on a high-cardinality UNCLUSTERED column (user_id on a
-# time-clustered event table) defeats min/max — every file's range
-# covers every id. A small per-file Bloom filter answers "might this
-# file contain v?" with no false negatives: the probe plans only the
-# files whose filter fires. Building reads the indexed column once at
-# load time (unlike zone maps this is a data read — one column, done
-# per file, embarrassingly parallel on executors at scale; here the
-# loader does it inline). Same superset guarantee: unknown file or
-# missing column -> keep.
-
-BLOOM_MANIFEST = "_bloom.json"
-
-
-def _bloom_hashes(value, k: int, bits: int) -> list[int]:
-    import hashlib
-
-    out = []
-    for i in range(k):
-        h = hashlib.md5(f"{i}:{value}".encode()).hexdigest()
-        out.append(int(h, 16) % bits)
-    return out
-
-
-def write_bloom_index(
-    table_dir: str, columns: list[str], bits: int = 8192, k: int = 4
-) -> dict:
-    """Per-file, per-column Bloom bitsets over the column's distinct
-    values. bits=8192/k=4 keeps per-file fpp under ~1e-4 at a few
-    hundred distinct values per file; size both to the real per-file
-    cardinality."""
-    import pyarrow.parquet as pq
-
-    files = {}
-    for p in _data_files(table_dir):
-        per_col = {}
-        pf = pq.ParquetFile(p)
-        names = pf.schema_arrow.names
-        for col in columns:
-            if col not in names:
-                continue
-            bitset = bytearray(bits // 8)
-            vals = pf.read(columns=[col]).column(0)
-            for v in set(vals.to_pylist()):
-                if v is None:
-                    continue
-                for h in _bloom_hashes(_plain(v), k, bits):
-                    bitset[h >> 3] |= 1 << (h & 7)
-            per_col[col] = bytes(bitset).hex()
-        files[os.path.relpath(p, table_dir)] = per_col
-    manifest = {"columns": columns, "bits": bits, "k": k, "files": files}
-    _atomic_write_json(os.path.join(table_dir, BLOOM_MANIFEST), manifest)
-    return manifest
-
-
-def prune_files_eq(table_dir: str, col: str, value) -> tuple[list[str], int]:
-    """Files that MIGHT contain ``value`` in ``col`` per the Bloom
-    index (no false negatives). (paths, total)."""
-    p = os.path.join(table_dir, BLOOM_MANIFEST)
-    if not os.path.exists(p):
-        paths = _data_files(table_dir)
-        return paths, len(paths)
-    with open(p) as fh:
-        mf = json.load(fh)
-    bits, k = mf["bits"], mf["k"]
-    hashes = _bloom_hashes(_plain(value), k, bits)
-    keep, total = [], 0
-    for rel, per_col in mf["files"].items():
-        total += 1
-        hx = per_col.get(col)
-        if hx is None:
-            keep.append(os.path.join(table_dir, rel))
-            continue
-        bitset = bytes.fromhex(hx)
-        if all(bitset[h >> 3] & (1 << (h & 7)) for h in hashes):
-            keep.append(os.path.join(table_dir, rel))
-    # Unknown-file rule (same as prune_files): data files the bloom
-    # manifest has never seen cannot be skipped.
     for p in _data_files(table_dir):
         if os.path.relpath(p, table_dir) not in mf["files"]:
             keep.append(p)

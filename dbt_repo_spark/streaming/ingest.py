@@ -32,7 +32,7 @@ from __future__ import annotations
 import os
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
@@ -211,113 +211,3 @@ def start_status_ingest(
             spark.conf.unset(key)
         else:
             spark.conf.set(key, old)
-
-
-def scd2_snapshot_sink(
-    snapshot_dir: str,
-    key: str,
-    check_cols: list[str],
-) -> "Callable[[DataFrame, int], None]":
-    """foreachBatch sink that maintains an SCD2 snapshot table.
-
-    Each micro-batch is treated as one dbt-snapshot tick
-    (plans/snapshot.py::snapshot_apply): the batch's latest state per key
-    is diffed against the open versions, changed versions close, new ones
-    open. ``loaded_at`` is the batch's max event time — deterministic on
-    replay, so checkpoint recovery re-produces identical version rows
-    instead of wall-clock-stamped duplicates.
-
-    The snapshot is read before and overwritten after each tick via a
-    staged temp write (read-own-write safety — the same pre-write
-    snapshotting rule as the incremental runner, SURVEY.md §7.3 risk 1).
-    Version history volume is |keys| x change-rate, orders of magnitude
-    below the event stream, so the per-tick rewrite stays small; at very
-    large key counts, partition the snapshot on ``dbt_valid_to IS NULL``
-    and rewrite only the open slice.
-    """
-    import shutil
-
-    from dbt_repo_spark.plans.snapshot import snapshot_apply
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        # latest state per key within the batch = this tick's source state
-        w = Window.partitionBy(key).orderBy(
-            F.col("event_ts").desc(), *[F.col(c).desc() for c in check_cols]
-        )
-        current = (
-            batch_df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        loaded_at = str(current.agg(F.max("event_ts")).first()[0])
-        existing = None
-        if os.path.isdir(snapshot_dir):
-            existing = spark.read.parquet(snapshot_dir)
-        snap = snapshot_apply(existing, current, key, check_cols, loaded_at)
-        staged = snapshot_dir.rstrip("/") + ".staging"
-        snap.write.mode("overwrite").parquet(staged)
-        if os.path.isdir(snapshot_dir):
-            shutil.rmtree(snapshot_dir)
-        os.replace(staged, snapshot_dir)
-
-    return write_batch
-
-
-def upsert_sink(
-    catalog,
-    layer: str,
-    name: str,
-    unique_key: str,
-    order_by: str,
-    partition_by: list[str] | None = None,
-) -> "Callable[[DataFrame, int], None]":
-    """foreachBatch sink maintaining a latest-state (upsert) table.
-
-    The streaming twin of the runner's incremental_strategy='merge': each
-    micro-batch reduces to its latest row per key (by ``order_by``, ties
-    broken by the remaining columns for determinism on replay), then
-    upserts into the catalog table via the same partition-scoped staged
-    rewrite (Catalog.overwrite_staged). Combined with a checkpoint this
-    gives effectively-once maintenance of a "current state per key"
-    table — the streaming-native form of the reference's
-    fact_station_status_latest view (fact_station_status_latest.sql:
-    11-18,32), computed incrementally instead of re-windowing history
-    every query.
-
-    State volume per tick: |batch| + the touched slice of the target —
-    with partition_by on a stable key prefix the untouched partitions are
-    never read or rewritten.
-    """
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        other = [
-            c for c in batch_df.columns if c not in (unique_key, order_by)
-        ]
-        w = Window.partitionBy(unique_key).orderBy(
-            F.col(order_by).desc(), *[F.col(c).desc() for c in other]
-        )
-        latest = (
-            batch_df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        if not catalog.exists(layer, name):
-            catalog.write(latest, layer, name, mode="overwrite", partition_by=partition_by)
-            return
-        target = catalog.read(layer, name)
-        if partition_by:
-            parts = latest.select(*partition_by).distinct()
-            target = target.join(F.broadcast(parts), partition_by, "left_semi")
-        kept = target.join(latest.select(unique_key), unique_key, "left_anti")
-        catalog.overwrite_staged(
-            kept.unionByName(latest), layer, name,
-            partition_by=partition_by,
-            replace_partitions_only=bool(partition_by),
-        )
-
-    return write_batch

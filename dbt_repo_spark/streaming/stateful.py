@@ -1,4 +1,5 @@
-"""Custom stateful streaming operator: per-key change detection.
+"""Custom stateful streaming operators: per-key change detection
+(``changes_only``) and timer-closed sessions (``sessionize``).
 
 The reference's stream stores every snapshot and derives "latest" /
 "history" downstream in batch (models/facts/fact_station_status*.sql). At
@@ -8,11 +9,11 @@ tracked values actually change — a ~1/min feed where stations change a
 few times an hour compresses ~50×, and downstream incremental facts
 consume deltas instead of snapshots.
 
-Spark has no built-in "emit-on-change" operator, so this is the
-engine's example of the sanctioned custom-stateful path
-(``applyInPandasWithState``): state is a tiny fixed-width tuple per key,
-batches arrive as Arrow frames, and the watermark bounds state the same
-way it bounds the dedup in ingest.py.
+Spark has no built-in "emit-on-change" operator, so both operators
+take the sanctioned custom-stateful path (``applyInPandasWithState``):
+state is a tiny fixed-width tuple per key, batches arrive as Arrow
+frames, and the watermark bounds state the same way it bounds the dedup
+in ingest.py.
 """
 
 from __future__ import annotations
@@ -89,8 +90,6 @@ SESSION_OUT_SCHEMA = StructType(
         StructField("total_value", DoubleType()),
     ]
 )
-
-SESSION_STATE_DDL = "start BIGINT, last BIGINT, n BIGINT, total DOUBLE"
 
 SESSION_STATE_SCHEMA = StructType(
     [
@@ -190,103 +189,6 @@ def sessionize(
     )
 
 
-def has_tws_deps() -> bool:
-    """transformWithStateInPandas needs protobuf for its state protocol."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def sessionize_tws(
-    events: DataFrame, gap_minutes: int = 30, delay: str = "2 minutes"
-) -> DataFrame:
-    """Spark-4-native twin of :func:`sessionize` on the
-    ``transformWithStateInPandas`` API (state v2): named value state,
-    explicit event-time timers (register/delete/list), RocksDB-backed.
-
-    Semantics are identical to ``sessionize``; this variant is the
-    forward path — state v2 adds TTL, multiple typed state variables and
-    schema evolution. It is gated on ``has_tws_deps()`` (the state
-    protocol speaks protobuf, which this container does not ship): the
-    gate raises HERE, at call time, with a clear message — without it
-    the missing dependency only surfaces deep inside a Python worker
-    once the stream starts. The plumbing — processor, schemas, timer
-    discipline — is real and the scenario test runs wherever protobuf
-    exists; where it doesn't, the test pins this loud failure instead
-    of skipping.
-    """
-    if not has_tws_deps():
-        raise RuntimeError(
-            "sessionize_tws needs google.protobuf (the "
-            "transformWithStateInPandas state protocol); install "
-            "protobuf or use sessionize() — identical semantics on the "
-            "applyInPandasWithState API"
-        )
-    from pyspark.sql.streaming.stateful_processor import (
-        ExpiredTimerInfo,
-        StatefulProcessor,
-        StatefulProcessorHandle,
-        TimerValues,
-    )
-
-    gap_ms = gap_minutes * 60_000
-
-    class SessionProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.handle = handle
-            self.open = handle.getValueState("open_session", SESSION_STATE_DDL)
-
-        def handleInputRows(
-            self,
-            key: tuple[Any, ...],
-            rows: Iterator[pd.DataFrame],
-            timerValues: TimerValues,
-        ) -> Iterator[pd.DataFrame]:
-            cur = tuple(self.open.get()) if self.open.exists() else None
-            closed, cur = _session_fold(cur, rows, gap_ms)
-            for s in closed:
-                yield _session_row(key, s)
-            if cur is not None:
-                # one open session per key -> exactly one pending timer
-                for old in self.handle.listTimers():
-                    self.handle.deleteTimer(old)
-                self.open.update(cur)
-                self.handle.registerTimer(cur[1] + gap_ms)
-
-        def handleExpiredTimer(
-            self,
-            key: tuple[Any, ...],
-            timerValues: TimerValues,
-            expiredTimerInfo: ExpiredTimerInfo,
-        ) -> Iterator[pd.DataFrame]:
-            if self.open.exists():
-                yield _session_row(key, tuple(self.open.get()))
-                self.open.clear()
-
-        def close(self) -> None:
-            pass
-
-    spark = events.sparkSession
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    return (
-        events.select("user_id", "ts", "value")
-        .withWatermark("ts", delay)
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=SessionProcessor(),
-            outputStructType=SESSION_OUT_SCHEMA,
-            outputMode="append",
-            timeMode="eventTime",
-        )
-    )
-
-
 def changes_only(status: DataFrame) -> DataFrame:
     """Stateful change-log over a (station_id, report_time, bikes, docks)
     stream: one output row per actual state transition per station.
@@ -304,172 +206,6 @@ def changes_only(status: DataFrame) -> DataFrame:
             _emit_changes,
             outputStructType=CHANGE_SCHEMA,
             stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-EWMA_OUT_SCHEMA = StructType(
-    [
-        StructField("k", StringType()),
-        StructField("ts", TimestampType()),
-        StructField("x", DoubleType()),
-        StructField("ewma", DoubleType()),
-    ]
-)
-
-EWMA_STATE_SCHEMA = StructType(
-    [
-        StructField("y", DoubleType()),
-        StructField("n", LongType()),
-    ]
-)
-
-
-def ewma_stream(
-    events: DataFrame, alpha: float = 0.25, delay: str = "2 minutes"
-) -> DataFrame:
-    """Streaming twin of ``operators.timeseries.ewma_recursive``: per-key
-    EWMA maintained ONLINE across micro-batches. State is the last
-    smoothed value + count — one fixed-width tuple per key, so the state
-    store is key-cardinality-bound — and survives checkpoint restarts
-    (the equivalence test restarts the query mid-series and the smoothed
-    values stay bit-identical to the batch recurrence over the full
-    input). Rows sort by event time within each micro-batch; the same
-    two-multiply one-add IEEE step as the batch operator makes
-    streaming-equals-batch exact, not approximate, when batches arrive
-    in event order (the watermark drops later-than-delay stragglers,
-    same bound as the ingest dedup).
-
-    Input stream columns: (k STRING, ts TIMESTAMP, x DOUBLE).
-    Output: one smoothed row per input row (append).
-    """
-    a = float(alpha)
-    om = 1.0 - a
-
-    def fn(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        pdf = pd.concat(list(pdfs))
-        if pdf.empty:
-            return
-        pdf = pdf.sort_values("ts", kind="mergesort")
-        if state.exists:
-            y, n = state.get
-        else:
-            y, n = 0.0, 0
-        ks, tss, xs, ys = [], [], [], []
-        for ts_v, x in zip(pdf["ts"], pdf["x"].astype("float64")):
-            y = x if n == 0 else om * y + a * x
-            n += 1
-            ks.append(key[0])
-            tss.append(ts_v)
-            xs.append(x)
-            ys.append(y)
-        state.update((float(y), int(n)))
-        yield pd.DataFrame({"k": ks, "ts": tss, "x": xs, "ewma": ys})
-
-    return (
-        events.select("k", "ts", "x")
-        .withWatermark("ts", delay)
-        .groupBy("k")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=EWMA_OUT_SCHEMA,
-            stateStructType=EWMA_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-from pyspark.sql.types import ArrayType  # noqa: E402
-
-MG_OUT_SCHEMA = StructType(
-    [
-        StructField("grp", StringType()),
-        StructField("batch_max_ts", TimestampType()),
-        StructField("key", LongType()),
-        StructField("mg_count", LongType()),
-    ]
-)
-
-MG_STATE_SCHEMA = StructType(
-    [
-        StructField("keys", ArrayType(LongType())),
-        StructField("counts", ArrayType(LongType())),
-    ]
-)
-
-
-def heavy_hitters_stream(
-    events: DataFrame, capacity: int = 16, delay: str = "2 minutes"
-) -> DataFrame:
-    """Streaming heavy hitters per group via an ONLINE Misra-Gries
-    summary — frequency tracking whose state is ``capacity`` counters
-    per group no matter how many distinct keys flow past (the
-    unbounded-state groupBy-count this replaces is exactly what a
-    100 TB keyspace can't afford online). The MG guarantee survives
-    streaming unchanged: after any prefix, true_count(k) ≥ mg_count(k)
-    ≥ true_count(k) − N/capacity, so every key above that threshold is
-    in the summary. Each micro-batch folds rows in (ts, key) order —
-    the same fold the batch operator (sketches.py::heavy_hitters) runs
-    per partition — and emits the full summary tagged with the batch's
-    max event time (consumers take the latest tag; append sinks keep
-    the summary's history for free).
-
-    Input stream columns: (grp STRING, ts TIMESTAMP, key LONG).
-    """
-
-    def fn(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        pdf = pd.concat(list(pdfs))
-        if pdf.empty:
-            return
-        pdf = pdf.sort_values(["ts", "key"], kind="mergesort")
-        if state.exists:
-            ks, cs = state.get
-            mg = dict(zip(list(ks), list(cs)))
-        else:
-            mg = {}
-        for k in pdf["key"].astype("int64"):
-            k = int(k)
-            if k in mg:
-                mg[k] += 1
-            elif len(mg) < capacity:
-                mg[k] = 1
-            else:
-                dead = []
-                for kk in mg:
-                    mg[kk] -= 1
-                    if mg[kk] == 0:
-                        dead.append(kk)
-                for kk in dead:
-                    del mg[kk]
-        items = sorted(mg.items())
-        state.update((
-            [int(k) for k, _ in items], [int(c) for _, c in items],
-        ))
-        tag = pdf["ts"].max()
-        yield pd.DataFrame(
-            {
-                "grp": key[0],
-                "batch_max_ts": tag,
-                "key": [k for k, _ in items],
-                "mg_count": [c for _, c in items],
-            }
-        )
-
-    return (
-        events.select("grp", "ts", "key")
-        .withWatermark("ts", delay)
-        .groupBy("grp")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=MG_OUT_SCHEMA,
-            stateStructType=MG_STATE_SCHEMA,
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )

@@ -106,54 +106,6 @@ def test_historic_trips_load(spark, tmp_path):
     assert out.count() == 2
 
 
-def test_catalog_orc_and_csv_roundtrip(spark, tmp_path):
-    """S7/S8 generalized: the catalog writes/reads ORC (columnar alt) and
-    CSV (interchange) through the same path API."""
-    from pyspark.sql import functions as F
-
-    from dbt_repo_spark.sources.catalog import Catalog
-
-    cat = Catalog(spark, str(tmp_path / "wh"))
-    df = spark.createDataFrame([(1, "a", 1.5), (2, "b", 2.5)], ["k", "s", "v"])
-    cat.write(df, "raw", "t_orc", fmt="orc")
-    back = cat.read("raw", "t_orc", fmt="orc")
-    assert back.schema == df.schema  # orc preserves types
-    assert sorted(r["k"] for r in back.collect()) == [1, 2]
-
-    cat.write(df.withColumn("v", F.col("v").cast("string")), "raw", "t_csv", fmt="csv")
-    n = cat.read("raw", "t_csv", fmt="csv").count()
-    assert n == 2
-
-
-def test_read_with_quarantine_splits_bad_json(spark, tmp_path):
-    """PERMISSIVE scan: clean rows parse, malformed records land in the
-    quarantine with their original bytes, nothing is dropped."""
-    from pyspark.sql import types as T
-
-    from dbt_repo_spark.sources.readers import read_with_quarantine
-
-    p = tmp_path / "feed"
-    p.mkdir()
-    (p / "a.jsonl").write_text(
-        '{"station_id": "s1", "bikes": 3}\n'
-        'THIS IS NOT JSON\n'
-        '{"station_id": "s2", "bikes": "not_a_number"}\n'
-        '{"station_id": "s3", "bikes": 7}\n'
-    )
-    schema = T.StructType(
-        [T.StructField("station_id", T.StringType()),
-         T.StructField("bikes", T.LongType())]
-    )
-    good, bad = read_with_quarantine(spark, str(p), schema, fmt="json")
-    assert {(r.station_id, r.bikes) for r in good.collect()} == {
-        ("s1", 3), ("s3", 7)
-    }
-    bad_rows = [r._corrupt_record for r in bad.collect()]
-    assert len(bad_rows) == 2
-    assert any("NOT JSON" in b for b in bad_rows)
-    assert any("not_a_number" in b for b in bad_rows)  # original bytes kept
-
-
 def test_read_media_dir_binary_file_source(spark, tmp_path):
     """binaryFile landing scan -> multimodal shape -> feature extraction:
     ids are path-stable, types derive from extension, and the decode
@@ -211,43 +163,6 @@ def test_catalog_schema_evolution_merge(spark, tmp_path):
     rows = {r.id: r for r in merged.collect()}
     assert rows[0].score is None and rows[4].score == 1.5
     assert merged.count() == 5
-
-
-def test_catalog_write_codec_and_file_size_knobs(spark, tmp_path):
-    """compression picks the parquet codec (zstd denser than snappy on
-    repetitive data); maxRecordsPerFile bounds rows per file."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from dbt_repo_spark.sources.catalog import Catalog
-
-    cat = Catalog(spark, str(tmp_path / "wh"))
-    df = spark.range(50_000).select(
-        F.col("id"), F.lit("the same repetitive text payload " * 4).alias("body")
-    ).coalesce(1)
-
-    cat.write(df, "raw", "snappy_t")
-    cat.write(df, "raw", "zstd_t", compression="zstd")
-
-    def table_bytes(name):
-        d = cat.path("raw", name)
-        return sum(
-            os.path.getsize(os.path.join(d, f))
-            for f in os.listdir(d)
-            if f.endswith(".parquet")
-        )
-
-    assert table_bytes("zstd_t") < table_bytes("snappy_t")
-    zfiles = [f for f in os.listdir(cat.path("raw", "zstd_t")) if f.endswith(".parquet")]
-    assert any(f.endswith(".zstd.parquet") for f in zfiles)
-
-    cat.write(df, "raw", "bounded_t", max_records_per_file=10_000)
-    n_files = len(
-        [f for f in os.listdir(cat.path("raw", "bounded_t")) if f.endswith(".parquet")]
-    )
-    assert n_files >= 5  # 50k rows / 10k cap
-    assert cat.read("raw", "bounded_t").count() == 50_000
 
 
 def test_archive_loaded_sources_moves_then_deletes(spark, tmp_path):

@@ -324,53 +324,6 @@ def test_data_test_severity_and_thresholds(spark, tmp_path):
     assert cat.read(*res.stored_at.split(".")).count() == 2
 
 
-def test_unit_test_mock_inputs(spark):
-    """dbt unit test: model builder runs on mocked deps; expectation is
-    order-insensitive and may cover a column subset."""
-    from dbt_repo_spark.plans.testing import unit_test
-
-    @model("double_up", deps=("src",), materialized="ephemeral")
-    def double_up(ctx):
-        return ctx["src"].withColumn("y", F.col("x") * 2)
-
-    ok = unit_test(
-        double_up,
-        given={"src": [{"x": 1}, {"x": 3}]},
-        expect=[{"x": 3, "y": 6}, {"x": 1, "y": 2}],
-        spark=spark,
-    )
-    assert ok.passed
-    bad = unit_test(
-        double_up,
-        given={"src": [{"x": 1}]},
-        expect=[{"x": 1, "y": 3}],
-        spark=spark,
-    )
-    assert not bad.passed and bad.violations == 2
-
-
-def test_source_freshness(spark):
-    import datetime as dt
-
-    from dbt_repo_spark.plans.testing import check_freshness
-
-    now = dt.datetime(2024, 6, 1, 12, 0, 0)
-    df = spark.createDataFrame(
-        [(1, now - dt.timedelta(hours=30))], "k int, loaded_at timestamp"
-    )
-    fresh = check_freshness(df, "loaded_at", as_of=now, warn_after_hours=48,
-                            error_after_hours=96)
-    assert fresh.passed and not fresh.warned
-    warned = check_freshness(df, "loaded_at", as_of=now, warn_after_hours=24,
-                             error_after_hours=96)
-    assert warned.passed and warned.warned
-    failed = check_freshness(df, "loaded_at", as_of=now, warn_after_hours=1,
-                             error_after_hours=24)
-    assert not failed.passed
-    empty = spark.createDataFrame([], "k int, loaded_at timestamp")
-    assert not check_freshness(empty, "loaded_at", as_of=now).passed
-
-
 def test_model_contract_enforced(spark, tmp_path):
     from dbt_repo_spark.plans.runner import ModelRunner, model
 

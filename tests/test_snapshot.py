@@ -75,92 +75,3 @@ def test_snapshot_apply_idempotent_tick(spark):
     snap = snapshot_apply(None, d1, "k", ["v"], "2024-01-01 00:00:00")
     again = snapshot_apply(snap, d1, "k", ["v"], "2024-01-02 00:00:00")
     assert _snap_dict(again) == {(1, "2024-01-01 00:00:00"): ("a", None)}
-
-
-def test_streaming_scd2_snapshot_sink(spark, tmp_path):
-    """Two stream drains = two snapshot ticks: changed keys close + reopen,
-    unchanged keys keep their original open version."""
-    import json
-
-    from dbt_repo_spark.streaming.ingest import scd2_snapshot_sink
-
-    src = tmp_path / "src"
-    src.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    snap_dir = str(tmp_path / "snap")
-    schema = "k LONG, v STRING, event_ts TIMESTAMP"
-
-    def drain():
-        stream = spark.readStream.schema(schema).json(str(src))
-        q = (
-            stream.writeStream.foreachBatch(scd2_snapshot_sink(snap_dir, "k", ["v"]))
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    (src / "b1.json").write_text(
-        "\n".join(
-            json.dumps(r)
-            for r in [
-                {"k": 1, "v": "a", "event_ts": "2024-01-01 10:00:00"},
-                {"k": 1, "v": "a0", "event_ts": "2024-01-01 09:00:00"},  # older, loses
-                {"k": 2, "v": "b", "event_ts": "2024-01-01 10:00:00"},
-            ]
-        )
-    )
-    drain()
-    (src / "b2.json").write_text(
-        "\n".join(
-            json.dumps(r)
-            for r in [
-                {"k": 1, "v": "A", "event_ts": "2024-01-02 10:00:00"},  # change
-                {"k": 2, "v": "b", "event_ts": "2024-01-02 10:00:00"},  # unchanged
-            ]
-        )
-    )
-    drain()
-
-    got = {
-        (r["k"], str(r["dbt_valid_from"])): (r["v"], r["dbt_valid_to"] and str(r["dbt_valid_to"]))
-        for r in spark.read.parquet(snap_dir).collect()
-    }
-    assert got == {
-        (1, "2024-01-01 10:00:00"): ("a", "2024-01-02 10:00:00"),
-        (1, "2024-01-02 10:00:00"): ("A", None),
-        (2, "2024-01-01 10:00:00"): ("b", None),
-    }
-
-
-def test_snapshot_timestamp_strategy(spark):
-    """timestamp strategy: newer updated_at supersedes, stale redelivery
-    is a no-op, absent keys stay open, new keys insert."""
-    import datetime as dt
-
-    from dbt_repo_spark.plans.snapshot import snapshot_apply_timestamp
-
-    t1, t2, t3 = (dt.datetime(2024, 1, d, 8) for d in (1, 2, 3))
-    day1 = spark.createDataFrame(
-        [(1, "a", t1), (2, "b", t1)], "k int, v string, updated_at timestamp"
-    )
-    snap1 = snapshot_apply_timestamp(None, day1, "k", "updated_at")
-    assert snap1.count() == 2
-    assert snap1.filter("dbt_valid_to IS NULL").count() == 2
-
-    # day2: k=1 updated (newer), k=2 absent, k=3 new
-    day2 = spark.createDataFrame(
-        [(1, "a2", t2), (3, "c", t2)], "k int, v string, updated_at timestamp"
-    )
-    snap2 = snapshot_apply_timestamp(snap1, day2, "k", "updated_at")
-    rows = {(r.k, r.v): (r.dbt_valid_from, r.dbt_valid_to) for r in snap2.collect()}
-    assert rows[(1, "a")] == (t1, t2)       # closed at successor's stamp
-    assert rows[(1, "a2")] == (t2, None)    # new open version
-    assert rows[(2, "b")] == (t1, None)     # absent key stays open
-    assert rows[(3, "c")] == (t2, None)     # new key
-    assert snap2.count() == 4
-
-    # stale redelivery of day1 state: nothing changes
-    snap3 = snapshot_apply_timestamp(snap2, day1, "k", "updated_at")
-    assert snap3.count() == 4
-    assert snap3.filter("dbt_valid_to IS NULL").count() == 3

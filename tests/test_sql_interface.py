@@ -1,9 +1,9 @@
 """Spark SQL interface: the engine's tables are first-class SQL citizens.
 
-A user of the reference writes SQL; our catalog registers every
-materialized table as a ``layer_name`` temp view so the same star-schema
-queries run verbatim through ``spark.sql`` — and produce exactly what the
-DataFrame API produces (same Catalyst plan underneath).
+A user of the reference writes SQL; a catalog table read into a
+``layer_name`` temp view runs the same star-schema queries verbatim
+through ``spark.sql`` — and produces exactly what the DataFrame API
+produces (same Catalyst plan underneath).
 """
 
 from __future__ import annotations
@@ -19,7 +19,8 @@ def test_sql_over_registered_views_matches_dataframe_api(spark, tmp_path):
     orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
     catalog.write(li, "analytics", "lineitem", partition_by=None)
     catalog.write(orders, "analytics", "orders", partition_by=None)
-    catalog.register_views("analytics")
+    for name in ("lineitem", "orders"):
+        catalog.read("analytics", name).createOrReplaceTempView(f"analytics_{name}")
 
     sql_out = spark.sql(
         """
@@ -66,85 +67,3 @@ def test_sql_scalar_subquery_and_exists(spark):
         """
     ).first()
     assert out.n > 0
-
-
-def test_sql_udf_shims_match_column_shims(spark):
-    """The SQL-surface dialect (functions/sql_udfs.py) must agree with
-    the Column shims on shared inputs, and inline into codegen (no
-    python UDF boundary in the plan)."""
-    from pyspark.sql import functions as F
-
-    from dbt_repo_spark.functions import safe_divide, surrogate_key
-    from dbt_repo_spark.functions.sql_udfs import register_sql_shims
-
-    names = register_sql_shims(spark)
-    assert "bq_safe_divide" in names
-    df = spark.createDataFrame(
-        [(10.0, 4.0, "7", "a"), (1.0, 0.0, "x", None)],
-        "num double, den double, s string, key string",
-    )
-    df.createOrReplaceTempView("shim_in")
-    got = spark.sql(
-        """SELECT bq_safe_divide(num, den) AS q,
-                  bq_safe_cast_int64(s) AS i,
-                  bq_surrogate_key2(s, key) AS sk,
-                  bq_if(num > 5) AS ind,
-                  bq_json_extract_scalar('{"a": "v"}', '$.a') AS js
-           FROM shim_in"""
-    ).collect()
-    want = df.select(
-        safe_divide("num", "den").alias("q"),
-        F.expr("try_cast(s AS BIGINT)").alias("i"),
-        surrogate_key("s", "key").alias("sk"),
-    ).collect()
-    assert [r.q for r in got] == [r.q for r in want]
-    assert [r.i for r in got] == [r.i for r in want]
-    assert [r.sk for r in got] == [r.sk for r in want]
-    assert [r.ind for r in got] == [1, 0]
-    assert got[0].js == "v"
-    # aggregate composition: SUM(bq_if(cond)) == countif
-    agg = spark.sql("SELECT SUM(bq_if(den = 0)) AS z FROM shim_in").collect()
-    assert agg[0].z == 1
-    # SQL UDFs inline: no BatchEvalPython / PythonUDF in the plan
-    plan = (
-        spark.sql("SELECT bq_safe_divide(num, den) FROM shim_in")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "Python" not in plan
-
-
-def test_sql_timestamp_trunc_twin_matches_and_raises(spark):
-    """ADVICE r05: bq_timestamp_trunc must agree with the Column shim on
-    every supported unit AND raise on units the shim rejects (ISOYEAR,
-    WEEK(<WEEKDAY>), typos) — a silent date_trunc fall-through would let
-    the two surfaces diverge exactly where the shim errors."""
-    import pytest
-    from pyspark.errors import SparkRuntimeException
-
-    from dbt_repo_spark.functions import timestamp_trunc
-    from dbt_repo_spark.functions.sql_udfs import register_sql_shims
-
-    register_sql_shims(spark)
-    df = spark.createDataFrame(
-        # 2024-03-13 is a Wednesday: WEEK (Sunday) and ISOWEEK (Monday)
-        # floors differ, so the dialect trap is actually exercised
-        [("2024-03-13 15:26:47",), ("2024-03-10 00:00:00",)],
-        "s string",
-    ).selectExpr("CAST(s AS TIMESTAMP) AS ts")
-    df.createOrReplaceTempView("trunc_in")
-    units = ["second", "minute", "hour", "day", "month", "quarter",
-             "year", "week", "isoweek"]
-    sql_cols = ", ".join(
-        f"bq_timestamp_trunc(ts, '{u}') AS u{i}" for i, u in enumerate(units)
-    )
-    got = spark.sql(f"SELECT {sql_cols} FROM trunc_in").collect()
-    want = df.select(
-        *[timestamp_trunc("ts", u).alias(f"u{i}") for i, u in enumerate(units)]
-    ).collect()
-    assert [tuple(r) for r in got] == [tuple(r) for r in want]
-
-    for bad in ("isoyear", "week(tuesday)", "fortnight"):
-        with pytest.raises(SparkRuntimeException, match="unsupported"):
-            spark.sql(
-                f"SELECT bq_timestamp_trunc(ts, '{bad}') FROM trunc_in"
-            ).collect()

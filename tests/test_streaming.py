@@ -285,97 +285,15 @@ def test_status_ingest_ticks_with_refetched_snapshots(spark, tmp_path):
     assert spark.read.parquet(out).count() == 3 * 5
 
 
-def test_stream_stream_interval_join(spark, tmp_path):
-    """Clicks joined to purchases within 60s on a REAL pair of streams:
-    in-window purchase matches, out-of-window one doesn't."""
-    import json
-
-    from dbt_repo_spark.streaming.joins import interval_join
-
-    clicks_dir = tmp_path / "clicks"
-    buys_dir = tmp_path / "buys"
-    clicks_dir.mkdir(); buys_dir.mkdir()
-    (clicks_dir / "c.json").write_text("\n".join(json.dumps(r) for r in [
-        {"user": 1, "click_ts": "2024-01-01 10:00:00", "page": "a"},
-        {"user": 2, "click_ts": "2024-01-01 10:00:00", "page": "b"},
-    ]))
-    (buys_dir / "b.json").write_text("\n".join(json.dumps(r) for r in [
-        {"user": 1, "buy_ts": "2024-01-01 10:00:30", "amount": 5.0},   # in window
-        {"user": 2, "buy_ts": "2024-01-01 10:05:00", "amount": 9.0},   # too late
-    ]))
-    clicks = spark.readStream.schema("user LONG, click_ts TIMESTAMP, page STRING").json(str(clicks_dir))
-    buys = spark.readStream.schema("user LONG, buy_ts TIMESTAMP, amount DOUBLE").json(str(buys_dir))
-    joined = interval_join(clicks, buys, "user", "click_ts", "buy_ts", 60)
-    q = (
-        joined.writeStream.format("memory").queryName("ssj")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT user, page, amount FROM ssj").collect()
-    assert [(r["user"], r["page"], r["amount"]) for r in rows] == [(1, "a", 5.0)]
-
-
-def test_streaming_upsert_sink_latest_state(spark, tmp_path):
-    """upsert_sink maintains a latest-per-key table across two drains:
-    later events replace, unseen keys insert, redelivery is harmless."""
+def test_sessionize_event_time_timer(spark, tmp_path):
+    """A session closes only when the WATERMARK passes last_event + gap
+    (event-time timer), the open session survives a checkpointed
+    restart, and within-batch gaps split sessions immediately."""
     import datetime as dt
 
     from pyspark.sql import types as T
 
-    from dbt_repo_spark.sources.catalog import Catalog
-    from dbt_repo_spark.streaming.ingest import upsert_sink
-
-    src = tmp_path / "updates"
-    src.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    catalog = Catalog(spark, str(tmp_path / "wh"))
-    schema = T.StructType(
-        [T.StructField("k", T.StringType()),
-         T.StructField("ts", T.TimestampType()),
-         T.StructField("v", T.LongType())]
-    )
-
-    def drain():
-        stream = spark.readStream.schema(schema).json(str(src))
-        q = (
-            stream.writeStream.foreachBatch(
-                upsert_sink(catalog, "analytics", "latest_state", "k", "ts")
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    base = dt.datetime(2025, 1, 1)
-
-    def row(k, minute, v):
-        return json.dumps({"k": k, "ts": (base + dt.timedelta(minutes=minute)).isoformat(), "v": v})
-
-    (src / "b1.jsonl").write_text("\n".join(
-        [row("a", 1, 10), row("b", 1, 20), row("a", 5, 11)]  # a: later wins
-    ))
-    drain()
-    got = {(r.k, r.v) for r in catalog.read("analytics", "latest_state").collect()}
-    assert got == {("a", 11), ("b", 20)}
-
-    (src / "b2.jsonl").write_text("\n".join(
-        [row("b", 9, 21), row("c", 2, 30), row("a", 5, 11)]  # redelivery of a@5
-    ))
-    drain()
-    got = {(r.k, r.v) for r in catalog.read("analytics", "latest_state").collect()}
-    assert got == {("a", 11), ("b", 21), ("c", 30)}
-
-
-def _run_sessionize_scenario(spark, tmp_path, sessionize):
-    """Shared scenario for the two sessionizer implementations: a session
-    closes only when the WATERMARK passes last_event + gap (event-time
-    timer), the open session survives a checkpointed restart, and
-    within-batch gaps split sessions immediately."""
-    import datetime as dt
-
-    from pyspark.sql import types as T
+    from dbt_repo_spark.streaming.stateful import sessionize
 
     src = tmp_path / "events"
     src.mkdir()
@@ -437,31 +355,6 @@ def _run_sessionize_scenario(spark, tmp_path, sessionize):
     assert got[(1, 1)].session_start == base + dt.timedelta(minutes=25)
 
 
-def test_sessionize_event_time_timer(spark, tmp_path):
-    from dbt_repo_spark.streaming.stateful import sessionize
-
-    _run_sessionize_scenario(spark, tmp_path, sessionize)
-
-
-def test_sessionize_tws_state_v2(spark, tmp_path):
-    """Spark-4 transformWithStateInPandas twin. Where protobuf (the
-    state-protocol dependency) is installed, the full sessionize
-    scenario runs; where it isn't, the call-time gate must fail LOUDLY
-    with the remediation in the message (without the gate the missing
-    dependency only surfaces deep inside a Python worker at stream
-    start) — meaningful in both environments, zero skips."""
-    from dbt_repo_spark.streaming.stateful import has_tws_deps, sessionize_tws
-
-    if has_tws_deps():
-        _run_sessionize_scenario(spark, tmp_path, sessionize_tws)
-    else:
-        events = spark.createDataFrame(
-            [], "user_id long, ts timestamp, value double"
-        )
-        with pytest.raises(RuntimeError, match="protobuf.*sessionize"):
-            sessionize_tws(events)
-
-
 def test_backpressure_max_files_per_trigger(spark, tmp_path):
     """maxFilesPerTrigger bounds each micro-batch: a 4-file backlog with a
     2-file cap drains in >= 2 batches under availableNow."""
@@ -486,151 +379,6 @@ def test_backpressure_max_files_per_trigger(spark, tmp_path):
     assert sum(batches) == 4
     assert len([b for b in batches if b > 0]) >= 2
     assert max(batches) <= 2
-
-
-def test_interval_join_left_outer_emits_unmatched(spark, tmp_path):
-    """LEFT OUTER stream-stream interval join: an unmatched left event
-    emits with NULL right columns once the watermark passes its join
-    window (state eviction proves completion, not a timeout guess)."""
-    import datetime as dt
-
-    from pyspark.sql import types as T
-
-    from dbt_repo_spark.streaming.joins import interval_join
-
-    base = dt.datetime(2025, 1, 1, 0, 0, 0)
-    ldir = tmp_path / "clicks"; ldir.mkdir()
-    rdir = tmp_path / "buys"; rdir.mkdir()
-
-    def row(m, uid, eid):
-        return json.dumps({"user_id": uid, "ts": (base + dt.timedelta(minutes=m)).isoformat(), "event_id": eid})
-
-    schema = T.StructType([
-        T.StructField("user_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("event_id", T.LongType()),
-    ])
-    # u1 click at 0 matched by buy at 2; u2 click at 1 never matched.
-    # Late rows at minute 60 push both watermarks far past every window.
-    (ldir / "a.jsonl").write_text("\n".join([row(0, 1, 10), row(1, 2, 11), row(60, 9, 12)]))
-    (rdir / "a.jsonl").write_text("\n".join([row(2, 1, 20), row(60, 9, 21)]))
-
-    left = spark.readStream.schema(schema).json(str(ldir)).withColumnRenamed("ts", "l_ts").withColumnRenamed("event_id", "l_id")
-    right = spark.readStream.schema(schema).json(str(rdir)).withColumnRenamed("ts", "r_ts").withColumnRenamed("event_id", "r_id")
-    joined = interval_join(
-        left, right, "user_id", "l_ts", "r_ts",
-        max_delay_seconds=300, watermark_delay="1 minutes", how="leftOuter",
-    )
-    out = str(tmp_path / "out"); ckpt = str(tmp_path / "ckpt")
-    q = (joined.writeStream.format("parquet").option("path", out)
-         .option("checkpointLocation", ckpt).outputMode("append")
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    rows = {r.l_id: r for r in spark.read.parquet(out).collect()}
-    assert rows[10].r_id == 20          # matched within 5 min
-    assert 11 in rows and rows[11].r_id is None  # unmatched -> NULL emit
-
-
-def test_interval_join_outer_slow_side_gates_null_across_ticks(
-    spark, tmp_path
-):
-    """LEFT OUTER interval join under multi-tick arrival SKEW (r10
-    verdict ask #6): the global watermark is the MIN over both sides,
-    so an unmatched left row's NULL emission is gated by the SLOW
-    side's watermark even when the left side's own watermark has raced
-    far past the join window. Three availableNow ticks over one
-    checkpoint:
-
-    tick 1 — left: matched click (u1@0) + unmatched click (u2@1);
-             right: the matching buy (u1@2). The match emits (inner
-             results never wait); u2 must NOT emit — nothing proves
-             its window empty yet.
-    tick 2 — left gets a row at minute 60 (left max event time races
-             to 60, far past u2's window end at minute 6); right gets
-             NOTHING. u2 must STILL not emit: the right side is slow
-             and a matching buy could yet arrive — emitting now would
-             be a wrong NULL. (Restart semantics sharpen this: only
-             the GLOBAL watermark is persisted in the checkpoint, not
-             per-side max event times, so a restarted tick where one
-             side sees no data holds the global watermark at its
-             persisted value no matter how far the other side ran —
-             observed via recentProgress while building this fixture:
-             the reported wm stays at tick-1's value through tick 2.)
-    tick 3 — BOTH sides see minute-60 rows, so both per-side
-             candidates pass u2's window inside one run; the global
-             watermark advances at the data batch's end and the run's
-             trailing no-data batch flushes the NULL row.
-    """
-    import datetime as dt
-
-    from pyspark.sql import types as T
-
-    from dbt_repo_spark.streaming.joins import interval_join
-
-    base = dt.datetime(2025, 1, 1, 0, 0, 0)
-    ldir = tmp_path / "clicks"; ldir.mkdir()
-    rdir = tmp_path / "buys"; rdir.mkdir()
-
-    def row(m, uid, eid):
-        return json.dumps({
-            "user_id": uid,
-            "ts": (base + dt.timedelta(minutes=m)).isoformat(),
-            "event_id": eid,
-        })
-
-    schema = T.StructType([
-        T.StructField("user_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("event_id", T.LongType()),
-    ])
-    out = str(tmp_path / "out"); ckpt = str(tmp_path / "ckpt")
-
-    def tick():
-        left = (
-            spark.readStream.schema(schema).json(str(ldir))
-            .withColumnRenamed("ts", "l_ts").withColumnRenamed("event_id", "l_id")
-        )
-        right = (
-            spark.readStream.schema(schema).json(str(rdir))
-            .withColumnRenamed("ts", "r_ts").withColumnRenamed("event_id", "r_id")
-        )
-        joined = interval_join(
-            left, right, "user_id", "l_ts", "r_ts",
-            max_delay_seconds=300, watermark_delay="1 minutes",
-            how="leftOuter",
-        )
-        q = (joined.writeStream.format("parquet").option("path", out)
-             .option("checkpointLocation", ckpt).outputMode("append")
-             .trigger(availableNow=True).start())
-        assert q.awaitTermination(120), "stream tick timed out"
-        try:
-            return {r.l_id: r for r in spark.read.parquet(out).collect()}
-        except Exception:
-            return {}  # no output files yet
-
-    # tick 1: match + the to-be-unmatched row
-    (ldir / "t1.jsonl").write_text("\n".join([row(0, 1, 10), row(1, 2, 11)]))
-    (rdir / "t1.jsonl").write_text(row(2, 1, 20))
-    got = tick()
-    assert got.get(10) is not None and got[10].r_id == 20
-    assert 11 not in got  # window not yet provably empty
-
-    # tick 2: LEFT watermark races ahead; right side stays silent
-    (ldir / "t2.jsonl").write_text(row(60, 8, 12))
-    got = tick()
-    assert 11 not in got, (
-        "NULL emitted while the slow right side could still match"
-    )
-
-    # tick 3: the slow side catches up AND the left side sees data in
-    # the same run (a one-sided run can never advance the restored
-    # global watermark); the run's trailing no-data batch flushes u2
-    (ldir / "t3.jsonl").write_text(row(60, 7, 13))
-    (rdir / "t3.jsonl").write_text(row(60, 9, 21))
-    got = tick()
-    assert 11 in got and got[11].r_id is None
-    # and the matched row emitted exactly once across all ticks
-    assert sum(1 for r in got.values() if r.l_id == 10) == 1
 
 
 def test_drop_duplicates_within_watermark(spark, tmp_path):
@@ -676,159 +424,6 @@ def test_drop_duplicates_within_watermark(spark, tmp_path):
     counts = {r.k: r["count"] for r in got}
     assert counts[8] == 1
     assert counts[7] == 2  # once per horizon, NOT permanently suppressed
-
-
-def test_streaming_ewma_equals_batch_across_restart(spark, tmp_path):
-    """Online EWMA == batch EWMA bit-for-bit over a checkpoint restart:
-    feed minutes 0-4, stop; feed minutes 5-9, restart from the same
-    checkpoint; the concatenated streaming output must equal
-    ewma_recursive over the full series (state — a double — must
-    round-trip the state store exactly)."""
-    import datetime as dt
-    import json
-
-    from dbt_repo_spark.operators.timeseries import ewma_recursive
-    from dbt_repo_spark.streaming.stateful import ewma_stream
-
-    base = dt.datetime(2024, 3, 1, 12, 0, 0)
-    src = tmp_path / "src"
-    src.mkdir()
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    def rows(minutes):
-        lines = []
-        for m in minutes:
-            for k, v in (("a", 10.0 + 3.7 * m), ("b", 100.0 / (m + 1))):
-                lines.append(
-                    json.dumps(
-                        {"k": k, "ts": (base + dt.timedelta(minutes=m)).isoformat(), "x": v}
-                    )
-                )
-        return "\n".join(lines)
-
-    schema = "k STRING, ts TIMESTAMP, x DOUBLE"
-
-    def run_once():
-        stream = spark.readStream.schema(schema).json(str(src))
-        q = (
-            ewma_stream(stream, alpha=0.25)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    (src / "b1.json").write_text(rows(range(5)))
-    run_once()
-    (src / "b2.json").write_text(rows(range(5, 10)))
-    run_once()
-
-    got = {
-        (r["k"], r["ts"]): (r["x"], r["ewma"])
-        for r in spark.read.parquet(out).collect()
-    }
-    assert len(got) == 20
-    batch_in = spark.createDataFrame(
-        [
-            (k, base + dt.timedelta(minutes=m), v)
-            for m in range(10)
-            for k, v in (("a", 10.0 + 3.7 * m), ("b", 100.0 / (m + 1)))
-        ],
-        schema,
-    )
-    want = {
-        (r["k"], r["ts"]): r["ewma"]
-        for r in ewma_recursive(batch_in, "k", "ts", "x", alpha=0.25).collect()
-    }
-    for key, (_, ewma) in got.items():
-        assert ewma == want[key], key
-
-
-def test_streaming_heavy_hitters_matches_offline_mg(spark, tmp_path):
-    """Online MG across two micro-batches + a checkpoint restart equals
-    the offline Misra-Gries fold over the concatenated arrival order,
-    and never underestimates... rather: true >= mg >= true - N/capacity."""
-    import datetime as dt
-    import json
-
-    from dbt_repo_spark.streaming.stateful import heavy_hitters_stream
-
-    base = dt.datetime(2024, 4, 1, 9, 0, 0)
-    src = tmp_path / "src"
-    src.mkdir()
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    # skewed key stream: key 7 is hot, 100-199 are noise
-    def mk(minutes, seed):
-        lines = []
-        for m in minutes:
-            keys = [7, 7, 7, 100 + (m * 13 + seed) % 100]
-            for j, k in enumerate(keys):
-                lines.append(json.dumps({
-                    "grp": "g",
-                    "ts": (base + dt.timedelta(minutes=m, seconds=j)).isoformat(),
-                    "key": k,
-                }))
-        return lines
-
-    def run_once():
-        stream = spark.readStream.schema("grp STRING, ts TIMESTAMP, key LONG").json(str(src))
-        q = (heavy_hitters_stream(stream, capacity=4)
-             .writeStream.format("parquet")
-             .option("path", out).option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-
-    b1, b2 = mk(range(10), 1), mk(range(10, 20), 2)
-    (src / "b1.json").write_text("\n".join(b1))
-    run_once()
-    (src / "b2.json").write_text("\n".join(b2))
-    run_once()
-
-    rows = spark.read.parquet(out).collect()
-    latest = max(r["batch_max_ts"] for r in rows)
-    got = {r["key"]: r["mg_count"] for r in rows if r["batch_max_ts"] == latest}
-
-    # offline MG over the same arrival order (batch order, ts-sorted)
-    def offline(lines):
-        mg = {}
-        recs = [json.loads(l) for l in lines]
-        recs.sort(key=lambda r: (r["ts"], r["key"]))
-        for r in recs:
-            k = r["key"]
-            if k in mg:
-                mg[k] += 1
-            elif len(mg) < 4:
-                mg[k] = 1
-            else:
-                for kk in list(mg):
-                    mg[kk] -= 1
-                    if mg[kk] == 0:
-                        del mg[kk]
-        return mg
-
-    mg = offline(b1)
-    # continue fold into batch 2 from surviving state
-    recs2 = [json.loads(l) for l in b2]
-    recs2.sort(key=lambda r: (r["ts"], r["key"]))
-    for r in recs2:
-        k = r["key"]
-        if k in mg:
-            mg[k] += 1
-        elif len(mg) < 4:
-            mg[k] = 1
-        else:
-            for kk in list(mg):
-                mg[kk] -= 1
-                if mg[kk] == 0:
-                    del mg[kk]
-    assert got == mg
-    # hot key must survive with the MG bound: true=60, N=80, cap=4
-    assert 7 in got and 60 - 80 / 4 <= got[7] <= 60
 
 
 def test_streaming_geofence_windowed_counts(spark, tmp_path):

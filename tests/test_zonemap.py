@@ -10,8 +10,6 @@ from dbt_repo_spark.sources.catalog import Catalog
 from dbt_repo_spark.sources.zonemap import (
     load_zone_map,
     prune_files,
-    verify_zone_map,
-    write_zone_map,
 )
 
 
@@ -86,19 +84,6 @@ def test_disjoint_range_reads_nothing_but_schema_survives(clustered):
     assert "o_orderkey" in pruned.columns
 
 
-def test_verify_detects_stale_manifest(clustered, spark):
-    cat, df = clustered
-    tdir = cat.path("analytics", "orders_clustered")
-    assert verify_zone_map(tdir)["ok"]
-    # out-of-band append: a new data file the manifest doesn't know
-    df.limit(5).coalesce(1).write.mode("append").parquet(tdir)
-    chk = verify_zone_map(tdir)
-    assert not chk["ok"] and chk["missing"]
-    # re-collect heals it
-    write_zone_map(tdir, ["o_orderkey", "o_totalprice"])
-    assert verify_zone_map(tdir)["ok"]
-
-
 def test_no_manifest_falls_back_to_full_listing(spark, tmp_path):
     cat = Catalog(spark, str(tmp_path / "wh"))
     df = spark.range(100).withColumn("v", F.col("id") * 2)
@@ -107,50 +92,14 @@ def test_no_manifest_falls_back_to_full_listing(spark, tmp_path):
     assert len(paths) == total > 0  # no manifest -> keep all (safe)
 
 
-def test_bloom_index_equality_pruning(spark, tmp_path):
-    from dbt_repo_spark.sources.zonemap import prune_files_eq, write_bloom_index
-
-    cat = Catalog(spark, str(tmp_path / "wh"))
-    df = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-    # time-style clustering: custkey is SCATTERED across files, so zone
-    # maps cannot prune an equality probe on it — blooms can
-    cat.write(
-        df.repartitionByRange(8, "o_orderkey"),
-        "analytics",
-        "orders_by_key",
-        sort_within_partitions=["o_orderkey"],
-    )
-    tdir = cat.path("analytics", "orders_by_key")
-    write_bloom_index(tdir, ["o_custkey"])
-    probe = df.select("o_custkey").limit(1).collect()[0][0]
-    paths, total = prune_files_eq(tdir, "o_custkey", probe)
-    assert total == 8 and 0 < len(paths) < 8
-    got = (
-        spark.read.parquet(*paths)
-        .filter(F.col("o_custkey") == probe)
-        .count()
-    )
-    assert got == df.filter(F.col("o_custkey") == probe).count()
-    # absent value: every hit is a (rare) false positive
-    paths2, _ = prune_files_eq(tdir, "o_custkey", -999999)
-    assert len(paths2) <= 1
-    # unknown column -> superset rule keeps everything
-    paths3, _ = prune_files_eq(tdir, "o_clerk", "x")
-    assert len(paths3) == 8
-
-
 def test_files_appended_after_manifest_are_kept(clustered, spark):
     """ADVICE r03: a data file landing AFTER the manifest was written
     (append without a zone-map refresh) is unknown to the manifest —
-    pruning must KEEP it (superset guarantee), for both the range and
-    the bloom path."""
+    pruning must KEEP it (superset guarantee)."""
     import os
-
-    from dbt_repo_spark.sources.zonemap import prune_files_eq, write_bloom_index
 
     cat, df = clustered
     tdir = cat.path("analytics", "orders_clustered")
-    write_bloom_index(tdir, ["o_custkey"])
     # out-of-band append: new rows with keys far outside every range
     extra = df.limit(5).withColumn(
         "o_orderkey", F.col("o_orderkey") + 10_000_000
@@ -167,33 +116,3 @@ def test_files_appended_after_manifest_are_kept(clustered, spark):
         F.col("o_orderkey") >= 10_000_000
     )
     assert got.count() == 5  # unknown file kept -> no lost rows
-    # bloom probe: appended file has no bloom entry -> kept
-    probe = extra.select("o_custkey").limit(1).collect()[0][0]
-    paths_eq, total_eq = prune_files_eq(tdir, "o_custkey", probe)
-    appended = set(paths) - {
-        os.path.join(tdir, rel)
-        for rel in load_zone_map(tdir)["files"]
-    }
-    assert appended and appended <= set(paths_eq)
-    assert total_eq == n_files
-
-
-def test_manifest_refresh_does_not_corrupt_hardlinked_clone(clustered, spark, tmp_path):
-    """ADVICE r03: manifests write via tmp+os.replace (new inode) and
-    clone_table copies metadata JSON, so refreshing either side of a
-    clone leaves the other side's manifest intact."""
-    import os
-
-    cat, df = clustered
-    dev = Catalog(spark, str(tmp_path / "dev_wh"))
-    cat.clone_table("analytics", "orders_clustered", dev)
-    src_dir = cat.path("analytics", "orders_clustered")
-    dst_dir = dev.path("analytics", "orders_clustered")
-    src_mf, dst_mf = (os.path.join(d, "_zonemap.json") for d in (src_dir, dst_dir))
-    # metadata JSON is a copy, not a hardlink
-    assert os.stat(src_mf).st_ino != os.stat(dst_mf).st_ino
-    before = load_zone_map(dst_dir)
-    # refresh the SOURCE manifest (restricted columns -> different bytes)
-    write_zone_map(src_dir, ["o_orderkey"])
-    assert load_zone_map(dst_dir) == before  # clone untouched
-    assert os.stat(src_mf).st_ino != os.stat(dst_mf).st_ino
