@@ -7,7 +7,7 @@ The reference triggers work via HTTP → Cloud Function → Dataproc submit
     python -m dbt_repo_spark ingest-gbfs   --landing DIR --warehouse DIR \\
         --table station_status [--serialize-data]
     python -m dbt_repo_spark ingest-trips  --csv GLOB    --warehouse DIR
-    python -m dbt_repo_spark run  --warehouse DIR [--select m1 m2+ tag:x exposure:e] \\
+    python -m dbt_repo_spark run  --warehouse DIR [--select m1 m2+ tag:x] \\
         [--full-refresh] [--defer-to PROD_DIR] [--state manifest.json]
     python -m dbt_repo_spark build --warehouse DIR   # run + test, skip downstream of failures
     python -m dbt_repo_spark test --warehouse DIR
@@ -17,12 +17,15 @@ The reference triggers work via HTTP → Cloud Function → Dataproc submit
 
 `run` resolves model sources from the warehouse's raw layer; models whose
 raw inputs are absent are skipped (a partial DAG is normal while only some
-feeds are ingested).
+feeds are ingested). `run` and `build` then write the model fingerprints
+to `<warehouse>/manifest.json`, as dbt writes `target/manifest.json` on
+every invocation; a later `--state` takes that file as its baseline.
 """
 
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
 from pyspark.sql import SparkSession
@@ -83,6 +86,11 @@ def _defer_catalog(spark: SparkSession, args):
     return Catalog(spark, args.defer_to)
 
 
+def _write_manifest(runner, warehouse: str) -> None:
+    os.makedirs(warehouse, exist_ok=True)
+    runner.write_manifest(os.path.join(warehouse, "manifest.json"))
+
+
 def cmd_run(args) -> int:
     spark = _spark("dbt-repo-spark-run")
     runner = _runner(spark, args.warehouse)
@@ -93,6 +101,7 @@ def cmd_run(args) -> int:
         state=getattr(args, "state", None),
         defer_to=_defer_catalog(spark, args),
     )
+    _write_manifest(runner, args.warehouse)
     for name in built:
         m = runner.models[name]
         print(f"OK {m.materialized:<12} {name}")
@@ -110,6 +119,7 @@ def cmd_build(args) -> int:
         state=getattr(args, "state", None),
         defer_to=_defer_catalog(spark, args),
     )
+    _write_manifest(runner, args.warehouse)
     rc = 0
     for name, st in status.items():
         print(f"{st.upper():<8} {name}")

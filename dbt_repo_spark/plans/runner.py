@@ -16,13 +16,9 @@ Materializations (SURVEY.md §2.11 D1-D5):
   reference's NOT-IN template (models/facts/fact_station_status.sql:30-32,
   fact_station_status_history.sql:24-26). The target snapshot is read
   BEFORE the write so the model never reads its own writes (§7.3 risk 1);
-  md5 keys are non-null so anti-join ≡ NOT IN (§7.3 risk 3).
-  Strategies beyond the reference: ``insert_overwrite`` (dynamic partition
-  replace), ``merge`` (upsert by unique_key via staged rewrite,
-  partition-scoped when partition_by is set — dbt's
-  incremental_strategy='merge' on top of immutable parquet), and
-  ``microbatch`` (dbt 1.9: event-time period splitting with a lookback
-  window — bounded, idempotent, retry-safe late-data reprocessing).
+  md5 keys are non-null so anti-join ≡ NOT IN (§7.3 risk 3). A batch
+  whose schema drifted from the target's is aligned to the target first,
+  so an append never forks the table's schema.
 """
 
 from __future__ import annotations
@@ -38,7 +34,7 @@ from pyspark.sql import functions as F
 from dbt_repo_spark.sources.catalog import Catalog
 from dbt_repo_spark.sources.readers import file_stamps
 
-MATERIALIZATIONS = ("ephemeral", "view", "table", "incremental", "versioned_table")
+MATERIALIZATIONS = ("ephemeral", "view", "table", "incremental")
 
 
 @dataclass
@@ -51,24 +47,8 @@ class Model:
     unique_key: str | None = None
     partition_by: list[str] | None = None
     cluster_by: list[str] | None = None
-    incremental_strategy: str = "append"  # append (anti-join) | insert_overwrite | merge
     tests: dict = field(default_factory=dict)
     tags: tuple[str, ...] = ()
-    # dbt on_schema_change for incrementals: what to do when the batch's
-    # schema drifts from the existing target (ignore = align to target,
-    # append_new_columns = evolve, fail = refuse)
-    on_schema_change: str = "ignore"
-    # microbatch strategy config (dbt 1.9 incremental_strategy='microbatch'):
-    # event_time column, batch period ('day'|'hour'|'month'), and how many
-    # RECENT periods to reprocess (late-data window); older periods in the
-    # input are dropped, never rewritten
-    event_time: str | None = None
-    batch_size: str = "day"
-    lookback: int = 1
-    # dbt model contract (contract: enforced): declared output schema
-    # {column: spark dtype simpleString}; the build FAILS if the built
-    # frame's schema differs — consumers can rely on the shape
-    contract: dict | None = None
 
     def fingerprint(self) -> str:
         """Content hash for Slim-CI state comparison: the builder's
@@ -110,32 +90,8 @@ class Model:
     def __post_init__(self):
         if self.materialized not in MATERIALIZATIONS:
             raise ValueError(f"unknown materialization {self.materialized!r}")
-        if self.incremental_strategy not in (
-            "append", "insert_overwrite", "merge", "microbatch"
-        ):
-            raise ValueError(
-                f"unknown incremental_strategy {self.incremental_strategy!r}"
-            )
-        if self.on_schema_change not in ("ignore", "append_new_columns", "fail"):
-            raise ValueError(f"unknown on_schema_change {self.on_schema_change!r}")
-        if self.materialized == "incremental":
-            if self.incremental_strategy in ("append", "merge") and not self.unique_key:
-                raise ValueError(f"incremental model {self.name} needs unique_key")
-            if self.incremental_strategy == "insert_overwrite" and not self.partition_by:
-                raise ValueError(
-                    f"insert_overwrite model {self.name} needs partition_by"
-                )
-            if self.incremental_strategy == "microbatch":
-                if not self.event_time:
-                    raise ValueError(
-                        f"microbatch model {self.name} needs event_time"
-                    )
-                if self.batch_size not in ("hour", "day", "month"):
-                    raise ValueError(
-                        f"unknown batch_size {self.batch_size!r}"
-                    )
-                if self.lookback < 1:
-                    raise ValueError("lookback must be >= 1")
+        if self.materialized == "incremental" and not self.unique_key:
+            raise ValueError(f"incremental model {self.name} needs unique_key")
 
 
 def model(name: str, **config) -> Callable[[Callable], Model]:
@@ -146,40 +102,6 @@ def model(name: str, **config) -> Callable[[Callable], Model]:
     (refs and sources alike) plus the SparkSession under ``"spark"``.
     """
     return lambda fn: Model(name=name, fn=fn, **config)
-
-
-@dataclass(frozen=True)
-class Exposure:
-    """dbt exposure: a declared downstream consumer (dashboard, ML job,
-    notebook) whose upstream models become selectable as a unit
-    (``exposure:<name>`` selector) and visible in the manifest — the
-    impact-analysis edge dbt draws from the warehouse to the outside
-    world (reference: every mart in `models/marts/` feeds a Looker
-    dashboard the repo itself never declares; this makes that edge
-    explicit)."""
-
-    name: str
-    depends_on: tuple[str, ...]
-    kind: str = "dashboard"  # dashboard | ml | notebook | application
-    owner: str = ""
-    url: str = ""
-
-
-def _check_contract(m: Model, df: DataFrame) -> None:
-    if m.contract is None:
-        return
-    got = dict(df.dtypes)
-    if got != m.contract:
-        missing = sorted(set(m.contract) - set(got))
-        extra = sorted(set(got) - set(m.contract))
-        drifted = sorted(
-            c for c in set(got) & set(m.contract) if got[c] != m.contract[c]
-        )
-        raise ValueError(
-            f"model {m.name}: contract violation — "
-            f"missing {missing}, extra {extra}, type-drifted "
-            f"{[(c, m.contract[c], got[c]) for c in drifted]}"
-        )
 
 
 def _rel_parent(test) -> str | None:
@@ -234,6 +156,22 @@ def _same(a: tuple, b: tuple) -> bool:
     return a[:2] == b[:2] and a[2].sameResult(b[2])
 
 
+def _align(df: DataFrame, target: DataFrame) -> DataFrame:
+    """An incremental batch in the target's schema: batch-only columns
+    are dropped, target columns the batch lacks become typed NULLs, and
+    shared columns are cast to the target's type, so a drifted batch
+    surfaces as nulls or cast errors at write, never as a forked table
+    schema."""
+    t_cols = dict(target.dtypes)
+    if dict(df.dtypes) == t_cols:
+        return df  # identical names AND types — nothing to do
+    d_cols = set(df.columns)
+    return df.select([
+        (F.col(c).cast(t) if c in d_cols else F.lit(None).cast(t)).alias(c)
+        for c, t in t_cols.items()
+    ])
+
+
 class ModelRunner:
     """Topo-sorts and materializes a set of models (dbt run/test analog)."""
 
@@ -242,7 +180,6 @@ class ModelRunner:
         self.catalog = catalog
         self.sources = dict(sources)
         self.models: dict[str, Model] = {}
-        self.exposures: dict[str, Exposure] = {}
         self._state: dict | None = None
         self._defer: Catalog | None = None
         self._observe: bool = False
@@ -256,17 +193,6 @@ class ModelRunner:
     def add(self, *models: Model) -> "ModelRunner":
         for m in models:
             self.models[m.name] = m
-        return self
-
-    def add_exposure(self, *exposures: Exposure) -> "ModelRunner":
-        for e in exposures:
-            unknown = [d for d in e.depends_on if d not in self.models]
-            if unknown:
-                raise ValueError(
-                    f"exposure {e.name}: unknown model deps {unknown} "
-                    "(add models before exposures)"
-                )
-            self.exposures[e.name] = e
         return self
 
     def manifest(self) -> dict[str, str]:
@@ -315,14 +241,6 @@ class ModelRunner:
                     n for n, m in self.models.items()
                     if self._state.get(n) != m.fingerprint()
                 }
-            elif core.startswith("exposure:"):
-                # the exposure's declared upstream models; the normal
-                # upstream closure in _order pulls their refs. A typo'd
-                # exposure is a config error, not a tolerated miss.
-                ename = core[len("exposure:"):]
-                if ename not in self.exposures:
-                    raise ValueError(f"unknown exposure {ename!r}")
-                base = set(self.exposures[ename].depends_on)
             else:
                 base = {core} if core in self.models else set()
             sel |= base
@@ -429,7 +347,7 @@ class ModelRunner:
         A ``table`` or ``incremental`` model is not rewritten when
         nothing it reads or does has changed since this runner last
         wrote it (dbt's state-aware ``source_status:fresher+``). After
-        the builder and the contract check, the runner signs the model:
+        the builder, the runner signs the model:
         its ``fingerprint()``, its optimized plan (compared with
         ``sameResult``; Catalyst folds ``current_timestamp()`` into a
         literal, so a clock-reading model never matches and a
@@ -521,7 +439,6 @@ class ModelRunner:
             else:
                 raise KeyError(f"model {name}: unresolved dependency {d!r}")
         df = m.fn(ctx)
-        _check_contract(m, df)
         sig = (
             _signature(m, df)
             if m.materialized in ("table", "incremental") else None
@@ -534,8 +451,7 @@ class ModelRunner:
             self._written[name] = last
             return last[2]
         obs = None
-        if self._observe and m.materialized in ("table", "incremental",
-                                                "versioned_table"):
+        if self._observe and m.materialized in ("table", "incremental"):
             # Spark Observation API: per-model run metrics (rows built,
             # null keys) collected DURING the materializing job itself —
             # dbt's "rows affected" line without a second scan. Metrics
@@ -567,177 +483,33 @@ class ModelRunner:
         if m.materialized == "view":
             df.createOrReplaceTempView(m.name)
             return df
-        if m.materialized == "versioned_table":
-            # full-table commit into the version log: every run is a
-            # time-travelable state, and a bad deploy rolls back with
-            # one log write (sources/versioned.py). The returned frame
-            # reads the committed version (not the plan).
-            from dbt_repo_spark.sources.versioned import VersionedTable
-
-            vt = VersionedTable(self.catalog, m.layer, m.name)
-            v = vt.commit(df, message=f"run {m.name}")
-            return vt.read(version=v)
-        # table, incremental: one write, then one re-read. Microbatch
-        # partitions by its derived event-time period (overriding
-        # partition_by), so period pruning reaches every downstream scan.
-        microbatch = (m.materialized == "incremental"
-                      and m.incremental_strategy == "microbatch")
-        if microbatch:
-            per = F.date_trunc(m.batch_size, F.col(m.event_time))
-            df = df.withColumn("batch_period", per)
-        parts = ["batch_period"] if microbatch else m.partition_by
-        evolved = False
+        # table, incremental: one write, then one re-read
+        mode = "overwrite"
         if (
-            m.materialized == "table" or full_refresh
-            or not self.catalog.exists(m.layer, m.name)
+            m.materialized == "incremental" and not full_refresh
+            and self.catalog.exists(m.layer, m.name)
         ):
-            self.catalog.write(
-                df, m.layer, m.name,
-                mode="overwrite",
-                partition_by=parts,
-                sort_within_partitions=m.cluster_by,
+            # is_incremental() branch: {{ this }} is read BEFORE the
+            # write, so the model never reads its own writes. The batch
+            # is aligned to the target's schema, then anti-joined against
+            # its keys and appended. The key side is projected to ONE
+            # column so the scan of the existing target prunes to the key
+            # column only (parquet ReadSchema), and is not deduplicated: a
+            # left anti join's result ignores duplicates on its build
+            # side, and a distinct() would add a shuffle stage. It is
+            # fact-sized, so Catalyst/AQE picks the join strategy.
+            target = self.catalog.read(m.layer, m.name)
+            df = _align(df, target).join(
+                target.select(m.unique_key), m.unique_key, "left_anti"
             )
-        else:
-            # {{ this }} is read BEFORE the write, so the model never
-            # reads its own writes. on_schema_change applies to every
-            # strategy, also where the strategy needs only the target's
-            # schema (a footer read): a drifted batch must not fork the
-            # table's schema, even under policy 'fail'.
-            evolved = m.on_schema_change == "append_new_columns"
-            target = self.catalog.read(m.layer, m.name, merge_schema=evolved)
-            df = self._reconcile_schema(m, df, target)
-            if m.incremental_strategy == "append":
-                # is_incremental() branch: anti-join against {{ this }}
-                # keys, then append. The key side is projected to ONE
-                # column so the scan of the existing target prunes to
-                # the key column only (parquet ReadSchema), and is not
-                # deduplicated: a left anti join's result ignores
-                # duplicates on its build side, and a distinct() would
-                # add a shuffle stage. It is fact-sized, so Catalyst/AQE
-                # picks the join strategy.
-                self.catalog.write(
-                    df.join(target.select(m.unique_key), m.unique_key, "left_anti"),
-                    m.layer, m.name,
-                    mode="append",
-                    partition_by=parts,
-                    sort_within_partitions=m.cluster_by,
-                )
-            elif m.incremental_strategy == "merge":
-                # Upsert (dbt incremental_strategy='merge'): keep target
-                # rows whose key is NOT in the batch, union the batch,
-                # staged-swap. With partition_by the rewrite is scoped to
-                # the partitions the batch touches (untouched partitions
-                # are never read or moved); unpartitioned targets pay a
-                # full rewrite — inherent to upsert-on-immutable-files,
-                # and the reason the reference's own incremental models
-                # are append-only (fact_station_status.sql:30-32).
-                if parts:
-                    touched = df.select(*parts).distinct()
-                    target = target.join(F.broadcast(touched), parts, "left_semi")
-                keys = df.select(m.unique_key).distinct()
-                kept = target.join(keys, m.unique_key, "left_anti")
-                self.catalog.overwrite_staged(
-                    kept.unionByName(df, allowMissingColumns=evolved),
-                    m.layer, m.name,
-                    partition_by=parts,
-                    sort_within_partitions=m.cluster_by,
-                    replace_partitions_only=bool(parts),
-                )
-            else:
-                # insert_overwrite, microbatch: dynamic partition
-                # overwrite (SURVEY.md §4 scale policy) replaces only the
-                # partitions present in the batch; no target row is read.
-                if microbatch:
-                    df = self._lookback(m, df)
-                    if df is None:
-                        return target  # empty batch: nothing to rewrite
-                self.catalog.write(
-                    df, m.layer, m.name,
-                    mode="overwrite",
-                    partition_by=parts,
-                    sort_within_partitions=m.cluster_by,
-                    dynamic_partition_overwrite=True,  # per-writer: thread-safe
-                )
-        # appends and partition-scoped rewrites leave older files on the
-        # pre-drift schema, so an evolved table reads with mergeSchema
-        return self.catalog.read(m.layer, m.name, merge_schema=evolved)
-
-    @staticmethod
-    def _lookback(m: Model, df: DataFrame) -> DataFrame | None:
-        """dbt 1.9 ``incremental_strategy='microbatch'``: the input is
-        split into event-time periods (``batch_size``), and only the
-        most recent ``lookback`` periods — anchored on the INPUT's max
-        event time — are (re)written, each as an independent dynamic
-        partition overwrite. Periods older than the lookback window are
-        DROPPED from the batch (late data beyond the window is a
-        deliberate backfill, run with ``full_refresh``), and untouched
-        target periods are never read or rewritten. Returns the rows of
-        the window, or None for an empty batch.
-
-        Why this is the 100 TB late-data shape: the append strategy's
-        anti-join must scan the target's keys every run, and plain
-        insert_overwrite trusts the batch to own its partitions — a
-        replayed feed would resurrect old periods. Microbatch bounds
-        every run's write surface to ``lookback`` periods regardless of
-        how stale the replayed input is, making runs idempotent AND
-        retry-safe per period.
-        """
-        import datetime as _dt
-
-        # one scalar job (documented driver action): the window anchor
-        mx = df.agg(F.max("batch_period").alias("mx")).first()["mx"]
-        if mx is None:
-            return None
-        if m.batch_size == "hour":
-            cutoff = mx - _dt.timedelta(hours=m.lookback - 1)
-        elif m.batch_size == "day":
-            cutoff = mx - _dt.timedelta(days=m.lookback - 1)
-        else:  # month
-            total = mx.year * 12 + (mx.month - 1) - (m.lookback - 1)
-            cutoff = mx.replace(year=total // 12, month=total % 12 + 1, day=1)
-        return df.filter(F.col("batch_period") >= F.lit(cutoff))
-
-    def _reconcile_schema(
-        self, m: Model, df: DataFrame, target: DataFrame
-    ) -> DataFrame:
-        """Apply the model's ``on_schema_change`` policy to a drifted
-        incremental batch (dbt semantics on immutable parquet):
-
-        - ``ignore`` (default): align the batch to the TARGET schema —
-          batch-only columns are dropped, target columns the batch lacks
-          become typed NULLs. The table's schema never changes.
-        - ``append_new_columns``: keep batch-only columns (the appended
-          files carry the wider schema; readers use mergeSchema so older
-          files surface NULLs there) and NULL-fill target columns the
-          batch lacks. Columns are never removed.
-        - ``fail``: refuse on any column-set difference.
-
-        Type changes on a SHARED column are out of scope (as in dbt):
-        the batch column is cast to the target's type in both keep modes,
-        so a lossy drift surfaces as nulls/errors at write, not silent
-        schema forks.
-        """
-        t_cols = dict(target.dtypes)
-        d_cols = set(df.columns)
-        if dict(df.dtypes) == t_cols:
-            return df  # identical names AND types — nothing to do
-        # same names but drifted TYPES falls through to the cast path
-        # below (appending a type-incompatible file would fork the
-        # table's schema); 'fail' fires on column-SET differences only,
-        # per the docstring contract
-        if set(t_cols) != d_cols and m.on_schema_change == "fail":
-            raise ValueError(
-                f"incremental model {m.name}: schema drift "
-                f"(batch {sorted(d_cols)} vs target {sorted(t_cols)}) "
-                "with on_schema_change='fail'"
-            )
-        aligned = [
-            (F.col(c).cast(t) if c in d_cols else F.lit(None).cast(t)).alias(c)
-            for c, t in t_cols.items()
-        ]
-        if m.on_schema_change == "append_new_columns":
-            aligned += [F.col(c) for c in df.columns if c not in t_cols]
-        return df.select(aligned)
+            mode = "append"
+        self.catalog.write(
+            df, m.layer, m.name,
+            mode=mode,
+            partition_by=m.partition_by,
+            sort_within_partitions=m.cluster_by,
+        )
+        return self.catalog.read(m.layer, m.name)
 
     def _test_one(self, name: str, built: dict[str, DataFrame]) -> list:
         from dbt_repo_spark.plans.testing import run_tests

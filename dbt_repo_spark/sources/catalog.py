@@ -42,37 +42,26 @@ class Catalog:
                    for f in os.listdir(p)) or any(
             os.path.isdir(os.path.join(p, f)) for f in os.listdir(p))
 
-    def read(self, layer: str, name: str, merge_schema: bool = False) -> DataFrame:
-        """Read a table; ``merge_schema=True`` reconciles files written
-        under evolved schemas (a column added by a later append reads as
-        NULL in older files). Schema merge lists every file footer — at
-        100 TB that is a real planning cost, so it is opt-in here and the
-        steady state should promote the union schema into the writer, not
-        pay the merge on every read.
-
-        A read without ``merge_schema`` goes through
-        ``readers.read_parquet``: a table whose files and session conf
-        are unchanged since its last read, or since a ``write`` that
-        recorded the schema it wrote, reuses that schema and runs no
-        schema-inference job. A change outside this catalog (a new
-        partition directory, a rewritten file), a write that may change
-        the schema, or a ``spark.sql.*`` conf change infers again.
+    def read(self, layer: str, name: str) -> DataFrame:
+        """Read a table through ``readers.read_parquet``: a table whose
+        files and session conf are unchanged since its last read, or
+        since a ``write`` that recorded the schema it wrote, reuses that
+        schema and runs no schema-inference job. A change outside this
+        catalog (a new partition directory, a rewritten file), a write
+        that may change the schema, or a ``spark.sql.*`` conf change
+        infers again.
         """
-        if not merge_schema:
-            return read_parquet(self.spark, self.path(layer, name))
-        return self.spark.read.option("mergeSchema", "true").parquet(
-            self.path(layer, name)
-        )
+        return read_parquet(self.spark, self.path(layer, name))
 
     def write(
         self,
         df: DataFrame,
         layer: str,
         name: str,
+        *,
         mode: str = "overwrite",
         partition_by: list[str] | None = None,
         sort_within_partitions: list[str] | None = None,
-        dynamic_partition_overwrite: bool = False,
         zone_map_cols: list[str] | None = None,
     ) -> None:
         """Partitioned + clustered parquet sink (S9).
@@ -85,24 +74,19 @@ class Catalog:
 
         A write records the schema it wrote for the next ``read``
         (``readers.recording_write``) when the written files determine it:
-        an overwrite, or an append or dynamic partition overwrite that
-        keeps the table's data columns. That read then runs no job.
+        an overwrite, or an append or dynamic partition overwrite (the
+        session's ``partitionOverwriteMode``) that keeps the table's data
+        columns. That read then runs no job.
         """
         if sort_within_partitions:
             df = df.sortWithinPartitions(*sort_within_partitions)
         writer = df.write.mode(mode)
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        if dynamic_partition_overwrite:
-            # per-writer option (not the session conf): thread-safe under
-            # a parallel model runner, and scoped to exactly this write
-            writer = writer.option("partitionOverwriteMode", "dynamic")
         path = self.path(layer, name)
-        dynamic = partition_by and (
-            dynamic_partition_overwrite
-            or self.spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-            .lower() == "dynamic"
-        )
+        dynamic = partition_by and self.spark.conf.get(
+            "spark.sql.sources.partitionOverwriteMode"
+        ).lower() == "dynamic"
         with recording_write(self.spark, path, df.schema, partition_by,
                              replaces=mode == "overwrite" and not dynamic):
             writer.parquet(path)
@@ -172,9 +156,9 @@ class Catalog:
         df: DataFrame,
         layer: str,
         name: str,
+        *,
         partition_by: list[str] | None = None,
         sort_within_partitions: list[str] | None = None,
-        replace_partitions_only: bool = False,
     ) -> None:
         """Overwrite a table whose CURRENT CONTENTS feed the plan.
 
@@ -184,12 +168,6 @@ class Catalog:
         first — the read of the old data completes during this job — then
         swap. Crash before the swap leaves the original table intact, and
         the next call clears the crashed run's staging directory.
-
-        ``replace_partitions_only=True`` swaps only the hive partition
-        directories present in the staged output (the merge-into-
-        partitions scale path: a batch touching 1 day of a year-
-        partitioned table moves one directory, the other 364 are never
-        read, written, or moved).
         """
         final = self.path(layer, name)
         staging = final + "__staging"
@@ -203,28 +181,11 @@ class Catalog:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(staging)
-        if replace_partitions_only and partition_by and os.path.isdir(final):
-            depth = len(partition_by)
-            leaves = []
-            for root, dirs, _files in os.walk(staging):
-                rel = os.path.relpath(root, staging)
-                parts = [] if rel == "." else rel.split(os.sep)
-                if len(parts) == depth and all("=" in c for c in parts):
-                    leaves.append(rel)
-                    dirs[:] = []
-            for rel in leaves:
-                dst = os.path.join(final, rel)
-                if os.path.isdir(dst):
-                    shutil.rmtree(dst)
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                os.rename(os.path.join(staging, rel), dst)
-            shutil.rmtree(staging)
-        else:
-            if os.path.isdir(final):
-                os.rename(final, old)
-            os.rename(staging, final)
-            if os.path.isdir(old):
-                shutil.rmtree(old)
+        if os.path.isdir(final):
+            os.rename(final, old)
+        os.rename(staging, final)
+        if os.path.isdir(old):
+            shutil.rmtree(old)
 
     def drop(self, layer: str, name: str) -> None:
         p = self.path(layer, name)

@@ -45,6 +45,14 @@ def test_cli_ingest_run_test(spark, tmp_path, capsys):
     rc = main(["run", "--warehouse", wh, "--select", "fact_trips"])
     assert rc == 0
 
+    # each run writes the manifest a later --state compares against:
+    # nothing changed since, so state:modified selects nothing
+    capsys.readouterr()
+    rc = main(["run", "--warehouse", wh, "--state", f"{wh}/manifest.json",
+               "--select", "state:modified"])
+    assert rc == 0
+    assert "OK " not in capsys.readouterr().out
+
     rc = main(["test", "--warehouse", wh])
     assert rc == 0  # no FAILing declared tests on the trips subtree
 

@@ -1,13 +1,12 @@
-"""dbt --defer (refs resolve from a production catalog) and exposures
-(declared downstream consumers, ``exposure:`` selector) — the Slim-CI
-partners of state:modified."""
+"""dbt --defer (refs resolve from a production catalog), the Slim-CI
+partner of state:modified, plus ``build()`` and observed runs."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from dbt_repo_spark.plans.runner import Exposure, ModelRunner, model
+from dbt_repo_spark.plans.runner import ModelRunner, model
 from dbt_repo_spark.sources.catalog import Catalog
 
 
@@ -68,39 +67,6 @@ def test_defer_falls_back_when_prod_lacks_the_model(spark, tmp_path):
     assert built["c"].count() == 5
 
 
-def test_exposure_selector_builds_upstream_closure(spark, tmp_path):
-    r, _ = _runner(spark, tmp_path / "wh")
-    r.add_exposure(
-        Exposure("weekly_dash", depends_on=("c",), kind="dashboard", owner="bi")
-    )
-    built = r.run(["exposure:weekly_dash"])
-    assert set(built) == {"a", "b", "c"}
-
-
-def test_exposure_unknown_name_raises(spark, tmp_path):
-    r, _ = _runner(spark, tmp_path / "wh")
-    with pytest.raises(ValueError, match="unknown exposure"):
-        r.run(["exposure:nope"])
-
-
-def test_exposure_with_unknown_dep_rejected(spark, tmp_path):
-    r, _ = _runner(spark, tmp_path / "wh")
-    with pytest.raises(ValueError, match="unknown model deps"):
-        r.add_exposure(Exposure("bad", depends_on=("ghost",)))
-
-
-def test_exposure_composes_with_defer(spark, tmp_path):
-    # the Slim-CI shape end-to-end: prod is fully built; the exposure's
-    # upstream resolves from prod except the one model being reworked
-    prod, prod_cat = _runner(spark, tmp_path / "prod", n=5)
-    prod.run()
-    dev, _ = _runner(spark, tmp_path / "dev", n=3)
-    dev.add_exposure(Exposure("dash", depends_on=("c",)))
-    built = dev.run(["c"], defer_to=prod_cat)
-    assert set(built) == {"c"}
-    assert built["c"].count() == 5
-
-
 def test_build_interleaves_tests_and_skips_downstream(spark, tmp_path):
     """dbt build semantics: a failing error-severity test on a model
     skips its consumers; siblings still build; warn doesn't block."""
@@ -147,7 +113,6 @@ def test_build_interleaves_tests_and_skips_downstream(spark, tmp_path):
     assert status["d_warn"] == "ok"  # warn severity never blocks
     assert status["e_sibling"] == "ok"
     assert "b_child" not in built and "e_sibling" in built
-
 
 
 def test_build_tests_a_model_added_before_its_relationships_parent(spark, tmp_path):

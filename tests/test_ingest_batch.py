@@ -143,26 +143,48 @@ def test_read_media_dir_binary_file_source(spark, tmp_path):
     assert {f.name for f in feats.schema.fields} >= {"media_id", "n_bytes", "checksum"}
 
 
-def test_catalog_schema_evolution_merge(spark, tmp_path):
-    """An append under an evolved schema (new column) reads back with the
-    unified schema under merge_schema=True; old rows carry NULL."""
-    from pyspark.sql import functions as F
+def test_read_json_file_station_information_enriches_status(spark, tmp_path):
+    """S3 (src/realtime_pubsub_to_spark.py:164-184): the multiline
+    station_information file is read whole, its ``data.stations`` array
+    exploded into the station dimension, and a status batch enriched by
+    the stream's broadcast left join; a status row for a station the
+    file lacks keeps NULL metadata."""
+    from dbt_repo_spark.sources.readers import read_json_file
+    from dbt_repo_spark.streaming.ingest import enrich_with_stations
 
-    from dbt_repo_spark.sources.catalog import Catalog
+    info = {
+        "last_updated": 1735700000,
+        "ttl": 60,
+        "data": {
+            "stations": [
+                {"station_id": "st000", "name": "Torget", "lat": 59.91,
+                 "lon": 10.75, "capacity": 20},
+                {"station_id": "st001", "name": "Kaia", "lat": 59.92,
+                 "lon": 10.73, "capacity": 12},
+            ]
+        },
+    }
+    path = tmp_path / "station_information.json"
+    path.write_text(json.dumps(info, indent=2))  # one record over many lines
 
-    cat = Catalog(spark, str(tmp_path / "wh"))
-    v1 = spark.range(3).select(F.col("id"), F.lit("a").alias("tag"))
-    cat.write(v1, "raw", "evolving", mode="overwrite")
-    v2 = spark.range(3, 5).select(
-        F.col("id"), F.lit("b").alias("tag"), F.lit(1.5).alias("score")
+    raw = read_json_file(spark, str(path))
+    assert raw.count() == 1
+    stations = raw.select(F.explode("data.stations").alias("s")).select(
+        "s.station_id", "s.name", "s.capacity"
     )
-    cat.write(v2, "raw", "evolving", mode="append")
-
-    merged = cat.read("raw", "evolving", merge_schema=True)
-    assert {f.name for f in merged.schema.fields} == {"id", "tag", "score"}
-    rows = {r.id: r for r in merged.collect()}
-    assert rows[0].score is None and rows[4].score == 1.5
-    assert merged.count() == 5
+    status = spark.createDataFrame(
+        [("st000", 4), ("st001", 7), ("st009", 1)],
+        "station_id string, num_bikes_available int",
+    )
+    got = {
+        r.station_id: (r.num_bikes_available, r.name, r.capacity)
+        for r in enrich_with_stations(status, stations).collect()
+    }
+    assert got == {
+        "st000": (4, "Torget", 20),
+        "st001": (7, "Kaia", 12),
+        "st009": (1, None, None),
+    }
 
 
 def test_archive_loaded_sources_moves_then_deletes(spark, tmp_path):

@@ -224,44 +224,6 @@ def test_incremental_full_refresh(runner):
     assert built["fact_station_status_history"].count() == 20
 
 
-def test_insert_overwrite_strategy(spark, tmp_path):
-    """insert_overwrite rewrites ONLY the partitions present in the new
-    batch; untouched partitions survive."""
-    import pyspark.sql.functions as SF
-
-    from dbt_repo_spark.plans.runner import ModelRunner, model
-
-    @model(
-        "daily_counts",
-        deps=("raw_rows",),
-        materialized="incremental",
-        incremental_strategy="insert_overwrite",
-        partition_by=["d"],
-    )
-    def daily_counts(ctx) -> "DataFrame":
-        return ctx["raw_rows"].groupBy("d").agg(SF.count("*").alias("n"))
-
-    catalog = Catalog(spark, str(tmp_path / "wh"))
-    day1 = [Row(d="2025-01-01", v=i) for i in range(3)]
-    day2 = [Row(d="2025-01-02", v=i) for i in range(5)]
-    r = ModelRunner(spark, catalog, {"raw_rows": spark.createDataFrame(day1 + day2)})
-    r.add(daily_counts)
-    built = r.run()
-    assert {(str(x.d), x.n) for x in built["daily_counts"].collect()} == {
-        ("2025-01-01", 3),
-        ("2025-01-02", 5),
-    }
-    # reprocess ONLY day 2 with different contents → day 1 untouched
-    r.sources["raw_rows"] = spark.createDataFrame(
-        [Row(d="2025-01-02", v=i) for i in range(8)]
-    )
-    built = r.run()
-    assert {(str(x.d), x.n) for x in built["daily_counts"].collect()} == {
-        ("2025-01-01", 3),
-        ("2025-01-02", 8),
-    }
-
-
 def test_partitioned_layout(runner, tmp_path):
     runner.run(["fact_trips"])
     import os
@@ -381,36 +343,6 @@ def test_generic_tests_catch_violations(spark, tmp_path):
     assert not res.passed and res.violations == 1
 
 
-def test_merge_strategy_upserts(spark, tmp_path):
-    """merge: batch rows replace same-key target rows, new keys insert,
-    untouched keys survive; idempotent on re-run."""
-    from dbt_repo_spark.plans.runner import ModelRunner, model
-
-    @model(
-        "state",
-        deps=("raw_rows",),
-        materialized="incremental",
-        incremental_strategy="merge",
-        unique_key="k",
-    )
-    def state(ctx) -> "DataFrame":
-        return ctx["raw_rows"]
-
-    catalog = Catalog(spark, str(tmp_path / "wh"))
-    r = ModelRunner(
-        spark, catalog,
-        {"raw_rows": spark.createDataFrame([Row(k=1, v="a"), Row(k=2, v="b")])},
-    )
-    r.add(state)
-    assert {(x.k, x.v) for x in r.run()["state"].collect()} == {(1, "a"), (2, "b")}
-    # k=2 updated, k=3 inserted, k=1 untouched
-    r.sources["raw_rows"] = spark.createDataFrame([Row(k=2, v="B"), Row(k=3, v="c")])
-    got = {(x.k, x.v) for x in r.run()["state"].collect()}
-    assert got == {(1, "a"), (2, "B"), (3, "c")}
-    # idempotent: same batch again → same state
-    assert {(x.k, x.v) for x in r.run()["state"].collect()} == got
-
-
 def _plan_nodes(plan):
     """Every node of a physical plan (a py4j ``SparkPlan``), walking into
     AQE's current plan, query stages and reused exchanges."""
@@ -476,52 +408,6 @@ def test_incremental_append_anti_joins_the_target_keys_as_they_are(spark, tmp_pa
     assert not [
         name for name in key_side if "Aggregate" in name or name == "Exchange"
     ], key_side
-
-
-def test_merge_strategy_partition_scoped(spark, tmp_path):
-    """Partitioned merge physically rewrites only the partitions the batch
-    touches: the untouched partition's files keep their inodes."""
-    import os
-
-    from dbt_repo_spark.plans.runner import ModelRunner, model
-
-    @model(
-        "part_state",
-        deps=("raw_rows",),
-        materialized="incremental",
-        incremental_strategy="merge",
-        unique_key="k",
-        partition_by=["d"],
-    )
-    def part_state(ctx) -> "DataFrame":
-        return ctx["raw_rows"]
-
-    catalog = Catalog(spark, str(tmp_path / "wh"))
-    r = ModelRunner(
-        spark, catalog,
-        {"raw_rows": spark.createDataFrame(
-            [Row(k=1, v="a", d="2025-01-01"), Row(k=2, v="b", d="2025-01-02")]
-        )},
-    )
-    r.add(part_state)
-    r.run()
-    tdir = catalog.path("analytics", "part_state")
-
-    def inodes(day):
-        p = os.path.join(tdir, f"d={day}")
-        return {f: os.stat(os.path.join(p, f)).st_ino
-                for f in os.listdir(p) if f.startswith("part-")}
-
-    day1_before = inodes("2025-01-01")
-    # batch touches only day 2 (update k=2, insert k=3)
-    r.sources["raw_rows"] = spark.createDataFrame(
-        [Row(k=2, v="B", d="2025-01-02"), Row(k=3, v="c", d="2025-01-02")]
-    )
-    got = {(x.k, x.v, str(x.d)) for x in r.run()["part_state"].collect()}
-    assert got == {
-        (1, "a", "2025-01-01"), (2, "B", "2025-01-02"), (3, "c", "2025-01-02"),
-    }
-    assert inodes("2025-01-01") == day1_before, "untouched partition was rewritten"
 
 
 def test_full_dag_runs_parallel_matches_sequential(runner):
@@ -704,25 +590,6 @@ def test_models_the_skip_rule_cannot_sign_are_always_rebuilt(spark, tmp_path):
     assert "plain" in rewritten()
     assert "plain" not in rewritten()
     assert "plain" in rewritten(full_refresh=True)
-
-
-def test_contract_is_checked_before_the_skip(spark, tmp_path):
-    """Re-adding a model with an unchanged builder and a contract its
-    output violates raises, though nothing it reads has changed."""
-    from dbt_repo_spark.plans.runner import model
-
-    cat = Catalog(spark, str(tmp_path / "wh"))
-    cat.write(spark.range(4), "raw", "src")
-
-    def fn(ctx):
-        return ctx["src"]
-
-    r = ModelRunner(spark, cat, {"src": cat.read("raw", "src")})
-    r.add(model("t", deps=("src",), materialized="table", contract={"id": "bigint"})(fn))
-    r.run()
-    r.add(model("t", deps=("src",), materialized="table", contract={"id": "int"})(fn))
-    with pytest.raises(ValueError, match="contract violation"):
-        r.run()
 
 
 def test_fused_row_local_tests_match_per_test_functions(spark):

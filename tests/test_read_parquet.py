@@ -148,22 +148,34 @@ def test_recorded_schema_equals_the_plain_read_over_a_type_zoo(spark, tmp_path):
     timestamp_ntz, binary, map, array<struct> and nested struct columns,
     partitioned by int, date and string columns, the read's schema and
     rows equal ``spark.read.parquet``'s. Writes whose files determine
-    the schema read with 0 jobs; the wider-schema append, whose do not,
-    infers (1 job)."""
+    the schema read with 0 jobs; the wider-schema writes, whose do not,
+    infer (1 job). The dynamic partition overwrites, and the reads after
+    them, run under the session's ``partitionOverwriteMode=dynamic``."""
     cat = Catalog(spark, str(tmp_path / "wh"))
     root = cat.path("raw", "zoo")
     writes = [
-        ("overwrite", _zoo(spark, 0, 6), {}, 0),
-        ("append", _zoo(spark, 6, 4), {"mode": "append"}, 0),
-        ("dynamic partition overwrite", _zoo(spark, 10, 2),
-         {"dynamic_partition_overwrite": True}, 0),
+        ("overwrite", _zoo(spark, 0, 6), "overwrite", False, 0),
+        ("append", _zoo(spark, 6, 4), "append", False, 0),
+        ("dynamic partition overwrite", _zoo(spark, 10, 2), "overwrite", True, 0),
+        ("wider-schema dynamic partition overwrite",
+         _zoo(spark, 12, 2).withColumn("extra", F.col("pi") * 2), "overwrite", True, 1),
         ("wider-schema append",
-         _zoo(spark, 12, 3).withColumn("extra", F.col("pi") * 2),
-         {"mode": "append"}, 1),
+         _zoo(spark, 14, 3).withColumn("extra", F.col("pi") * 2), "append", False, 1),
     ]
-    for what, df, options, jobs in writes:
-        cat.write(df, "raw", "zoo", partition_by=ZOO_PARTS, **options)
-        got, n = _jobs(spark, lambda: cat.read("raw", "zoo"))
+    key = "spark.sql.sources.partitionOverwriteMode"
+    for what, df, mode, dynamic, jobs in writes:
+        if dynamic:
+            old = spark.conf.get(key)
+            spark.conf.set(key, "dynamic")
+            # the conf is part of the read key: read once under it, so
+            # the write starts from a current entry
+            cat.read("raw", "zoo")
+        try:
+            cat.write(df, "raw", "zoo", mode=mode, partition_by=ZOO_PARTS)
+            got, n = _jobs(spark, lambda: cat.read("raw", "zoo"))
+        finally:
+            if dynamic:
+                spark.conf.set(key, old)
         plain = spark.read.parquet(root)
         assert got.schema == plain.schema, what
         assert sorted(map(str, got.collect())) == sorted(map(str, plain.collect())), what

@@ -1,7 +1,7 @@
-"""dbt-parity runner features added round 3: graph selectors
-(``name+`` downstream closure, ``tag:``) and incremental
-``on_schema_change`` drift policies (ignore / append_new_columns /
-fail) on immutable parquet.
+"""Runner selection and schema rules: graph selectors (``name+``
+downstream closure, ``tag:``, ``state:modified``), model fingerprints,
+and the alignment of a drifted incremental batch to its target on
+immutable parquet.
 """
 
 from __future__ import annotations
@@ -55,27 +55,18 @@ def test_selector_tag(spark, tmp_path):
     assert set(r.run(["tag:nope"])) == set()
 
 
-def _incremental_runner(spark, tmp_path, frame, on_schema_change):
-    holder = {"df": frame}
-
-    @model(
-        "inc",
-        deps=("src",),
-        materialized="incremental",
-        unique_key="k",
-        on_schema_change=on_schema_change,
-    )
+def _incremental_runner(spark, tmp_path, frame):
+    @model("inc", deps=("src",), materialized="incremental", unique_key="k")
     def inc(ctx):
         return ctx["src"]
 
     cat = Catalog(spark, str(tmp_path / "wh"))
-    r = ModelRunner(spark, cat, {"src": holder["df"]}).add(inc)
-    return r, holder
+    return ModelRunner(spark, cat, {"src": frame}).add(inc)
 
 
-def test_on_schema_change_ignore(spark, tmp_path):
+def test_incremental_drifted_columns_align_to_target(spark, tmp_path):
     batch1 = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
-    r, _ = _incremental_runner(spark, tmp_path, batch1, "ignore")
+    r = _incremental_runner(spark, tmp_path, batch1)
     r.run(["inc"])
     # drifted batch: new column `extra`, column `v` gone
     batch2 = spark.createDataFrame([(3, 9.5)], "k int, extra double")
@@ -87,54 +78,6 @@ def test_on_schema_change_ignore(spark, tmp_path):
     assert rows == {1: "a", 2: "b", 3: None}
 
 
-def test_on_schema_change_append_new_columns(spark, tmp_path):
-    batch1 = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
-    r, _ = _incremental_runner(spark, tmp_path, batch1, "append_new_columns")
-    r.run(["inc"])
-    batch2 = spark.createDataFrame([(3, "c", 9.5)], "k int, v string, extra double")
-    r.sources["src"] = batch2
-    out = r.run(["inc"])["inc"]
-    # schema evolved; pre-drift rows surface NULL for the new column
-    assert set(out.columns) == {"k", "v", "extra"}
-    rows = {row.k: (row.v, row.extra) for row in out.collect()}
-    assert rows == {1: ("a", None), 2: ("b", None), 3: ("c", 9.5)}
-    # anti-join still dedupes on later identical runs (evolved read path)
-    assert r.run(["inc"])["inc"].count() == 3
-
-
-def test_on_schema_change_fail(spark, tmp_path):
-    batch1 = spark.createDataFrame([(1, "a")], "k int, v string")
-    r, _ = _incremental_runner(spark, tmp_path, batch1, "fail")
-    r.run(["inc"])
-    r.sources["src"] = spark.createDataFrame([(2, 1.0)], "k int, extra double")
-    with pytest.raises(ValueError, match="schema drift"):
-        r.run(["inc"])
-
-
-def test_on_schema_change_merge_strategy_evolves(spark, tmp_path):
-    @model(
-        "um",
-        deps=("src",),
-        materialized="incremental",
-        unique_key="k",
-        incremental_strategy="merge",
-        on_schema_change="append_new_columns",
-    )
-    def um(ctx):
-        return ctx["src"]
-
-    cat = Catalog(spark, str(tmp_path / "wh"))
-    b1 = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
-    r = ModelRunner(spark, cat, {"src": b1}).add(um)
-    r.run(["um"])
-    # upsert k=2 with a new column
-    b2 = spark.createDataFrame([(2, "B", 7.0)], "k int, v string, extra double")
-    r.sources["src"] = b2
-    out = r.run(["um"])["um"]
-    rows = {row.k: (row.v, row.extra) for row in out.collect()}
-    assert rows == {1: ("a", None), 2: ("B", 7.0)}
-
-
 def test_selector_downstream_not_pruned_by_earlier_token(spark, tmp_path):
     """`run(["b", "a+"])` must still reach c: the traversal may not stop
     at b just because an earlier token already selected it."""
@@ -142,150 +85,18 @@ def test_selector_downstream_not_pruned_by_earlier_token(spark, tmp_path):
     assert set(r.run(["b", "a+"])) == {"a", "b", "c"}
 
 
-def test_on_schema_change_type_only_drift_casts_to_target(spark, tmp_path):
+def test_incremental_type_only_drift_casts_to_target(spark, tmp_path):
     """Same column NAMES but a drifted TYPE must not append a
     type-incompatible file: the batch column is cast to the target's
-    type (documented contract), keeping the table schema single."""
+    type, keeping the table schema single."""
     batch1 = spark.createDataFrame([(1, "a")], "k int, v string")
-    r, _ = _incremental_runner(spark, tmp_path, batch1, "ignore")
+    r = _incremental_runner(spark, tmp_path, batch1)
     r.run(["inc"])
     r.sources["src"] = spark.createDataFrame([(2, 7.5)], "k int, v double")
     out = r.run(["inc"])["inc"]
     assert dict(out.dtypes)["v"] == "string"
     rows = {row.k: row.v for row in out.collect()}
     assert rows == {1: "a", 2: "7.5"}
-
-
-def test_on_schema_change_applies_to_insert_overwrite(spark, tmp_path):
-    """insert_overwrite must honor the drift policy too — 'fail' raises
-    instead of overwriting partitions with a forked schema."""
-
-    @model(
-        "iow",
-        deps=("src",),
-        materialized="incremental",
-        incremental_strategy="insert_overwrite",
-        partition_by=["p"],
-        on_schema_change="fail",
-    )
-    def iow(ctx):
-        return ctx["src"]
-
-    cat = Catalog(spark, str(tmp_path / "wh"))
-    b1 = spark.createDataFrame([(1, "x", "a")], "k int, v string, p string")
-    r = ModelRunner(spark, cat, {"src": b1}).add(iow)
-    r.run(["iow"])
-    r.sources["src"] = spark.createDataFrame(
-        [(2, "y", 1.0, "b")], "k int, v string, extra double, p string"
-    )
-    with pytest.raises(ValueError, match="schema drift"):
-        r.run(["iow"])
-
-
-def test_on_schema_change_insert_overwrite_ignore_aligns(spark, tmp_path):
-    @model(
-        "iow2",
-        deps=("src",),
-        materialized="incremental",
-        incremental_strategy="insert_overwrite",
-        partition_by=["p"],
-        on_schema_change="ignore",
-    )
-    def iow2(ctx):
-        return ctx["src"]
-
-    cat = Catalog(spark, str(tmp_path / "wh"))
-    b1 = spark.createDataFrame([(1, "x", "a")], "k int, v string, p string")
-    r = ModelRunner(spark, cat, {"src": b1}).add(iow2)
-    r.run(["iow2"])
-    # drifted batch for partition b: extra col dropped, v missing -> NULL
-    r.sources["src"] = spark.createDataFrame(
-        [(2, 1.0, "b")], "k int, extra double, p string"
-    )
-    out = r.run(["iow2"])["iow2"]
-    assert set(out.columns) == {"k", "v", "p"}
-    rows = {row.k: (row.v, row.p) for row in out.collect()}
-    assert rows == {1: ("x", "a"), 2: (None, "b")}
-
-
-def _mb_runner(spark, tmp_path, frame, lookback=1):
-    @model(
-        "mb",
-        deps=("src",),
-        materialized="incremental",
-        incremental_strategy="microbatch",
-        event_time="ts",
-        batch_size="day",
-        lookback=lookback,
-    )
-    def mb(ctx):
-        return ctx["src"]
-
-    cat = Catalog(spark, str(tmp_path / "wh"))
-    return ModelRunner(spark, cat, {"src": frame}).add(mb)
-
-
-def _mb_frame(spark, rows):
-    return spark.createDataFrame(rows, "k int, v string, ts timestamp")
-
-
-def test_microbatch_first_run_and_idempotent(spark, tmp_path):
-    import datetime as dt
-
-    d1, d2 = dt.datetime(2024, 1, 1, 5), dt.datetime(2024, 1, 2, 6)
-    r = _mb_runner(spark, tmp_path, _mb_frame(spark, [(1, "a", d1), (2, "b", d2)]))
-    out = r.run(["mb"])["mb"]
-    assert out.count() == 2 and "batch_period" in out.columns
-    # identical rerun rewrites the newest period with identical rows
-    assert r.run(["mb"])["mb"].count() == 2
-
-
-def test_microbatch_lookback_shields_old_periods(spark, tmp_path):
-    """A replayed feed that MUTATES an old period must not resurrect it:
-    only the lookback window (anchored on the input's max event time)
-    is rewritten; stale periods in the input are dropped."""
-    import datetime as dt
-
-    d1, d2, d3 = (dt.datetime(2024, 1, i, 12) for i in (1, 2, 3))
-    r = _mb_runner(
-        spark, tmp_path, _mb_frame(spark, [(1, "a", d1), (2, "b", d2)]), lookback=1
-    )
-    r.run(["mb"])
-    # replay: day1 row MUTATED (should be ignored), day3 new (written)
-    r.sources["src"] = _mb_frame(
-        spark, [(1, "MUTATED", d1), (3, "c", d3)]
-    )
-    out = r.run(["mb"])["mb"]
-    rows = {row.k: row.v for row in out.collect()}
-    assert rows == {1: "a", 2: "b", 3: "c"}  # day1 untouched
-
-
-def test_microbatch_lookback_two_rewrites_two_periods(spark, tmp_path):
-    import datetime as dt
-
-    d1, d2, d3 = (dt.datetime(2024, 1, i, 12) for i in (1, 2, 3))
-    r = _mb_runner(
-        spark, tmp_path,
-        _mb_frame(spark, [(1, "a", d1), (2, "b", d2), (3, "c", d3)]),
-        lookback=2,
-    )
-    r.run(["mb"])
-    # replay mutates day2 (inside lookback-of-2 from day3) and day1 (outside)
-    r.sources["src"] = _mb_frame(
-        spark, [(1, "MUT", d1), (2, "B2", d2), (3, "c", d3)]
-    )
-    out = r.run(["mb"])["mb"]
-    rows = {row.k: row.v for row in out.collect()}
-    assert rows == {1: "a", 2: "B2", 3: "c"}
-
-
-def test_microbatch_requires_event_time():
-    with pytest.raises(ValueError, match="needs event_time"):
-        model(
-            "bad",
-            materialized="incremental",
-            incremental_strategy="microbatch",
-        )(lambda ctx: None)
 
 
 def test_data_test_severity_and_thresholds(spark, tmp_path):
@@ -322,37 +133,6 @@ def test_data_test_severity_and_thresholds(spark, tmp_path):
     )
     assert res.warned and res.stored_at is not None
     assert cat.read(*res.stored_at.split(".")).count() == 2
-
-
-def test_model_contract_enforced(spark, tmp_path):
-    from dbt_repo_spark.plans.runner import ModelRunner, model
-
-    @model(
-        "con",
-        deps=("src",),
-        materialized="table",
-        contract={"k": "bigint", "twice": "bigint"},
-    )
-    def con(ctx):
-        return ctx["src"].select("k", (F.col("k") * 2).alias("twice"))
-
-    cat = Catalog(spark, str(tmp_path / "wh"))
-    src = spark.range(3).withColumnRenamed("id", "k")
-    r = ModelRunner(spark, cat, {"src": src}).add(con)
-    assert set(r.run(["con"])["con"].columns) == {"k", "twice"}
-
-    @model(
-        "con2",
-        deps=("src",),
-        materialized="table",
-        contract={"k": "bigint", "twice": "bigint"},
-    )
-    def con2(ctx):
-        return ctx["src"].select("k", (F.col("k") * 2.0).alias("twice"))  # double!
-
-    r.add(con2)
-    with pytest.raises(ValueError, match="contract violation"):
-        r.run(["con2"])
 
 
 def test_state_modified_selection(spark, tmp_path):
