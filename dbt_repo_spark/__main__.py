@@ -287,19 +287,13 @@ def cmd_optimize(args) -> int:
         from dbt_repo_spark.operators.layout import zorder_layout
 
         df = catalog.read(args.layer, args.table)
-        out = zorder_layout(df, args.zorder, num_files=args.target_files)
-        out = out.localCheckpoint(eager=True)  # plan reads the table it replaces
-        catalog.write(
-            out,
-            args.layer,
-            args.table,
-            mode="overwrite",
-            # a clustered rewrite is exactly when zone maps pay off:
-            # refresh the manifest on the new file layout
-            zone_map_cols=args.zorder,
+        # the plan reads the table it replaces: staged write, then swap
+        catalog.overwrite_staged(
+            zorder_layout(df, args.zorder, num_files=args.target_files),
+            args.layer, args.table,
         )
         print(f"{args.layer}.{args.table}: z-ordered on {args.zorder} "
-              f"into {args.target_files} files (+zone map)")
+              f"into {args.target_files} files")
         return 0
     n = catalog.compact(
         args.layer, args.table,

@@ -5,20 +5,13 @@ struct; per-item decode / feature-extract / resize / frame-sample run as
 Arrow-batched ``mapInPandas`` stages (the only place Python is allowed in
 this engine — decode is inherently a Python/native-lib boundary).
 
-Decode comes in TWO tiers:
-
-- ``real_decode`` (r07): genuine stdlib parsers for the uncompressed
-  container formats — RIFF/PCM16 WAV, 24-bit BI_RGB BMP, P6 PPM
-  (operators/media_codecs.py) — bytes-in → typed values out, strict
-  errors on corrupt blobs. ``real_media_from_documents`` builds
-  deterministic blobs in those formats from the documents table, so the
-  decoded dimensions / durations / channel means are value-checkable
-  against a SQL oracle end to end.
-- ``fake_decode``: a clearly-marked deterministic stand-in kept ONLY for
-  formats that genuinely need external codec libraries not in this
-  container (JPEG/PNG/video); swap in a codec-backed decoder via the
-  same signature in production. The Spark-side plumbing — schema, Arrow
-  batch shape, partition sizing — is identical for both tiers.
+Decode uses genuine stdlib parsers for the uncompressed container
+formats — RIFF/PCM16 WAV, 24-bit BI_RGB BMP, P6 PPM
+(operators/media_codecs.py) — bytes-in → typed values out, strict errors
+on corrupt blobs. ``real_media_from_documents`` builds deterministic
+blobs in those formats from the documents table, so the decoded
+dimensions / durations / channel means are value-checkable against a SQL
+oracle end to end.
 
 Scale notes: binary payloads dominate partition size, so callers should
 ``repartition`` by a size-aware key or set ``maxRecordsPerBatch`` low
@@ -29,9 +22,7 @@ pruning drops the blob bytes at the parquet scan).
 
 from __future__ import annotations
 
-import hashlib
-import zlib
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -40,10 +31,8 @@ from pyspark.sql import functions as F
 from dbt_repo_spark.operators.ids import SYNTH_ID_TAG as TWIN_TAG
 from dbt_repo_spark.session import fan_out
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
     DoubleType,
-    FloatType,
     IntegerType,
     LongType,
     StringType,
@@ -59,127 +48,6 @@ MEDIA_SCHEMA = StructType(
     ]
 )
 
-MEDIA_FEATURE_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("media_type", StringType(), False),
-        StructField("n_bytes", LongType(), False),
-        StructField("checksum", StringType(), False),
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-        StructField("features", ArrayType(FloatType()), True),
-    ]
-)
-
-
-def fake_decode(content: bytes, media_type: str) -> dict:
-    """STUB decoder — deterministic fake standing in for PIL/ffmpeg.
-
-    Real deployments replace this with an actual codec call; everything
-    else in the pipeline (schema, batching, partitioning) is unchanged.
-    Derives pseudo width/height from a crc and a 8-dim byte-histogram
-    "feature vector", so outputs are stable across runs and machines.
-    """
-    if content is None:
-        return {"n_bytes": 0, "checksum": "", "width": None, "height": None, "features": None}
-    crc = zlib.crc32(content)
-    hist = [0] * 8
-    for b in content:
-        hist[b & 7] += 1
-    total = max(len(content), 1)
-    return {
-        "n_bytes": len(content),
-        "checksum": hashlib.md5(content).hexdigest(),
-        "width": 16 + (crc & 0xFF) if media_type == "image" else None,
-        "height": 16 + ((crc >> 8) & 0xFF) if media_type == "image" else None,
-        "features": [h / total for h in hist],
-    }
-
-
-def real_decode(content: bytes, media_type: str = "") -> dict:
-    """REAL decoder for the stdlib-parseable container formats (WAV /
-    BMP / PPM — operators/media_codecs.py). Dispatches on MAGIC BYTES,
-    not the metadata column (a mislabeled blob must fail loudly), and
-    returns the same dict contract as ``fake_decode`` so the two tiers
-    are drop-in interchangeable behind ``extract_media_features``:
-
-    - images: width/height real; features = per-channel means scaled to
-      [0, 1] ([mean_r, mean_g, mean_b] / 255).
-    - audio: width/height None; features = [mean, rms] of the int16
-      samples scaled to [-1, 1].
-
-    Raises ``ValueError`` on unrecognized or corrupt payloads — formats
-    needing external codec libs (JPEG/video) are NOT silently faked; use
-    ``fake_decode`` explicitly for those pipelines.
-    """
-    from dbt_repo_spark.operators import media_codecs
-
-    if content is None:
-        return {"n_bytes": 0, "checksum": "", "width": None, "height": None, "features": None}
-    blob = bytes(content)
-    d = media_codecs.decode_any(blob)
-    base = {"n_bytes": len(blob), "checksum": hashlib.md5(blob).hexdigest()}
-    if d["format"] in ("bmp", "ppm"):
-        n = d["n_pixels"]
-        return {
-            **base,
-            "width": d["width"],
-            "height": d["height"],
-            "features": [
-                d["sum_r"] / n / 255.0,
-                d["sum_g"] / n / 255.0,
-                d["sum_b"] / n / 255.0,
-            ],
-        }
-    ns = d["n_samples"]
-    return {
-        **base,
-        "width": None,
-        "height": None,
-        "features": [
-            d["sample_sum"] / ns / 32768.0,
-            (d["sample_sumsq"] / ns) ** 0.5 / 32768.0,
-        ],
-    }
-
-
-def extract_media_features(
-    media: DataFrame,
-    decode_fn: Callable[[bytes, str], dict] = fake_decode,
-    id_col: str = "media_id",
-    type_col: str = "media_type",
-    content_col: str = "content",
-) -> DataFrame:
-    """Arrow-batched decode/feature-extract over a binary media column.
-
-    ``mapInPandas`` keeps the blobs in Arrow buffers end-to-end (no
-    per-row pickling); each batch yields one metadata frame with the blob
-    column dropped — downstream plans never carry the bytes again.
-    """
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, mtype, blob in zip(pdf[id_col], pdf[type_col], pdf[content_col]):
-                blob_bytes = bytes(blob) if blob is not None else None
-                d = decode_fn(blob_bytes, mtype)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "media_type": mtype,
-                        "n_bytes": d["n_bytes"],
-                        "checksum": d["checksum"],
-                        "width": d["width"],
-                        "height": d["height"],
-                        "features": d["features"],
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in MEDIA_FEATURE_SCHEMA.fields])
-
-    return fan_out(media.select(id_col, type_col, content_col)).mapInPandas(
-        decode_batches, schema=MEDIA_FEATURE_SCHEMA
-    )
-
 
 def sample_frames(
     media: DataFrame,
@@ -189,7 +57,7 @@ def sample_frames(
 ) -> DataFrame:
     """Frame-sampling shape: one row per sampled offset of each blob.
 
-    For video this is where a real decoder would emit keyframes; the fake
+    For video this is where a real decoder would emit keyframes; this
     samples fixed byte offsets. Pure Spark: posexplode over an offset
     array computed from the blob length — no Python.
     """
@@ -276,8 +144,8 @@ def real_media_from_documents(docs: DataFrame) -> DataFrame:
     """Media table with REAL container-format blobs, one per document.
 
     Arrow-batched generation (mapInPandas) — at scale this stage stands
-    in for the binaryFile landing scan (sources/readers.py::
-    read_media_dir); everything downstream of it is production-shaped.
+    in for a binaryFile landing scan; everything downstream of it is
+    production-shaped.
     """
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

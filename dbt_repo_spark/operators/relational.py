@@ -40,14 +40,6 @@ def top_k_per_group(
     return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") <= k).drop("__rn")
 
 
-def date_spine(lo: Column, hi: Column) -> Column:
-    """J7: BQ ``unnest(generate_date_array(lo, hi))`` as an explode-able array.
-
-    Reference: models/dimensions/dim_date.sql:17-19.
-    """
-    return F.explode(F.sequence(lo, hi, F.expr("interval 1 day")))
-
-
 def asof_join(
     probe: DataFrame,
     reference: DataFrame,
@@ -286,7 +278,7 @@ def collapse_runs(
     with the same ``state_col`` per key into one row per run. The
     change-log compaction for snapshot-shaped streams (a sensor
     reporting the same state 10k times becomes one row per state
-    change) — the batch twin of streaming ``changes_only``.
+    change).
 
     Two windows over ONE shuffle on ``keys`` (same partitioning, sort
     reused): a lag marks change points, a running sum of change flags

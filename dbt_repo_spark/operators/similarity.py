@@ -33,10 +33,6 @@ def dot(a: Column, b: Column) -> Column:
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / F.sqrt(dot(a, a) * dot(b, b))
-
-
 def _normalized(df: DataFrame, id_out: str, vec_out: str, id_col: str, vec_col: str) -> DataFrame:
     """Project (id, unit-normalized double vector).
 
@@ -354,7 +350,7 @@ def ivf_topk(
             .orderBy("id")
             .limit(n_centroids)
             .collect()
-        ]  # stand-in codebook; pass train_centroids(...) output for a real one
+        ]  # stand-in codebook; pass a trained one for a real corpus
     centroids = [
         (i, F.array(*[F.lit(float(x)) for x in vec]))
         for i, vec in enumerate(codebook)
@@ -736,75 +732,6 @@ def preprocess_vectors(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     )
 
 
-def train_centroids(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int = 16,
-    iters: int = 2,
-    sample_mod: int = 1,
-) -> list[list[float]]:
-    """Distributed Lloyd iterations for the IVF codebook.
-
-    Seeds from the first ``n_centroids`` vectors (deterministic), then
-    refines: assignment is the same Arrow/NumPy matmul the IVF probe path
-    uses; the centroid update posexplodes assigned vectors to
-    (cluster, dim_idx, val) rows and means them — the shuffle carries
-    O(n_centroids x dim) groups regardless of corpus size, which is the
-    scale-safe way to average vectors without collecting them. Train on a
-    SAMPLE at 100 TB (``sample_mod`` keeps every k-th vector by id hash):
-    codebook quality needs thousands of points per centroid, not the
-    whole corpus. Returns the codebook as plain Python lists (a few KB)
-    to inline as literals downstream.
-
-    Honest measurement on the driver's SYNTHETIC embeddings (isotropic,
-    500 vectors): trained and stand-in codebooks tie at nprobe=4 (0.92
-    recall) and training is WORSE at nprobe=1-2 — k-means on
-    structure-free data tightens cells and splits query neighborhoods
-    across boundaries. The trainer exists for real corpora, where
-    embeddings cluster and the codebook must follow the density; on
-    isotropic data the probe fraction alone governs recall.
-    """
-    import numpy as np
-    import pandas as pd
-
-    # SPHERICAL k-means: cosine assignment is a dot against unit vectors,
-    # so train on normalized inputs and re-normalize means every round —
-    # training on raw vectors optimizes euclidean structure the cosine
-    # probe never sees (measured: it made recall slightly WORSE).
-    src = _normalized(emb, "id", "v", id_col, vec_col)
-    if sample_mod > 1:
-        src = src.filter(F.pmod(F.xxhash64("id"), F.lit(sample_mod)) == 0)
-    src = src.localCheckpoint(eager=True)  # reused every iteration
-    cmat = np.array(
-        [r.v for r in src.orderBy("id").limit(n_centroids).collect()],
-        dtype=np.float64,
-    )
-    for _ in range(iters):
-        cmat_b = cmat
-
-        def assign(batches):
-            for pdf in batches:
-                mat = np.array(list(pdf["v"]), dtype=np.float64)
-                cl = np.argmax(mat @ cmat_b.T, axis=1).astype("int32")
-                yield pd.DataFrame({"cluster": cl, "v": pdf["v"]})
-
-        assigned = src.mapInPandas(assign, schema="cluster int, v array<double>")
-        means = (
-            assigned.select("cluster", F.posexplode("v").alias("dim", "val"))
-            .groupBy("cluster", "dim")
-            .agg(F.avg("val").alias("m"))
-            .collect()
-        )
-        new = cmat.copy()  # clusters that lost all members keep old center
-        for r in means:
-            new[r["cluster"]][r["dim"]] = r["m"]
-        norms = np.sqrt((new * new).sum(axis=1))
-        norms[norms == 0] = 1.0
-        cmat = new / norms[:, None]
-    return [list(map(float, row)) for row in cmat]
-
-
 _PQ_BOOK_CACHE: dict = {}
 
 
@@ -1065,9 +992,8 @@ def semantic_dedup(
     uses 50k clusters for LAION-scale) so cluster SIZE stays ~constant;
     total work is O(n_clusters x avg_size²) with one shuffle on the int
     cluster key. The codebook comes from ``ivf_retrain``'s order-exact
-    spherical Lloyd (r07; train_centroids remains the float-mean
-    variant for callers that don't need cross-engine parity) and is
-    inlined as literals — no training shuffle in this plan.
+    spherical Lloyd (r07) and is inlined as literals — no training
+    shuffle in this plan.
 
     Self-validation: intra-cluster qualifying pairs are a SUBSET of the
     exact all-pairs near-dup set by construction, so pair_recall =
@@ -1087,9 +1013,9 @@ def semantic_dedup(
 
     # ORACLE PARITY (r07): the codebook comes from ivf_retrain's
     # order-exact spherical Lloyd (DECIMAL-folded component means,
-    # sequential-fold assignment dots) instead of train_centroids'
-    # float-mean variant — bit-identical across engines and therefore
-    # unrollable in the dedup_semantic oracle. Normalization below is
+    # sequential-fold assignment dots) instead of float means —
+    # bit-identical across engines and therefore unrollable in the
+    # dedup_semantic oracle. Normalization below is
     # the dim-sequential column loop (≡ the SQL left fold); only the
     # cluster argmax stays in BLAS (ulp-tie argument as in ivf_topk).
     codebook = ivf_retrain(
@@ -1189,8 +1115,7 @@ def embed_text_stub(
     component j of a text's vector derives from md5(text || ':' || j),
     mapped to [-1, 1) and L2-normalized. Swap the inner function for a
     real encoder (sentence-transformers, an inference endpoint) with
-    the same signature in production — the multimodal ``real_decode``
-    seam contract applied to text. Deterministic by construction:
+    the same signature in production. Deterministic by construction:
     identical text → identical vector, any partitioning, any engine.
 
     Output: (id, embedding array<float>, norm_prenorm double). The

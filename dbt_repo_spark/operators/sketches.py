@@ -3,54 +3,17 @@
 The reference computes distincts directly (dim_stations dedup,
 models/dimensions/dim_stations.sql:5-19); at 100 TB the dashboard-grade
 pattern is a SKETCH TABLE: aggregate each day's keys into a fixed-size
-Apache DataSketches HLL once at ingest, persist the binary sketch next to
-the date, and answer "distinct users over any date range" by unioning a
-handful of KB-sized sketches — no rescan of the fact, no shuffle of the
-key set, error ~1-2% at lgK=12. Sketch union is associative/commutative,
-so partial sketches merge map-side exactly like partial sums.
+HyperLogLog once at ingest (``hll_portable_sketch_table``), persist the
+sketch next to the date, and answer "distinct users over any date range"
+by unioning a handful of KB-sized sketches — no rescan of the fact, no
+shuffle of the key set. Sketch union is associative/commutative, so
+partial sketches merge map-side exactly like partial sums.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def distinct_sketch_table(
-    df: DataFrame,
-    key: str,
-    time_col: str,
-    grain: str = "day",
-    lgk: int = 12,
-) -> DataFrame:
-    """Per-period HLL sketches of ``key``: (period, n_rows, sketch binary).
-
-    One hash-agg pass; the output is period-cardinality-sized and each
-    sketch is a few KB regardless of key cardinality. Persist this next
-    to the fact table and maintain it incrementally (a new day appends
-    one row; a restated partition overwrites one row).
-    """
-    period = F.date_trunc(grain, F.col(time_col)).alias("period")
-    return df.groupBy(period).agg(
-        F.count("*").alias("n_rows"),
-        F.hll_sketch_agg(key, F.lit(lgk)).alias("sketch"),
-    )
-
-
-def union_distinct_estimate(
-    sketches: DataFrame,
-    period_pred: Column | None = None,
-    sketch_col: str = "sketch",
-) -> DataFrame:
-    """Distinct estimate over an arbitrary period range by sketch union.
-
-    Scans only the sketch table (|periods| rows × KB), never the fact.
-    """
-    if period_pred is not None:
-        sketches = sketches.filter(period_pred)
-    return sketches.agg(
-        F.hll_sketch_estimate(F.hll_union_agg(sketch_col)).alias("approx_distinct")
-    )
 
 
 def heavy_hitters(df: DataFrame, key_col: str, theta: float = 0.001) -> DataFrame:
@@ -104,90 +67,6 @@ def heavy_hitters(df: DataFrame, key_col: str, theta: float = 0.001) -> DataFram
         .groupBy(key_col)
         .agg(F.count("*").alias("cnt"))
         .filter(F.col("cnt") > theta * n)
-    )
-
-
-def quantile_sketch_table(
-    df: DataFrame,
-    key_cols: list[str],
-    value_col: str,
-    time_col: str,
-    grain: str = "day",
-    k: int = 32,
-) -> DataFrame:
-    """Per-(keys, period) quantile-grid sketches: (keys, period, n_rows,
-    grid) where ``grid`` holds the k+1 evenly-spaced quantiles of
-    ``value_col`` (a compressed CDF; rank error ≤ 1/k per sketch, plus
-    percentile_approx's own bounded error while building).
-
-    The quantile analogue of ``distinct_sketch_table``: one hash-agg pass
-    at ingest, output sized by group count not data size, maintained
-    incrementally (a restated partition overwrites one row). Spark ships
-    no storable quantile sketch (approx_percentile's summary is
-    plan-internal), so the stored form is the grid itself — unlike raw
-    percentiles, grids ARE mergeable with bounded error because each
-    carries its row count (see ``merge_quantile_estimate``).
-    """
-    probs = F.array(*[F.lit(i / k) for i in range(k + 1)])
-    period = F.date_trunc(grain, F.col(time_col)).alias("period")
-    return df.groupBy(*key_cols, period).agg(
-        F.count("*").alias("n_rows"),
-        F.percentile_approx(value_col, probs, F.lit(10000)).alias("grid"),
-    )
-
-
-def merge_quantile_estimate(
-    sketches: DataFrame,
-    key_cols: list[str],
-    probs: list[float],
-) -> DataFrame:
-    """Quantiles over any union of sketch rows — without rescanning facts.
-
-    Each grid cell [g_{i-1}, g_i] holds n_rows/k of its group's mass;
-    assigning that weight to the cell's upper endpoint makes each sketch a
-    weighted empirical CDF, and merging is just pooling the weighted
-    points: sort per rollup key, running-sum the weights, and read the
-    smallest point whose cumulative mass reaches p·total. Work is
-    O(|sketch rows| × (k+1)) — periods times a constant, NOT data size;
-    the per-key window runs over that tiny pooled relation.
-
-    Rank error: ≤ 1/k per source sketch (weight quantized to its upper
-    endpoint) — the merged estimate stays within max_g(1/k_g) ranks of
-    exact, independent of how many sketches pool.
-
-    Output: one row per (keys, prob): (keys..., prob, value_est).
-    """
-    from pyspark.sql import Window
-
-    pts = (
-        sketches.select(
-            *key_cols,
-            F.col("n_rows"),
-            (F.size("grid") - 1).alias("__k"),
-            F.posexplode("grid").alias("pos", "x"),
-        )
-        .withColumn(
-            "w",
-            F.when(F.col("pos") == 0, F.lit(0.0)).otherwise(
-                F.col("n_rows") / F.col("__k")
-            ),
-        )
-    )
-    w_cum = (
-        Window.partitionBy(*key_cols)
-        .orderBy("x", "pos")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_tot = Window.partitionBy(*key_cols)
-    pts = pts.withColumn("cum", F.sum("w").over(w_cum)).withColumn(
-        "total", F.sum("w").over(w_tot)
-    )
-    probs_df = F.explode(F.array(*[F.lit(p) for p in probs])).alias("prob")
-    return (
-        pts.select(*key_cols, "x", "cum", "total", probs_df)
-        .filter(F.col("cum") >= F.col("prob") * F.col("total") - F.lit(1e-9))
-        .groupBy(*key_cols, "prob")
-        .agg(F.min("x").alias("value_est"))
     )
 
 
@@ -316,10 +195,8 @@ def kmv_sketch(df: DataFrame, group_col: str, key_col: str, k: int = 256) -> Dat
 # ---------------------------------------------------------------------------
 # Portable HLL (r07): a register-fold HyperLogLog built from the same
 # 60-bit md5 hash as KMV, so the sketch STATE — not just the estimate —
-# is bit-reproducible in any engine (full DuckDB oracle). The
-# DataSketches-backed distinct_sketch_table above remains the
-# interop/production path; this is its oracle-checkable twin with the
-# identical store-and-union contract (Flajolet et al. 2007).
+# is bit-reproducible in any engine (full DuckDB oracle), with the
+# store-and-union contract of a sketch table (Flajolet et al. 2007).
 # ---------------------------------------------------------------------------
 
 HLL_B = 10                      # 2^10 = 1024 registers (rsd ~ 1.04/32 = 3.3%)
@@ -420,11 +297,11 @@ def hll_portable_union_estimate(
 
 # ---------------------------------------------------------------------------
 # Portable quantile sketch (r07): exact per-period ORDER-STATISTIC grids
-# with an all-integer weighted-CDF merge. The percentile_approx-backed
-# quantile_sketch_table above stays as the interop path (its summary
-# state is Spark-internal); this twin's state is k+1 raw data values
-# picked by exact integer ranks, so any engine reproduces it bit-for-bit
-# and the merge needs no float fold at all (the repo's
+# with an all-integer weighted-CDF merge. Spark ships no storable
+# quantile sketch (percentile_approx's summary state is plan-internal);
+# this grid's state is k+1 raw data values picked by exact integer
+# ranks, so any engine reproduces it bit-for-bit and the merge needs no
+# float fold at all (the repo's
 # quantile_normalize lesson: engine quantile INTERPOLATIONS differ by
 # 1 ulp, order statistics don't).
 # ---------------------------------------------------------------------------
@@ -443,8 +320,8 @@ def quantile_grid_exact(
     max) — values are PICKED from the data, never interpolated.
 
     Output: (keys..., period, n_rows, i, x) — k+1 rows per group of
-    small exact values; the store-and-merge analogue of
-    ``quantile_sketch_table`` with engine-portable state.
+    small exact values; a store-and-merge quantile sketch with
+    engine-portable state.
 
     Scale shape: one shuffle (the rank window, partitioned by group),
     then a broadcast-sized join of the k+1 target ranks per group. The

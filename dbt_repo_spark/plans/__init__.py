@@ -1,18 +1,10 @@
 from dbt_repo_spark.plans.runner import Model, ModelRunner, model
-from dbt_repo_spark.plans.testing import (
-    accepted_values,
-    not_null,
-    relationships,
-    run_tests,
-    unique,
-)
+from dbt_repo_spark.plans.testing import relationships, run_tests, unique
 
 __all__ = [
     "Model",
     "ModelRunner",
     "model",
-    "accepted_values",
-    "not_null",
     "relationships",
     "run_tests",
     "unique",

@@ -182,10 +182,6 @@ class ModelRunner:
         self.models: dict[str, Model] = {}
         self._state: dict | None = None
         self._defer: Catalog | None = None
-        self._observe: bool = False
-        # model name -> {"rows_built": n, "null_keys": n} from the last
-        # observed run (Observation API: no extra scan)
-        self.last_run_metrics: dict[str, dict] = {}
         # model name -> (signature, target file stamps, returned frame)
         # of the last write this runner made (run()'s skip rule)
         self._written: dict[str, tuple] = {}
@@ -320,7 +316,6 @@ class ModelRunner:
         parallelism: int | None = None,
         state: "dict | str | None" = None,
         defer_to: "Catalog | None" = None,
-        observe: bool = False,
     ) -> dict[str, DataFrame]:
         """Build every model in dependency order; returns name → DataFrame.
 
@@ -363,24 +358,19 @@ class ModelRunner:
         UDF, or reads anything but file scans (in-memory data, a range,
         an RDD, a cached relation, a subquery). The record lives in
         this runner instance only: a new runner, such as each CLI
-        invocation, rebuilds everything.
-
-        With ``observe=True`` a skipped model gets no entry in
-        ``last_run_metrics``: nothing was built, so nothing was observed.
-        ``build()`` shares this scheduler and these rules.
+        invocation, rebuilds everything. ``build()`` shares this
+        scheduler and these rules.
         """
-        self._start(state, defer_to, observe)
+        self._start(state, defer_to)
 
         def build(name: str, done: dict[str, Future]) -> DataFrame:
             return self._build_one(name, self._deps(name, done), full_refresh)
 
         return self._in_pool(self._order(selected), build, parallelism)
 
-    def _start(
-        self, state: "dict | str | None", defer_to: "Catalog | None", observe: bool
-    ) -> None:
-        """The Slim-CI state, --defer catalog and observation that
-        ``run()`` and ``build()`` both set up."""
+    def _start(self, state: "dict | str | None", defer_to: "Catalog | None") -> None:
+        """The Slim-CI state and --defer catalog that ``run()`` and
+        ``build()`` both set up."""
         if isinstance(state, str):
             import json
 
@@ -391,9 +381,6 @@ class ModelRunner:
         # the deferred catalog (the Slim-CI partner of state:modified —
         # build only what changed, read everything else from prod)
         self._defer = defer_to
-        self._observe = observe
-        if observe:
-            self.last_run_metrics = {}
 
     def _deps(self, name: str, done: dict[str, Future]) -> dict:
         """The built frames of ``name``'s refs that this call schedules."""
@@ -450,26 +437,7 @@ class ModelRunner:
         ):
             self._written[name] = last
             return last[2]
-        obs = None
-        if self._observe and m.materialized in ("table", "incremental"):
-            # Spark Observation API: per-model run metrics (rows built,
-            # null keys) collected DURING the materializing job itself —
-            # dbt's "rows affected" line without a second scan. Metrics
-            # land in self.last_run_metrics[name] after the write action.
-            from pyspark.sql import Observation
-
-            obs = Observation(f"obs_{name}")
-            metrics = [F.count(F.lit(1)).alias("rows_built")]
-            if m.unique_key and m.unique_key in df.columns:
-                metrics.append(
-                    F.sum(
-                        F.when(F.col(m.unique_key).isNull(), 1).otherwise(0)
-                    ).alias("null_keys")
-                )
-            df = df.observe(obs, *metrics)
         out = self._materialize(m, df, full_refresh)
-        if obs is not None:
-            self.last_run_metrics[name] = dict(obs.get)
         if sig is not None:
             self._written[name] = (sig, self._target_stamps(m), out)
         return out
@@ -549,15 +517,14 @@ class ModelRunner:
         scheduler (one worker per core) and under its rules for raising
         builders and unchanged models. A model's tests run in its own
         task as soon as it and the models its ``relationships`` tests
-        name are built. A model whose ref failed an error-severity test
-        or was skipped is itself SKIPPED (it would build on bad data) and
-        not returned, while siblings keep building. Warn-severity
-        failures never block. A ``relationships`` test naming a model
-        that was skipped, or that this call does not build, is skipped,
-        as dbt skips it.
+        name are built. A model whose ref failed a test or was skipped
+        is itself SKIPPED (it would build on bad data) and not returned,
+        while siblings keep building. A ``relationships`` test naming a
+        model that was skipped, or that this call does not build, is
+        skipped, as dbt skips it.
         Returns (built frames, status per model: ok | fail | skipped).
         """
-        self._start(state, defer_to, observe=False)
+        self._start(state, defer_to)
         status: dict[str, str] = {}
 
         def build_and_test(name: str, done: dict[str, Future]) -> DataFrame | None:
@@ -570,12 +537,8 @@ class ModelRunner:
             built = {d: done[d].result() for d in self._edges(name) if d in done}
             built = {d: b for d, b in built.items() if b is not None}
             built[name] = df
-            failed = [
-                r
-                for r in self._test_one(name, built)
-                if not r.passed and r.severity == "error"
-            ]
-            status[name] = "fail" if failed else "ok"
+            passed = all(r.passed for r in self._test_one(name, built))
+            status[name] = "ok" if passed else "fail"
             return df
 
         results = self._in_pool(self._order(selected), build_and_test, None)

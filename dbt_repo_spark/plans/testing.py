@@ -23,14 +23,9 @@ class TestResult:
     name: str
     passed: bool
     violations: int
-    stored_at: str | None = None  # layer.table holding the failing rows
-    severity: str = "error"  # dbt test config: error | warn
-    warned: bool = False  # warn-severity test exceeded its warn_if threshold
 
     def __repr__(self) -> str:  # pragma: no cover
-        status = "PASS" if self.passed else ("WARN" if self.warned else "FAIL")
-        if self.passed and self.warned:
-            status = "WARN"
+        status = "PASS" if self.passed else "FAIL"
         return f"<{status} {self.name}: {self.violations} violations>"
 
 
@@ -38,63 +33,16 @@ def _not_accepted(column: str, values: Sequence) -> Column:
     return ~F.col(column).isin(list(values)) | F.col(column).isNull()
 
 
-def _violations_unique(df: DataFrame, column: str) -> DataFrame:
-    return (
-        df.filter(F.col(column).isNotNull())
-        .groupBy(column)
-        .agg(F.count("*").alias("n_duplicates"))
-        .filter(F.col("n_duplicates") > 1)
-    )
-
-
-def _violations_accepted_values(
-    df: DataFrame, column: str, values: Sequence
-) -> DataFrame:
-    return (
-        df.filter(_not_accepted(column, values))
-        .groupBy(column)
-        .agg(F.count("*").alias("n_rows"))
-    )
-
-
-def _violations_relationships(
-    child: DataFrame, column: str, parent: DataFrame, parent_column: str
-) -> DataFrame:
-    parent_keys = parent.select(F.col(parent_column).alias(column)).distinct()
-    return (
-        child.filter(F.col(column).isNotNull())
-        .join(parent_keys, column, "left_anti")
-        .groupBy(column)
-        .agg(F.count("*").alias("n_orphans"))
-    )
-
-
-def _violations(df: DataFrame, column: str, t, kind: str) -> DataFrame:
-    if kind == "not_null":
-        return df.filter(F.col(column).isNull())
-    if kind == "unique":
-        return _violations_unique(df, column)
-    if kind == "accepted_values":
-        return _violations_accepted_values(df, column, t["accepted_values"])
-    return _violations_relationships(df, column, *t["relationships"])
-
-
 def _kind(column: str, t) -> str:
-    """The generic test a spec entry names: a bare string or a dict
-    keyed by the test (plus an optional ``config``)."""
-    for kind in ("not_null", "unique"):
-        if t == kind or (isinstance(t, dict) and kind in t):
-            return kind
-    for kind in ("accepted_values", "relationships"):
-        if isinstance(t, dict) and kind in t:
+    """The generic test a spec entry names: a bare ``not_null`` or
+    ``unique``, or a dict whose one key is the test."""
+    if t in ("not_null", "unique"):
+        return t
+    if isinstance(t, dict) and len(t) == 1:
+        (kind,) = t
+        if kind in ("not_null", "unique", "accepted_values", "relationships"):
             return kind
     raise ValueError(f"unknown test spec {t!r} for column {column}")
-
-
-def not_null(df: DataFrame, column: str) -> TestResult:
-    """dbt ``not_null`` (models/staging/schema.yml:9-30)."""
-    n = df.filter(F.col(column).isNull()).count()
-    return TestResult(f"not_null:{column}", n == 0, n)
 
 
 def unique(df: DataFrame, column: str) -> TestResult:
@@ -107,12 +55,6 @@ def unique(df: DataFrame, column: str) -> TestResult:
         .count()
     )
     return TestResult(f"unique:{column}", n == 0, n)
-
-
-def accepted_values(df: DataFrame, column: str, values: Sequence) -> TestResult:
-    """dbt ``accepted_values`` (models_demo/schema.yml:33-35)."""
-    n = df.filter(_not_accepted(column, values)).count()
-    return TestResult(f"accepted_values:{column}", n == 0, n)
 
 
 def relationships(child: DataFrame, column: str, parent: DataFrame, parent_column: str) -> TestResult:
@@ -130,24 +72,12 @@ def relationships(child: DataFrame, column: str, parent: DataFrame, parent_colum
     return TestResult(f"relationships:{column}->{parent_column}", n == 0, n)
 
 
-def run_tests(
-    df: DataFrame,
-    spec: dict,
-    catalog=None,
-    failures_layer: str = "dbt_test__audit",
-    store_cap: int = 100_000,
-) -> list[TestResult]:
+def run_tests(df: DataFrame, spec: dict) -> list[TestResult]:
     """Run a schema.yml-shaped spec: {col: ["not_null", "unique",
     {"accepted_values": [...]}, {"relationships": (parent_df, col)}]}.
-
-    With ``catalog`` set, failing tests STORE their violating rows
-    (dbt's ``--store-failures``): each failure writes an audit table
-    ``<failures_layer>.<test_name>`` holding the violation summary —
-    duplicate keys with counts, orphan keys with counts, invalid values
-    with counts, or the raw null rows — capped at ``store_cap`` rows so
-    a pathological failure can't mirror the fact table into the audit
-    schema. Passing tests write nothing; a re-run overwrites (the audit
-    table always reflects the latest run).
+    A test passes when it finds no violation; a spec entry that names
+    no known test, or carries any key besides its test, raises
+    ``ValueError``.
     """
     tests = [(c, t, _kind(c, t)) for c, ts in spec.items() for t in ts]
     row_local = [
@@ -162,35 +92,12 @@ def run_tests(
     results: list[TestResult] = []
     for column, t, kind in tests:
         if kind == "unique":
-            res = unique(df, column)
+            results.append(unique(df, column))
         elif kind == "relationships":
-            res = relationships(df, column, *t["relationships"])
+            results.append(relationships(df, column, *t["relationships"]))
         else:
             n = next(counts)
-            res = TestResult(f"{kind}:{column}", n == 0, n)
-        # dbt test config: {"<test>": ..., "config": {"severity":
-        # "warn", "warn_if": N, "error_if": N}} — thresholds are
-        # violation COUNTS ("more than N violations trips it");
-        # warn severity never fails the run, it only flags.
-        cfg = t.get("config", {}) if isinstance(t, dict) else {}
-        res.severity = cfg.get("severity", "error")
-        if res.severity == "warn":
-            res.warned = res.violations > cfg.get("warn_if", 0)
-            res.passed = True
-        else:
-            res.passed = res.violations <= cfg.get("error_if", 0)
-        if catalog is not None and (not res.passed or res.warned):
-            table = (
-                res.name.replace(":", "__")
-                .replace("->", "_to_")
-                .replace(".", "_")
-            )
-            catalog.write(
-                _violations(df, column, t, kind).limit(store_cap),
-                failures_layer, table, mode="overwrite",
-            )
-            res.stored_at = f"{failures_layer}.{table}"
-        results.append(res)
+            results.append(TestResult(f"{kind}:{column}", n == 0, n))
     return results
 
 

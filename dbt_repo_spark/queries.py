@@ -2037,8 +2037,7 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimensions, container byte size, and exact per-channel means from
     the generator formula alone — a green row certifies the whole
     encoder -> container bytes -> parser -> statistics chain. Audio twin:
-    ``multimodal_audio_decode``; fake_decode remains only for formats
-    needing codec libs not in this container (JPEG/video).
+    ``multimodal_audio_decode``.
     """
     media = multimodal.real_media_from_documents(t(spark, sf_dir, "documents"))
     return multimodal.decode_image_stats(media)
@@ -2988,14 +2987,9 @@ def distinct_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     of rows-only (r08, the judge's ask #3): the range here is the first
     half of the month (day ≤ 15), exercising the ``period_pred`` leg of
     ``hll_portable_union_estimate`` that the whole-range
-    ``sketch_hll_portable`` twin never touches.
-
-    The DataSketches-backed path (``distinct_sketch_table`` +
-    ``union_distinct_estimate``, KB binary state, engine-native) remains
-    the production scale default and keeps its own pytest coverage
-    (test_similarity::test_distinct_sketch_rollup_mergeable) — its
-    sketch STATE is engine-internal, which is exactly why the CHECKED
-    twin runs on the portable registers."""
+    ``sketch_hll_portable`` twin never touches. A DataSketches sketch's
+    STATE is engine-internal, which is why the CHECKED rollup runs on
+    the portable registers."""
     from dbt_repo_spark.operators import sketches
 
     ev = t(spark, sf_dir, "events")
@@ -5208,10 +5202,7 @@ def quantile_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-integer weighted-CDF fold, quantile reads are exact rational
     comparisons — so the row set is oracle-HASH-green, and unlike the
     whole-range ``sketch_quantile_portable`` twin this entry exercises
-    the range-FILTERED merge at the tail probs (99/100). The
-    percentile_approx-backed path (``quantile_sketch_table`` +
-    ``merge_quantile_estimate``) remains the interop/scale default with
-    its own pytest coverage (test_similarity). rank_err =
+    the range-FILTERED merge at the tail probs (99/100). rank_err =
     |F_exact(est) − p| rides in the row; bound 1/k (+ the 1/n quantum
     of sub-k source days), floor pinned in test_similarity."""
     from dbt_repo_spark.operators import sketches
@@ -5464,8 +5455,7 @@ def window_rank_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
 def collapse_event_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gaps-and-islands run-length compression
     (relational.py::collapse_runs): consecutive same-type events per user
-    collapse to one row per run — the batch twin of the streaming
-    changes_only operator, and the standard change-log compaction for
+    collapse to one row per run — the standard change-log compaction for
     snapshot-shaped feeds.
 
     Lag flag + running sum + groupBy all share ONE shuffle on user_id
@@ -8149,9 +8139,8 @@ def embed_generate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding GENERATION plumbing (similarity.embed_text_stub): chunk
     the corpus (text.chunk_documents) and run the Arrow-batched
     embedding stage over every chunk — the model call is the
-    content-addressed deterministic fake behind the production seam
-    (multimodal real_decode's contract for text). FULL oracle as of
-    r07: the fake is md5-derived and DuckDB has md5, so the SQL twin
+    content-addressed deterministic fake behind the production seam.
+    FULL oracle as of r07: the fake is md5-derived and DuckDB has md5, so the SQL twin
     recomputes every component (base-16 fold over the digest prefix),
     the sequential-fold pre-norm, and the Arrow float32 squeeze —
     outputs pin each vector via an integer micro-unit weighted-sum
@@ -9720,16 +9709,15 @@ def sketch_hll_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Store-and-union distinct sketch on the PORTABLE register-fold HLL
     (sketches.py::hll_portable_*): per-day (reg, max_rho) tables of
     events.user_id, range-unioned by register max, estimated with the
-    exact-integer harmonic denominator. Unlike `distinct_sketch_rollup`
-    (DataSketches state — engine-internal, rows-only forever), the
+    exact-integer harmonic denominator. Unlike a DataSketches HLL
+    (engine-internal state, rows-only forever), the
     sketch STATE here is the same md5-derived integers in any engine, so
     the whole pipeline carries a FULL DuckDB oracle: register index and
     rho are integer bit/string ops, the denominator is an
     order-independent BIGINT sum, and the only doubles are two
     deterministic ops on identical operands plus the documented
     small-range ln (rounded at 6dp). The exact audit column and rel_err
-    ride in the row (fixture-scale self-validation, as in the
-    DataSketches twin)."""
+    ride in the row (fixture-scale self-validation)."""
     from dbt_repo_spark.operators import sketches
 
     ev = t(spark, sf_dir, "events")
@@ -9877,8 +9865,8 @@ def sketch_quantile_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-(event_type, day) grids of k+1 = 33 order statistics of
     events.value, merged over the full range by the all-integer
     weighted-CDF fold, read at p = 1/4, 1/2, 9/10 as exact rationals.
-    Unlike `quantile_sketch_rollup` (percentile_approx summary state —
-    Spark-internal, rows-only forever), every state value here is a raw
+    Unlike percentile_approx summary state (Spark-internal, rows-only
+    forever), every state value here is a raw
     datum picked by an integer rank and every merge op is an integer
     sum/comparison, so the pipeline carries a FULL DuckDB oracle. Each
     row also carries the exact rank of its estimate in the RAW data

@@ -62,7 +62,6 @@ class Catalog:
         mode: str = "overwrite",
         partition_by: list[str] | None = None,
         sort_within_partitions: list[str] | None = None,
-        zone_map_cols: list[str] | None = None,
     ) -> None:
         """Partitioned + clustered parquet sink (S9).
 
@@ -90,30 +89,6 @@ class Catalog:
         with recording_write(self.spark, path, df.schema, partition_by,
                              replaces=mode == "overwrite" and not dynamic):
             writer.parquet(path)
-            if zone_map_cols:
-                # file-level min/max manifest for planning-time skipping
-                # (sources/zonemap.py) — footer metadata only, no data read
-                from dbt_repo_spark.sources.zonemap import write_zone_map
-
-                write_zone_map(path, zone_map_cols)
-
-    def read_pruned(
-        self, layer: str, name: str, col: str, lo=None, hi=None
-    ) -> tuple[DataFrame, dict]:
-        """Range-scan through the zone-map manifest: plan ONLY the files
-        whose [min,max] for ``col`` intersects [lo,hi]. Returns the
-        frame plus {'files_read', 'files_total'} so callers (and tests)
-        can assert the skip rate. The caller still applies its own
-        filter — pruning is a superset guarantee, never a substitute
-        for the predicate."""
-        from dbt_repo_spark.sources.zonemap import prune_files
-
-        paths, total = prune_files(self.path(layer, name), col, lo, hi)
-        report = {"files_read": len(paths), "files_total": total}
-        if not paths:
-            empty = self.read(layer, name).limit(0)
-            return empty, report
-        return self.spark.read.parquet(*paths), report
 
     def compact(
         self,

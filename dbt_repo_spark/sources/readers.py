@@ -14,22 +14,7 @@ from typing import Iterator
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
-
-TPCH_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 
 def read_json_dir(spark: SparkSession, path: str, schema: StructType | None = None) -> DataFrame:
     """Recursive multi-line JSON directory scan.
@@ -202,42 +187,3 @@ def recording_write(
     ):
         _schemas[path] = (after, data)
 
-
-MEDIA_EXT_TYPES = {
-    "jpg": "image", "jpeg": "image", "png": "image", "gif": "image",
-    "wav": "audio", "mp3": "audio", "flac": "audio",
-    "mp4": "video", "mkv": "video", "webm": "video",
-}
-
-
-def read_media_dir(
-    spark: SparkSession, path: str, glob: str | None = None
-) -> DataFrame:
-    """Binary media landing-dir scan via Spark's ``binaryFile`` source.
-
-    Reads a directory of image/audio/video blobs into the engine's
-    multimodal shape (operators/multimodal.py::MEDIA_SCHEMA): media_id is
-    the xxhash64 of the file path (content-addressed id, stable across
-    re-scans), media_type derives from the extension, content is the raw
-    bytes. The source is split-planned by Spark — files distribute
-    across tasks up to ``spark.sql.files.maxPartitionBytes`` — and
-    metadata-only pipelines that select (path, length) without content
-    never read the blob bytes (the binaryFile reader prunes the content
-    column). Pass ``glob`` (e.g. "*.jpg") to filter at listing time
-    rather than post-scan.
-    """
-    reader = spark.read.format("binaryFile").option("recursiveFileLookup", "true")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    raw = reader.load(path)
-    ext = F.lower(F.element_at(F.split(F.col("path"), r"\."), -1))
-    type_map = F.create_map(
-        *[F.lit(x) for kv in MEDIA_EXT_TYPES.items() for x in kv]
-    )
-    return raw.select(
-        F.xxhash64("path").alias("media_id"),
-        F.coalesce(type_map[ext], F.lit("binary")).alias("media_type"),
-        F.col("content"),
-        F.col("path").alias("source_path"),
-        F.col("length").alias("n_bytes"),
-    )

@@ -3,12 +3,10 @@ from dbt_repo_spark.streaming.ingest import (
     parse_status_stream,
     start_status_ingest,
 )
-from dbt_repo_spark.streaming.stateful import changes_only
 from dbt_repo_spark.streaming.windows import session_aggregate, tumbling_counts
 
 __all__ = [
     "GBFS_STATUS_SCHEMA",
-    "changes_only",
     "parse_status_stream",
     "start_status_ingest",
     "session_aggregate",

@@ -1,19 +1,11 @@
-"""Custom stateful streaming operators: per-key change detection
-(``changes_only``) and timer-closed sessions (``sessionize``).
+"""Custom stateful streaming operator: timer-closed sessions
+(``sessionize``).
 
-The reference's stream stores every snapshot and derives "latest" /
-"history" downstream in batch (models/facts/fact_station_status*.sql). At
-100 TB-class stream volume the cheaper shape is a CHANGE-LOG: keep the
-last seen value per key in the state store and emit a row only when the
-tracked values actually change — a ~1/min feed where stations change a
-few times an hour compresses ~50×, and downstream incremental facts
-consume deltas instead of snapshots.
-
-Spark has no built-in "emit-on-change" operator, so both operators
-take the sanctioned custom-stateful path (``applyInPandasWithState``):
-state is a tiny fixed-width tuple per key, batches arrive as Arrow
-frames, and the watermark bounds state the same way it bounds the dedup
-in ingest.py.
+Spark's built-in ``session_window`` cannot emit a session exactly when it
+closes, so this operator takes the sanctioned custom-stateful path
+(``applyInPandasWithState``): state is a tiny fixed-width tuple per key,
+batches arrive as Arrow frames, and the watermark bounds state the same
+way it bounds the dedup in ingest.py.
 """
 
 from __future__ import annotations
@@ -27,59 +19,10 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType,
     LongType,
-    StringType,
     StructField,
     StructType,
     TimestampType,
 )
-
-CHANGE_SCHEMA = StructType(
-    [
-        StructField("station_id", StringType()),
-        StructField("report_time", TimestampType()),
-        StructField("bikes_available", LongType()),
-        StructField("docks_available", LongType()),
-    ]
-)
-
-STATE_SCHEMA = StructType(
-    [
-        StructField("bikes_available", LongType()),
-        StructField("docks_available", LongType()),
-    ]
-)
-
-
-def _emit_changes(
-    key: tuple[Any, ...],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    """Emit rows whose (bikes, docks) differ from the last seen state.
-
-    Rows are processed in report_time order within the micro-batch; the
-    state tuple carries the last emitted values across batches (and across
-    restarts, via the checkpoint).
-    """
-    last = state.get if state.exists else (None, None)
-    out_rows = []
-    for pdf in pdfs:
-        for row in pdf.sort_values("report_time").itertuples(index=False):
-            cur = (int(row.bikes_available), int(row.docks_available))
-            if cur != last:
-                out_rows.append(
-                    {
-                        "station_id": key[0],
-                        "report_time": row.report_time,
-                        "bikes_available": cur[0],
-                        "docks_available": cur[1],
-                    }
-                )
-                last = cur
-    state.update(last)
-    if out_rows:
-        yield pd.DataFrame(out_rows, columns=[f.name for f in CHANGE_SCHEMA.fields])
-
 
 SESSION_OUT_SCHEMA = StructType(
     [
@@ -188,25 +131,3 @@ def sessionize(
         )
     )
 
-
-def changes_only(status: DataFrame) -> DataFrame:
-    """Stateful change-log over a (station_id, report_time, bikes, docks)
-    stream: one output row per actual state transition per station.
-
-    Works on the parsed status stream from ``parse_status_stream``; the
-    state store holds one fixed-width tuple per station — station
-    cardinality, not event volume, bounds memory.
-    """
-    return (
-        status.select(
-            "station_id", "report_time", "bikes_available", "docks_available"
-        )
-        .groupBy("station_id")
-        .applyInPandasWithState(
-            _emit_changes,
-            outputStructType=CHANGE_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )

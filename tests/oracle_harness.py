@@ -18,7 +18,19 @@ import duckdb
 import pandas as pd
 
 from dbt_repo_spark.queries import ORACLES, QUERIES
-from dbt_repo_spark.sources.readers import TPCH_TABLES
+
+TPCH_TABLES = (
+    "region",
+    "nation",
+    "customer",
+    "supplier",
+    "part",
+    "orders",
+    "lineitem",
+    "events",
+    "documents",
+    "embeddings",
+)
 
 
 def _dtype_class(dtype) -> str:

@@ -256,7 +256,8 @@ def test_cli_explain(capsys):
 
 def test_cli_optimize_compact_and_zorder(spark, tmp_path, capsys):
     """`optimize` verb: many small files -> compacted count; z-order
-    rewrite preserves rows and schema."""
+    rewrite preserves rows and schema through a staged swap that leaves
+    no staging directory and writes no manifest."""
     import os
 
     from dbt_repo_spark.__main__ import main
@@ -282,7 +283,10 @@ def test_cli_optimize_compact_and_zorder(spark, tmp_path, capsys):
     assert main(["optimize", "--warehouse", wh, "--table", "frag",
                  "--target-files", "4", "--zorder", "a", "b"]) == 0
     out = cat.read("analytics", "frag")
-    assert out.count() == 1000 and set(out.columns) == {"id", "a", "b"}
+    assert out.dtypes == df.dtypes
+    assert sorted(out.collect()) == sorted(df.collect())
+    assert "_zonemap.json" not in os.listdir(frag_dir)
+    assert sorted(os.listdir(cat.path("analytics", ""))) == ["frag"]
 
 
 def test_cli_export_verify(spark, tmp_path, capsys):

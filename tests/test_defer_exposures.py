@@ -68,8 +68,8 @@ def test_defer_falls_back_when_prod_lacks_the_model(spark, tmp_path):
 
 
 def test_build_interleaves_tests_and_skips_downstream(spark, tmp_path):
-    """dbt build semantics: a failing error-severity test on a model
-    skips its consumers; siblings still build; warn doesn't block."""
+    """dbt build semantics: a failing test on a model skips its
+    consumers; siblings still build."""
 
     @model(
         "a_bad",
@@ -88,15 +88,6 @@ def test_build_interleaves_tests_and_skips_downstream(spark, tmp_path):
     def c_grandchild(ctx):
         return ctx["b_child"]
 
-    @model(
-        "d_warn",
-        deps=("src",),
-        materialized="table",
-        tests={"x": [{"unique": True, "config": {"severity": "warn"}}]},
-    )
-    def d_warn(ctx):
-        return ctx["src"].unionByName(ctx["src"].limit(1))
-
     @model("e_sibling", deps=("src",), materialized="table")
     def e_sibling(ctx):
         return ctx["src"]
@@ -104,13 +95,12 @@ def test_build_interleaves_tests_and_skips_downstream(spark, tmp_path):
     cat = Catalog(spark, str(tmp_path / "wh"))
     src = spark.range(5).withColumnRenamed("id", "x")
     r = ModelRunner(spark, cat, {"src": src}).add(
-        a_bad, b_child, c_grandchild, d_warn, e_sibling
+        a_bad, b_child, c_grandchild, e_sibling
     )
     built, status = r.build()
     assert status["a_bad"] == "fail"
     assert status["b_child"] == "skipped"
     assert status["c_grandchild"] == "skipped"
-    assert status["d_warn"] == "ok"  # warn severity never blocks
     assert status["e_sibling"] == "ok"
     assert "b_child" not in built and "e_sibling" in built
 
@@ -118,28 +108,29 @@ def test_build_interleaves_tests_and_skips_downstream(spark, tmp_path):
 def test_build_tests_a_model_added_before_its_relationships_parent(spark, tmp_path):
     """A relationships test waits for the model it names, even when that
     model was added after the tested one, and counts its orphans: two
-    keys (3, 4) of the child are missing from the parent."""
+    keys (3, 4) of ``child_bad`` are missing from the parent, none of
+    ``child_ok``'s."""
 
     @model("parent", deps=("src",), materialized="table")
     def parent(ctx):
         return ctx["src"].filter(F.col("x") < 3)
 
-    def child(name, error_if):
-        rel = {"relationships": ("parent", "x"), "config": {"error_if": error_if}}
+    def child(name, n):
         return model(name, deps=("src",), materialized="table",
-                     tests={"x": [rel]})(lambda ctx: ctx["src"])
+                     tests={"x": [{"relationships": ("parent", "x")}]})(
+            lambda ctx: ctx["src"].filter(F.col("x") < n))
 
     cat = Catalog(spark, str(tmp_path / "wh"))
     src = spark.range(5).withColumnRenamed("id", "x")
     r = ModelRunner(spark, cat, {"src": src}).add(
-        child("child_2", 2), child("child_1", 1), parent
+        child("child_bad", 5), child("child_ok", 3), parent
     )
     built, status = r.build()
     # scheduled first, so a tested child may wait on it with any number
     # of workers
-    assert list(status) == ["parent", "child_2", "child_1"]
-    assert status == {"parent": "ok", "child_2": "ok", "child_1": "fail"}
-    assert [t.violations for t in r.test(built)["child_2"]] == [2]
+    assert list(status) == ["parent", "child_bad", "child_ok"]
+    assert status == {"parent": "ok", "child_bad": "fail", "child_ok": "ok"}
+    assert [t.violations for t in r.test(built)["child_bad"]] == [2]
 
 
 def test_build_skips_a_relationships_test_whose_model_was_skipped(spark, tmp_path):
@@ -188,19 +179,6 @@ def test_relationships_test_naming_a_descendant_is_no_cycle(spark, tmp_path):
     assert list(built) == ["up", "down"] and built["down"].count() == 5
 
 
-def test_build_leaves_the_observed_run_report_alone(spark, tmp_path):
-    """``build()`` does not observe, even after ``run(observe=True)``:
-    the run's report survives a build over a changed source."""
-    r, _ = _runner(spark, tmp_path / "wh")
-    r.run(observe=True)
-    report = dict(r.last_run_metrics)
-    assert report["a"] == {"rows_built": 5}
-    r.sources["src"] = spark.range(3).withColumnRenamed("id", "x")
-    _, status = r.build()
-    assert set(status.values()) == {"ok"}
-    assert r.last_run_metrics == report
-
-
 def test_build_reraises_a_failing_builder_after_siblings_settle(spark, tmp_path):
     """A raising builder fails ``build()`` as it fails ``run()``: the
     exception surfaces once the other models settle, its dependents are
@@ -225,70 +203,3 @@ def test_build_reraises_a_failing_builder_after_siblings_settle(spark, tmp_path)
         r.build()
     assert cat.exists("analytics", "sibling")
     assert not cat.exists("analytics", "boom_child")
-
-
-def test_observed_run_collects_metrics_without_extra_scan(spark, tmp_path):
-    """Spark Observation API: rows-built (and null-key) metrics arrive
-    from the materializing job itself — dbt's rows-affected report."""
-
-    @model("obs_t", deps=("src",), materialized="table")
-    def obs_t(ctx):
-        return ctx["src"].filter(F.col("x") < 7)
-
-    @model(
-        "obs_inc",
-        deps=("src",),
-        materialized="incremental",
-        unique_key="x",
-    )
-    def obs_inc(ctx):
-        return ctx["src"]
-
-    cat = Catalog(spark, str(tmp_path / "wh"))
-    src = spark.range(10).withColumnRenamed("id", "x")
-    r = ModelRunner(spark, cat, {"src": src}).add(obs_t, obs_inc)
-    built = r.run(observe=True)
-    assert built["obs_t"].count() == 7
-    assert r.last_run_metrics["obs_t"]["rows_built"] == 7
-    assert r.last_run_metrics["obs_inc"] == {
-        "rows_built": 10,
-        "null_keys": 0,
-    }
-    # an un-observed run does not touch the last observed report; a new
-    # OBSERVED run resets it first (no cross-run mixing)
-    r.run(observe=False)
-    assert r.last_run_metrics == {"obs_t": {"rows_built": 7},
-                                  "obs_inc": {"rows_built": 10, "null_keys": 0}}
-    r.run(["obs_t"], observe=True)
-    assert set(r.last_run_metrics) == {"obs_t"}
-
-
-def test_observed_run_reports_only_models_it_built(spark, tmp_path):
-    """Over file-backed sources a model the runner skips (nothing it
-    reads changed) gets no entry in the observed report; one that
-    rebuilds reports its new batch."""
-
-    @model("obs_t", deps=("src",), materialized="table")
-    def obs_t(ctx):
-        return ctx["src"].filter(F.col("x") < 7)
-
-    @model("obs_inc", deps=("src",), materialized="incremental", unique_key="x")
-    def obs_inc(ctx):
-        return ctx["src"]
-
-    cat = Catalog(spark, str(tmp_path / "wh"))
-    cat.write(spark.range(10).withColumnRenamed("id", "x"), "raw", "src")
-    r = ModelRunner(spark, cat, {"src": cat.read("raw", "src")}).add(obs_t, obs_inc)
-    r.run(observe=True)
-    assert r.last_run_metrics == {"obs_t": {"rows_built": 7},
-                                  "obs_inc": {"rows_built": 10, "null_keys": 0}}
-    built = r.run(observe=True)
-    assert r.last_run_metrics == {}
-    assert built["obs_t"].count() == 7 and built["obs_inc"].count() == 10
-    cat.write(spark.range(10, 12).withColumnRenamed("id", "x"), "raw", "src",
-              mode="append")
-    r.sources["src"] = cat.read("raw", "src")
-    built = r.run(observe=True)
-    assert r.last_run_metrics == {"obs_t": {"rows_built": 7},
-                                  "obs_inc": {"rows_built": 12, "null_keys": 0}}
-    assert built["obs_inc"].count() == 12

@@ -106,43 +106,6 @@ def test_historic_trips_load(spark, tmp_path):
     assert out.count() == 2
 
 
-def test_read_media_dir_binary_file_source(spark, tmp_path):
-    """binaryFile landing scan -> multimodal shape -> feature extraction:
-    ids are path-stable, types derive from extension, and the decode
-    stage consumes the scan output unchanged."""
-    from dbt_repo_spark.operators.multimodal import extract_media_features
-    from dbt_repo_spark.sources.readers import read_media_dir
-
-    media = tmp_path / "media"
-    (media / "sub").mkdir(parents=True)
-    (media / "a.jpg").write_bytes(b"\xff\xd8fakejpeg")
-    (media / "b.wav").write_bytes(b"RIFFfakewav")
-    (media / "sub" / "c.mp4").write_bytes(b"\x00\x00fakemp4")
-    (media / "notes.txt").write_bytes(b"not media")
-
-    df = read_media_dir(spark, str(media))
-    rows = {r.source_path.rsplit("/", 1)[-1]: r for r in df.collect()}
-    assert set(rows) == {"a.jpg", "b.wav", "c.mp4", "notes.txt"}
-    assert rows["a.jpg"].media_type == "image"
-    assert rows["b.wav"].media_type == "audio"
-    assert rows["c.mp4"].media_type == "video"
-    assert rows["notes.txt"].media_type == "binary"
-    assert rows["a.jpg"].n_bytes == 10
-    assert bytes(rows["b.wav"].content) == b"RIFFfakewav"
-
-    # re-scan gives identical ids (content-addressed by path)
-    again = {r.source_path: r.media_id for r in read_media_dir(spark, str(media)).collect()}
-    assert all(again[r.source_path] == r.media_id for r in rows.values())
-
-    # glob filters at listing time
-    assert read_media_dir(spark, str(media), glob="*.jpg").count() == 1
-
-    # the decode stage consumes the scan output directly
-    feats = extract_media_features(df.select("media_id", "media_type", "content"))
-    assert feats.count() == 4
-    assert {f.name for f in feats.schema.fields} >= {"media_id", "n_bytes", "checksum"}
-
-
 def test_read_json_file_station_information_enriches_status(spark, tmp_path):
     """S3 (src/realtime_pubsub_to_spark.py:164-184): the multiline
     station_information file is read whole, its ``data.stations`` array

@@ -1,5 +1,5 @@
 """Unit tests for the stdlib media codecs (operators/media_codecs.py)
-and the real_decode seam: hand-built byte layouts with every offset
+and the media generator they invert: hand-built byte layouts with every offset
 checked against the public format specs, encoder/decoder roundtrips,
 strict rejection of corrupt/unsupported payloads, and the resample
 primitives the oracle-checked queries rely on."""
@@ -163,36 +163,38 @@ def test_decimate_frames_keeps_channel_alignment():
     assert kept == [(0, 1), (20, 21), (40, 41)]
 
 
-# ------------------------------------------------- real_decode contract
+# ------------------------------------------- generator <-> codec inversion
 
 
 def test_real_decode_matches_generator_params():
-    """Generator -> bytes -> real_decode inverts exactly for all three
-    formats (the property the oracle-checked queries scale up)."""
+    """Generator -> bytes -> ``decode_any`` inverts exactly for all three
+    formats (the property the oracle-checked media queries scale up)."""
     for did in range(9):
         p = mm.media_params(did)
-        _, blob = mm.generate_media_blob(did)
-        d = mm.real_decode(blob)
-        assert d["n_bytes"] == len(blob)
+        mtype, blob = mm.generate_media_blob(did)
+        d = mc.decode_any(blob)
+        assert d["format"] == p["format"]
         if p["format"] == "wav":
-            assert d["width"] is None and d["height"] is None
-            full = mc.decode_wav(blob)
-            assert full["sample_rate"] == p["rate"]
-            assert full["n_frames"] == p["n_frames"]
-            assert full["channels"] == p["channels"]
-            ns = full["n_samples"]
-            assert d["features"][0] == full["sample_sum"] / ns / 32768.0
+            assert mtype == "audio"
+            assert d["sample_rate"] == p["rate"]
+            assert d["n_frames"] == p["n_frames"]
+            assert d["channels"] == p["channels"]
+            assert d["sample_sum"] == sum(
+                mm.synth_sample(did, i, c)
+                for i in range(p["n_frames"])
+                for c in range(p["channels"])
+            )
         else:
+            assert mtype == "image"
             assert d["width"] == p["w"] and d["height"] == p["h"]
-            n = p["w"] * p["h"]
-            exp_r = sum(
+            assert d["n_pixels"] == p["w"] * p["h"]
+            assert d["sum_r"] == sum(
                 mm.synth_pixel(did, x, y, 0)
                 for x in range(p["w"])
                 for y in range(p["h"])
             )
-            assert d["features"][0] == exp_r / n / 255.0
 
 
 def test_real_decode_raises_on_garbage():
     with pytest.raises(ValueError):
-        mm.real_decode(b"not a media file")
+        mc.decode_any(b"not a media file")

@@ -594,15 +594,11 @@ def test_models_the_skip_rule_cannot_sign_are_always_rebuilt(spark, tmp_path):
 
 def test_fused_row_local_tests_match_per_test_functions(spark):
     """run_tests counts every not_null and accepted_values test of a
-    relation in one aggregate; names, order and counts equal the
-    per-test functions on a frame with nulls and values outside the
-    accepted set, and unique keeps its own count."""
-    from dbt_repo_spark.plans.testing import (
-        accepted_values,
-        not_null,
-        run_tests,
-        unique,
-    )
+    relation in one aggregate; names, order and counts equal one count
+    per test on a frame with nulls and values outside the accepted set,
+    and unique keeps its own count. A spec entry with a key besides its
+    test name raises."""
+    from dbt_repo_spark.plans.testing import run_tests, unique
 
     df = spark.createDataFrame(
         [
@@ -613,51 +609,31 @@ def test_fused_row_local_tests_match_per_test_functions(spark):
         ],
         "id int, st string, code string",
     )
+
+    def not_null(c):
+        n = df.filter(F.col(c).isNull()).count()
+        return (f"not_null:{c}", n, n == 0)
+
+    def accepted_values(c, values):
+        n = df.filter(~F.col(c).isin(values) | F.col(c).isNull()).count()
+        return (f"accepted_values:{c}", n, n == 0)
+
     spec = {
         "id": ["not_null", "unique"],
         "st": ["not_null", {"accepted_values": ["ok"]}],
         "code": [{"accepted_values": ["a", "b"]}, "not_null"],
     }
+    uq = unique(df, "id")
     expected = [
-        not_null(df, "id"),
-        unique(df, "id"),
-        not_null(df, "st"),
-        accepted_values(df, "st", ["ok"]),
-        accepted_values(df, "code", ["a", "b"]),
-        not_null(df, "code"),
+        not_null("id"),
+        (uq.name, uq.violations, uq.passed),
+        not_null("st"),
+        accepted_values("st", ["ok"]),
+        accepted_values("code", ["a", "b"]),
+        not_null("code"),
     ]
     got = run_tests(df, spec)
-    assert [(r.name, r.violations, r.passed) for r in got] == [
-        (r.name, r.violations, r.passed) for r in expected
-    ]
+    assert [(r.name, r.violations, r.passed) for r in got] == expected
     assert [r.violations for r in got] == [1, 1, 1, 3, 2, 1]
-
-
-def test_store_failures_writes_audit_tables(spark, tmp_path):
-    """dbt --store-failures semantics: a failing test materializes its
-    violation summary under the audit layer; passing tests write
-    nothing; a re-run overwrites with the latest state."""
-    from dbt_repo_spark.plans.testing import run_tests
-
-    catalog = Catalog(spark, str(tmp_path / "wh"))
-    df = spark.createDataFrame(
-        [Row(id=1, st="ok"), Row(id=1, st="ok"), Row(id=2, st="bad")]
-    )
-    spec = {"id": ["not_null", "unique"], "st": [{"accepted_values": ["ok"]}]}
-    results = run_tests(df, spec, catalog=catalog)
-    by_name = {r.name: r for r in results}
-    assert by_name["not_null:id"].passed
-    assert by_name["not_null:id"].stored_at is None
-    uq = by_name["unique:id"]
-    assert not uq.passed and uq.stored_at == "dbt_test__audit.unique__id"
-    stored = catalog.read("dbt_test__audit", "unique__id").collect()
-    assert [(r["id"], r["n_duplicates"]) for r in stored] == [(1, 2)]
-    av = by_name["accepted_values:st"]
-    assert not av.passed and av.stored_at is not None
-    bad = catalog.read("dbt_test__audit", "accepted_values__st").collect()
-    assert [(r["st"], r["n_rows"]) for r in bad] == [("bad", 1)]
-    # fix the data, re-run: audit table is overwritten with... nothing to
-    # store (test passes) -- the stale table remains but results say PASS
-    fixed = spark.createDataFrame([Row(id=1, st="ok"), Row(id=2, st="ok")])
-    results2 = run_tests(fixed, spec, catalog=catalog)
-    assert all(r.passed and r.stored_at is None for r in results2)
+    with pytest.raises(ValueError, match="unknown test spec"):
+        run_tests(df, {"id": [{"not_null": True, "config": {"severity": "warn"}}]})

@@ -99,42 +99,6 @@ def test_incremental_type_only_drift_casts_to_target(spark, tmp_path):
     assert rows == {1: "a", 2: "7.5"}
 
 
-def test_data_test_severity_and_thresholds(spark, tmp_path):
-    """dbt test config: warn severity never fails the run; error_if /
-    warn_if are violation-count thresholds; warned failures still store
-    their audit table."""
-    from dbt_repo_spark.plans.testing import run_tests
-
-    df = spark.createDataFrame(
-        [(1, "a"), (2, None), (3, None), (4, "d")], "k int, v string"
-    )
-    # plain error severity: 2 nulls -> FAIL
-    (res,) = run_tests(df, {"v": ["not_null"]})
-    assert not res.passed and res.violations == 2 and res.severity == "error"
-    # error_if raises the tripwire: 2 violations <= 2 -> pass
-    (res,) = run_tests(df, {"v": [{"not_null": True, "config": {"error_if": 2}}]})
-    assert res.passed
-    # warn severity: run passes but flags
-    (res,) = run_tests(
-        df, {"v": [{"not_null": True, "config": {"severity": "warn"}}]}
-    )
-    assert res.passed and res.warned
-    # warn_if threshold below the count -> no flag
-    (res,) = run_tests(
-        df,
-        {"v": [{"not_null": True, "config": {"severity": "warn", "warn_if": 5}}]},
-    )
-    assert res.passed and not res.warned
-    # warned test still stores its audit rows
-    cat = Catalog(spark, str(tmp_path / "wh"))
-    (res,) = run_tests(
-        df, {"v": [{"not_null": True, "config": {"severity": "warn"}}]},
-        catalog=cat,
-    )
-    assert res.warned and res.stored_at is not None
-    assert cat.read(*res.stored_at.split(".")).count() == 2
-
-
 def test_state_modified_selection(spark, tmp_path):
     """Slim CI: only fingerprint-changed models (plus downstream with
     `state:modified+`) rebuild against a stored manifest."""

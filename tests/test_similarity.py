@@ -144,43 +144,6 @@ def test_incremental_minhash_equals_full_run_restriction(spark, sf_dir):
     assert got == norm_want and len(got) > 0
 
 
-def test_trained_codebook_recall_not_worse(spark, sf_dir):
-    """Spherical-k-means codebook: unit-norm centroids, working probe
-    path, and usable recall vs exact brute force. (On the isotropic
-    synthetic corpus training cannot BEAT arbitrary centroids — see
-    train_centroids docstring — so the bar is absolute, not relative.)"""
-    from pyspark.sql import functions as F
-
-    from dbt_repo_spark.operators import similarity
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    pred = F.col("vec_id") < 8
-
-    def neighbor_sets(df):
-        out = {}
-        for r in df.collect():
-            out.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-        return out
-
-    truth = neighbor_sets(similarity.cosine_topk(emb, pred, k=5))
-
-    def recall(codebook):
-        got = neighbor_sets(
-            similarity.ivf_topk(emb, pred, k=5, n_centroids=8, nprobe=3,
-                                codebook=codebook)
-        )
-        hits = sum(len(truth[q] & got.get(q, set())) for q in truth)
-        return hits / sum(len(v) for v in truth.values())
-
-    trained = similarity.train_centroids(emb, n_centroids=8, iters=2)
-    assert len(trained) == 8 and len(trained[0]) == len(trained[1])
-    import math
-    for c in trained:  # spherical: every centroid is unit-norm
-        assert abs(math.sqrt(sum(x * x for x in c)) - 1.0) < 1e-9
-    r_trained = recall(trained)
-    assert r_trained > 0.5, r_trained
-
-
 def test_pq_recall_and_code_size(spark):
     """PQ ADC + exact rerank: high recall vs brute force, and codes are m
     small ints (the 32x memory-compression representation)."""
@@ -193,39 +156,6 @@ def test_pq_recall_and_code_size(spark):
 
     books = similarity.train_pq_codebooks(emb, m=8, nbits=4)
     assert books.shape == (8, 16, 8)  # dim 64 -> 8 subspaces of 8, 16 cents
-
-
-def test_distinct_sketch_rollup_mergeable(spark):
-    """HLL sketch table: unioning per-day sketches estimates the range
-    distinct within documented error, and equals the estimate computed
-    directly over the range (mergeability)."""
-    from pyspark.sql import functions as F
-
-    from dbt_repo_spark.operators.sketches import (
-        distinct_sketch_table,
-        union_distinct_estimate,
-    )
-
-    from dbt_repo_spark.queries import t
-
-    ev = t(spark, "/root/testdata/sf0.01", "events")
-    sk = distinct_sketch_table(ev, "user_id", "ts", "day").cache()
-
-    est = union_distinct_estimate(sk).collect()[0]["approx_distinct"]
-    exact = ev.select("user_id").distinct().count()
-    assert abs(est - exact) / exact < 0.05
-
-    # mergeability: union-of-daily == direct sketch over the same rows
-    direct = ev.agg(
-        F.hll_sketch_estimate(F.hll_sketch_agg("user_id", F.lit(12)))
-    ).collect()[0][0]
-    assert est == direct
-
-    # range query touches only the sketch table
-    half = union_distinct_estimate(
-        sk, F.col("period") < "2024-01-15"
-    ).collect()[0]["approx_distinct"]
-    assert 0 < half <= est
 
 
 def test_heavy_hitters_exact_via_candidates(spark):
@@ -404,42 +334,6 @@ def test_quantile_sketch_rollup_rank_error_floor(spark):
         .collect()[0][0]
     )
     assert max(r.rank_err for r in rows) <= 1 / 32 + 1.0 / min_n
-
-
-def test_quantile_sketch_merge_matches_unsplit_sketch(spark):
-    """Mergeability: pooling per-day grids must estimate the same
-    quantiles as one grid built over the whole range (within one grid
-    cell's rank mass on each side -> values within neighboring cells)."""
-    from dbt_repo_spark.operators.sketches import (
-        merge_quantile_estimate,
-        quantile_sketch_table,
-    )
-    from dbt_repo_spark.queries import t as load
-
-    ev = load(spark, SF, "events")
-    probs = [0.25, 0.5, 0.75, 0.9]
-    split = quantile_sketch_table(ev, [], "value", "ts", "day", k=32)
-    whole = quantile_sketch_table(ev, [], "value", "ts", "year", k=32)
-    est_split = {
-        r.prob: r.value_est
-        for r in merge_quantile_estimate(split, [], probs).collect()
-    }
-    est_whole = {
-        r.prob: r.value_est
-        for r in merge_quantile_estimate(whole, [], probs).collect()
-    }
-    n = ev.count()
-    vals = sorted(r.value for r in ev.select("value").collect())
-
-    def rank(x):
-        import bisect
-
-        return bisect.bisect_right(vals, x) / n
-
-    for p in probs:
-        # both estimates within 2/k rank mass of the target
-        assert abs(rank(est_split[p]) - p) <= 2 / 32 + 1e-6, p
-        assert abs(rank(est_whole[p]) - p) <= 2 / 32 + 1e-6, p
 
 
 def test_filtered_topk_recall_floor_and_filter_honored(spark, sf_dir):

@@ -138,70 +138,6 @@ def test_streaming_tumbling_window_agg(spark, tmp_path):
     assert got[("t0", 0)] == 30 and got[("t1", 0)] == 30
 
 
-def test_stateful_change_detection(spark, tmp_path):
-    """applyInPandasWithState change-log: only transitions are emitted, and
-    state survives a restart via the checkpoint."""
-    import datetime as dt
-
-    from pyspark.sql import types as T
-
-    from dbt_repo_spark.streaming.stateful import changes_only
-
-    src = tmp_path / "status"
-    src.mkdir()
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    base = dt.datetime(2025, 1, 1, 0, 0, 0)
-
-    def rows(values, t0=0):
-        return "\n".join(
-            json.dumps(
-                {
-                    "station_id": "st0",
-                    "report_time": (base + dt.timedelta(minutes=t0 + i)).isoformat(),
-                    "bikes_available": v,
-                    "docks_available": 20 - v,
-                }
-            )
-            for i, v in enumerate(values)
-        )
-
-    schema = T.StructType(
-        [
-            T.StructField("station_id", T.StringType()),
-            T.StructField("report_time", T.TimestampType()),
-            T.StructField("bikes_available", T.LongType()),
-            T.StructField("docks_available", T.LongType()),
-        ]
-    )
-
-    def run_once():
-        stream = spark.readStream.schema(schema).json(str(src))
-        q = (
-            changes_only(stream)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    # 5,5,5,7,7,3 → transitions at 5,7,3
-    (src / "a.jsonl").write_text(rows([5, 5, 5, 7, 7, 3]))
-    run_once()
-    got = spark.read.parquet(out)
-    assert got.count() == 3
-    assert [r.bikes_available for r in got.orderBy("report_time").collect()] == [5, 7, 3]
-
-    # restart: first value equals last state (3) → suppressed; then 9 emits
-    (src / "b.jsonl").write_text(rows([3, 3, 9], t0=10))
-    run_once()
-    got = spark.read.parquet(out).orderBy("report_time")
-    assert [r.bikes_available for r in got.collect()] == [5, 7, 3, 9]
-
-
 def test_stream_restart_is_exactly_once(spark, tmp_path):
     """Checkpoint (ST5): restarting over the same landing dir adds nothing;
     new files are picked up incrementally."""
